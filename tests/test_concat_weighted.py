@@ -347,10 +347,11 @@ def test_histogram_matches_numpy(spark, era5):
     assert got.coords["bin"].values.tolist() == list(range(12))
 
 
-def test_histogram_tree_merge_and_out_of_range(spark, era5):
+def test_histogram_tree_merge_and_out_of_range(spark, era5, monkeypatch):
     d = Dataset.from_numpy(spark, era5, chunks={"time": 2})
     edges = np.array([-0.5, 0.0, 0.5])
-    got = d.histogram("time", edges, merge_fanin=2).collect()
+    monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 2)
+    got = d.histogram("time", edges).collect()
     single = Dataset.from_numpy(spark, era5, chunks={"time": 24}).histogram(
         "time", edges
     ).collect()

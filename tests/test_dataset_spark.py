@@ -14,6 +14,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+import xarray_beam_spark.dataset as dsmod
 from xarray_beam_spark.dataset import Dataset, Template, off_col
 from xarray_beam_spark.ndarray_ds import NDDataset
 
@@ -689,7 +690,7 @@ def test_groupby_minmax_preserves_infinities(spark):
     assert got_max.data_vars["asn"].values[2, 1, 1] == np.inf
 
 
-def test_staged_tree_merge_high_fanin(spark):
+def test_staged_tree_merge_high_fanin(spark, monkeypatch):
     """VERDICT r1 #2: a reduction with ≥4k chunks per output cell must run
     through ≥2 intermediate tree-merge rounds (reference MultiStageMean,
     combiners.py:294-394) and produce the single-stage result exactly."""
@@ -701,20 +702,23 @@ def test_staged_tree_merge_high_fanin(spark):
     src = NDDataset({"v": (("t", "y", "x"), arr)}, {"t": np.arange(n, dtype=np.int64)}, {})
     d = Dataset.from_numpy(spark, src, chunks={"t": 1})  # 4096-chunk fan-in
 
-    staged = d._agg("mean", "t", True, merge_fanin=16)  # 4096 → 256 → 16 → final
+    monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 16)
+    staged = d.mean("t")  # 4096 → 256 → 16 → final
     plan = staged.df._jdf.queryExecution().analyzed().toString()
     assert plan.count("FlatMapGroupsInPandas") == 3  # two partial rounds + final
-    single = d._agg("mean", "t", True, merge_fanin=n + 1)  # forced single-stage
+    monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", n + 1)
+    single = d.mean("t")  # forced single-stage
     got, want = staged.collect(), single.collect()
     np.testing.assert_array_equal(got.data_vars["v"].values, want.data_vars["v"].values)
     np.testing.assert_array_equal(got.data_vars["v"].values, arr.mean(axis=0))
 
     # default fan-in threshold: small reductions stay single-stage
+    monkeypatch.undo()
     small = Dataset.from_numpy(spark, dummy_era5(), chunks={"time": 10}).mean("time")
     assert small.df._jdf.queryExecution().analyzed().toString().count("FlatMapGroupsInPandas") == 1
 
 
-def test_staged_tree_merge_groupby(spark):
+def test_staged_tree_merge_groupby(spark, monkeypatch):
     """groupby_reduce stages its merge the same way; result identical."""
     n = 256
     rng = np.random.default_rng(2)
@@ -722,11 +726,137 @@ def test_staged_tree_merge_groupby(spark):
     src = NDDataset({"v": (("t", "y"), arr)}, {"t": np.arange(n, dtype=np.int64)}, {})
     d = Dataset.from_numpy(spark, src, chunks={"t": 1})
     labels = (np.arange(n) % 7).astype(np.int64)
-    staged = d.groupby_reduce("t", labels, op="sum", new_dim="g", merge_fanin=8)
-    assert staged.df._jdf.queryExecution().analyzed().toString().count("FlatMapGroupsInPandas") >= 3
+    monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 8)
+    staged = d.groupby_reduce("t", labels, op="sum", new_dim="g")  # 256 → 32 → 4 → final
+    assert staged.df._jdf.queryExecution().analyzed().toString().count("FlatMapGroupsInPandas") == 3
     got = staged.collect()
     want = np.stack([arr[labels == g].sum(axis=0) for g in range(7)])
     np.testing.assert_array_equal(got.data_vars["v"].values, want)
+
+
+def _fanin_source() -> NDDataset:
+    """Integer-valued float64 with scattered NaNs and one all-NaN column."""
+    rng = np.random.default_rng(11)
+    a = rng.integers(0, 10, size=(8, 3)).astype(np.float64)
+    b = rng.integers(0, 10, size=(8, 3)).astype(np.float64)
+    a[[1, 4], 0] = np.nan
+    a[:, 2] = np.nan
+    b[3, 1] = np.nan
+    return NDDataset(
+        {"a": (("t", "y"), a), "b": (("t", "y"), b)},
+        {"t": np.arange(8, dtype=np.int64), "y": np.arange(3, dtype=np.int64)},
+        {},
+    )
+
+
+_FANIN_LABELS = np.array([0, 1, 1, 0, 2, 2, 1, 0])
+# key combination (k1=0, k2=1) never occurs: an empty group
+_FANIN_KEYS = {
+    "k1": np.array([0, 0, 0, 1, 1, 1, 0, 1]),
+    "k2": np.array([0, 0, 0, 0, 1, 1, 0, 1]),
+}
+
+# case → (build, grouped-map rounds at fan-in 2, at the default fan-in).
+# 8 chunks along t: 8 → 4 → 2 takes two merge rounds before the final one.
+_FANIN_CASES = {
+    "mean": (lambda d: d.mean("t"), 3, 1),
+    "mean_t_y": (lambda d: d.mean(["t", "y"]), 4, 1),  # 16 chunks: 3 rounds
+    "sum": (lambda d: d.sum("t"), 3, 1),
+    "min": (lambda d: d.min("t"), 3, 1),
+    "max": (lambda d: d.max("t"), 3, 1),
+    "min_keepnan": (lambda d: d.min("t", skipna=False), 3, 1),
+    "max_keepnan": (lambda d: d.max("t", skipna=False), 3, 1),
+    "std": (lambda d: d.std("t"), 3, 1),
+    "std_ddof1": (lambda d: d.std("t", ddof=1), 3, 1),
+    "var": (lambda d: d.var("t"), 3, 1),
+    "var_ddof1": (lambda d: d.var("t", ddof=1), 3, 1),
+    "count": (lambda d: d.count("t"), 3, 1),
+    "argmin": (lambda d: d.argmin("t"), 3, 1),
+    "argmax": (lambda d: d.argmax("t"), 3, 1),
+    "trend": (lambda d: d.trend("t"), 3, 1),
+    "corr": (lambda d: d.corr("a", "b", "t"), 3, 1),
+    "gb_mean": (lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="mean"), 3, 1),
+    "gb_sum": (lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="sum"), 3, 1),
+    "gb_min": (lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="min"), 3, 1),
+    "gb_max": (lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="max"), 3, 1),
+    "gb_std": (lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="std"), 3, 1),
+    "gb_var": (lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="var"), 3, 1),
+    "gb_median": (lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="median"), 3, 1),
+    "gb_quantile": (
+        lambda d: d.groupby_reduce("t", _FANIN_LABELS, op="quantile", q=0.25), 3, 1
+    ),
+    "gb_two_keys": (lambda d: d.groupby_reduce("t", _FANIN_KEYS, op="mean"), 3, 1),
+    "histogram": (lambda d: d.histogram("t", np.array([0.0, 2.0, 5.0, 9.0])), 3, 1),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FANIN_CASES))
+def test_tree_merge_rounds_do_not_change_results(spark, monkeypatch, case):
+    """Every grid reduction gives the same numbers whether its accumulators
+    merge in one final round or through extra tree-merge rounds."""
+    build, staged_rounds, single_rounds = _FANIN_CASES[case]
+    d = Dataset.from_numpy(spark, _fanin_source(), chunks={"t": 1, "y": 2})
+
+    def grouped_maps(r):
+        return r.df._jdf.queryExecution().analyzed().toString().count(
+            "FlatMapGroupsInPandas"
+        )
+
+    single = build(d)
+    monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 2)
+    staged = build(d)
+    assert grouped_maps(single) == single_rounds
+    assert grouped_maps(staged) == staged_rounds
+    got, want = staged.collect(), single.collect()
+    assert set(got.data_vars) == set(want.data_vars)
+    for v in want.data_vars:
+        assert got.data_vars[v].dims == want.data_vars[v].dims
+        assert got.data_vars[v].values.dtype == want.data_vars[v].values.dtype
+        np.testing.assert_array_equal(got.data_vars[v].values, want.data_vars[v].values)
+
+
+@pytest.mark.parametrize("op", ["std", "var"])
+def test_std_var_nan_where_count_at_most_ddof(spark, op):
+    """Cells with count <= ddof are NaN, as in np.nanvar / xarray: one
+    value with ddof=2 (the bare formula gives 0.0) and two values with
+    ddof=2 (the bare formula divides by zero: inf)."""
+    vals = np.array([[1.0, 0.1, 3.0], [np.nan, 0.2, 5.0], [np.nan, np.nan, 4.0]])
+    d = Dataset.from_numpy(spark, NDDataset({"v": (("t", "y"), vals)}, {}, {}), chunks={"t": 1})
+    for ddof in (1, 2):
+        got = getattr(d, op)("t", ddof=ddof).collect().data_vars["v"].values
+        with np.errstate(all="ignore"), pytest.warns(RuntimeWarning):
+            want = np.nanvar(vals, axis=0, ddof=ddof)
+        if op == "std":
+            want = np.sqrt(want)
+        np.testing.assert_allclose(got, want, rtol=1e-12)
+        assert np.isnan(got[0]) and (np.isnan(got[1]) if ddof == 2 else np.isfinite(got[1]))
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [[0.0, np.nan, 2.0], [0.0, np.inf, np.inf], [0.0, 1.0, 1.0], [1.0], [[0.0, 1.0]]],
+    ids=["nan", "repeated_inf", "repeated", "single", "2d"],
+)
+def test_histogram_rejects_bad_edges(spark, era5, edges):
+    d = Dataset.from_numpy(spark, era5, chunks={"time": 12})
+    with pytest.raises(ValueError, match="strictly increasing"):
+        d.histogram("time", np.array(edges))
+
+
+@pytest.mark.parametrize(
+    "reduce",
+    [
+        lambda d: d.mean("x"),
+        lambda d: d.groupby_reduce("x", np.zeros(24)),
+        lambda d: d.histogram("x", np.array([0.0, 1.0])),
+    ],
+    ids=["agg", "groupby_reduce", "histogram"],
+)
+@pytest.mark.parametrize("split_vars", [False, True])
+def test_reduction_over_missing_dim_names_the_dim(spark, era5, reduce, split_vars):
+    d = Dataset.from_numpy(spark, era5, chunks={"time": 12}, split_vars=split_vars)
+    with pytest.raises(KeyError, match="no dimension 'x'"):
+        reduce(d)
 
 
 def test_from_numpy_broadcast_budget_guard(spark):
@@ -825,7 +955,7 @@ def test_groupby_reduce_std_var(spark, era5):
         np.testing.assert_allclose(got.data_vars["asn"].values, want, rtol=1e-10)
 
 
-def test_groupby_reduce_std_skipna_and_staged_merge(spark, era5):
+def test_groupby_reduce_std_skipna_and_staged_merge(spark, era5, monkeypatch):
     import copy
 
     vals = era5.data_vars["asn"].values.astype(np.float64).copy()
@@ -837,10 +967,9 @@ def test_groupby_reduce_std_skipna_and_staged_merge(spark, era5):
     )
     d = Dataset.from_numpy(spark, nd, chunks={"time": 2})
     labels = (np.arange(24) % 3).astype(np.int64)
-    # merge_fanin=2 forces multiple tree-merge rounds over the 12 chunks
-    got = d.groupby_reduce(
-        "time", labels, op="std", new_dim="g", merge_fanin=2
-    ).collect()
+    # fan-in 2 forces multiple tree-merge rounds over the 12 chunks
+    monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 2)
+    got = d.groupby_reduce("time", labels, op="std", new_dim="g").collect()
     want = np.stack(
         [
             np.sqrt(np.nanvar(vals[labels == g], axis=0))
@@ -862,7 +991,7 @@ def test_groupby_reduce_median_quantile(spark, era5):
     np.testing.assert_allclose(got_q.data_vars["asn"].values, want_q, rtol=1e-12)
 
 
-def test_groupby_median_nan_and_tree_merge(spark, era5):
+def test_groupby_median_nan_and_tree_merge(spark, era5, monkeypatch):
     from xarray_beam_spark.ndarray_ds import NDDataset
 
     vals = era5.data_vars["asn"].values.astype(np.float64).copy()
@@ -870,9 +999,8 @@ def test_groupby_median_nan_and_tree_merge(spark, era5):
     nd = NDDataset({"asn": (era5.data_vars["asn"].dims, vals)}, dict(era5.coords), {})
     d = Dataset.from_numpy(spark, nd, chunks={"time": 2})
     labels = (np.arange(24) % 4).astype(np.int64)
-    got = d.groupby_reduce(
-        "time", labels, op="median", new_dim="g", merge_fanin=2
-    ).collect()
+    monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 2)
+    got = d.groupby_reduce("time", labels, op="median", new_dim="g").collect()
     want = np.stack(
         [np.nanmedian(vals[labels == g], axis=0) for g in range(4)]
     )

@@ -29,11 +29,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import itertools
 import math
 import operator
+import warnings
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterable, Iterator, Mapping, Sequence
+from typing import Any, Callable, Iterable, Iterator, Mapping, NamedTuple, Sequence
 
 import numpy as np
 
@@ -1878,8 +1880,6 @@ class Dataset:
                 elif op == "sum":
                     out = np.where(cnt == 0, np.nan, np.nansum(sw, axis=-1))
                 else:
-                    import warnings
-
                     with warnings.catch_warnings():
                         warnings.simplefilter("ignore")
                         out = (np.nanmin if op == "min" else np.nanmax)(sw, axis=-1)
@@ -2799,8 +2799,7 @@ class Dataset:
     ) -> "Dataset":
         """Apply a whole-dim (non-decomposable) reduction: make ``dim``
         contiguous within every chunk, then reduce it away per chunk."""
-        if dim not in self.sizes:
-            raise KeyError(f"no dimension {dim!r}")
+        self._reduced_dims(dim)
         work = self if self.chunks[dim] == self.sizes[dim] else self.rechunk(
             {**self.chunks, dim: -1}
         )
@@ -2825,8 +2824,6 @@ class Dataset:
     def var(self, dim: str | Sequence[str], skipna: bool = True, ddof: int = 0) -> "Dataset":
         return self._agg("var", dim, skipna, ddof=ddof)
 
-    _AGG_OPS = ("mean", "sum", "min", "max", "std", "var", "count")
-
     def corr(self, var_a: str, var_b: str, dim: str, skipna: bool = True) -> "Dataset":
         """Pearson correlation of two variables along ``dim`` per remaining
         cell (xarray ``xr.corr`` over one dim) — e.g. a teleconnection /
@@ -2844,129 +2841,45 @@ class Dataset:
             raise KeyError(f"variables lack dim {dim!r}")
         return self._agg("corr", dim, skipna, var_pair=(var_a, var_b))
 
+    def _reduced_dims(self, dim: str | Sequence[str]) -> list[str]:
+        """The dims a reduction removes, each checked to exist."""
+        red_dims = [dim] if isinstance(dim, str) else list(dim)
+        for d in red_dims:
+            if d not in self.sizes:
+                raise KeyError(f"no dimension {d!r}")
+        return red_dims
+
     def _agg(
         self,
         op: str,
         dim: str | Sequence[str],
         skipna: bool,
         ddof: int = 0,
-        merge_fanin: int | None = None,
         var_pair: tuple[str, str] | None = None,
     ) -> "Dataset":
-        """Distributed reduction over dims: per-chunk pre-aggregate
-        (narrow — the combiner lift, reference ``combiners.py:37-147``),
-        then groupBy remaining offsets + merge + finalize.
-
-        When the merge fan-in (number of chunk accumulators landing on one
-        output cell) exceeds ``merge_fanin`` (default
-        ``DEFAULT_MERGE_FANIN``), intermediate tree-merge rounds are
-        inserted — the reference's ``MultiStageMean`` fanout plan
-        (``combiners.py:294-394``): accumulators are re-keyed by
-        ``chunk_index // fanin`` and partially merged, so no single task
-        ever gathers more than ``merge_fanin`` payloads. At 10⁵ chunks per
-        climatology cell this is the difference between a working plan and
-        one Python task deserializing 10⁵ accumulators."""
-        red_dims = [dim] if isinstance(dim, str) else list(dim)
-        for d in red_dims:
-            if d not in self.sizes:
-                raise KeyError(f"no dimension {d!r}")
+        """Distributed reduction over dims: :func:`_pre_aggregate` is the
+        per-chunk add step (the combiner lift, reference
+        ``combiners.py:37-147``); :meth:`_tree_reduce` merges and extracts
+        with the op's ``("dim", op)`` entry of ``_COMBINERS``."""
+        red_dims = self._reduced_dims(dim)
         if self.split_vars:
-            return self.consolidate_variables()._agg(
-                op, red_dims, skipna, ddof, merge_fanin, var_pair
-            )
-
-        keep_dims = [d for d in self.dims if d not in red_dims]
-        tmpl = self.template
-        out_vm = {}
-        if op == "corr":
-            assert var_pair is not None
-            new_dims = tuple(
-                d for d in tmpl.var_meta[var_pair[0]][0] if d not in red_dims
-            )
-            out_vm["corr"] = (new_dims, np.dtype("float64").str)
-        else:
-            for v, (dims_v, dt) in tmpl.var_meta.items():
-                new_dims = tuple(d for d in dims_v if d not in red_dims)
-                if op in ("min", "max"):
-                    out_dt = dt
-                elif op == "count":
-                    out_dt = np.dtype("int64").str
-                else:
-                    out_dt = np.dtype("float64").str
-                out_vm[v] = (new_dims, out_dt)
-        out_tmpl = Template(
-            sizes={d: s for d, s in tmpl.sizes.items() if d in keep_dims},
-            var_meta=out_vm,
-            coords={k: c for k, c in tmpl.coords.items() if set(c.dims) <= set(keep_dims)},
-            attrs=tmpl.attrs,
+            return self.consolidate_variables()._agg(op, red_dims, skipna, ddof, var_pair)
+        vm = self.template.var_meta
+        var_names = list(var_pair) if op == "corr" else self.template.var_names
+        out_vars = {}
+        for v, (dims_v, dt) in ({"corr": vm[var_pair[0]]} if op == "corr" else vm).items():
+            if op == "count":
+                dt = np.dtype("int64").str
+            elif op not in ("min", "max"):
+                dt = np.dtype("float64").str
+            out_vars[v] = (dims_v, dt)
+        return self._tree_reduce(
+            red_dims,
+            lambda ds, offs: _pre_aggregate(ds, var_names, red_dims, op, skipna, offs),
+            _COMBINERS["dim", f"nan{op}" if skipna and op in ("min", "max") else op],
+            _XArgs(op, ddof=ddof),
+            out_vars,
         )
-        out_chunks = {d: self.chunks[d] for d in keep_dims}
-        schema = chunk_row_schema(keep_dims)
-        schema_mk = T.StructType(list(schema.fields) + [T.StructField("mkey", T.LongType())])
-        offc = [off_col(d) for d in keep_dims]
-        var_names = list(var_pair) if op == "corr" else tmpl.var_names
-
-        # linearized reduced-chunk index → the tree-merge re-key base
-        n_chunks = {d: -(-self.sizes[d] // self.chunks[d]) for d in red_dims}
-        strides: dict[str, int] = {}
-        acc_stride = 1
-        for d in red_dims:
-            strides[d] = acc_stride
-            acc_stride *= n_chunks[d]
-        fan_in = acc_stride
-        chunks_in = dict(self.chunks)
-
-        def pre(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                # to_dict('records') like every other per-chunk stage —
-                # itertuples()._asdict() RENAMES columns that are not
-                # valid identifiers (dim 'lat-lon' → '_1'), breaking the
-                # off-column lookups below for such dims
-                for rd in pdf.to_dict("records"):
-                    ds = decode_chunk(rd["payload"])
-                    acc = _pre_aggregate(
-                        ds,
-                        var_names,
-                        red_dims,
-                        op,
-                        skipna,
-                        offsets={d: int(rd[off_col(d)]) for d in red_dims},
-                    )
-                    row = {off_col(d): int(rd[off_col(d)]) for d in keep_dims}
-                    row["vars"] = rd["vars"]
-                    row["payload"] = encode_chunk(acc)
-                    row["mkey"] = sum(
-                        (int(rd[off_col(d)]) // chunks_in[d]) * strides[d] for d in red_dims
-                    )
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema_mk.fields])
-
-        def partial(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = [decode_chunk(p) for p in pdf["payload"]]
-            out = _merge_partial(parts, var_names, op, skipna)
-            row = dict(zip(["vars"] + offc, [key[0]] + [int(k) for k in key[1:-1]]))
-            row["mkey"] = int(key[-1])
-            row["payload"] = encode_chunk(out)
-            return pd.DataFrame([row], columns=[f.name for f in schema_mk.fields])
-
-        def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = [decode_chunk(p) for p in pdf["payload"]]
-            out = _merge_finalize(parts, var_names, op, skipna, ddof)
-            row = dict(zip(["vars"] + offc, [key[0]] + [int(k) for k in key[1:]]))
-            row["payload"] = encode_chunk(out)
-            return pd.DataFrame([row], columns=[f.name for f in schema.fields])
-
-        fanin = int(merge_fanin or DEFAULT_MERGE_FANIN)
-        df = self.df.mapInPandas(pre, schema_mk)
-        expected = fan_in
-        while expected > fanin:
-            df = df.withColumn("mkey", F.floor(F.col("mkey") / fanin).cast("long"))
-            df = df.groupBy("vars", *offc, "mkey").applyInPandas(partial, schema_mk)
-            expected = -(-expected // fanin)
-        df = df.groupBy("vars", *offc).applyInPandas(merge, schema)
-        return Dataset(self.spark, df, out_tmpl, out_chunks, self.split_vars)
 
     def groupby_reduce(
         self,
@@ -2975,7 +2888,6 @@ class Dataset:
         op: str = "mean",
         new_dim: str = "group",
         skipna: bool = True,
-        merge_fanin: int | None = None,
         q: float = 0.5,
     ) -> "Dataset":
         """Group elements along ``dim`` by a per-element key and reduce —
@@ -2997,13 +2909,14 @@ class Dataset:
         reaches the same result only by composing two rekey+reduce passes
         (two shuffles); this stays at one.
 
-        Spark plan: one narrow stage computes the full per-group partial
-        accumulator per chunk — vectorized ``np.add.at`` over the dense
-        (group, ...) accumulator, the combiner lift of ``Mean.PerKey``
-        (``combiners.py:168-187``) — then one shuffle on the remaining
-        offsets merges and finalizes. Group count is small (months, hours,
-        weekdays), so the dense accumulator is cheap and no per-element
-        re-keying or SplitChunks-to-size-1 is ever materialized.
+        Spark plan: the add step computes the full per-group partial
+        accumulator per chunk in one narrow stage — vectorized
+        ``np.add.at`` over the dense (group, ...) accumulator, the combiner
+        lift of ``Mean.PerKey`` (``combiners.py:168-187``) — then
+        :meth:`_tree_reduce` merges and extracts on the remaining offsets.
+        Group count is small (months, hours, weekdays), so the dense
+        accumulator is cheap and no per-element re-keying or
+        SplitChunks-to-size-1 is ever materialized.
         """
         if op not in ("mean", "sum", "min", "max", "std", "var", "median", "quantile"):
             raise ValueError(f"unsupported groupby op {op!r}")
@@ -3015,9 +2928,10 @@ class Dataset:
             q = float(q)
             if not 0.0 <= q <= 1.0:
                 raise ValueError(f"q must be in [0, 1], got {q}")
+        self._reduced_dims(dim)
         if self.split_vars:
             return self.consolidate_variables().groupby_reduce(
-                dim, by, op, new_dim, skipna, merge_fanin=merge_fanin, q=q
+                dim, by, op, new_dim, skipna, q=q
             )
         sizes = self.sizes
         multi: tuple[list[str], list[np.ndarray], list[int]] | None = None
@@ -3026,10 +2940,7 @@ class Dataset:
             if len(key_names) == 1:
                 # degenerate single-key mapping: plain path, named dim
                 (kn,) = key_names
-                return self.groupby_reduce(
-                    dim, np.asarray(by[kn]), op, kn, skipna,
-                    merge_fanin=merge_fanin, q=q,
-                )
+                return self.groupby_reduce(dim, np.asarray(by[kn]), op, kn, skipna, q=q)
             for kn in key_names:
                 if kn in sizes and kn != dim:
                     raise ValueError(f"key dim {kn!r} already exists")
@@ -3055,248 +2966,62 @@ class Dataset:
             if dim not in dims_v:
                 raise ValueError(f"variable {v!r} lacks dim {dim!r}")
         n_groups = len(uniq)
-        bc_labels = self.spark.sparkContext.broadcast((inverse.astype(np.int64), uniq))
+        bc_labels = self.spark.sparkContext.broadcast(inverse.astype(np.int64))
+        new_coord = Variable((new_dim,), uniq)
+        var_names = self.template.var_names
 
-        keep_dims = [d for d in self.dims if d != dim]
-        out_dims = sorted(keep_dims + [new_dim])
-        tmpl = self.template
-        out_vm = {}
-        for v, (dims_v, dt) in tmpl.var_meta.items():
-            nd = tuple([new_dim] + [d for d in dims_v if d != dim])
-            out_vm[v] = (nd, dt if op in ("min", "max") else np.dtype("float64").str)
-        out_tmpl = Template(
-            sizes={**{d: s for d, s in sizes.items() if d != dim}, new_dim: n_groups},
-            var_meta=out_vm,
-            coords={
-                **{k: c for k, c in tmpl.coords.items() if dim not in c.dims},
-                new_dim: Variable((new_dim,), uniq),
-            },
-            attrs=tmpl.attrs,
+        def add(ds: NDDataset, offs: dict[str, int]) -> NDDataset:
+            labels = bc_labels.value[offs[dim] : offs[dim] + ds.sizes[dim]]
+            acc: dict[str, Variable] = {}
+            for v in var_names:
+                var = ds.data_vars[v]
+                af = np.moveaxis(var.values, var.dims.index(dim), 0).astype(np.float64, copy=False)
+                rest = tuple(d for d in var.dims if d != dim)
+                if op == "quantile":
+                    # gather, not a moment accumulator: one ragged slab per
+                    # group (its own dim name, so sizes may differ). Memory
+                    # at the final merge = one group's full slab — the same
+                    # envelope as the rechunk-contiguous median path.
+                    for gi in range(n_groups):
+                        acc[f"{v}__g{gi}"] = Variable((f"__q{gi}",) + rest, af[labels == gi])
+                    continue
+                gdims = (new_dim,) + rest
+                nanm = np.isnan(af) if skipna else None
+                cnt = np.zeros((n_groups,) + af.shape[1:], np.int64)
+                np.add.at(
+                    cnt,
+                    labels,
+                    (~nanm).astype(np.int64) if nanm is not None else np.ones(af.shape, np.int64),
+                )
+                # the contributing-element count also tells min/max "group
+                # empty" (the ±inf init survives) from legitimate ±inf data
+                acc[f"{v}__cnt"] = Variable(gdims, cnt)
+                if op in ("min", "max"):
+                    init = np.inf if op == "min" else -np.inf
+                    m = np.full(cnt.shape, init, np.float64)
+                    filled = np.where(nanm, init, af) if nanm is not None else af
+                    (np.minimum if op == "min" else np.maximum).at(m, labels, filled)
+                    acc[f"{v}__{op}"] = Variable(gdims, m)
+                    continue
+                filled0 = np.where(nanm, 0.0, af) if nanm is not None else af
+                s = np.zeros(cnt.shape, np.float64)
+                np.add.at(s, labels, filled0)
+                acc[f"{v}__sum"] = Variable(gdims, s)
+                if op in ("std", "var"):
+                    s2 = np.zeros(cnt.shape, np.float64)
+                    np.add.at(s2, labels, filled0 * filled0)
+                    acc[f"{v}__ssq"] = Variable(gdims, s2)
+            kept = {k: c for k, c in ds.coords.items() if dim not in c.dims}
+            kept[new_dim] = new_coord
+            return NDDataset(acc, kept, ds.attrs)
+
+        out_vars = {
+            v: (dims_v, dt if op in ("min", "max") else np.dtype("float64").str)
+            for v, (dims_v, dt) in self.template.var_meta.items()
+        }
+        out = self._tree_reduce(
+            [dim], add, _COMBINERS["group", op], _XArgs(op, q=q, skipna=skipna), out_vars, new_coord
         )
-        out_chunks = {**{d: self.chunks[d] for d in keep_dims}, new_dim: n_groups}
-        schema = chunk_row_schema(out_dims)
-        schema_mk = T.StructType(list(schema.fields) + [T.StructField("mkey", T.LongType())])
-        offc = [off_col(d) for d in keep_dims]
-        var_names = tmpl.var_names
-        g_dim = dim
-        g_chunk = self.chunks[g_dim]
-        fan_in = -(-sizes[g_dim] // g_chunk)
-
-        def pre(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            labels_all, group_vals = bc_labels.value
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    ds = decode_chunk(r["payload"])
-                    off = int(r[off_col(g_dim)])
-                    labels = labels_all[off : off + ds.sizes[g_dim]]
-                    acc_vars: dict[str, Variable] = {}
-                    for v in var_names:
-                        var = ds.data_vars[v]
-                        ax = var.dims.index(g_dim)
-                        a = np.moveaxis(var.values, ax, 0)
-                        rest = tuple(d for d in var.dims if d != g_dim)
-                        if op == "quantile":
-                            # gather, not a moment accumulator: one ragged
-                            # slab per group (its own dim name, so sizes may
-                            # differ). Memory at the final merge = one
-                            # group's full slab — the same envelope as the
-                            # rechunk-contiguous median path.
-                            af = a.astype(np.float64, copy=False)
-                            for gi in range(n_groups):
-                                acc_vars[f"{v}__g{gi}"] = Variable(
-                                    (f"__q{gi}",) + rest, af[labels == gi]
-                                )
-                        elif op in ("mean", "sum", "std", "var"):
-                            af = a.astype(np.float64, copy=False)
-                            nanm = np.isnan(af) if af.dtype.kind == "f" and skipna else None
-                            s = np.zeros((n_groups,) + a.shape[1:], np.float64)
-                            cnt = np.zeros((n_groups,) + a.shape[1:], np.int64)
-                            filled0 = np.where(nanm, 0.0, af) if nanm is not None else af
-                            np.add.at(s, labels, filled0)
-                            np.add.at(
-                                cnt,
-                                labels,
-                                (~nanm).astype(np.int64) if nanm is not None else np.ones(a.shape, np.int64),
-                            )
-                            acc_vars[f"{v}__sum"] = Variable((new_dim,) + rest, s)
-                            acc_vars[f"{v}__cnt"] = Variable((new_dim,) + rest, cnt)
-                            if op in ("std", "var"):
-                                s2 = np.zeros((n_groups,) + a.shape[1:], np.float64)
-                                np.add.at(s2, labels, filled0 * filled0)
-                                acc_vars[f"{v}__sum2"] = Variable((new_dim,) + rest, s2)
-                        else:
-                            init = np.inf if op == "min" else -np.inf
-                            m = np.full((n_groups,) + a.shape[1:], init, np.float64)
-                            af = a.astype(np.float64, copy=False)
-                            nanm = np.isnan(af) if af.dtype.kind == "f" and skipna else None
-                            filled = np.where(nanm, init, af) if nanm is not None else af
-                            (np.minimum if op == "min" else np.maximum).at(m, labels, filled)
-                            # contributing-element count distinguishes "group
-                            # empty in this chunk" (init sentinel survives)
-                            # from legitimate ±inf data values.
-                            cnt = np.zeros((n_groups,) + a.shape[1:], np.int64)
-                            np.add.at(
-                                cnt,
-                                labels,
-                                (~nanm).astype(np.int64) if nanm is not None else np.ones(a.shape, np.int64),
-                            )
-                            acc_vars[f"{v}__{op}"] = Variable((new_dim,) + rest, m)
-                            acc_vars[f"{v}__cnt"] = Variable((new_dim,) + rest, cnt)
-                    kept_coords = {
-                        k: c for k, c in ds.coords.items() if g_dim not in c.dims
-                    }
-                    kept_coords[new_dim] = Variable((new_dim,), group_vals)
-                    acc = NDDataset(acc_vars, kept_coords, ds.attrs)
-                    row = {off_col(d): (0 if d == new_dim else int(r[off_col(d)])) for d in out_dims}
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(acc)
-                    row["mkey"] = off // g_chunk
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema_mk.fields])
-
-        out_dtypes = {v: np.dtype(dt) for v, (_, dt) in out_vm.items()}
-
-        def partial(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            """Tree-merge round: combine group accumulators, don't finalize."""
-            parts = [decode_chunk(p) for p in pdf["payload"]]
-            first = parts[0]
-            out: dict[str, Variable] = {}
-            for v in var_names:
-                if op == "quantile":
-                    for gi in range(n_groups):
-                        gk = f"{v}__g{gi}"
-                        vals = np.concatenate(
-                            [p.data_vars[gk].values for p in parts], axis=0
-                        )
-                        out[gk] = Variable(first.data_vars[gk].dims, vals)
-                elif op in ("mean", "sum", "std", "var"):
-                    sfxs = ("__sum", "__cnt") + (("__sum2",) if op in ("std", "var") else ())
-                    for sfx in sfxs:
-                        vals = np.sum([p.data_vars[f"{v}{sfx}"].values for p in parts], axis=0)
-                        dt = np.int64 if sfx == "__cnt" else np.float64
-                        out[f"{v}{sfx}"] = Variable(
-                            first.data_vars[f"{v}{sfx}"].dims, np.asarray(vals, dt)
-                        )
-                else:
-                    # plain minimum/maximum: ±inf init sentinels combine
-                    # correctly and a skipna=False NaN keeps propagating
-                    fn = np.minimum if op == "min" else np.maximum
-                    res = parts[0].data_vars[f"{v}__{op}"].values
-                    for p in parts[1:]:
-                        res = fn(res, p.data_vars[f"{v}__{op}"].values)
-                    cnt = np.sum([p.data_vars[f"{v}__cnt"].values for p in parts], axis=0)
-                    out[f"{v}__{op}"] = Variable(first.data_vars[f"{v}__{op}"].dims, res)
-                    out[f"{v}__cnt"] = Variable(
-                        first.data_vars[f"{v}__cnt"].dims, np.asarray(cnt, np.int64)
-                    )
-            acc = NDDataset(out, first.coords, first.attrs)
-            row = dict(zip(["vars"] + offc, [key[0]] + [int(k) for k in key[1:-1]]))
-            row[off_col(new_dim)] = 0
-            row["mkey"] = int(key[-1])
-            row["payload"] = encode_chunk(acc)
-            return pd.DataFrame([row], columns=[f.name for f in schema_mk.fields])
-
-        def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = [decode_chunk(p) for p in pdf["payload"]]
-            first = parts[0]
-            out: dict[str, Variable] = {}
-            for v in var_names:
-                if op == "quantile":
-                    stacked = []
-                    for gi in range(n_groups):
-                        vals = np.concatenate(
-                            [p.data_vars[f"{v}__g{gi}"].values for p in parts], axis=0
-                        )
-                        rest_shape = vals.shape[1:]
-                        if vals.shape[0] == 0:
-                            stacked.append(np.full(rest_shape, np.nan))
-                            continue
-                        if skipna:
-                            any_valid = np.any(~np.isnan(vals), axis=0)
-                            safe = np.where(np.isnan(vals), 0.0, vals)
-                            # nanquantile warns on all-NaN columns; compute on
-                            # a safe copy only where nothing is valid
-                            import warnings as _w
-
-                            with _w.catch_warnings():
-                                _w.simplefilter("ignore")
-                                res_g = np.nanquantile(
-                                    np.where(any_valid, vals, safe), q, axis=0
-                                )
-                            res_g = np.where(any_valid, res_g, np.nan)
-                        else:
-                            res_g = np.quantile(vals, q, axis=0)
-                        stacked.append(res_g)
-                    gdims = (new_dim,) + first.data_vars[f"{v}__g0"].dims[1:]
-                    out[v] = Variable(
-                        gdims, np.stack(stacked, axis=0).astype(np.float64)
-                    )
-                elif op in ("mean", "sum", "std", "var"):
-                    s = np.sum([p.data_vars[f"{v}__sum"].values for p in parts], axis=0)
-                    cnt = np.sum([p.data_vars[f"{v}__cnt"].values for p in parts], axis=0)
-                    with np.errstate(all="ignore"):
-                        if op == "sum":
-                            res = np.where(cnt == 0, np.nan, s)
-                        elif op == "mean":
-                            res = s / cnt
-                        else:
-                            s2 = np.sum(
-                                [p.data_vars[f"{v}__sum2"].values for p in parts], axis=0
-                            )
-                            # population variance, evaluated with exactly this
-                            # expression tree so SQL oracles writing
-                            # (SUM(x²) - SUM(x)*SUM(x)/n)/n match bit-for-bit.
-                            # Clamped at 0: catastrophic cancellation (mean >>
-                            # spread, e.g. Kelvin/epoch data) can push the
-                            # textbook formula fractionally negative; oracles
-                            # wrap the same expression in GREATEST(..., 0).
-                            res = (s2 - s * s / cnt) / cnt
-                            res = np.maximum(res, 0.0)
-                            if op == "std":
-                                res = np.sqrt(res)
-                            res = np.where(cnt == 0, np.nan, res)
-                    out[v] = Variable(first.data_vars[f"{v}__sum"].dims, np.asarray(res, np.float64))
-                else:
-                    arrs = [p.data_vars[f"{v}__{op}"].values for p in parts]
-                    res = arrs[0]
-                    fn = np.minimum if op == "min" else np.maximum
-                    for a in arrs[1:]:
-                        res = fn(res, a)
-                    # empty groups (count 0) → NaN; legitimate ±inf survives.
-                    cnt = np.sum([p.data_vars[f"{v}__cnt"].values for p in parts], axis=0)
-                    res = np.where(cnt == 0, np.nan, res)
-                    if (
-                        not np.issubdtype(np.dtype(out_dtypes[v]), np.floating)
-                        and np.any(cnt == 0)
-                    ):
-                        # NaN→int is an undefined numpy cast (INT64_MIN
-                        # garbage reported as a real minimum): integer
-                        # variables cannot represent an empty group — loud
-                        raise ValueError(
-                            f"groupby_reduce({op!r}): variable {v!r} has "
-                            "empty group combinations but an integer dtype "
-                            "— cast it to float first (NaN marks empties)"
-                        )
-                    out[v] = Variable(
-                        first.data_vars[f"{v}__{op}"].dims, res.astype(out_dtypes[v], copy=False)
-                    )
-            merged = NDDataset(out, first.coords, first.attrs)
-            row = dict(zip(["vars"] + [off_col(d) for d in keep_dims], [key[0]] + [int(k) for k in key[1:]]))
-            row[off_col(new_dim)] = 0
-            row["payload"] = encode_chunk(merged)
-            return pd.DataFrame([row], columns=[f.name for f in schema.fields])
-
-        fanin = int(merge_fanin or DEFAULT_MERGE_FANIN)
-        df = self.df.mapInPandas(pre, schema_mk)
-        expected = fan_in
-        while expected > fanin:
-            df = df.withColumn("mkey", F.floor(F.col("mkey") / fanin).cast("long"))
-            df = df.groupBy("vars", *offc, "mkey").applyInPandas(partial, schema_mk)
-            expected = -(-expected // fanin)
-        df = df.groupBy("vars", *offc).applyInPandas(merge, schema)
-        out = Dataset(self.spark, df, out_tmpl, out_chunks, False)
         if multi is not None:
             key_names, key_uniqs, key_ns = multi
             # composite axis is single-chunk and C-ordered over the full
@@ -3308,138 +3033,154 @@ class Dataset:
             )
         return out
 
-    def histogram(
-        self,
-        dim: str,
-        edges: np.ndarray,
-        new_dim: str = "bin",
-        merge_fanin: int | None = None,
-    ) -> "Dataset":
+    def histogram(self, dim: str, edges: np.ndarray, new_dim: str = "bin") -> "Dataset":
         """Per-cell value histogram along ``dim``: replaces ``dim`` with
         ``new_dim`` (one coordinate per bin INDEX) holding int64 counts of
         elements falling in ``[edges[i], edges[i+1])``; NaN and
         out-of-range values drop. The distribution-summary reduction
         (value-space, unlike :meth:`groupby_reduce`'s coordinate-space
-        labels) — same one-narrow-stage + one-shuffle plan with dense
-        per-chunk accumulators and tree-merge rounds for extreme fan-in.
-        Bin membership via ``searchsorted``, so any monotone ``edges``
-        work (uniform or not)."""
+        labels): the add step counts bins per chunk, and
+        :meth:`_tree_reduce` sums the counts. Bin membership via
+        ``searchsorted``, so any strictly increasing ``edges`` work
+        (uniform or not)."""
         edges = np.asarray(edges, dtype=np.float64)
-        if edges.ndim != 1 or len(edges) < 2 or np.any(np.diff(edges) <= 0):
-            raise ValueError("edges must be a strictly increasing 1-D array")
+        # all(diff > 0), not any(diff <= 0): NaN edges compare False
+        with np.errstate(invalid="ignore"):
+            if edges.ndim != 1 or len(edges) < 2 or not np.all(np.diff(edges) > 0):
+                raise ValueError("edges must be a strictly increasing 1-D array")
+        self._reduced_dims(dim)
         if self.split_vars:
-            return self.consolidate_variables().histogram(
-                dim, edges, new_dim, merge_fanin
-            )
-        sizes = self.sizes
-        if dim not in sizes:
-            raise KeyError(f"no dimension {dim!r}")
+            return self.consolidate_variables().histogram(dim, edges, new_dim)
         n_bins = len(edges) - 1
-        bc_edges = self.spark.sparkContext.broadcast(edges)
+        new_coord = Variable((new_dim,), np.arange(n_bins, dtype=np.int64))
+        var_names = self.template.var_names
 
-        keep_dims = [d for d in self.dims if d != dim]
-        out_dims = sorted(keep_dims + [new_dim])
-        tmpl = self.template
-        out_vm = {
-            v: (tuple([new_dim] + [d for d in dims_v if d != dim]), np.dtype("int64").str)
-            for v, (dims_v, _) in tmpl.var_meta.items()
+        def add(ds: NDDataset, offs: dict[str, int]) -> NDDataset:
+            acc: dict[str, Variable] = {}
+            for v in var_names:
+                var = ds.data_vars[v]
+                a = np.moveaxis(var.values.astype(np.float64, copy=False), var.dims.index(dim), 0)
+                idx = np.searchsorted(edges, a, side="right") - 1
+                ok = (~np.isnan(a)) & (idx >= 0) & (idx < n_bins)
+                counts = np.zeros((n_bins,) + a.shape[1:], np.int64)
+                rest_ix = np.indices(a.shape)[1:]
+                np.add.at(counts, (idx[ok],) + tuple(ri[ok] for ri in rest_ix), 1)
+                acc[f"{v}__bins"] = Variable(
+                    (new_dim,) + tuple(d for d in var.dims if d != dim), counts
+                )
+            kept = {k: c for k, c in ds.coords.items() if dim not in c.dims}
+            kept[new_dim] = new_coord
+            return NDDataset(acc, kept, ds.attrs)
+
+        out_vars = {
+            v: (dims_v, np.dtype("int64").str) for v, (dims_v, _) in self.template.var_meta.items()
         }
-        out_tmpl = Template(
-            sizes={**{d: s for d, s in sizes.items() if d != dim}, new_dim: n_bins},
-            var_meta=out_vm,
-            coords={
-                **{k: c for k, c in tmpl.coords.items() if dim not in c.dims},
-                new_dim: Variable((new_dim,), np.arange(n_bins, dtype=np.int64)),
-            },
-            attrs=tmpl.attrs,
+        return self._tree_reduce(
+            [dim], add, _COMBINERS["bins", "count"], _XArgs("count"), out_vars, new_coord
         )
-        out_chunks = {**{d: self.chunks[d] for d in keep_dims}, new_dim: n_bins}
-        schema = chunk_row_schema(out_dims)
+
+    def _tree_reduce(
+        self,
+        red_dims: list[str],
+        add: Callable[[NDDataset, dict[str, int]], NDDataset],
+        combiner: "_Combiner",
+        params: "_XArgs",
+        out_vars: dict[str, tuple[tuple[str, ...], str]],
+        new_coord: Variable | None = None,
+    ) -> "Dataset":
+        """The one combiner path behind every grid reduction: the
+        reference's CombineFn (add_input / merge_accumulators /
+        extract_output, ``combiners.py``) over ``MultiStageMean``'s fanout
+        tree (``combiners.py:294-394``).
+
+        A narrow ``mapInPandas`` turns each chunk into its accumulator
+        with ``add(chunk, offsets along red_dims)``. While more than
+        ``DEFAULT_MERGE_FANIN`` accumulators would land on one output
+        cell, a tree-merge round re-keys them by ``chunk_index // fanin``
+        and merges each group with :func:`_merge_partial`, so no task
+        gathers more than fanin payloads — at 10⁵ chunks per climatology
+        cell, the difference between a working plan and one Python task
+        deserializing 10⁵ accumulators. A final ``groupBy`` on the kept
+        offsets merges once more and runs ``combiner.extract`` for each
+        output variable of ``out_vars`` (name → the dims of the input it
+        reduces, output dtype). ``new_coord`` (group and bin reductions)
+        is the single-chunk output dim that replaces ``red_dims``."""
+        tmpl = self.template
+        keep_dims = [d for d in self.dims if d not in red_dims]
+        out_sizes = {d: s for d, s in tmpl.sizes.items() if d not in red_dims}
+        out_coords = {k: c for k, c in tmpl.coords.items() if not set(c.dims) & set(red_dims)}
+        out_chunks = {d: self.chunks[d] for d in keep_dims}
+        new_dims = list(new_coord.dims) if new_coord is not None else []
+        for nd in new_dims:
+            out_sizes[nd] = out_chunks[nd] = len(new_coord.values)
+            out_coords[nd] = new_coord
+        out_vm = {
+            v: (tuple(new_dims) + tuple(d for d in dims_v if d not in red_dims), dt)
+            for v, (dims_v, dt) in out_vars.items()
+        }
+        out_tmpl = Template(sizes=out_sizes, var_meta=out_vm, coords=out_coords, attrs=tmpl.attrs)
+        schema = chunk_row_schema(keep_dims + new_dims)
         schema_mk = T.StructType(list(schema.fields) + [T.StructField("mkey", T.LongType())])
+        cols, cols_mk = schema.fieldNames(), schema_mk.fieldNames()
         offc = [off_col(d) for d in keep_dims]
-        var_names = tmpl.var_names
-        g_dim = dim
-        g_chunk = self.chunks[g_dim]
-        fan_in = -(-sizes[g_dim] // g_chunk)
+        # linearized reduced-chunk index → the tree-merge re-key base
+        chunks_in = dict(self.chunks)
+        strides: dict[str, int] = {}
+        fan_in = 1
+        for d in red_dims:
+            strides[d] = fan_in
+            fan_in *= -(-self.sizes[d] // chunks_in[d])
 
-        def pre(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            e = bc_edges.value
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):
-                    ds = decode_chunk(r["payload"])
-                    acc_vars: dict[str, Variable] = {}
-                    for v in var_names:
-                        var = ds.data_vars[v]
-                        ax = var.dims.index(g_dim)
-                        a = np.moveaxis(
-                            var.values.astype(np.float64, copy=False), ax, 0
-                        )
-                        rest = tuple(d for d in var.dims if d != g_dim)
-                        idx = np.searchsorted(e, a, side="right") - 1
-                        ok = (~np.isnan(a)) & (idx >= 0) & (idx < n_bins)
-                        counts = np.zeros((n_bins,) + a.shape[1:], np.int64)
-                        rest_ix = np.indices(a.shape)[1:]
-                        np.add.at(
-                            counts,
-                            (idx[ok],) + tuple(ri[ok] for ri in rest_ix),
-                            1,
-                        )
-                        acc_vars[v] = Variable((new_dim,) + rest, counts)
-                    kept = {k: c for k, c in ds.coords.items() if g_dim not in c.dims}
-                    kept[new_dim] = Variable(
-                        (new_dim,), np.arange(n_bins, dtype=np.int64)
-                    )
-                    acc = NDDataset(acc_vars, kept, ds.attrs)
-                    row = {
-                        off_col(d): (0 if d == new_dim else int(r[off_col(d)]))
-                        for d in out_dims
-                    }
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(acc)
-                    row["mkey"] = int(r[off_col(g_dim)]) // g_chunk
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema_mk.fields])
-
-        def combine(key: tuple, pdf: pd.DataFrame, with_mkey: bool) -> pd.DataFrame:
-            parts = [decode_chunk(p) for p in pdf["payload"]]
-            first = parts[0]
-            out = {
-                v: Variable(
-                    first.data_vars[v].dims,
-                    np.sum([p.data_vars[v].values for p in parts], axis=0).astype(
-                        np.int64
-                    ),
-                )
-                for v in var_names
-            }
-            acc = NDDataset(out, first.coords, first.attrs)
-            ncols = schema_mk if with_mkey else schema
-            row = dict(
-                zip(
-                    ["vars"] + offc,
-                    [key[0]] + [int(k) for k in key[1 : 1 + len(offc)]],
-                )
-            )
-            row[off_col(new_dim)] = 0
+        def pack(key: tuple, acc: NDDataset, with_mkey: bool) -> pd.DataFrame:
+            # key = (vars, *offc) or (vars, *offc, mkey)
+            row = dict(zip(offc, map(int, key[1:])), vars=key[0], payload=encode_chunk(acc))
+            row.update({off_col(d): 0 for d in new_dims})
             if with_mkey:
                 row["mkey"] = int(key[-1])
-            row["payload"] = encode_chunk(acc)
-            return pd.DataFrame([row], columns=[f.name for f in ncols.fields])
+            return pd.DataFrame([row], columns=cols_mk if with_mkey else cols)
 
-        fanin = int(merge_fanin or DEFAULT_MERGE_FANIN)
+        def pre(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                rows = []
+                # to_dict('records') like every other per-chunk stage —
+                # itertuples()._asdict() RENAMES columns that are not
+                # valid identifiers (dim 'lat-lon' → '_1'), breaking the
+                # off-column lookups below for such dims
+                for rd in pdf.to_dict("records"):
+                    offs = {d: int(rd[off_col(d)]) for d in red_dims}
+                    row = {off_col(d): int(rd[off_col(d)]) for d in keep_dims}
+                    row.update({off_col(d): 0 for d in new_dims}, vars=rd["vars"])
+                    row["payload"] = encode_chunk(add(decode_chunk(rd["payload"]), offs))
+                    row["mkey"] = sum(offs[d] // chunks_in[d] * strides[d] for d in red_dims)
+                    rows.append(row)
+                if rows:
+                    yield pd.DataFrame(rows, columns=cols_mk)
+
+        def merge_round(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            acc = _merge_partial([decode_chunk(p) for p in pdf["payload"]], combiner.fields)
+            return pack(key, acc, True)
+
+        def merge_extract(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            acc = _merge_partial([decode_chunk(p) for p in pdf["payload"]], combiner.fields)
+            fields: dict[str, dict[str, np.ndarray]] = {}
+            for name, var in acc.data_vars.items():
+                owner, f = name.rsplit("__", 1)
+                fields.setdefault(owner, {})[f] = var.values
+            out = {}
+            for v in sorted(out_vm):
+                dims_v, dt = out_vm[v]
+                res = combiner.extract(fields[v], params._replace(var=v, dtype=dt))
+                out[v] = Variable(dims_v, np.asarray(res))
+            return pack(key, NDDataset(out, acc.coords, acc.attrs), False)
+
+        fanin = DEFAULT_MERGE_FANIN
         df = self.df.mapInPandas(pre, schema_mk)
         expected = fan_in
         while expected > fanin:
             df = df.withColumn("mkey", F.floor(F.col("mkey") / fanin).cast("long"))
-            df = df.groupBy("vars", *offc, "mkey").applyInPandas(
-                lambda k, p: combine(k, p, True), schema_mk
-            )
+            df = df.groupBy("vars", *offc, "mkey").applyInPandas(merge_round, schema_mk)
             expected = -(-expected // fanin)
-        df = df.groupBy("vars", *offc).applyInPandas(
-            lambda k, p: combine(k, p, False), schema
-        )
+        df = df.groupBy("vars", *offc).applyInPandas(merge_extract, schema)
         return Dataset(self.spark, df, out_tmpl, out_chunks, False)
 
 
@@ -3553,16 +3294,15 @@ class MemoryScan:
 # ---------------------------------------------------------------------------
 
 
-def _arg_combine(val_a, arg_a, val_b, arg_b, op: str):
-    """Elementwise associative combine for arg-extremum accumulators:
-    prefer the better value; NaN (empty) loses to any value; ties go to
-    the smaller global index (first-occurrence semantics, so the result
-    is chunking-independent)."""
-    better = (val_b < val_a) if op == "argmin" else (val_b > val_a)
-    better = better | (np.isnan(val_a) & ~np.isnan(val_b))
-    tie = (val_b == val_a) & (arg_b < arg_a)
-    take_b = better | tie
-    return np.where(take_b, val_b, val_a), np.where(take_b, arg_b, arg_a)
+def _arg_combine(a: np.ndarray, b: np.ndarray, op: str) -> np.ndarray:
+    """Elementwise associative combine for stacked (value, global index)
+    arg-extremum accumulators: prefer the better value; NaN (empty) loses
+    to any value; ties go to the smaller global index (first-occurrence
+    semantics, so the result is chunking-independent)."""
+    better = (b[0] < a[0]) if op == "argmin" else (b[0] > a[0])
+    better = better | (np.isnan(a[0]) & ~np.isnan(b[0]))
+    tie = (b[0] == a[0]) & (b[1] < a[1])
+    return np.where(better | tie, b, a)
 
 
 def _pre_aggregate(
@@ -3573,10 +3313,12 @@ def _pre_aggregate(
     skipna: bool,
     offsets: Mapping[str, int] | None = None,
 ) -> NDDataset:
-    """Per-chunk partial aggregate → accumulator variables.
+    """Per-chunk partial aggregate → accumulator variables: the add step
+    of every ``("dim", op)`` entry of ``_COMBINERS``.
 
-    mean/sum: (sum, count); min/max: (min|max); std/var: (sum, sumsq,
-    count); argmin/argmax: (extremum value, global element index).
+    mean/sum/count: (sum, cnt); min/max: (min|max); std/var: (sum, cnt,
+    ssq); argmin/argmax: stacked (extremum value, global element index);
+    trend and corr: their moment sums.
     Reference: ``combiners.py:37-64`` (_SumAndCount).
     """
     out: dict[str, Variable] = {}
@@ -3592,12 +3334,12 @@ def _pre_aggregate(
         x0 = np.where(valid, x, 0.0)
         y0 = np.where(valid, y, 0.0)
         for name, arr in (
-            ("c__n", w),
-            ("c__sx", x0),
-            ("c__sy", y0),
-            ("c__sxy", x0 * y0),
-            ("c__sx2", x0 * x0),
-            ("c__sy2", y0 * y0),
+            ("corr__n", w),
+            ("corr__sx", x0),
+            ("corr__sy", y0),
+            ("corr__sxy", x0 * y0),
+            ("corr__sxx", x0 * x0),
+            ("corr__syy", y0 * y0),
         ):
             out[name] = Variable(new_dims, np.sum(arr, axis=axes))
         keep = {d for var in out.values() for d in var.dims}
@@ -3621,8 +3363,10 @@ def _pre_aggregate(
             val = np.take_along_axis(filled, np.expand_dims(idx, ax), ax).squeeze(axis=ax)
             empty = np.all(np.isnan(af), axis=ax)
             garg = idx.astype(np.float64) + (offsets or {}).get(d0, 0)
-            out[f"{v}__val"] = Variable(new_dims, np.where(empty, np.nan, val))
-            out[f"{v}__arg"] = Variable(new_dims, np.where(empty, np.nan, garg))
+            out[f"{v}__valarg"] = Variable(
+                ("__pair",) + new_dims,
+                np.stack([np.where(empty, np.nan, val), np.where(empty, np.nan, garg)]),
+            )
         elif op == "trend":
             d0 = red_dims[0]
             ax = var.dims.index(d0)
@@ -3638,7 +3382,7 @@ def _pre_aggregate(
             out[f"{v}__sy"] = Variable(new_dims, np.sum(y0, axis=ax))
             out[f"{v}__siy"] = Variable(new_dims, np.sum(ii * y0, axis=ax))
             out[f"{v}__si"] = Variable(new_dims, np.sum(ii * w, axis=ax))
-            out[f"{v}__si2"] = Variable(new_dims, np.sum(ii * ii * w, axis=ax))
+            out[f"{v}__sii"] = Variable(new_dims, np.sum(ii * ii * w, axis=ax))
         elif op in ("mean", "sum", "std", "var", "count"):
             af = a.astype(np.float64, copy=False)
             s = np.nansum(af, axis=axes) if nan_aware else np.sum(af, axis=axes)
@@ -3663,146 +3407,177 @@ def _pre_aggregate(
     return NDDataset(out, coords, ds.attrs)
 
 
-def _merge_partial(
-    parts: list[NDDataset], var_names: list[str], op: str, skipna: bool
-) -> NDDataset:
-    """Combine accumulator NDDatasets WITHOUT finalizing — the associative
-    merge step of the reference's multi-stage combiner tree
-    (``MultiStageMean.add_input``, ``combiners.py:294-345``). Output has
-    the same accumulator schema as ``_pre_aggregate``, so rounds chain."""
+def _merge_partial(parts: list[NDDataset], merges: Mapping[str, str]) -> NDDataset:
+    """The one accumulator merge — ``merge_accumulators`` of the
+    reference's CombineFn, run by every tree-merge round and by the final
+    round before ``extract``. Each payload variable ``<var>__<field>``
+    combines across ``parts`` with the merge its field declares in
+    ``merges`` (a ``_Combiner.fields``; ragged slabs ``g0, g1, …`` share
+    the entry ``g``). The output has the input's accumulator schema, so
+    rounds chain."""
     first = parts[0]
     out: dict[str, Variable] = {}
-    if op == "corr":
-        for key in ("c__n", "c__sx", "c__sy", "c__sxy", "c__sx2", "c__sy2"):
-            vals = np.sum([p.data_vars[key].values for p in parts], axis=0)
-            out[key] = Variable(first.data_vars[key].dims, np.asarray(vals, np.float64))
-        keep = {d for var in out.values() for d in var.dims}
-        coords = {k: c for k, c in first.coords.items() if set(c.dims) <= keep}
-        return NDDataset(out, coords, first.attrs)
-    for v in var_names:
-        if op in ("argmin", "argmax"):
-            val = first.data_vars[f"{v}__val"].values
-            arg = first.data_vars[f"{v}__arg"].values
-            for p in parts[1:]:
-                val, arg = _arg_combine(
-                    val, arg, p.data_vars[f"{v}__val"].values, p.data_vars[f"{v}__arg"].values, op
-                )
-            out[f"{v}__val"] = Variable(first.data_vars[f"{v}__val"].dims, val)
-            out[f"{v}__arg"] = Variable(first.data_vars[f"{v}__arg"].dims, arg)
-        elif op == "trend":
-            for suffix in ("__n", "__sy", "__siy", "__si", "__si2"):
-                key = f"{v}{suffix}"
-                vals = np.sum([p.data_vars[key].values for p in parts], axis=0)
-                out[key] = Variable(first.data_vars[key].dims, np.asarray(vals, np.float64))
-        elif op in ("mean", "sum", "std", "var", "count"):
-            for suffix in ("__sum", "__cnt") + (("__ssq",) if op in ("std", "var") else ()):
-                key = f"{v}{suffix}"
-                vals = np.sum([p.data_vars[key].values for p in parts], axis=0)
-                dt = np.int64 if suffix == "__cnt" else np.float64
-                out[key] = Variable(first.data_vars[key].dims, np.asarray(vals, dtype=dt))
-        else:
-            key = f"{v}__{op}"
-            if skipna:
-                fn = np.fmin if op == "min" else np.fmax
-            else:
-                fn = np.minimum if op == "min" else np.maximum
-            res = parts[0].data_vars[key].values
-            for p in parts[1:]:
-                res = fn(res, p.data_vars[key].values)
-            out[key] = Variable(first.data_vars[key].dims, res)
-    keep = {d for var in out.values() for d in var.dims}
-    coords = {k: c for k, c in first.coords.items() if set(c.dims) <= keep}
-    return NDDataset(out, coords, first.attrs)
+    for name, var in first.data_vars.items():
+        kind = merges[name.rsplit("__", 1)[1].rstrip("0123456789")]
+        merged = _MERGES[kind]([p.data_vars[name].values for p in parts])
+        out[name] = Variable(var.dims, np.asarray(merged))
+    return NDDataset(out, first.coords, first.attrs)
 
 
-def _merge_finalize(
-    parts: list[NDDataset], var_names: list[str], op: str, skipna: bool, ddof: int
-) -> NDDataset:
-    first = parts[0]
-    out: dict[str, Variable] = {}
-    if op == "corr":
-        acc = {
-            k: np.sum([p.data_vars[f"c__{k}"].values for p in parts], axis=0)
-            for k in ("n", "sx", "sy", "sxy", "sx2", "sy2")
-        }
-        n, sx, sy, sxy, sx2, sy2 = (
-            acc[k] for k in ("n", "sx", "sy", "sxy", "sx2", "sy2")
+def _fold(fn: Callable) -> Callable[[list[np.ndarray]], np.ndarray]:
+    return lambda arrs: functools.reduce(fn, arrs)
+
+
+# how one accumulator field's partials combine
+_MERGES: dict[str, Callable[[list[np.ndarray]], np.ndarray]] = {
+    "add": lambda arrs: np.sum(arrs, axis=0),
+    "fmin": _fold(np.fmin),
+    "fmax": _fold(np.fmax),
+    "minimum": _fold(np.minimum),
+    "maximum": _fold(np.maximum),
+    "argmin": _fold(functools.partial(_arg_combine, op="argmin")),
+    "argmax": _fold(functools.partial(_arg_combine, op="argmax")),
+    "concat": lambda arrs: np.concatenate(arrs, axis=0),
+}
+
+
+class _XArgs(NamedTuple):
+    """What an extract reads besides the merged fields: the op and its
+    options, and the output variable's name and dtype."""
+
+    op: str
+    ddof: int = 0
+    q: float = 0.5
+    skipna: bool = True
+    var: str = ""
+    dtype: str = ""
+
+
+class _Combiner(NamedTuple):
+    """One reduction's accumulator: ``fields`` maps each accumulator field
+    to its merge in ``_MERGES``; ``extract`` maps one output variable's
+    merged fields to its result (``extract_output``)."""
+
+    fields: Mapping[str, str]
+    extract: Callable[[dict[str, np.ndarray], _XArgs], np.ndarray]
+
+
+def _x_mean(a: dict[str, np.ndarray], p: _XArgs) -> np.ndarray:
+    with np.errstate(all="ignore"):
+        return a["sum"] / a["cnt"]
+
+
+def _x_var(a: dict[str, np.ndarray], p: _XArgs) -> np.ndarray:
+    """Variance (``op='var'``) or its root, NaN where count <= ddof.
+    Evaluated with exactly this expression tree so SQL oracles writing
+    (SUM(x²) - SUM(x)*SUM(x)/n)/n match bit for bit. Clamped at 0:
+    catastrophic cancellation (mean >> spread, e.g. Kelvin/epoch data)
+    can push the textbook formula fractionally negative; oracles wrap the
+    same expression in GREATEST(..., 0)."""
+    s, cnt = a["sum"], a["cnt"]
+    with np.errstate(all="ignore"):
+        res = np.maximum((a["ssq"] - s * s / cnt) / (cnt - p.ddof), 0.0)
+        if p.op == "std":
+            res = np.sqrt(res)
+    return np.where(cnt <= p.ddof, np.nan, res)
+
+
+def _x_trend(a: dict[str, np.ndarray], p: _XArgs) -> np.ndarray:
+    n, sy, siy, si, sii = (a[k] for k in ("n", "sy", "siy", "si", "sii"))
+    with np.errstate(all="ignore"):
+        # OLS slope over the global element index, evaluated with exactly
+        # this expression tree so SQL oracles writing
+        # (n·Σiy − Σi·Σy)/(n·Σi² − Σi·Σi) match bit-for-bit
+        res = (n * siy - si * sy) / (n * sii - si * si)
+    return np.where(n >= 2, res, np.nan)
+
+
+def _x_corr(a: dict[str, np.ndarray], p: _XArgs) -> np.ndarray:
+    n, sx, sy, sxy, sxx, syy = (a[k] for k in ("n", "sx", "sy", "sxy", "sxx", "syy"))
+    with np.errstate(all="ignore"):
+        # Pearson r, evaluated with exactly this expression tree so SQL
+        # oracles writing (n·Σxy−Σx·Σy)/sqrt((n·Σx²−Σx·Σx)·(n·Σy²−Σy·Σy))
+        # match bit-for-bit
+        num = n * sxy - sx * sy
+        den = np.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
+        res = num / den
+    return np.where((n >= 2) & (den > 0), res, np.nan)
+
+
+def _x_group_extreme(a: dict[str, np.ndarray], p: _XArgs) -> np.ndarray:
+    cnt = a["cnt"]
+    if not np.issubdtype(np.dtype(p.dtype), np.floating) and np.any(cnt == 0):
+        # NaN→int is an undefined numpy cast (INT64_MIN garbage reported
+        # as a real minimum): integer variables cannot represent an empty
+        # group — loud
+        raise ValueError(
+            f"groupby_reduce({p.op!r}): variable {p.var!r} has "
+            "empty group combinations but an integer dtype "
+            "— cast it to float first (NaN marks empties)"
         )
-        with np.errstate(all="ignore"):
-            # Pearson r, evaluated with exactly this expression tree so SQL
-            # oracles writing (n·Σxy−Σx·Σy)/sqrt((n·Σx²−Σx·Σx)·(n·Σy²−Σy·Σy))
-            # match bit-for-bit
-            num = n * sxy - sx * sy
-            den = np.sqrt((n * sx2 - sx * sx) * (n * sy2 - sy * sy))
-            res = num / den
-        res = np.where((n >= 2) & (den > 0), res, np.nan)
-        out["corr"] = Variable(
-            first.data_vars["c__n"].dims, np.asarray(res, np.float64)
-        )
-        keep = {d for var in out.values() for d in var.dims}
-        coords = {k: c for k, c in first.coords.items() if set(c.dims) <= keep}
-        return NDDataset(out, coords, first.attrs)
-    for v in var_names:
-        if op in ("argmin", "argmax"):
-            val = first.data_vars[f"{v}__val"].values
-            arg = first.data_vars[f"{v}__arg"].values
-            for p in parts[1:]:
-                val, arg = _arg_combine(
-                    val, arg, p.data_vars[f"{v}__val"].values, p.data_vars[f"{v}__arg"].values, op
-                )
-            # result = the global element index (float64; NaN for series
-            # that were all-NaN — dropped by to_table like any empty cell)
-            out[v] = Variable(first.data_vars[f"{v}__arg"].dims, arg)
-        elif op == "trend":
-            acc = {
-                sfx: np.sum([p.data_vars[f"{v}__{sfx}"].values for p in parts], axis=0)
-                for sfx in ("n", "sy", "siy", "si", "si2")
-            }
-            n, sy, siy, si, si2 = (acc[k] for k in ("n", "sy", "siy", "si", "si2"))
-            with np.errstate(all="ignore"):
-                # OLS slope over the global element index, evaluated with
-                # exactly this expression tree so SQL oracles writing
-                # (n·Σiy − Σi·Σy)/(n·Σi² − Σi·Σi) match bit-for-bit
-                res = (n * siy - si * sy) / (n * si2 - si * si)
-            res = np.where(n >= 2, res, np.nan)
-            out[v] = Variable(
-                first.data_vars[f"{v}__n"].dims, np.asarray(res, np.float64)
-            )
-        elif op in ("mean", "sum", "std", "var", "count"):
-            s = np.sum([p.data_vars[f"{v}__sum"].values for p in parts], axis=0)
-            cnt = np.sum([p.data_vars[f"{v}__cnt"].values for p in parts], axis=0)
-            dims_v = first.data_vars[f"{v}__sum"].dims
-            with np.errstate(all="ignore"):
-                if op == "count":
-                    out[v] = Variable(dims_v, np.asarray(cnt, dtype=np.int64))
-                    continue
-                if op == "sum":
-                    res = s
-                elif op == "mean":
-                    res = s / cnt
-                else:
-                    sq = np.sum([p.data_vars[f"{v}__ssq"].values for p in parts], axis=0)
-                    varr = (sq - s * s / cnt) / (cnt - ddof)
-                    varr = np.maximum(varr, 0.0)
-                    res = np.sqrt(varr) if op == "std" else varr
-            out[v] = Variable(dims_v, np.asarray(res, dtype=np.float64))
+    # empty groups (count 0) → NaN; legitimate ±inf survives
+    return np.where(cnt == 0, np.nan, a[p.op]).astype(p.dtype, copy=False)
+
+
+def _x_group_quantile(a: dict[str, np.ndarray], p: _XArgs) -> np.ndarray:
+    """Quantile of each group's gathered slab; an empty group is NaN."""
+    res = []
+    for gi in range(len(a)):
+        vals = a[f"g{gi}"]
+        if vals.shape[0] == 0:
+            res.append(np.full(vals.shape[1:], np.nan))
+        elif p.skipna:
+            any_valid = np.any(~np.isnan(vals), axis=0)
+            safe = np.where(np.isnan(vals), 0.0, vals)
+            # nanquantile warns on all-NaN columns; compute on a safe copy
+            # only where nothing is valid
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore")
+                qv = np.nanquantile(np.where(any_valid, vals, safe), p.q, axis=0)
+            res.append(np.where(any_valid, qv, np.nan))
         else:
-            key = f"{v}__{op}"
-            arrs = [p.data_vars[key].values for p in parts]
-            # skipna=True: fmin/fmax ignore NaN partials (a chunk that was all
-            # NaN). skipna=False: minimum/maximum propagate NaN, matching
-            # xarray's NaN-poisoning semantics across chunk boundaries.
-            if skipna:
-                fn = np.fmin if op == "min" else np.fmax
-            else:
-                fn = np.minimum if op == "min" else np.maximum
-            res = arrs[0]
-            for a in arrs[1:]:
-                res = fn(res, a)
-            out[v] = Variable(first.data_vars[key].dims, res)
-    keep = {d for var in out.values() for d in var.dims}
-    coords = {k: c for k, c in first.coords.items() if set(c.dims) <= keep}
-    return NDDataset(out, coords, first.attrs)
+            res.append(np.quantile(vals, p.q, axis=0))
+    return np.stack(res, axis=0).astype(np.float64)
+
+
+_SUM_CNT = {"sum": "add", "cnt": "add"}
+_MOMENTS = {**_SUM_CNT, "ssq": "add"}
+
+# The accumulator table: (family, op) → fields, their merges and the
+# extract. Families: "dim" (Dataset._agg; an all-NaN cell sums to 0),
+# "group" (groupby_reduce; an empty group is NaN, min/max start at ±inf
+# and count members) and "bins" (histogram).
+_COMBINERS: dict[tuple[str, str], _Combiner] = {
+    ("dim", "mean"): _Combiner(_SUM_CNT, _x_mean),
+    ("dim", "sum"): _Combiner(_SUM_CNT, lambda a, p: a["sum"]),
+    ("dim", "count"): _Combiner(_SUM_CNT, lambda a, p: a["cnt"]),
+    ("dim", "std"): _Combiner(_MOMENTS, _x_var),
+    ("dim", "var"): _Combiner(_MOMENTS, _x_var),
+    # skipna=False: minimum/maximum propagate NaN across chunk boundaries
+    # (xarray's NaN poisoning); skipna: fmin/fmax ignore the NaN partial
+    # of an all-NaN chunk
+    ("dim", "min"): _Combiner({"min": "minimum"}, lambda a, p: a["min"]),
+    ("dim", "max"): _Combiner({"max": "maximum"}, lambda a, p: a["max"]),
+    ("dim", "nanmin"): _Combiner({"min": "fmin"}, lambda a, p: a["min"]),
+    ("dim", "nanmax"): _Combiner({"max": "fmax"}, lambda a, p: a["max"]),
+    # stacked (extremum value, global element index) → the index (float64;
+    # NaN for all-NaN series, dropped by to_table like any empty cell)
+    ("dim", "argmin"): _Combiner({"valarg": "argmin"}, lambda a, p: a["valarg"][1]),
+    ("dim", "argmax"): _Combiner({"valarg": "argmax"}, lambda a, p: a["valarg"][1]),
+    ("dim", "trend"): _Combiner(dict.fromkeys(("n", "sy", "siy", "si", "sii"), "add"), _x_trend),
+    ("dim", "corr"): _Combiner(
+        dict.fromkeys(("n", "sx", "sy", "sxy", "sxx", "syy"), "add"), _x_corr
+    ),
+    ("group", "mean"): _Combiner(_SUM_CNT, _x_mean),
+    ("group", "sum"): _Combiner(_SUM_CNT, lambda a, p: np.where(a["cnt"] == 0, np.nan, a["sum"])),
+    ("group", "std"): _Combiner(_MOMENTS, _x_var),
+    ("group", "var"): _Combiner(_MOMENTS, _x_var),
+    ("group", "min"): _Combiner({"min": "minimum", "cnt": "add"}, _x_group_extreme),
+    ("group", "max"): _Combiner({"max": "maximum", "cnt": "add"}, _x_group_extreme),
+    # ragged per-group slabs g0, g1, … gathered for a quantile
+    ("group", "quantile"): _Combiner({"g": "concat"}, _x_group_quantile),
+    ("bins", "count"): _Combiner({"bins": "add"}, lambda a, p: a["bins"]),
+}
 
 
 # ---------------------------------------------------------------------------
