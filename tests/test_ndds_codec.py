@@ -136,3 +136,57 @@ def test_decode_chunk_writability_contract():
     assert rw.data_vars["x"].values[0] == 9.0
     with pytest.raises(ValueError, match="truncated|magic"):
         decode_chunk(payload[:5])
+
+
+# Payloads of the original tobytes()/bytearray encoder. The encoder may
+# change how it copies buffers, never the bytes it emits: shuffle files,
+# Zarr round trips and retried tasks rely on the layout being stable.
+_GOLDEN_HEX = {
+    "float32": "58425331d60000007b226174747273223a207b7d2c202276617273223a205b7b2264696d73223a205b2278222c202279225d2c20226474797065223a20223c6634222c202267726f7570223a202264617461222c20226e616d65223a202274222c20226e6279746573223a2032342c20227368617065223a205b322c20335d7d2c207b2264696d73223a205b2278225d2c20226474797065223a20223c6938222c202267726f7570223a2022636f6f7264222c20226e616d65223a202278222c20226e6279746573223a2031362c20227368617065223a205b325d7d5d7d000000000000803e0000003f0000403f0000803f0000a03f0a000000000000001400000000000000",
+    "int64": "58425331720000007b226174747273223a207b7d2c202276617273223a205b7b2264696d73223a205b2278225d2c20226474797065223a20223c6938222c202267726f7570223a202264617461222c20226e616d65223a20226e222c20226e6279746573223a2032342c20227368617065223a205b335d7d5d7dfdffffffffffffff00000000000000000000000000010000",
+    "bool": "58425331710000007b226174747273223a207b7d2c202276617273223a205b7b2264696d73223a205b2278225d2c20226474797065223a20227c6231222c202267726f7570223a202264617461222c20226e616d65223a20226d222c20226e6279746573223a20332c20227368617065223a205b335d7d5d7d010001",
+    "datetime64": "58425331db0000007b226174747273223a207b7d2c202276617273223a205b7b2264696d73223a205b2274696d65225d2c20226474797065223a20223c6638222c202267726f7570223a202264617461222c20226e616d65223a202276222c20226e6279746573223a2031362c20227368617065223a205b325d7d2c207b2264696d73223a205b2274696d65225d2c20226474797065223a20223c4d385b6e735d222c202267726f7570223a2022636f6f7264222c20226e616d65223a202274696d65222c20226e6279746573223a2031362c20227368617065223a205b325d7d5d7d000000000000f83f000000000000044000008ab9359ae5150000d94acae8e515",
+    "unicode": "58425331cd0000007b226174747273223a207b7d2c202276617273223a205b7b2264696d73223a205b226b225d2c20226474797065223a20223c6932222c202267726f7570223a202264617461222c20226e616d65223a202276222c20226e6279746573223a20342c20227368617065223a205b325d7d2c207b2264696d73223a205b226b225d2c20226474797065223a20223c5533222c202267726f7570223a2022636f6f7264222c20226e616d65223a20226b222c20226e6279746573223a2032342c20227368617065223a205b325d7d5d7d01000200610000000000000000000000620000006300000064000000",
+    "zero_d": "58425331790000007b226174747273223a207b22756e697473223a20224b227d2c202276617273223a205b7b2264696d73223a205b5d2c20226474797065223a20223c6638222c202267726f7570223a202264617461222c20226e616d65223a202273222c20226e6279746573223a20382c20227368617065223a205b5d7d5d7d0000000000000a40",
+    "isel_view": "58425331d60000007b226174747273223a207b7d2c202276617273223a205b7b2264696d73223a205b2278222c202279225d2c20226474797065223a20223c6634222c202267726f7570223a202264617461222c20226e616d65223a202274222c20226e6279746573223a2032342c20227368617065223a205b322c20335d7d2c207b2264696d73223a205b2279225d2c20226474797065223a20223c6938222c202267726f7570223a2022636f6f7264222c20226e616d65223a202279222c20226e6279746573223a2032342c20227368617065223a205b335d7d5d7d0000c0400000e04000000041000030410000404100005041010000000000000002000000000000000300000000000000",
+}
+
+
+def _golden_inputs():
+    import numpy as np
+
+    from xarray_beam_spark.ndarray_ds import NDDataset
+
+    grid = NDDataset(
+        {"t": (("x", "y"), np.arange(20, dtype=np.float32).reshape(4, 5))}, {"y": np.arange(5)}
+    )
+    return {
+        "float32": NDDataset(
+            {"t": (("x", "y"), np.arange(6, dtype=np.float32).reshape(2, 3) / 4)},
+            {"x": np.array([10, 20])},
+        ),
+        "int64": NDDataset({"n": (("x",), np.array([-3, 0, 2**40], dtype=np.int64))}),
+        "bool": NDDataset({"m": (("x",), np.array([True, False, True]))}),
+        "datetime64": NDDataset(
+            {"v": (("time",), np.array([1.5, 2.5]))},
+            {"time": np.array(["2020-01-01", "2020-01-02"], dtype="datetime64[ns]")},
+        ),
+        "unicode": NDDataset(
+            {"v": (("k",), np.array([1, 2], dtype=np.int16))}, {"k": np.array(["a", "bcd"])}
+        ),
+        "zero_d": NDDataset({"s": ((), np.float64(3.25))}, attrs={"units": "K"}),
+        # a non-contiguous view: the encoder must emit C order
+        "isel_view": grid.isel(x=slice(1, 3), y=slice(1, 4)),
+    }
+
+
+def test_encode_chunk_golden_bytes():
+    from xarray_beam_spark.codec import decode_chunk, encode_chunk
+
+    inputs = _golden_inputs()
+    assert not inputs["isel_view"].data_vars["t"].values.flags.c_contiguous
+    for name, ds in inputs.items():
+        payload = encode_chunk(ds)
+        assert type(payload) is bytes, name
+        assert payload.hex() == _GOLDEN_HEX[name], name
+        assert decode_chunk(payload).identical(ds), name

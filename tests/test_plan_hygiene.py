@@ -10,6 +10,9 @@ equi-join keys fails here, not at 100 TB.
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
 import pytest
 
 from xarray_beam_spark import registry
@@ -137,6 +140,90 @@ def test_export_paths_have_no_unbounded_driver_aggregates():
         assert "bounded driver aggregate" in window, f"sources/stores.py:{i + 1}"
         sites += 1
     assert sites == 1
+
+
+# Python nodes that run a per-chunk map, and every Python map or
+# grouped-map node: one stage of the chunk engine runs ONE of them (the
+# fused chain), never a map stacked directly on another Python pass.
+CHUNK_MAPS = ("MapInArrow", "MapInPandas")
+PYTHON_NODES = CHUNK_MAPS + ("FlatMapGroupsInArrow", "FlatMapGroupsInPandas")
+
+
+def _plan_nodes(tree: str) -> list[tuple[int, str]]:
+    """(depth column, node name) per line of a printed plan tree."""
+    nodes = []
+    for line in tree.splitlines():
+        m = re.match(r"([ :+\-|]*)(?:\* )?(\w+)", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2)))
+    return nodes
+
+
+def _stacked_python_maps(tree: str) -> list[tuple[str, str]]:
+    """(parent, child) for each chunk-map node that is the direct child
+    of another Python node in the tree."""
+    nodes = _plan_nodes(tree)
+    bad = []
+    for i, (col, name) in enumerate(nodes):
+        if name not in PYTHON_NODES:
+            continue
+        for ccol, child in nodes[i + 1 :]:
+            if ccol <= col:
+                break
+            if ccol == col + 3 and child in CHUNK_MAPS:
+                bad.append((name, child))
+    return bad
+
+
+def test_stacked_map_detector():
+    tree = """MapInArrow fused(a)
++- Project [a]
+   +- MapInPandas read(id)
+      :- FlatMapGroupsInArrow assemble(a)
+      :  +- MapInArrow split(a)
+      +- MapInArrow other(id)
+         +- Range (0, 4)"""
+    assert _stacked_python_maps(tree) == [
+        ("MapInPandas", "MapInArrow"),
+        ("FlatMapGroupsInArrow", "MapInArrow"),
+    ]
+
+
+def test_no_xb_gate_stacks_python_chunk_maps(spark, sf_dir):
+    plans = _collect_lazy_plans(spark, sf_dir)
+    gates = {name: plan for name, plan in plans.items() if name.startswith("xb_")}
+    assert len(gates) > 50
+    bad = {name: pairs for name, plan in gates.items() if (pairs := _stacked_python_maps(plan))}
+    assert not bad, f"unfused Python chunk maps: {bad}"
+
+
+def test_rechunk_pipeline_runs_one_python_pass_per_stage(spark, tmp_path):
+    """from_zarr → map_blocks → rechunk → to_zarr executes exactly two
+    Python nodes: the read, map and split in one MapInArrow below the
+    exchange, the assemble and write in one FlatMapGroupsInArrow above."""
+    from xarray_beam_spark.dataset import Dataset
+    from xarray_beam_spark.ndarray_ds import NDDataset
+    from xarray_beam_spark.sources import zarr_io
+
+    rng = np.random.default_rng(5)
+    src = NDDataset(
+        {v: (("time", "lat", "lon"), rng.standard_normal((12, 4, 6)).astype(np.float32)) for v in ("a", "b")},
+        {"time": np.arange(12, dtype=np.int64)},
+    )
+    path = str(tmp_path / "in.zarr")
+    zarr_io.to_zarr(Dataset.from_numpy(spark, src, chunks={"time": 4}), path, compressor=None)
+    ds = zarr_io.from_zarr(spark, path).map_blocks(lambda d: d.map(lambda a: a - np.float32(1)))
+    ds = ds.rechunk({"time": -1, "lat": 2, "lon": 3})
+    zarr_io.to_zarr(ds, str(tmp_path / "out.zarr"), compressor=None)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    desc = execs.apply(execs.size() - 1).physicalPlanDescription()
+    # the tree of the final (adaptive) plan, root first
+    final = desc.split("\n\n")[0].split("== Initial Plan ==")[0]
+    nodes = [name for _, name in _plan_nodes(final)]
+    python = [n for n in nodes if n in PYTHON_NODES or n.endswith("EvalPython")]
+    assert python == ["FlatMapGroupsInArrow", "MapInArrow"], final
+    between = nodes[nodes.index("FlatMapGroupsInArrow") : nodes.index("MapInArrow")]
+    assert "Exchange" in between, final
 
 
 def test_scalar_broadcast_whitelist_is_tight(spark, sf_dir):

@@ -58,9 +58,9 @@ def test_grid_mean_preaggregates_before_shuffle(spark, sf_dir):
     d = _events_grid(spark, sf_dir, chunks={"day": 7})
     plan = d.mean("day").df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan  # merge+finalize (wide)
-    assert "MapInPandas" in plan  # pre-aggregate (narrow)
+    assert "MapInArrow" in plan  # pre-aggregate (narrow)
     # tree order: the narrow pre-agg sits deeper than the grouped stage
-    assert plan.index("MapInPandas") > plan.index("FlatMapGroupsInPandas")
+    assert plan.index("MapInArrow") > plan.index("FlatMapGroupsInPandas")
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):

@@ -30,7 +30,7 @@ def _dtype_token(dt: np.dtype) -> str:
 
 def encode_chunk(ds: NDDataset) -> bytes:
     entries = []
-    buffers: list[bytes] = []
+    buffers: list[np.ndarray] = []
     for group, mapping in (("data", ds.data_vars), ("coord", ds.coords)):
         for name, var in mapping.items():
             # NB: ascontiguousarray promotes 0-d to 1-d (documented numpy
@@ -42,7 +42,9 @@ def encode_chunk(ds: NDDataset) -> bytes:
                 raise TypeError(f"object-dtype variable {name!r} is not encodable")
             if arr.dtype.kind == "U":
                 arr = arr.astype(f"<U{max(1, arr.dtype.itemsize // 4)}")
-            buf = arr.tobytes()
+            # a uint8 view, not tobytes() or memoryview(): no copy, and
+            # datetime64 has no buffer protocol of its own
+            buf = arr.reshape(-1).view(np.uint8)
             entries.append(
                 {
                     "name": name,
@@ -50,18 +52,13 @@ def encode_chunk(ds: NDDataset) -> bytes:
                     "dims": list(var.dims),
                     "shape": true_shape,
                     "dtype": _dtype_token(arr.dtype),
-                    "nbytes": len(buf),
+                    "nbytes": buf.nbytes,
                 }
             )
             buffers.append(buf)
     header = json.dumps({"vars": entries, "attrs": ds.attrs}, sort_keys=True).encode()
-    out = bytearray()
-    out += _MAGIC
-    out += struct.pack("<I", len(header))
-    out += header
-    for buf in buffers:
-        out += buf
-    return bytes(out)
+    # one copy of every buffer, straight into the payload
+    return b"".join([_MAGIC, struct.pack("<I", len(header)), header, *buffers])
 
 
 def decode_chunk(

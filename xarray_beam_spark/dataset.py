@@ -10,16 +10,17 @@ labeled dataset carried as a DataFrame with one row per chunk:
 
 Design (SURVEY.md §1.5): key columns are real Spark columns so Catalyst
 prunes/groups/shuffles them natively; array payloads are opaque binary
-moved by Arrow into pandas UDFs. Driver holds the ``Template`` (schema:
-dim sizes, var dtypes, coordinates) and the chunk grid; all per-chunk
-compute is vectorized NumPy inside ``mapInPandas``/``applyInPandas``.
+moved by Arrow into Python. Driver holds the ``Template`` (schema: dim
+sizes, var dtypes, coordinates) and the chunk grid; all per-chunk compute
+is vectorized NumPy in a fused chain (source → steps → sink) that runs as
+ONE ``mapInArrow`` or grouped ``applyInArrow`` per Spark stage.
 
 Scale notes:
 - chunk enumeration is ``spark.range(chunk_count)`` — no driver-side key
   materialization at any chunk count (reference needed explicit sharding
   above 200k keys, ``core.py:544-670``);
 - rechunk = the reference's split→GroupByKey→consolidate, expressed as a
-  narrow ``mapInPandas`` + ``groupBy(off cols).applyInPandas``; multistage
+  split step + ``groupBy(target offsets).applyInArrow``; multistage
   plans from :mod:`xarray_beam_spark.plans.rechunk_plan` bound every
   shuffle group ≤ max_mem;
 - reductions pre-aggregate inside each chunk (narrow) before the shuffle,
@@ -168,6 +169,110 @@ def _vars_token(vars: Iterable[str] | None) -> str | None:
 
 
 # ---------------------------------------------------------------------------
+# The fused per-chunk chain
+# ---------------------------------------------------------------------------
+#
+# A Dataset is a source plus a tuple of per-chunk steps. The source turns
+# the rows of its frame into ``(key, NDDataset)`` pairs, ``key = (offsets
+# by dim, vars token)``; each step maps one pair to an iterable of pairs.
+# Nothing runs until rows are asked for: ``Dataset.df`` or a sink (to_zarr,
+# to_table, the reductions' pre-aggregate) then emits ONE Python node that
+# runs the source, every step and the consumer. Spark pipelines a stage's
+# narrow nodes, but each Python node is its own JVM → Python → JVM Arrow
+# round trip, so without this every map_blocks / split / write would cost
+# a round trip plus an encode_chunk and a decode_chunk of every payload.
+
+ChunkPair = tuple[tuple[dict[str, int], "str | None"], NDDataset]
+Step = Callable[[tuple[dict[str, int], "str | None"], NDDataset], Iterable[ChunkPair]]
+
+
+class _Source(NamedTuple):
+    """Where a fused chain's pairs come from. ``pairs(batch)`` runs on
+    executors, so it must not capture the ``frame``. With ``group_by``
+    set, ``frame`` is grouped by those columns and ``pairs(key, table)``
+    assembles each group (one ``applyInArrow``); otherwise ``pairs``
+    reads the RecordBatches of one ``mapInArrow``."""
+
+    frame: DataFrame
+    pairs: Callable[..., Iterator[ChunkPair]]
+    group_by: tuple[str, ...] | None = None
+    # chunk rows that pass through unchanged when no step follows
+    rows: bool = False
+    # every writeable data array it yields is private to its chunk
+    fresh: bool = False
+
+
+def _decode_rows(dims: Sequence[str], batch: "pa.RecordBatch") -> Iterator[ChunkPair]:
+    """The chunk-row source: payloads decode zero-copy from the batch's
+    binary value buffer (read-only views)."""
+    offs = [batch.column(off_col(d)).to_numpy() for d in dims]
+    kvars = batch.column("vars").to_pylist()
+    payloads = batch.column("payload")
+    for i in range(batch.num_rows):
+        key = ({d: int(o[i]) for d, o in zip(dims, offs)}, kvars[i])
+        yield key, decode_chunk(memoryview(payloads[i].as_buffer()))
+
+
+def _rows_source(df: DataFrame, dims: Sequence[str]) -> _Source:
+    return _Source(df, functools.partial(_decode_rows, list(dims)), rows=True)
+
+
+def _through(steps: Sequence[Step], key, ds: NDDataset) -> Iterator[ChunkPair]:
+    """Run one pair through every step, depth first: a worker holds one
+    source chunk plus the pieces of it still in flight."""
+    if not steps:
+        yield key, ds
+        return
+    for k, d in steps[0](key, ds):
+        yield from _through(steps[1:], k, d)
+
+
+def _encode_sink(dims: Sequence[str], extra=None):
+    """The default consumer: one chunk-row RecordBatch per call, each
+    payload encoded once. ``extra = (name, fn(key))`` appends one int64
+    column."""
+    dims = list(dims)
+    names = [off_col(d) for d in dims] + ["vars", "payload"]
+    if extra is not None:
+        names.append(extra[0])
+
+    def sink(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
+        cols: list[list] = [[] for _ in names]
+        for key, ds in pairs:
+            row = [key[0][d] for d in dims] + [key[1], encode_chunk(ds)]
+            if extra is not None:
+                row.append(extra[1](key))
+            for col, value in zip(cols, row):
+                col.append(value)
+        if cols[-1]:
+            types = [pa.int64()] * len(dims) + [pa.string(), pa.binary(), pa.int64()]
+            arrays = [pa.array(c, t) for c, t in zip(cols, types)]
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return sink
+
+
+def _own_arrays(ds: NDDataset, trust_writeable: bool) -> NDDataset:
+    """``ds`` with arrays user code may mutate in place without touching
+    any other chunk. Coordinates are always copied (sources slice them
+    from axes shared by every chunk). A data array is copied unless
+    ``trust_writeable`` (the chunk comes straight from a ``fresh`` source)
+    and it is writeable: the arrays a Zarr read or a consolidate concat
+    allocates per chunk. Decoded payloads are read-only views."""
+
+    def own(var: Variable, trust: bool) -> Variable:
+        if trust and var.values.flags.writeable:
+            return var
+        return Variable(var.dims, var.values.copy())
+
+    return NDDataset(
+        {k: own(v, trust_writeable) for k, v in ds.data_vars.items()},
+        {k: own(v, False) for k, v in ds.coords.items()},
+        ds.attrs,
+    )
+
+
+# ---------------------------------------------------------------------------
 # Dataset
 # ---------------------------------------------------------------------------
 
@@ -178,18 +283,26 @@ class Dataset:
     def __init__(
         self,
         spark: SparkSession,
-        df: DataFrame,
+        df: "DataFrame | _Source",
         template: Template,
         chunks: Mapping[str, int],
         split_vars: bool = False,
+        steps: Sequence[Step] = (),
     ):
+        """``df`` is a chunk-row DataFrame, or the source of a fused chain
+        whose per-chunk ``steps`` run in the same Python pass."""
         self.spark = spark
-        self.df = df
         self.template = template
         self.chunks = core.normalize_chunks(
             chunks, template.sizes, itemsize=template.itemsize(split_vars)
         )
         self.split_vars = split_vars
+        if not isinstance(df, _Source):
+            df = _rows_source(df, self.dims)
+        self._source = df
+        self._steps = tuple(steps)
+        # the memoized df, in a cell that metadata-only copies share
+        self._df_cell = [df.frame if df.rows and not self._steps else None]
         # Scan-rewrite hook (reference `_whole_dataset_method` fast path,
         # dataset.py:379-394): when this Dataset is still a pristine scan,
         # `_scan` holds a spec with `.reread(spark, chunks, split_vars,
@@ -197,6 +310,66 @@ class Dataset:
         # re-plan the read (reading only what's needed, no shuffle) instead
         # of filtering materialized chunks. Dropped on any transform.
         self._scan = None
+
+    # -- the fused chain ---------------------------------------------------
+
+    @property
+    def df(self) -> DataFrame:
+        """The chunk-row DataFrame (``off_<dim>``, ``vars``, ``payload``).
+        Built on first access as one ``mapInArrow`` (one grouped
+        ``applyInArrow`` for an assembling source) that runs the source
+        and every step and encodes each output chunk once."""
+        if self._df_cell[0] is None:
+            self._df_cell[0] = self._run(_encode_sink(self.dims), chunk_row_schema(self.dims))
+        return self._df_cell[0]
+
+    def _pipeline(self) -> tuple[_Source, tuple[Step, ...]]:
+        """The source and steps new work extends. Once ``df`` is persisted,
+        ops built on this Dataset read the cached rows instead of running
+        its chain again."""
+        df = self._df_cell[0]
+        if df is not None and df.is_cached and df is not self._source.frame:
+            return _rows_source(df, self.dims), ()
+        return self._source, self._steps
+
+    def _then(
+        self, step: Step | None, template: Template, chunks: Mapping[str, int],
+        split_vars: bool | None = None,
+    ) -> "Dataset":
+        """A Dataset that runs ``step`` (``None``: no per-chunk work, new
+        metadata only) after this one's chain, in the same Python pass."""
+        src, steps = self._pipeline()
+        split = self.split_vars if split_vars is None else split_vars
+        if step is None:
+            out = Dataset(self.spark, src, template, chunks, split, steps)
+            out._df_cell = self._df_cell  # the same rows: one plan
+            return out
+        return Dataset(self.spark, src, template, chunks, split, steps + (step,))
+
+    def _run(self, sink: Callable[[Iterable[ChunkPair]], Iterator["pa.RecordBatch"]],
+             schema: T.StructType) -> DataFrame:
+        """The one Python node of this Dataset's stage: source → steps →
+        ``sink``. The sink turns the pairs of one source chunk into
+        RecordBatches of ``schema``, so output leaves per source chunk."""
+        src, steps = self._pipeline()
+        pairs = src.pairs
+        if src.group_by is None:
+
+            def fused(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+                for batch in batches:
+                    for key, ds in pairs(batch):
+                        yield from sink(_through(steps, key, ds))
+
+            return src.frame.mapInArrow(fused, schema)
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        empty = to_arrow_schema(schema).empty_table()
+
+        def fused_group(key: tuple, table: "pa.Table") -> "pa.Table":
+            out = [b for k, ds in pairs(key, table) for b in sink(_through(steps, k, ds))]
+            return pa.Table.from_batches(out) if out else empty
+
+        return src.frame.groupBy(*src.group_by).applyInArrow(fused_group, schema)
 
     # -- properties --------------------------------------------------------
 
@@ -267,36 +440,25 @@ class Dataset:
         var_groups: list[str | None] = (
             sorted(source.data_vars) if split_vars else [None]
         )
-        schema = chunk_row_schema(sizes)
-        dims_sorted = sorted(sizes)
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def gen(batch: "pa.RecordBatch") -> Iterator[ChunkPair]:
             ds = bc.value
-            for pdf in batches:
-                rows = []
-                for i in pdf["id"]:
-                    i = int(i)
-                    grid_i, var_i = divmod(i, len(var_groups))
-                    offsets = core.key_for_index(grid_i, sizes, cchunks)
-                    slices = {
-                        d: slice(o, min(o + cchunks[d], sizes[d]))
-                        for d, o in offsets.items()
-                    }
-                    chunk = ds.isel(slices)
-                    vg = var_groups[var_i]
-                    if vg is not None:
-                        chunk = chunk[[vg]]
-                    row = {off_col(d): offsets[d] for d in dims_sorted}
-                    row["vars"] = vg
-                    row["payload"] = encode_chunk(chunk)
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            for i in batch.column("id").to_pylist():
+                grid_i, var_i = divmod(i, len(var_groups))
+                offsets = core.key_for_index(grid_i, sizes, cchunks)
+                slices = {
+                    d: slice(o, min(o + cchunks[d], sizes[d]))
+                    for d, o in offsets.items()
+                }
+                chunk = ds.isel(slices)
+                vg = var_groups[var_i]
+                if vg is not None:
+                    chunk = chunk[[vg]]
+                yield (offsets, vg), chunk
 
         total = n_chunks * len(var_groups)
         rng = spark.range(0, total, 1, min(total, _default_parallelism(spark)))
-        df = rng.mapInPandas(gen, schema)
-        out = Dataset(spark, df, template, cchunks, split_vars)
+        out = Dataset(spark, _Source(rng, gen), template, cchunks, split_vars)
         out._scan = MemoryScan(source)
         return out
 
@@ -483,48 +645,40 @@ class Dataset:
         chunks = dict(self.chunks)
         split_vars = self.split_vars
         var_meta = dict(tmpl.var_meta)
-        dims_sorted = self.dims
-        schema = chunk_row_schema(dims_sorted)
 
-        def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    ds = decode_chunk(r["payload"])
-                    offs = {d: int(r[off_col(d)]) for d in dims_sorted}
-                    for d, off in offs.items():
-                        if d in ds.sizes:
-                            if off % chunks[d] != 0:
-                                raise ValueError(
-                                    f"chunk offset {off} along {d!r} is not a "
-                                    f"multiple of chunk size {chunks[d]}"
-                                )
-                            expect = min(chunks[d], sizes[d] - off)
-                            if ds.sizes[d] != expect:
-                                raise ValueError(
-                                    f"chunk at {offs} has size {ds.sizes[d]} along "
-                                    f"{d!r}; grid expects {expect}"
-                                )
-                    vtoken = r["vars"]
-                    if split_vars and vtoken is None:
-                        raise ValueError(f"split_vars dataset has chunk at {offs} with vars=None")
-                    for name, var in ds.data_vars.items():
-                        if name not in var_meta:
-                            raise ValueError(f"unexpected variable {name!r} at {offs}")
-                        want_dims, want_dtype = var_meta[name]
-                        if var.dims != tuple(want_dims):
-                            raise ValueError(
-                                f"variable {name!r} dims {var.dims} != template {want_dims}"
-                            )
-                        if var.values.dtype.str != want_dtype:
-                            raise ValueError(
-                                f"variable {name!r} dtype {var.values.dtype.str} != "
-                                f"template {want_dtype}"
-                            )
-                yield pdf
+        def check(key, ds: NDDataset) -> Iterator[ChunkPair]:
+            offs, vtoken = key
+            for d, off in offs.items():
+                if d in ds.sizes:
+                    if off % chunks[d] != 0:
+                        raise ValueError(
+                            f"chunk offset {off} along {d!r} is not a "
+                            f"multiple of chunk size {chunks[d]}"
+                        )
+                    expect = min(chunks[d], sizes[d] - off)
+                    if ds.sizes[d] != expect:
+                        raise ValueError(
+                            f"chunk at {offs} has size {ds.sizes[d]} along "
+                            f"{d!r}; grid expects {expect}"
+                        )
+            if split_vars and vtoken is None:
+                raise ValueError(f"split_vars dataset has chunk at {offs} with vars=None")
+            for name, var in ds.data_vars.items():
+                if name not in var_meta:
+                    raise ValueError(f"unexpected variable {name!r} at {offs}")
+                want_dims, want_dtype = var_meta[name]
+                if var.dims != tuple(want_dims):
+                    raise ValueError(
+                        f"variable {name!r} dims {var.dims} != template {want_dims}"
+                    )
+                if var.values.dtype.str != want_dtype:
+                    raise ValueError(
+                        f"variable {name!r} dtype {var.values.dtype.str} != "
+                        f"template {want_dtype}"
+                    )
+            yield key, ds
 
-        return Dataset(
-            self.spark, self.df.mapInPandas(check, schema), tmpl, chunks, split_vars
-        )
+        return self._then(check, tmpl, chunks)
 
     def pipe(self, func: Callable, *args, **kwargs):
         """Method-chaining helper (reference ``dataset.py:1139-1141``)."""
@@ -680,7 +834,8 @@ class Dataset:
 
     def to_table(self, dropna: bool = True) -> DataFrame:
         """Chunked grid → long format: one row per grid cell with dim
-        coordinate columns + one column per variable. Narrow (mapInPandas)."""
+        coordinate columns + one column per variable. Narrow: the explode
+        ends this Dataset's fused chain."""
         if self.split_vars:
             return self.consolidate_variables().to_table(dropna=dropna)
         tmpl = self.template
@@ -691,20 +846,16 @@ class Dataset:
         names = [f.name for f in schema.fields]
         pa_types = [_spark_to_arrow_type(f.dataType) for f in schema.fields]
 
-        # mapInArrow, not mapInPandas: column arrays go numpy → Arrow
-        # directly (one cast per column) instead of through a pandas frame —
-        # measured ~1.4x on wide explodes, and no object churn for strings.
-        def explode(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            for rb in batches:
-                for payload in rb.column("payload"):
-                    out = explode_chunk_batch(
-                        decode_chunk(payload.as_py()),
-                        dims, var_names, dropna, names, pa_types,
-                    )
-                    if out is not None:
-                        yield out
+        # Arrow, not pandas: column arrays go numpy → Arrow directly (one
+        # cast per column) instead of through a pandas frame — measured
+        # ~1.4x on wide explodes, and no object churn for strings.
+        def explode(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
+            for _key, ds in pairs:
+                out = explode_chunk_batch(ds, dims, var_names, dropna, names, pa_types)
+                if out is not None:
+                    yield out
 
-        return self.df.mapInArrow(explode, schema)
+        return self._run(explode, schema)
 
     # Zarr IO lives in sources/zarr_io.py, which REPLACES these two
     # delegators with the real functions when it is imported (keeping
@@ -837,10 +988,7 @@ class Dataset:
                     f"{template.sizes[d]}"
                 )
         out_dims = sorted(template.sizes)
-        schema = chunk_row_schema(out_dims)
-        in_sizes = self.sizes
         in_chunks = self.chunks
-        out_sizes = template.sizes
         from xarray_beam_spark.observability import get_counters
 
         _c = get_counters(self.spark)
@@ -849,34 +997,27 @@ class Dataset:
             _c.acc("map_blocks.input_bytes"),
             _c.acc("map_blocks.output_bytes"),
         )
+        # func is USER code and may mutate in place: it gets arrays no
+        # other chunk sees (see _own_arrays for what is already private)
+        src, steps = self._pipeline()
+        first = src.fresh and not steps
 
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    # writable: func is USER code and may mutate in place
-                    ds = decode_chunk(r["payload"], writable=True)
-                    acc_in.add(1)
-                    acc_in_b.add(ds.nbytes)
-                    res = func(ds)
-                    acc_out_b.add(res.nbytes)
-                    row = {}
-                    for d in out_dims:
-                        if d in in_sizes:
-                            # scale offset by chunk-index (reference
-                            # ``dataset.py:335-358``)
-                            ci = int(r[off_col(d)]) // in_chunks[d]
-                            row[off_col(d)] = ci * new_chunks[d]
-                        else:
-                            row[off_col(d)] = 0
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(res)
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def step(key, ds: NDDataset) -> Iterator[ChunkPair]:
+            offs, kvars = key
+            ds = _own_arrays(ds, trust_writeable=first)
+            acc_in.add(1)
+            acc_in_b.add(ds.nbytes)
+            res = func(ds)
+            acc_out_b.add(res.nbytes)
+            # scale offsets by chunk index (reference dataset.py:335-358);
+            # a func-added dim sits at offset 0
+            new_offs = {
+                d: offs[d] // in_chunks[d] * new_chunks[d] if d in in_chunks else 0
+                for d in out_dims
+            }
+            yield (new_offs, kvars), res
 
-        df = self.df.mapInPandas(apply, schema)
-        return Dataset(self.spark, df, template, new_chunks, self.split_vars)
+        return self._then(step, template, new_chunks)
 
     # -- projections / indexing -------------------------------------------
 
@@ -965,12 +1106,6 @@ class Dataset:
                 split_vars=self.split_vars,
                 rel_window=dict(windows),
             )
-        cond = F.lit(True)
-        for d, (start, stop) in windows.items():
-            cond = cond & (F.col(off_col(d)) + F.lit(self.chunks[d]) > start) & (
-                F.col(off_col(d)) < stop
-            )
-        pruned = self.df.filter(cond)
         tmpl = Template(
             sizes=new_sizes,
             var_meta=self.template.var_meta,
@@ -990,39 +1125,38 @@ class Dataset:
         )
         all_dims = self.dims
         win = dict(windows)
+        grid = dict(self.chunks)
+        base = self
+        src, steps = self._pipeline()
+        if src.rows and not steps:
+            # plain chunk rows: Catalyst prunes them before any decode
+            cond = F.lit(True)
+            for d, (start, stop) in windows.items():
+                cond = cond & (F.col(off_col(d)) + F.lit(grid[d]) > start) & (
+                    F.col(off_col(d)) < stop
+                )
+            base = Dataset(self.spark, src.frame.filter(cond), self.template, grid, self.split_vars)
 
-        def trim_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    ds = decode_chunk(r["payload"])
-                    sl = {}
-                    new_offs = {}
-                    for d in all_dims:
-                        off = int(r[off_col(d)])
-                        start, stop = win.get(d, (0, None))
-                        if d in ds.sizes:
-                            lo = max(0, start - off)
-                            hi = ds.sizes[d] if stop is None else min(ds.sizes[d], stop - off)
-                            if (lo, hi) != (0, ds.sizes[d]):
-                                sl[d] = slice(lo, hi)
-                            new_offs[d] = max(0, off - start)
-                        else:
-                            new_offs[d] = max(0, off - start)
-                    rows.append(
-                        {
-                            **{off_col(d): new_offs[d] for d in all_dims},
-                            "vars": r["vars"],
-                            "payload": encode_chunk(ds.isel(sl) if sl else ds),
-                        }
-                    )
-                if rows:
-                    yield pd.DataFrame(rows)
+        def trim(key, ds: NDDataset) -> Iterator[ChunkPair]:
+            offs, kvars = key
+            if not all(offs[d] + grid[d] > start and offs[d] < stop for d, (start, stop) in win.items()):
+                return  # the chunk lies outside the window
+            sl = {}
+            new_offs = {}
+            sizes = ds.sizes
+            for d in all_dims:
+                off = offs[d]
+                start, stop = win.get(d, (0, None))
+                if d in sizes:
+                    lo = max(0, start - off)
+                    hi = sizes[d] if stop is None else min(sizes[d], stop - off)
+                    if (lo, hi) != (0, sizes[d]):
+                        sl[d] = slice(lo, hi)
+                new_offs[d] = max(0, off - start)
+            yield (new_offs, kvars), ds.isel(sl) if sl else ds
 
-        schema = chunk_row_schema(all_dims)
-        df = pruned.mapInPandas(trim_map, schema)
         chunks = {d: min(self.chunks[d], new_sizes[d]) for d in new_sizes}
-        out = Dataset(self.spark, df, tmpl, chunks, self.split_vars)
+        out = base._then(trim, tmpl, chunks)
         if all(start % self.chunks[d] == 0 for d, (start, _) in windows.items()):
             return out  # start is chunk-aligned: offsets stayed regular
         # realign the irregular boundary chunks to the regular grid:
@@ -1284,61 +1418,37 @@ class Dataset:
             new_dim: z_chunk,
         }
         out_dims = sorted(out_tmpl.sizes)
-        schema = chunk_row_schema(out_dims)
         d0 = dims[0]
 
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):
-                    ds = decode_chunk(r["payload"])
-                    out_vars: dict[str, Variable] = {}
-                    for v, var in ds.data_vars.items():
-                        others_v = [d for d in var.dims if d not in dset]
-                        perm = others_v + dims
-                        arr = np.transpose(
-                            var.values, [var.dims.index(d) for d in perm]
-                        )
-                        out_vars[v] = Variable(
-                            tuple(others_v) + (new_dim,),
-                            arr.reshape(arr.shape[: len(others_v)] + (-1,)),
-                        )
-                    coords = {
-                        k: c
-                        for k, c in ds.coords.items()
-                        if not (set(c.dims) & dset)
-                    }
-                    # per-chunk slab of the product coords: d0's local
-                    # values expand over the full tail, tail dims tile
-                    # over the local d0 length
-                    for j, d in enumerate(dims):
-                        c = ds.coords.get(d)
-                        if c is None or c.dims != (d,):
-                            continue
-                        reps_inner = _prod(
-                            [ds.sizes[d2] for d2 in dims[j + 1 :]]
-                        )
-                        reps_outer = _prod([ds.sizes[d2] for d2 in dims[:j]])
-                        coords[d] = Variable(
-                            (new_dim,),
-                            np.tile(np.repeat(c.values, reps_inner), reps_outer),
-                        )
-                    row = {
-                        off_col(d): int(r[off_col(d)])
-                        for d in out_dims
-                        if d != new_dim
-                    }
-                    row[off_col(new_dim)] = int(r[off_col(d0)]) * tail
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(
-                        NDDataset(out_vars, coords, ds.attrs)
-                    )
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def step(key, ds: NDDataset) -> Iterator[ChunkPair]:
+            offs, kvars = key
+            out_vars: dict[str, Variable] = {}
+            for v, var in ds.data_vars.items():
+                others_v = [d for d in var.dims if d not in dset]
+                perm = others_v + dims
+                arr = np.transpose(var.values, [var.dims.index(d) for d in perm])
+                out_vars[v] = Variable(
+                    tuple(others_v) + (new_dim,),
+                    arr.reshape(arr.shape[: len(others_v)] + (-1,)),
+                )
+            coords = {k: c for k, c in ds.coords.items() if not (set(c.dims) & dset)}
+            # per-chunk slab of the product coords: d0's local values
+            # expand over the full tail, tail dims tile over the local d0
+            # length
+            for j, d in enumerate(dims):
+                c = ds.coords.get(d)
+                if c is None or c.dims != (d,):
+                    continue
+                reps_inner = _prod([ds.sizes[d2] for d2 in dims[j + 1 :]])
+                reps_outer = _prod([ds.sizes[d2] for d2 in dims[:j]])
+                coords[d] = Variable(
+                    (new_dim,), np.tile(np.repeat(c.values, reps_inner), reps_outer)
+                )
+            new_offs = {d: offs[d] for d in out_dims if d != new_dim}
+            new_offs[new_dim] = offs[d0] * tail
+            yield (new_offs, kvars), NDDataset(out_vars, coords, ds.attrs)
 
-        df = base.df.mapInPandas(apply, schema)
-        return Dataset(self.spark, df, out_tmpl, out_chunks, False)
+        return base._then(step, out_tmpl, out_chunks)
 
     def unstack(
         self, dim: str, sizes: Mapping[str, int], coords: Mapping[str, np.ndarray] | None = None
@@ -1396,58 +1506,34 @@ class Dataset:
             **{d: int(sizes[d]) for d in new_names[1:]},
         }
         out_dims = sorted(out_tmpl.sizes)
-        schema = chunk_row_schema(out_dims)
         tail_shape = tuple(int(sizes[d]) for d in new_names[1:])
         bc_coords = self.spark.sparkContext.broadcast(
             {d: np.asarray(vals) for d, vals in (coords or {}).items()}
         )
 
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def step(key, ds: NDDataset) -> Iterator[ChunkPair]:
+            offs, kvars = key
             cvals = bc_coords.value
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):
-                    ds = decode_chunk(r["payload"])
-                    out_vars: dict[str, Variable] = {}
-                    k_rows = ds.sizes[dim] // tail
-                    for v, var in ds.data_vars.items():
-                        ax = var.dims.index(dim)
-                        others_v = [d for d in var.dims if d != dim]
-                        arr = np.moveaxis(var.values, ax, -1)
-                        arr = arr.reshape(arr.shape[:-1] + (k_rows,) + tail_shape)
-                        out_vars[v] = Variable(tuple(others_v) + tuple(new_names), arr)
-                    off0 = int(r[off_col(dim)]) // tail
-                    coords_out = {
-                        k2: c
-                        for k2, c in ds.coords.items()
-                        if dim not in c.dims
-                    }
-                    for i, d in enumerate(new_names):
-                        if d in cvals:
-                            if i == 0:
-                                coords_out[d] = Variable(
-                                    (d,), cvals[d][off0 : off0 + k_rows]
-                                )
-                            else:
-                                coords_out[d] = Variable((d,), cvals[d])
-                    row = {
-                        off_col(d): int(r[off_col(d)])
-                        for d in out_dims
-                        if d not in sizes
-                    }
-                    row[off_col(new_names[0])] = off0
-                    for d in new_names[1:]:
-                        row[off_col(d)] = 0
-                    row["vars"] = r["vars"]
-                    row["payload"] = encode_chunk(
-                        NDDataset(out_vars, coords_out, ds.attrs)
-                    )
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            out_vars: dict[str, Variable] = {}
+            k_rows = ds.sizes[dim] // tail
+            for v, var in ds.data_vars.items():
+                ax = var.dims.index(dim)
+                others_v = [d for d in var.dims if d != dim]
+                arr = np.moveaxis(var.values, ax, -1)
+                arr = arr.reshape(arr.shape[:-1] + (k_rows,) + tail_shape)
+                out_vars[v] = Variable(tuple(others_v) + tuple(new_names), arr)
+            off0 = offs[dim] // tail
+            coords_out = {k2: c for k2, c in ds.coords.items() if dim not in c.dims}
+            for i, d in enumerate(new_names):
+                if d in cvals:
+                    vals = cvals[d][off0 : off0 + k_rows] if i == 0 else cvals[d]
+                    coords_out[d] = Variable((d,), vals)
+            new_offs = {d: offs[d] for d in out_dims if d not in sizes}
+            new_offs[new_names[0]] = off0
+            new_offs.update({d: 0 for d in new_names[1:]})
+            yield (new_offs, kvars), NDDataset(out_vars, coords_out, ds.attrs)
 
-        df = base.df.mapInPandas(apply, schema)
-        return Dataset(self.spark, df, out_tmpl, out_chunks, False)
+        return base._then(step, out_tmpl, out_chunks)
 
     def fillna(self, value: float) -> "Dataset":
         """Replace NaN holes with ``value`` (xarray ``Dataset.fillna`` with
@@ -1513,7 +1599,7 @@ class Dataset:
             coords=dict(tmpl.coords),
             attrs={**tmpl.attrs, **attrs},
         )
-        return Dataset(self.spark, self.df, out_tmpl, dict(self.chunks), self.split_vars)
+        return self._then(None, out_tmpl, dict(self.chunks))
 
     def weighted_mean(self, dim: str, weights: np.ndarray) -> "Dataset":
         """Weighted mean over ``dim`` (xarray ``ds.weighted(w).mean(dim)``):
@@ -1918,31 +2004,29 @@ class Dataset:
             list(schema.fields) + [T.StructField("__halo", T.LongType(), False)]
         )
         size_d = sizes[dim]
+        halo_sink = _encode_sink(dims, extra=("__halo", lambda key: key[2]))
 
-        def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: rows ARE chunks
-                    base = {c: r[c] for c in pdf.columns}
-                    rows.append({**base, "__halo": 0})
-                    off = int(r[off_col(dim)])
-                    if halo > 0 and off + chunk_d < size_d:
-                        ds = decode_chunk(r["payload"])
-                        sliver = ds.isel({dim: slice(-halo, None)})
-                        hrow = dict(base)
-                        hrow[off_col(dim)] = off + chunk_d
-                        hrow["payload"] = encode_chunk(sliver)
-                        rows.append({**hrow, "__halo": 1})
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in halo_schema.fields])
+        def emit(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
+            # each chunk, plus its trailing sliver keyed as the halo of
+            # the next chunk along dim
+            rows = []
+            for (offs, kvars), ds in pairs:
+                rows.append(((offs, kvars, 0), ds))
+                off = offs[dim]
+                if halo > 0 and off + chunk_d < size_d:
+                    sliver = ds.isel({dim: slice(-halo, None)})
+                    rows.append((({**offs, dim: off + chunk_d}, kvars, 1), sliver))
+            return halo_sink(rows)
 
-        def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        def assemble(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
             main = sliver = None
-            for r in pdf.to_dict("records"):
-                if int(r["__halo"]) == 0:
-                    main = decode_chunk(r["payload"])
+            payloads = tbl.column("payload")
+            for i, is_halo in enumerate(tbl.column("__halo").to_pylist()):
+                ds = decode_chunk(memoryview(payloads[i].as_buffer()))
+                if is_halo:
+                    sliver = ds
                 else:
-                    sliver = decode_chunk(r["payload"])
+                    main = ds
             if main is None:
                 raise ValueError(f"{op_name} group {key} has a halo but no chunk")
             out_vars: dict[str, Variable] = {}
@@ -1963,15 +2047,12 @@ class Dataset:
                     keep[axis] = slice(pad, None)
                     res = res[tuple(keep)]
                 out_vars[v] = Variable(var.dims, res)
-            res_ds = NDDataset(out_vars, dict(main.coords), dict(main.attrs))
-            row = {off_col(d): int(key[i + 1]) for i, d in enumerate(dims)}
-            row["vars"] = key[0]
-            row["payload"] = encode_chunk(res_ds)
-            return pd.DataFrame([row], columns=[f.name for f in schema.fields])
+            offs = {d: int(k.as_py()) for d, k in zip(dims, key[1:])}
+            yield (offs, key[0].as_py()), NDDataset(out_vars, dict(main.coords), dict(main.attrs))
 
-        with_halo = self.df.mapInPandas(emit, halo_schema)
+        with_halo = self._run(emit, halo_schema)
         offc = [off_col(d) for d in dims]
-        df = with_halo.groupBy("vars", *offc).applyInPandas(assemble, schema)
+        src = _Source(with_halo, assemble, ("vars", *offc))
         var_meta = {
             v: (vd, np.dtype(np.float64).str if dim in vd else dt)
             for v, (vd, dt) in self.template.var_meta.items()
@@ -1982,7 +2063,7 @@ class Dataset:
             coords=dict(self.template.coords),
             attrs=dict(self.template.attrs),
         )
-        return Dataset(self.spark, df, tmpl, self.chunks, self.split_vars)
+        return Dataset(self.spark, src, tmpl, self.chunks, self.split_vars)
 
     def merge(self, other: "Dataset") -> "Dataset":
         """Variable union with another Dataset on the same grid — xarray
@@ -2031,55 +2112,36 @@ class Dataset:
             template, _ = _infer_result_meta(self.template, self.chunks, da, out_dummy)
         dims = self.dims
         offc = [off_col(d) for d in dims]
-        schema = chunk_row_schema(dims)
         a = self.df.select(*offc, F.col("payload").alias("__pa"))
         b = other.df.select(*offc, F.col("payload").alias("__pb"))
         joined = a.join(b, on=offc, how="inner")
 
-        def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    res = func(decode_chunk(r["__pa"]), decode_chunk(r["__pb"]))
-                    row = {off_col(d): int(r[off_col(d)]) for d in dims}
-                    row["vars"] = None
-                    row["payload"] = encode_chunk(res)
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def combine(batch: "pa.RecordBatch") -> Iterator[ChunkPair]:
+            offs = [batch.column(c).to_numpy() for c in offc]
+            pa_, pb_ = batch.column("__pa"), batch.column("__pb")
+            for i in range(batch.num_rows):
+                res = func(
+                    decode_chunk(memoryview(pa_[i].as_buffer())),
+                    decode_chunk(memoryview(pb_[i].as_buffer())),
+                )
+                yield ({d: int(o[i]) for d, o in zip(dims, offs)}, None), res
 
-        df = joined.mapInPandas(combine, schema)
-        return Dataset(self.spark, df, template, self.chunks, False)
+        return Dataset(self.spark, _Source(joined, combine), template, self.chunks, False)
 
     # -- split / consolidate (reference rechunk.py) ------------------------
 
     def split_variables(self) -> "Dataset":
         """One chunk row per data variable (reference ``rechunk.py:457-489``).
-        Narrow: payload explode inside mapInPandas."""
+        Narrow: a step of the fused chain."""
         if self.split_vars:
             return self
-        dims = self.dims
-        schema = chunk_row_schema(dims)
         var_names = self.template.var_names
 
-        def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                    ds = decode_chunk(r["payload"])
-                    for v in var_names:
-                        sub = ds[[v]]
-                        rows.append(
-                            {
-                                **{off_col(d): int(r[off_col(d)]) for d in dims},
-                                "vars": v,
-                                "payload": encode_chunk(sub),
-                            }
-                        )
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        def split(key, ds: NDDataset) -> Iterator[ChunkPair]:
+            for v in var_names:
+                yield (key[0], v), ds[[v]]
 
-        return Dataset(self.spark, self.df.mapInPandas(split, schema), self.template, self.chunks, True)
+        return self._then(split, self.template, self.chunks, True)
 
     def consolidate_variables(self) -> "Dataset":
         """Merge var-split rows at identical offsets (reference
@@ -2087,27 +2149,19 @@ class Dataset:
         if not self.split_vars:
             return self
         dims = self.dims
-        schema = chunk_row_schema(dims)
-        offc = [off_col(d) for d in dims]
 
-        def merge(key: tuple, tbl: pa.Table) -> pa.Table:
+        def merge(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
             payloads = tbl.column("payload")
             parts = [
                 decode_chunk(memoryview(payloads[i].as_buffer()))
                 for i in range(tbl.num_rows)
             ]
-            ds = NDDataset.merge(parts)
-            return pa.Table.from_arrays(
-                [pa.array([int(k.as_py())], pa.int64()) for k in key]
-                + [
-                    pa.array([None], pa.string()),
-                    pa.array([encode_chunk(ds)], pa.binary()),
-                ],
-                names=offc + ["vars", "payload"],
-            )
+            offs = {d: int(k.as_py()) for d, k in zip(dims, key)}
+            yield (offs, None), NDDataset.merge(parts)
 
-        df = self.df.groupBy(*offc).applyInArrow(merge, schema)
-        return Dataset(self.spark, df, self.template, self.chunks, False)
+        group_by = tuple(off_col(d) for d in dims)
+        src = _Source(self.df, merge, group_by)
+        return Dataset(self.spark, src, self.template, self.chunks, False)
 
     def split_chunks(self, target_chunks: Mapping[str, int]) -> "Dataset":
         """Narrow split of each chunk to align to ``target_chunks``'s grid
@@ -2138,62 +2192,17 @@ class Dataset:
             tgt = {d: int(cur.get(d, sizes[d])) for d in sizes}
         else:
             tgt = dict(core.normalize_chunks(spec, sizes))
-        dims = self.dims
-        schema = chunk_row_schema(dims)
+        target = {d: tgt[d] for d in self.dims}
+        from xarray_beam_spark.observability import get_counters
 
-        names = [off_col(d) for d in dims] + ["vars", "payload"]
+        acc_pieces = get_counters(self.spark).acc("split.pieces")
 
-        def split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            # Arrow-native: payloads decode zero-copy from the batch's
-            # binary value buffer; each sub-chunk is encoded once into the
-            # output batch (no pandas object-cell round trip).
-            for batch in batches:
-                off_arrs = {d: batch.column(off_col(d)).to_numpy() for d in dims}
-                vars_arr = batch.column("vars")
-                payloads = batch.column("payload")
-                out_offs: dict[str, list[int]] = {d: [] for d in dims}
-                out_vars: list[str | None] = []
-                out_payloads: list[bytes] = []
-                for i in range(batch.num_rows):
-                    ds = decode_chunk(memoryview(payloads[i].as_buffer()))
-                    base = {d: int(off_arrs[d][i]) for d in dims}
-                    pieces = [({}, {})]  # (global offsets, local slices)
-                    for d in dims:
-                        if d not in ds.sizes:
-                            continue
-                        start = base[d]
-                        stop = start + ds.sizes[d]
-                        new_pieces = []
-                        for goff, lsl in pieces:
-                            for grid_off, lo, hi in core.chunk_bounds_overlap(start, stop, tgt[d]):
-                                g2 = dict(goff)
-                                s2 = dict(lsl)
-                                g2[d] = grid_off
-                                s2[d] = slice(lo - start, hi - start)
-                                new_pieces.append((g2, s2))
-                        pieces = new_pieces
-                    kvars = vars_arr[i].as_py()
-                    for goff, lsl in pieces:
-                        sub = ds.isel(lsl)
-                        # sub-chunk key offset = start of its overlap range
-                        for d in dims:
-                            out_offs[d].append(
-                                base[d] + lsl[d].start if d in lsl else base[d]
-                            )
-                        out_vars.append(kvars)
-                        out_payloads.append(encode_chunk(sub))
-                if out_vars:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(out_offs[d], pa.int64()) for d in dims]
-                        + [
-                            pa.array(out_vars, pa.string()),
-                            pa.array(out_payloads, pa.binary()),
-                        ],
-                        names=names,
-                    )
+        def step(key, ds: NDDataset) -> Iterator[ChunkPair]:
+            for offs, sub in _split_pieces(key[0], ds, target):
+                acc_pieces.add(1)
+                yield (offs, key[1]), sub
 
-        df = self.df.mapInArrow(split, schema)
-        return Dataset(self.spark, df, self.template, tgt, self.split_vars)
+        return self._then(step, self.template, tgt)
 
     def consolidate_fully(self) -> "Dataset":
         """Merge + concat everything into one chunk (reference
@@ -2211,13 +2220,15 @@ class Dataset:
         of MB, and ``applyInPandas`` would copy every payload twice more
         (Arrow → pandas object cells, pandas → Arrow on return). Here the
         payloads are decoded zero-copy straight from the Arrow value
-        buffers (``BinaryScalar.as_buffer`` → ``np.frombuffer``) and the
-        assembled block is emitted as a one-row RecordBatch."""
+        buffers (``BinaryScalar.as_buffer`` → ``np.frombuffer``). The
+        assemble is the source of a new fused chain: later steps and the
+        sink (a Zarr write, say) run in the same grouped pass."""
         sizes = self.sizes
         tgt = core.normalize_chunks(target_chunks, sizes)
         dims = self.dims
-        schema = chunk_row_schema(dims)
-        offc = [off_col(d) for d in dims]
+        from xarray_beam_spark.observability import get_counters
+
+        acc_groups = get_counters(self.spark).acc("consolidate.groups")
 
         rounded = self.df
         for d in dims:
@@ -2225,7 +2236,7 @@ class Dataset:
                 f"__tgt_{d}", F.col(off_col(d)) - (F.col(off_col(d)) % F.lit(tgt[d]))
             )
 
-        def assemble(key: tuple, tbl: pa.Table) -> pa.Table:
+        def assemble(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
             # key = (vars, tgt offsets...) — group also by vars so
             # var-split datasets consolidate per variable.
             kvars = key[0].as_py()
@@ -2235,10 +2246,11 @@ class Dataset:
             parts: dict[tuple[int, ...], NDDataset] = {}
             for i in range(tbl.num_rows):
                 ds = decode_chunk(memoryview(payloads[i].as_buffer()))
+                ds_sizes = ds.sizes
                 # index by raw relative offset; the dense remap below
                 # handles any (even irregular) sub-grid
                 idx = tuple(
-                    (int(off_arrs[d][i]) - koffs[d]) if d in ds.sizes else 0
+                    (int(off_arrs[d][i]) - koffs[d]) if d in ds_sizes else 0
                     for d in dims
                 )
                 parts[idx] = ds
@@ -2268,19 +2280,12 @@ class Dataset:
                         f"{got_size} elements along {d!r}, expected {want} — "
                         f"missing or overlapping sub-chunks"
                     )
-            return pa.Table.from_arrays(
-                [pa.array([koffs[d]], pa.int64()) for d in dims]
-                + [
-                    pa.array([kvars], pa.string()),
-                    pa.array([encode_chunk(merged)], pa.binary()),
-                ],
-                names=[off_col(d) for d in dims] + ["vars", "payload"],
-            )
+            acc_groups.add(1)
+            yield (koffs, kvars), merged
 
-        df = rounded.groupBy("vars", *[f"__tgt_{d}" for d in dims]).applyInArrow(
-            assemble, schema
-        )
-        return Dataset(self.spark, df, self.template, tgt, self.split_vars)
+        group_by = ("vars", *[f"__tgt_{d}" for d in dims])
+        src = _Source(rounded, assemble, group_by, fresh=True)
+        return Dataset(self.spark, src, self.template, tgt, self.split_vars)
 
     def rechunk(
         self,
@@ -2331,7 +2336,7 @@ class Dataset:
             if consolidate_needed:
                 out = out.consolidate_chunks(to)
             else:
-                out = Dataset(out.spark, out.df, out.template, to, out.split_vars)
+                out = out._then(None, out.template, to)
         return out
 
     def _gather_dim(
@@ -3093,8 +3098,8 @@ class Dataset:
         extract_output, ``combiners.py``) over ``MultiStageMean``'s fanout
         tree (``combiners.py:294-394``).
 
-        A narrow ``mapInPandas`` turns each chunk into its accumulator
-        with ``add(chunk, offsets along red_dims)``. While more than
+        The chain's narrow pass ends by turning each chunk into its
+        accumulator with ``add(chunk, offsets along red_dims)``. While more than
         ``DEFAULT_MERGE_FANIN`` accumulators would land on one output
         cell, a tree-merge round re-keys them by ``chunk_index // fanin``
         and merges each group with :func:`_merge_partial`, so no task
@@ -3139,22 +3144,16 @@ class Dataset:
                 row["mkey"] = int(key[-1])
             return pd.DataFrame([row], columns=cols_mk if with_mkey else cols)
 
-        def pre(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                # to_dict('records') like every other per-chunk stage —
-                # itertuples()._asdict() RENAMES columns that are not
-                # valid identifiers (dim 'lat-lon' → '_1'), breaking the
-                # off-column lookups below for such dims
-                for rd in pdf.to_dict("records"):
-                    offs = {d: int(rd[off_col(d)]) for d in red_dims}
-                    row = {off_col(d): int(rd[off_col(d)]) for d in keep_dims}
-                    row.update({off_col(d): 0 for d in new_dims}, vars=rd["vars"])
-                    row["payload"] = encode_chunk(add(decode_chunk(rd["payload"]), offs))
-                    row["mkey"] = sum(offs[d] // chunks_in[d] * strides[d] for d in red_dims)
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols_mk)
+        zero_new = {d: 0 for d in new_dims}
+        sink_mk = _encode_sink(sorted(keep_dims + new_dims), extra=("mkey", lambda key: key[2]))
+
+        def pre(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
+            accs = []
+            for (offs, kvars), ds in pairs:
+                red = {d: offs[d] for d in red_dims}
+                mkey = sum(red[d] // chunks_in[d] * strides[d] for d in red_dims)
+                accs.append((({**offs, **zero_new}, kvars, mkey), add(ds, red)))
+            return sink_mk(accs)
 
         def merge_round(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             acc = _merge_partial([decode_chunk(p) for p in pdf["payload"]], combiner.fields)
@@ -3174,7 +3173,7 @@ class Dataset:
             return pack(key, NDDataset(out, acc.coords, acc.attrs), False)
 
         fanin = DEFAULT_MERGE_FANIN
-        df = self.df.mapInPandas(pre, schema_mk)
+        df = self._run(pre, schema_mk)
         expected = fan_in
         while expected > fanin:
             df = df.withColumn("mkey", F.floor(F.col("mkey") / fanin).cast("long"))
@@ -3818,6 +3817,35 @@ def _assemble_grid(
     return base, merged
 
 
+def _split_pieces(
+    offsets: Mapping[str, int], dataset: NDDataset, target_chunks: Mapping[str, int]
+) -> Iterator[tuple[dict[str, int], NDDataset]]:
+    """Cut one chunk at the GLOBAL grid of ``target_chunks``-sized cells
+    (a chunk whose offset is not grid-aligned first splits at the next
+    grid multiple); dims absent from ``target_chunks`` stay whole. Yields
+    ``(offsets, piece)``, each piece keyed by the start of its range."""
+    sizes = dataset.sizes
+    dims = [d for d in target_chunks if d in sizes]
+    spans = [
+        list(
+            core.chunk_bounds_overlap(
+                int(offsets.get(d, 0)),
+                int(offsets.get(d, 0)) + sizes[d],
+                int(target_chunks[d]),
+            )
+        )
+        for d in dims
+    ]
+    for bounds in itertools.product(*spans):
+        new_off = dict(offsets)
+        sel: dict[str, slice] = {}
+        for d, (_grid, lo, hi) in zip(dims, bounds):
+            start = int(offsets.get(d, 0))
+            new_off[d] = lo
+            sel[d] = slice(lo - start, hi - start)
+        yield new_off, dataset.isel(sel)
+
+
 def split_chunks(
     key: "core.Key | Mapping[str, int]",
     dataset: NDDataset,
@@ -3829,30 +3857,12 @@ def split_chunks(
     is not grid-aligned first splits at the next grid multiple. Dims
     absent from ``target_chunks`` are left whole.
 
-    Pure per-element function, usable inside custom ``mapInPandas`` /
-    ``applyInPandas`` stages; the distributed ``Dataset.split_chunks``
-    applies the same math chunk-row-wise."""
+    Pure per-element function, usable inside custom ``mapInArrow`` /
+    ``applyInArrow`` stages; the distributed ``Dataset.split_chunks``
+    runs the same cut as a step of its fused chain."""
     k = _key_of(key)
-    offs = k.offsets_dict
-    dims = [d for d in target_chunks if d in dataset.sizes]
-    spans = [
-        list(
-            core.chunk_bounds_overlap(
-                int(offs.get(d, 0)),
-                int(offs.get(d, 0)) + dataset.sizes[d],
-                int(target_chunks[d]),
-            )
-        )
-        for d in dims
-    ]
-    for bounds in itertools.product(*spans):
-        new_off = dict(offs)
-        sel: dict[str, slice] = {}
-        for d, (_grid, lo, hi) in zip(dims, bounds):
-            start = int(offs.get(d, 0))
-            new_off[d] = lo
-            sel[d] = slice(lo - start, hi - start)
-        yield core.Key.make(new_off, k.vars), dataset.isel(sel)
+    for offs, piece in _split_pieces(k.offsets_dict, dataset, target_chunks):
+        yield core.Key.make(offs, k.vars), piece
 
 
 def split_variables(

@@ -132,13 +132,14 @@ class NDDataset:
 
     def isel(self, indexers: Mapping[str, Any] | None = None, **kw) -> "NDDataset":
         idx = {**(indexers or {}), **kw}
-        unknown = [d for d in idx if d not in self.sizes]
+        sizes = self.sizes
+        unknown = [d for d in idx if d not in sizes]
         if unknown:
             # xarray raises here too — a typo'd dim name silently
             # returning the full dataset is a wrong answer, not a no-op
             raise ValueError(
                 f"isel indexers for nonexistent dimensions: {unknown} "
-                f"(dataset dims: {sorted(self.sizes)})"
+                f"(dataset dims: {sorted(sizes)})"
             )
 
         def take(var: Variable) -> Variable:

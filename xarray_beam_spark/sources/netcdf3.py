@@ -35,12 +35,10 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from xarray_beam_spark.codec import decode_chunk, encode_chunk
-from xarray_beam_spark.dataset import Dataset, Template, chunk_row_schema, off_col
+from xarray_beam_spark.dataset import Dataset, Template, _Source
 from xarray_beam_spark.ndarray_ds import NDDataset, Variable
 from xarray_beam_spark.sources import stores
 
@@ -371,22 +369,24 @@ def to_netcdf_files(ds: Dataset, path: str) -> dict[str, int]:
     dims_sorted = ds.dims
     target = path
 
-    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write(pairs) -> Iterator:
+        import pyarrow as pa
+
         store, key = stores.resolve(target)
         n = b = 0
-        for pdf in batches:
-            for r in pdf.to_dict("records"):
-                nd = decode_chunk(r["payload"])
-                offs = [int(r[off_col(d)]) for d in dims_sorted]
-                buf = dumps(nd)
-                store.put(
-                    stores.join(key, "chunks", _chunk_fname(offs, r["vars"])), buf
-                )
-                n += 1
-                b += len(buf)
-        yield pd.DataFrame({"chunks_written": [n], "bytes_written": [b]})
+        for (offs, kvars), nd in pairs:
+            buf = dumps(nd)
+            fname = _chunk_fname([offs[d] for d in dims_sorted], kvars)
+            store.put(stores.join(key, "chunks", fname), buf)
+            n += 1
+            b += len(buf)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([n], pa.int64()), pa.array([b], pa.int64())],
+            names=_WRITE_STATS.fieldNames(),
+        )
 
-    stats = ds.df.mapInPandas(write, _WRITE_STATS).groupBy().sum().collect()[0]
+    # the write ends the dataset's fused chain
+    stats = ds._run(write, _WRITE_STATS).groupBy().sum().collect()[0]
     store, key = stores.resolve(target)
     meta = {
         "sizes": dict(ds.template.sizes),
@@ -444,75 +444,31 @@ def from_netcdf_files(
     split_vars = bool(meta["split_vars"])
     par = min(len(names), spark.sparkContext.defaultParallelism)
     fdf = spark.createDataFrame([(n,) for n in names], "fname string").repartition(par)
-    schema = chunk_row_schema(dims_sorted)
     target = path
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read(batch) -> Iterator:
         store, key = stores.resolve(target)
-        for pdf in batches:
-            rows = []
-            for fname in pdf["fname"]:
-                buf = store.get(stores.join(key, "chunks", fname))
-                if buf is None:
-                    raise FileNotFoundError(f"chunk file vanished: {fname}")
-                nd = loads(buf)
-                stem = fname[len("chunk-") : -len(".nc")]
-                offs = [int(o) for o in stem.split("-")[0].split(".")]
-                row = {off_col(d): o for d, o in zip(dims_sorted, offs)}
-                row["vars"] = ",".join(sorted(nd.data_vars)) if split_vars else None
-                row["payload"] = encode_chunk(nd)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        for fname in batch.column("fname").to_pylist():
+            buf = store.get(stores.join(key, "chunks", fname))
+            if buf is None:
+                raise FileNotFoundError(f"chunk file vanished: {fname}")
+            nd = loads(buf)
+            stem = fname[len("chunk-") : -len(".nc")]
+            offs = [int(o) for o in stem.split("-")[0].split(".")]
+            kvars = ",".join(sorted(nd.data_vars)) if split_vars else None
+            yield (dict(zip(dims_sorted, offs)), kvars), nd
 
-    df = fdf.mapInPandas(read, schema)
-    return Dataset.from_dataframe(
-        spark,
-        df,
-        template,
-        {d: int(c) for d, c in meta["chunks"].items()},
-        split_vars=split_vars,
-        validate=validate,
-    )
+    chunks = {d: int(c) for d, c in meta["chunks"].items()}
+    ds = Dataset(spark, _Source(fdf, read), template, chunks, split_vars)
+    return ds.validate() if validate else ds
 
 
 def read_table(spark: SparkSession, path: str, dropna: bool = True) -> DataFrame:
-    """Fused table read: parse each chunk file and explode it to
-    long-format rows in ONE Python stage.
-
-    Result-identical to ``from_netcdf_files(spark, path).to_table(dropna)``
-    (same schema, same per-cell values — both legs share
-    :func:`dataset.explode_chunk_batch`), but the chunk never round-trips
-    through the internal ``encode_chunk``/``decode_chunk`` payload codec
-    and the data crosses the JVM↔Python boundary once instead of twice
-    (optimization guide §4) — per chunk: one file parse + one explode,
-    no intermediate serialization. Split-variable collections fall back
-    to the unfused path (their chunks must be consolidated across files
-    before explosion can see every variable)."""
-    from xarray_beam_spark import dataset as dataset_mod
-
-    meta, template, names = _open_collection(path)
-    if bool(meta["split_vars"]):
-        return from_netcdf_files(spark, path).to_table(dropna=dropna)
-    dims = tuple(sorted(template.sizes))  # Dataset.dims ordering
-    var_names = template.var_names
-    schema = dataset_mod.table_schema(template, dims)
-    out_names = [f.name for f in schema.fields]
-    pa_types = [dataset_mod._spark_to_arrow_type(f.dataType) for f in schema.fields]
-    par = min(len(names), spark.sparkContext.defaultParallelism)
-    fdf = spark.createDataFrame([(n,) for n in names], "fname string").repartition(par)
-    target = path
-
-    def read(batches):
-        store, key = stores.resolve(target)
-        for rb in batches:
-            for fname in rb.column(0).to_pylist():
-                buf = store.get(stores.join(key, "chunks", fname))
-                if buf is None:
-                    raise FileNotFoundError(f"chunk file vanished: {fname}")
-                out = dataset_mod.explode_chunk_batch(
-                    loads(buf), dims, var_names, dropna, out_names, pa_types
-                )
-                if out is not None:
-                    yield out
-
-    return fdf.mapInArrow(read, schema)
+    """Table read: parse each chunk file and explode it to long-format
+    rows — ``from_netcdf_files(spark, path).to_table(dropna)``, whose
+    fused chain runs the file parse and the explode in ONE Python pass,
+    so a chunk never round-trips through the ``encode_chunk`` /
+    ``decode_chunk`` payload codec. Split-variable collections add one
+    grouped pass (their chunks must be consolidated across files before
+    explosion can see every variable)."""
+    return from_netcdf_files(spark, path).to_table(dropna=dropna)

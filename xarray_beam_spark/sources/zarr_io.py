@@ -27,17 +27,12 @@ from typing import Iterator, Mapping, Sequence
 
 import numpy as np
 
-from xarray_beam_spark._lazy import LazyModule
-
-# deferred to first use (see _lazy.py)
-pd = LazyModule("pandas", globals(), "pd")
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xarray_beam_spark import core
-from xarray_beam_spark.codec import decode_chunk, encode_chunk
-from xarray_beam_spark.dataset import Dataset, Template, chunk_row_schema, off_col
+from xarray_beam_spark.dataset import Dataset, Template, _Source
 from xarray_beam_spark.ndarray_ds import NDDataset, Variable
 from xarray_beam_spark.sources import stores, zarrlite
 
@@ -295,7 +290,6 @@ def from_zarr(
     n_grid = core.chunk_count(cchunks, sizes)
     var_groups: list[str | None] = sorted(template.var_meta) if split_vars else [None]
     dims_sorted = sorted(sizes)
-    schema = chunk_row_schema(dims_sorted)
     # Ship small values via broadcast: coordinate axes AND the parsed
     # array metadata — tasks must not re-open the group (one metadata
     # fetch per JOB; per-task opens would mean per-task GETs on object
@@ -309,66 +303,52 @@ def from_zarr(
     _c = get_counters(spark)
     acc_chunks, acc_bytes = _c.acc("read.chunks"), _c.acc("read.bytes")
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read(batch) -> Iterator:
         from xarray_beam_spark.sources import iothread
 
         arrays = arrays_bc.value
         coords_all = coords_bc.value
         io_w = iothread.io_width(path)
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                grid_i, var_i = divmod(int(i), len(var_groups))
-                offsets = core.key_for_index(grid_i, sizes, cchunks)
-                shape = {
-                    d: min(cchunks[d], sizes[d] - offsets[d]) for d in dims_sorted
-                }
-                vg = var_groups[var_i]
-                names = [vg] if vg is not None else var_names
+        for i in batch.column("id").to_pylist():
+            grid_i, var_i = divmod(i, len(var_groups))
+            offsets = core.key_for_index(grid_i, sizes, cchunks)
+            shape = {d: min(cchunks[d], sizes[d] - offsets[d]) for d in dims_sorted}
+            vg = var_groups[var_i]
+            names = [vg] if vg is not None else var_names
 
-                def read_var(v):
-                    meta = arrays[v]
-                    ldims = meta.logical_dims
-                    return v, Variable(
-                        ldims,
-                        read_region_decoded(
-                            meta,
-                            {d: base_off[d] + offsets[d] for d in ldims},
-                            {d: shape[d] for d in ldims},
-                        ),
-                    )
+            def read_var(v):
+                meta = arrays[v]
+                ldims = meta.logical_dims
+                return v, Variable(
+                    ldims,
+                    read_region_decoded(
+                        meta,
+                        {d: base_off[d] + offsets[d] for d in ldims},
+                        {d: shape[d] for d in ldims},
+                    ),
+                )
 
-                # per-variable IO threading on latency-bound stores
-                # (reference core.py:528-530); read_region threads
-                # per-chunk below this when variables are few
-                dv = dict(iothread.thread_map(read_var, names, io_w))
-                used = {d for var in dv.values() for d in var.dims}
-                ch_coords = {
-                    k: Variable(
-                        c.dims,
-                        c.values[
-                            tuple(
-                                slice(offsets[d], offsets[d] + shape[d]) for d in c.dims
-                            )
-                        ],
-                    )
-                    for k, c in coords_all.items()
-                    if set(c.dims) <= used
-                }
-                ds = NDDataset(dv, ch_coords)
-                acc_chunks.add(1)
-                acc_bytes.add(ds.nbytes)
-                row = {off_col(d): offsets[d] for d in dims_sorted}
-                row["vars"] = vg
-                row["payload"] = encode_chunk(ds)
-                rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            # per-variable IO threading on latency-bound stores
+            # (reference core.py:528-530); read_region threads
+            # per-chunk below this when variables are few
+            dv = dict(iothread.thread_map(read_var, names, io_w))
+            used = {d for var in dv.values() for d in var.dims}
+            ch_coords = {
+                k: Variable(
+                    c.dims,
+                    c.values[tuple(slice(offsets[d], offsets[d] + shape[d]) for d in c.dims)],
+                )
+                for k, c in coords_all.items()
+                if set(c.dims) <= used
+            }
+            ds = NDDataset(dv, ch_coords)
+            acc_chunks.add(1)
+            acc_bytes.add(ds.nbytes)
+            yield (offsets, vg), ds
 
     total = n_grid * len(var_groups)
     rng = spark.range(0, total, 1, max(1, min(total, spark.sparkContext.defaultParallelism)))
-    df = rng.mapInPandas(read, schema)
-    out = Dataset(spark, df, template, cchunks, split_vars)
+    out = Dataset(spark, _Source(rng, read, fresh=True), template, cchunks, split_vars)
     # Register the scan spec so Dataset.isel/head/tail/__getitem__/rechunk
     # can rewrite the read instead of post-filtering (reference fast path).
     out._scan = ZarrScan(path=path, window=win, var_subset=tuple(var_names))
@@ -433,56 +413,47 @@ def zip_from_zarr(
         out_dummy = func(*dummies)
         template, _ = _infer_result_meta(tmpls[0], cchunks, dummies[0], out_dummy)
     dims_sorted = sorted(sizes)
-    schema = chunk_row_schema(dims_sorted)
     n_grid = core.chunk_count(cchunks, sizes)
     coords_bc = spark.sparkContext.broadcast([t.coords for t in tmpls])
     arrays_bc = spark.sparkContext.broadcast(arrays_per)
     var_names_per = [sorted(t.var_meta) for t in tmpls]
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def read(batch) -> Iterator:
         groups = arrays_bc.value  # metadata opened once, driver-side
         coords_all = coords_bc.value
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                offsets = core.key_for_index(int(i), sizes, cchunks)
-                shape = {d: min(cchunks[d], sizes[d] - offsets[d]) for d in dims_sorted}
-                dss = []
-                for arrays, names, coords_t in zip(groups, var_names_per, coords_all):
-                    dv = {}
-                    for v in names:
-                        meta = arrays[v]
-                        ldims = meta.logical_dims
-                        dv[v] = Variable(
-                            ldims,
-                            read_region_decoded(
-                                meta,
-                                {d: offsets[d] for d in ldims},
-                                {d: shape[d] for d in ldims},
-                            ),
-                        )
-                    used = {d for var in dv.values() for d in var.dims}
-                    ch_coords = {
-                        k: Variable(
-                            c.dims,
-                            c.values[
-                                tuple(slice(offsets[d], offsets[d] + shape[d]) for d in c.dims)
-                            ],
-                        )
-                        for k, c in coords_t.items()
-                        if set(c.dims) <= used
-                    }
-                    dss.append(NDDataset(dv, ch_coords))
-                res = func(*dss)
-                row = {off_col(d): offsets[d] for d in dims_sorted}
-                row["vars"] = None
-                row["payload"] = encode_chunk(res)
-                rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        for i in batch.column("id").to_pylist():
+            offsets = core.key_for_index(i, sizes, cchunks)
+            shape = {d: min(cchunks[d], sizes[d] - offsets[d]) for d in dims_sorted}
+            dss = []
+            for arrays, names, coords_t in zip(groups, var_names_per, coords_all):
+                dv = {}
+                for v in names:
+                    meta = arrays[v]
+                    ldims = meta.logical_dims
+                    dv[v] = Variable(
+                        ldims,
+                        read_region_decoded(
+                            meta,
+                            {d: offsets[d] for d in ldims},
+                            {d: shape[d] for d in ldims},
+                        ),
+                    )
+                used = {d for var in dv.values() for d in var.dims}
+                ch_coords = {
+                    k: Variable(
+                        c.dims,
+                        c.values[
+                            tuple(slice(offsets[d], offsets[d] + shape[d]) for d in c.dims)
+                        ],
+                    )
+                    for k, c in coords_t.items()
+                    if set(c.dims) <= used
+                }
+                dss.append(NDDataset(dv, ch_coords))
+            yield (offsets, None), func(*dss)
 
     rng = spark.range(0, n_grid, 1, max(1, min(n_grid, spark.sparkContext.defaultParallelism)))
-    return Dataset(spark, rng.mapInPandas(read, schema), template, cchunks, False)
+    return Dataset(spark, _Source(rng, read), template, cchunks, False)
 
 
 def replace_template_dims(
@@ -999,35 +970,35 @@ def to_zarr(
     # validated above) and broadcast — write tasks must not re-fetch it
     arrays_bc = ds.spark.sparkContext.broadcast(arrays)
 
-    def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def write(pairs) -> Iterator:
+        import pyarrow as pa
+
         from xarray_beam_spark.sources import iothread
 
         arrays = arrays_bc.value
         io_w = iothread.io_width(path)
         n_chunks = 0
         n_bytes = 0
-        for pdf in batches:
-            for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                chunk = decode_chunk(r["payload"])
+        for (offs, _vars), chunk in pairs:
 
-                def write_var(item):
-                    v, var = item
-                    meta = arrays[v]
-                    off = {
-                        d: base.get(d, 0) + int(r[off_col(d)]) for d in meta.logical_dims
-                    }
-                    return zarrlite.write_region(meta, off, cf_encode(meta, var.values))
+            def write_var(item):
+                v, var = item
+                meta = arrays[v]
+                off = {d: base.get(d, 0) + offs[d] for d in meta.logical_dims}
+                return zarrlite.write_region(meta, off, cf_encode(meta, var.values))
 
-                # per-variable IO threading (reference zarr.py:629)
-                n_bytes += sum(
-                    iothread.thread_map(write_var, chunk.data_vars.items(), io_w)
-                )
-                n_chunks += len(chunk.data_vars)
+            # per-variable IO threading (reference zarr.py:629)
+            n_bytes += sum(iothread.thread_map(write_var, chunk.data_vars.items(), io_w))
+            n_chunks += len(chunk.data_vars)
         acc_wchunks.add(n_chunks)
         acc_wbytes.add(n_bytes)
-        yield pd.DataFrame({"chunks_written": [n_chunks], "bytes_written": [n_bytes]})
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([n_chunks], pa.int64()), pa.array([n_bytes], pa.int64())],
+            names=_WRITE_STATS.fieldNames(),
+        )
 
-    stats = work.df.mapInPandas(write, _WRITE_STATS).agg(
+    # the write ends the dataset's fused chain: no chunk is encoded
+    stats = work._run(write, _WRITE_STATS).agg(
         F.sum("chunks_written").alias("chunks_written"),
         F.sum("bytes_written").alias("bytes_written"),
     ).collect()[0]
