@@ -705,7 +705,7 @@ def test_staged_tree_merge_high_fanin(spark, monkeypatch):
     monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 16)
     staged = d.mean("t")  # 4096 → 256 → 16 → final
     plan = staged.df._jdf.queryExecution().analyzed().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 3  # two partial rounds + final
+    assert plan.count("FlatMapGroupsInArrow") == 3  # two partial rounds + final
     monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", n + 1)
     single = d.mean("t")  # forced single-stage
     got, want = staged.collect(), single.collect()
@@ -715,7 +715,7 @@ def test_staged_tree_merge_high_fanin(spark, monkeypatch):
     # default fan-in threshold: small reductions stay single-stage
     monkeypatch.undo()
     small = Dataset.from_numpy(spark, dummy_era5(), chunks={"time": 10}).mean("time")
-    assert small.df._jdf.queryExecution().analyzed().toString().count("FlatMapGroupsInPandas") == 1
+    assert small.df._jdf.queryExecution().analyzed().toString().count("FlatMapGroupsInArrow") == 1
 
 
 def test_staged_tree_merge_groupby(spark, monkeypatch):
@@ -728,7 +728,7 @@ def test_staged_tree_merge_groupby(spark, monkeypatch):
     labels = (np.arange(n) % 7).astype(np.int64)
     monkeypatch.setattr(dsmod, "DEFAULT_MERGE_FANIN", 8)
     staged = d.groupby_reduce("t", labels, op="sum", new_dim="g")  # 256 → 32 → 4 → final
-    assert staged.df._jdf.queryExecution().analyzed().toString().count("FlatMapGroupsInPandas") == 3
+    assert staged.df._jdf.queryExecution().analyzed().toString().count("FlatMapGroupsInArrow") == 3
     got = staged.collect()
     want = np.stack([arr[labels == g].sum(axis=0) for g in range(7)])
     np.testing.assert_array_equal(got.data_vars["v"].values, want)
@@ -799,7 +799,7 @@ def test_tree_merge_rounds_do_not_change_results(spark, monkeypatch, case):
 
     def grouped_maps(r):
         return r.df._jdf.queryExecution().analyzed().toString().count(
-            "FlatMapGroupsInPandas"
+            "FlatMapGroupsInArrow"
         )
 
     single = build(d)

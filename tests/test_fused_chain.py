@@ -5,6 +5,7 @@ every step was its own Python node."""
 
 from __future__ import annotations
 
+import re
 import sys
 
 import numpy as np
@@ -108,6 +109,132 @@ def test_map_blocks_may_mutate_in_place_anywhere_in_the_chain(spark, store):
     want["ones"] = np.full((LAT, LON), 7.0)
     _assert_matches(twice.collect(), want)
     np.testing.assert_array_equal(_ONES, 1.0)
+
+
+def _whole_numbers() -> NDDataset:
+    """Integer-valued float64, so sums are exact in any order."""
+    rng = np.random.default_rng(12)
+    return NDDataset(
+        {"t": (("time", "lat", "lon"), rng.integers(-50, 50, (T, LAT, LON)).astype(np.float64))},
+        {"time": np.arange(T, dtype=np.int64), "lat": np.linspace(-1.0, 1.0, LAT), "lon": np.arange(float(LON))},
+    )
+
+
+def _assert_mutated(got: NDDataset, result: np.ndarray, coords: dict[str, np.ndarray]) -> None:
+    np.testing.assert_array_equal(got.data_vars["t"].values, result * 2 + 1)
+    for k, c in coords.items():
+        np.testing.assert_array_equal(got.coords[k].values, c, err_msg=k)
+
+
+def test_map_blocks_may_mutate_in_place_after_a_reduction(spark):
+    """The final merge and extract is the reduced Dataset's grouped
+    source; a map_blocks after it runs in the same pass."""
+    src = _whole_numbers()
+    a = src.data_vars["t"].values
+    d = Dataset.from_numpy(spark, src, chunks={"time": STORE_T})
+    # the source's own arrays: map_blocks' driver-side inference on a
+    # dummy chunk must not scribble on them either
+    latlon = {k: src.coords[k].values for k in ("lat", "lon")}
+
+    mean = d.mean("time")
+    assert mean._source.group_by is not None and not mean._steps
+    _assert_mutated(mean.map_blocks(_mutate).collect(), a.mean(axis=0), latlon)
+
+    labels = np.arange(T) % 3
+    by_group = d.groupby_reduce("time", labels, op="mean")
+    want = np.stack([a[labels == g].mean(axis=0) for g in range(3)])
+    _assert_mutated(by_group.map_blocks(_mutate).collect(), want, latlon)
+    # the reductions themselves are untouched by the mutating maps
+    np.testing.assert_array_equal(by_group.collect().data_vars["t"].values, want)
+
+
+_X = np.arange(5000, dtype=np.int64) * 3  # over the inline limit: the join path
+_FX = np.array([0.5, 1.5, 2.5, 3.5, 4.5])
+_CAT = np.array(["a", "b", "c"])
+
+# case → (rows, schema, coords, var_cols, chunks, fill_value); dims are
+# the coords' keys. Rows with a value missing from the coords drop.
+_FROM_TABLE_CASES = {
+    "empty": ([], "x long, cat string, v double", {"x": _X[:10], "cat": _CAT}, ["v"], {"x": 4}, np.nan),
+    "large_int_axis": (
+        [(int(_X[i]), c, float(i)) for i, c in [(0, "a"), (7, "b"), (4999, "c"), (2500, "a")]]
+        + [(1, "a", 99.0)],
+        "x long, cat string, v double",
+        {"x": _X, "cat": _CAT},
+        ["v"],
+        {"x": 1000, "cat": 2},
+        np.nan,
+    ),
+    # no row lands in the cell fx ∈ [2.5, 3.5]
+    "float_axis_missing_cell": (
+        [(0.5, 1.0), (1.5, 2.0), (4.5, 5.0), (9.5, 7.0)],
+        "fx double, v double",
+        {"fx": _FX},
+        ["v"],
+        {"fx": 2},
+        np.nan,
+    ),
+    "fill_zero": (
+        [(1, "b", 3.0), (8, "c", 4.0)],
+        "x long, cat string, v double",
+        {"x": np.arange(10, dtype=np.int64), "cat": _CAT},
+        ["v"],
+        {"x": 3},
+        0.0,
+    ),
+    "extra_columns": (
+        [(2, "a", 1.5, "junk", 9), (0, "c", -2.0, "more", 8)],
+        "x long, cat string, v double, note string, w long",
+        {"cat": _CAT, "x": np.arange(4, dtype=np.int64)},
+        ["v"],
+        {"x": 2},
+        np.nan,
+    ),
+}
+
+
+def _placed(rows, names, coords, var_cols, fill_value) -> dict[str, np.ndarray]:
+    """Eager NumPy placement of table rows on the dense grid."""
+    dims = list(coords)
+    out = {v: np.full([len(coords[d]) for d in dims], fill_value) for v in var_cols}
+    for row in rows:
+        rec = dict(zip(names, row))
+        hits = [np.flatnonzero(coords[d] == rec[d]) for d in dims]
+        if all(len(h) for h in hits):
+            for v in var_cols:
+                out[v][tuple(int(h[0]) for h in hits)] = rec[v]
+    return out
+
+
+@pytest.mark.parametrize("case", sorted(_FROM_TABLE_CASES))
+def test_from_table_matches_eager_placement(spark, case):
+    rows, schema, coords, var_cols, chunks, fill_value = _FROM_TABLE_CASES[case]
+    table = spark.createDataFrame(rows, schema)
+    grid = Dataset.from_table(table, list(coords), coords, var_cols, chunks, fill_value)
+    got = grid.collect()
+    want = _placed(rows, table.columns, coords, var_cols, fill_value)
+    for v, arr in want.items():
+        assert got.data_vars[v].dims == tuple(coords)
+        np.testing.assert_array_equal(got.data_vars[v].values, arr, err_msg=v)
+    for d, c in coords.items():
+        np.testing.assert_array_equal(got.coords[d].values, c, err_msg=d)
+
+
+def test_from_table_is_one_grouped_python_node(spark):
+    rows, schema, coords, var_cols, chunks, fill_value = _FROM_TABLE_CASES["fill_zero"]
+    grid = Dataset.from_table(spark.createDataFrame(rows, schema), list(coords), coords, var_cols, chunks, fill_value)
+    plan = grid.df._jdf.queryExecution().executedPlan().toString()
+    python = re.findall(r"\b(?:MapInArrow|MapInPandas|FlatMapGroupsIn\w+|\w*EvalPython)\b", plan)
+    assert python == ["FlatMapGroupsInArrow"], plan
+
+
+def test_map_blocks_may_mutate_in_place_after_from_table(spark):
+    rows, schema, coords, _, chunks, _ = _FROM_TABLE_CASES["fill_zero"]
+    table = spark.createDataFrame(rows, schema.replace(" v double", " t double"))
+    grid = Dataset.from_table(table, list(coords), coords, ["t"], chunks, 0.0)
+    want = _placed(rows, table.columns, coords, ["t"], 0.0)["t"]
+    _assert_mutated(grid.map_blocks(_mutate).collect(), want, coords)
+    np.testing.assert_array_equal(grid.collect().data_vars["t"].values, want)
 
 
 def test_df_is_memoized_and_a_persisted_chain_is_reused(spark, store):

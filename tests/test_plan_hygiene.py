@@ -160,8 +160,10 @@ def _plan_nodes(tree: str) -> list[tuple[int, str]]:
 
 
 def _stacked_python_maps(tree: str) -> list[tuple[str, str]]:
-    """(parent, child) for each chunk-map node that is the direct child
-    of another Python node in the tree."""
+    """(parent, child) for each Python node that is the direct child of
+    another Python node in the tree, where either of the two is a chunk
+    map: a map over another Python pass's output, or a map's output fed
+    to another Python pass."""
     nodes = _plan_nodes(tree)
     bad = []
     for i, (col, name) in enumerate(nodes):
@@ -170,7 +172,8 @@ def _stacked_python_maps(tree: str) -> list[tuple[str, str]]:
         for ccol, child in nodes[i + 1 :]:
             if ccol <= col:
                 break
-            if ccol == col + 3 and child in CHUNK_MAPS:
+            stacked = ccol == col + 3 and child in PYTHON_NODES
+            if stacked and (name in CHUNK_MAPS or child in CHUNK_MAPS):
                 bad.append((name, child))
     return bad
 
@@ -184,9 +187,18 @@ def test_stacked_map_detector():
       +- MapInArrow other(id)
          +- Range (0, 4)"""
     assert _stacked_python_maps(tree) == [
+        ("MapInPandas", "FlatMapGroupsInArrow"),
         ("MapInPandas", "MapInArrow"),
         ("FlatMapGroupsInArrow", "MapInArrow"),
     ]
+    # a reduction's merge with to_table's explode stacked on top of it
+    tree = """MapInArrow explode(a)
++- FlatMapGroupsInPandas merge_extract(a)
+   +- Sort [a ASC NULLS FIRST], false, 0
+      +- Exchange hashpartitioning(a, 4)
+         +- MapInArrow pre(a)
+            +- InMemoryTableScan [a]"""
+    assert _stacked_python_maps(tree) == [("MapInArrow", "FlatMapGroupsInPandas")]
 
 
 def test_no_xb_gate_stacks_python_chunk_maps(spark, sf_dir):
@@ -195,6 +207,25 @@ def test_no_xb_gate_stacks_python_chunk_maps(spark, sf_dir):
     assert len(gates) > 50
     bad = {name: pairs for name, plan in gates.items() if (pairs := _stacked_python_maps(plan))}
     assert not bad, f"unfused Python chunk maps: {bad}"
+
+
+def _assert_one_python_pass_per_stage(spark) -> None:
+    """The last SQL execution's final (adaptive) plan runs exactly one
+    FlatMapGroupsInArrow above an Exchange above one MapInArrow. A cached
+    input's own plan is not counted."""
+    # the status store is filled by the listener bus, asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    desc = execs.apply(execs.size() - 1).physicalPlanDescription()
+    # the tree of the final plan, root first
+    final = desc.split("\n\n")[0].split("== Initial Plan ==")[0]
+    nodes = [name for _, name in _plan_nodes(final)]
+    if "InMemoryTableScan" in nodes:
+        nodes = nodes[: nodes.index("InMemoryTableScan")]
+    python = [n for n in nodes if n in PYTHON_NODES or n.endswith("EvalPython")]
+    assert python == ["FlatMapGroupsInArrow", "MapInArrow"], final
+    between = nodes[nodes.index("FlatMapGroupsInArrow") : nodes.index("MapInArrow")]
+    assert "Exchange" in between, final
 
 
 def test_rechunk_pipeline_runs_one_python_pass_per_stage(spark, tmp_path):
@@ -215,15 +246,21 @@ def test_rechunk_pipeline_runs_one_python_pass_per_stage(spark, tmp_path):
     ds = zarr_io.from_zarr(spark, path).map_blocks(lambda d: d.map(lambda a: a - np.float32(1)))
     ds = ds.rechunk({"time": -1, "lat": 2, "lon": 3})
     zarr_io.to_zarr(ds, str(tmp_path / "out.zarr"), compressor=None)
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    desc = execs.apply(execs.size() - 1).physicalPlanDescription()
-    # the tree of the final (adaptive) plan, root first
-    final = desc.split("\n\n")[0].split("== Initial Plan ==")[0]
-    nodes = [name for _, name in _plan_nodes(final)]
-    python = [n for n in nodes if n in PYTHON_NODES or n.endswith("EvalPython")]
-    assert python == ["FlatMapGroupsInArrow", "MapInArrow"], final
-    between = nodes[nodes.index("FlatMapGroupsInArrow") : nodes.index("MapInArrow")]
-    assert "Exchange" in between, final
+    _assert_one_python_pass_per_stage(spark)
+
+
+def test_reduction_to_table_runs_one_python_pass_per_stage(spark, sf_dir):
+    """mean → to_table on the events grid executes one MapInArrow (the
+    pre-aggregate) below the exchange and one FlatMapGroupsInArrow (merge,
+    extract and explode) above it; weighted_mean's map_blocks fuse too."""
+    from xarray_beam_spark.grid_queries import _events_grid
+
+    grid = _events_grid(spark, sf_dir, chunks={"day": 7})
+    assert grid.mean("day").to_table().collect()
+    _assert_one_python_pass_per_stage(spark)
+
+    weighted = grid.weighted_mean("hour", np.linspace(0.5, 1.5, 24))
+    assert _stacked_python_maps(weighted.df._jdf.queryExecution().executedPlan().toString()) == []
 
 
 def test_scalar_broadcast_whitelist_is_tight(spark, sf_dir):

@@ -1,6 +1,7 @@
 """Physical-plan shape assertions: the optimizations the engine claims
-(predicate pushdown to parquet, column pruning, broadcast joins) must be
-visible in the executed plan, not just intended."""
+(predicate pushdown to parquet, column pruning, broadcast joins, the chunk
+engine's pre-aggregate below its grouped merge) must be visible in the
+executed plan, not just intended."""
 
 from __future__ import annotations
 
@@ -52,15 +53,15 @@ def test_grid_mean_preaggregates_before_shuffle(spark, sf_dir):
     """The chunk engine's combiner lift: the mean plan must show a narrow
     Python map stage (per-chunk pre-aggregation) BELOW the exchange, and a
     grouped-map stage above it — i.e. partial aggregation happens before
-    any data moves (applyInPandas has no partial agg of its own)."""
+    any data moves (applyInArrow has no partial agg of its own)."""
     from xarray_beam_spark.grid_queries import _events_grid
 
     d = _events_grid(spark, sf_dir, chunks={"day": 7})
     plan = d.mean("day").df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan  # merge+finalize (wide)
+    assert "FlatMapGroupsInArrow" in plan  # merge+finalize (wide)
     assert "MapInArrow" in plan  # pre-aggregate (narrow)
     # tree order: the narrow pre-agg sits deeper than the grouped stage
-    assert plan.index("MapInArrow") > plan.index("FlatMapGroupsInPandas")
+    assert plan.index("MapInArrow") > plan.index("FlatMapGroupsInArrow")
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):

@@ -6,7 +6,7 @@ xarray Datasets over Apache Beam) on top of the Spark DataFrame engine:
 - a distributed *Dataset* of keyed N-d array chunks carried as one
   chunk-row per Spark DataFrame row (binary ndarray payloads over Arrow),
 - chunk planning / rechunking math (multistage shuffle plans),
-- per-chunk vectorized compute via ``mapInPandas`` / ``applyInPandas``,
+- per-chunk vectorized compute via ``mapInArrow`` / grouped ``applyInArrow``,
 - combiner-style distributed aggregations (mean/sum/min/max/std/var),
 - Zarr-format persistent storage (self-contained v2-compatible codec),
 - a long/tabular bridge (``Dataset.from_table`` / ``Dataset.to_table``)

@@ -25,7 +25,9 @@ Scale notes:
   shuffle group ≤ max_mem;
 - reductions pre-aggregate inside each chunk (narrow) before the shuffle,
   exactly like the reference's combiner lifting (``combiners.py:108-147``),
-  because ``applyInPandas`` has no partial aggregation.
+  because a grouped ``applyInArrow`` has no partial aggregation of its
+  own; the merge + extract is the grouped source of the reduced Dataset,
+  so what follows it (``to_table``, ``to_zarr``) runs in the same pass.
 """
 
 from __future__ import annotations
@@ -43,9 +45,8 @@ import numpy as np
 from xarray_beam_spark._lazy import LazyModule
 
 # Deferred to first use: executor workers fork with numpy warm but
-# pandas/pyarrow cold, and many tasks (and every driver-side tool that
-# imports the package) never touch either (see _lazy.py).
-pd = LazyModule("pandas", globals(), "pd")
+# pyarrow cold, and many tasks (and every driver-side tool that imports
+# the package) never touch it (see _lazy.py).
 pa = LazyModule("pyarrow", globals(), "pa")
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -202,15 +203,24 @@ class _Source(NamedTuple):
     fresh: bool = False
 
 
+def _decode_payloads(col: "pa.Array | pa.ChunkedArray") -> Iterator[NDDataset]:
+    """Each payload of a binary Arrow column, decoded zero-copy from the
+    column's value buffer (read-only views)."""
+    for i in range(len(col)):
+        yield decode_chunk(memoryview(col[i].as_buffer()))
+
+
+def _key_offsets(dims: Sequence[str], key: Sequence["pa.Scalar"]) -> dict[str, int]:
+    """Offsets by dim from the offset scalars of a grouped source's key."""
+    return {d: int(k.as_py()) for d, k in zip(dims, key)}
+
+
 def _decode_rows(dims: Sequence[str], batch: "pa.RecordBatch") -> Iterator[ChunkPair]:
-    """The chunk-row source: payloads decode zero-copy from the batch's
-    binary value buffer (read-only views)."""
+    """The chunk-row source."""
     offs = [batch.column(off_col(d)).to_numpy() for d in dims]
     kvars = batch.column("vars").to_pylist()
-    payloads = batch.column("payload")
-    for i in range(batch.num_rows):
-        key = ({d: int(o[i]) for d, o in zip(dims, offs)}, kvars[i])
-        yield key, decode_chunk(memoryview(payloads[i].as_buffer()))
+    for i, ds in enumerate(_decode_payloads(batch.column("payload"))):
+        yield ({d: int(o[i]) for d, o in zip(dims, offs)}, kvars[i]), ds
 
 
 def _rows_source(df: DataFrame, dims: Sequence[str]) -> _Source:
@@ -476,9 +486,11 @@ class Dataset:
         dim (defines grid order and size); table rows are placed at their
         coordinate's index, absent cells become ``fill_value``.
 
-        Scalable path: per-dim index mapping joined via broadcast, then a
-        single shuffle on chunk offsets; each chunk assembled in one
-        ``applyInPandas`` group.
+        Scalable path: a per-dim value → index mapping (a literal array,
+        or a broadcast join for float and large axes), then a single
+        shuffle on chunk offsets. Each chunk is assembled by the grouped
+        source of the returned Dataset, so what follows (a reduction's
+        pre-aggregate, a Zarr write) runs in the same Python pass.
         """
         spark = table.sparkSession
         dims = list(dims)
@@ -525,97 +537,57 @@ class Dataset:
         for d in joined_dims:
             vals = np.asarray(coords[d])
             mapping = spark.createDataFrame(
-                pd.DataFrame({d: vals, f"__idx_{d}": np.arange(len(vals), dtype=np.int64)})
+                pa.table({d: vals, f"__idx_{d}": np.arange(len(vals), dtype=np.int64)})
             )
             out = out.join(F.broadcast(mapping), on=d, how="inner")
-        for d in dims:
-            out = out.withColumn(
-                off_col(d), (F.col(f"__idx_{d}") - F.col(f"__idx_{d}") % F.lit(cchunks[d]))
-            )
-
         dims_sorted = sorted(dims)
-        schema = chunk_row_schema(dims)
+        off_cols = [off_col(d) for d in dims_sorted]
+        idx_cols = [f"__idx_{d}" for d in dims]
+        for d, c in zip(dims, idx_cols):
+            out = out.withColumn(off_col(d), F.col(c) - F.col(c) % F.lit(cchunks[d]))
+
+        # Grid completeness: grouping materializes only cells that HAVE
+        # rows, so a sparse table would leave holes in the chunk grid —
+        # collect() would silently truncate an axis and rechunk would
+        # miss sub-chunks. One marker row per grid cell (row-major over
+        # the sorted dims, with null indexes) joins the grouped input, so
+        # every cell forms a group and an empty one assembles to a
+        # fill_value chunk.
+        markers, n_cells = {}, 1
+        for d in reversed(dims_sorted):
+            count = -(-sizes[d] // cchunks[d])
+            markers[off_col(d)] = F.expr(f"(id DIV {n_cells}) % {count} * {cchunks[d]}")
+            n_cells *= count
+        # size the enumeration to the cell count: spark.range defaults to
+        # defaultParallelism partitions, which for a handful of cells is
+        # dozens of EMPTY tasks (~64k cells per task keeps the enumeration
+        # wide enough at any real grid size)
+        n_parts = max(1, min(spark.sparkContext.defaultParallelism, -(-n_cells // 65536)))
+        cells = spark.range(0, n_cells, numPartitions=n_parts).select(
+            *[markers[c].alias(c) for c in off_cols]
+        )
+        rows = out.select(*off_cols, *idx_cols, *var_cols).unionByName(
+            cells, allowMissingColumns=True
+        )
         bc_coords = spark.sparkContext.broadcast({d: np.asarray(coords[d]) for d in dims})
 
-        def build_row(offsets: dict[str, int], pdf: pd.DataFrame | None) -> dict:
-            cvals = bc_coords.value
-            shape = tuple(
-                min(cchunks[d], sizes[d] - offsets[d]) for d in dims
-            )
+        def assemble(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
+            offsets = _key_offsets(dims_sorted, key)
+            shape = tuple(min(cchunks[d], sizes[d] - offsets[d]) for d in dims)
             arrs = {v: np.full(shape, fill_value, dtype=np.float64) for v in var_cols}
-            if pdf is not None:
-                idx = tuple(
-                    (pdf[f"__idx_{d}"].to_numpy() - offsets[d]) for d in dims
-                )
-                for v in var_cols:
-                    arrs[v][idx] = pdf[v].to_numpy(dtype=np.float64)
+            tbl = tbl.filter(tbl.column(idx_cols[0]).is_valid())  # drop the marker
+            idx = tuple(tbl.column(c).to_numpy() - offsets[d] for c, d in zip(idx_cols, dims))
+            for v in var_cols:
+                arrs[v][idx] = np.asarray(tbl.column(v).to_numpy(), dtype=np.float64)
+            cvals = bc_coords.value
             chunk_coords = {
                 d: Variable((d,), cvals[d][offsets[d] : offsets[d] + shape[i]])
                 for i, d in enumerate(dims)
             }
-            ds = NDDataset({v: ((*dims,), arrs[v]) for v in var_cols}, chunk_coords)
-            row = {off_col(d): offsets[d] for d in dims_sorted}
-            row["vars"] = None
-            row["payload"] = encode_chunk(ds)
-            return row
+            yield (offsets, None), NDDataset({v: ((*dims,), arrs[v]) for v in var_cols}, chunk_coords)
 
-        def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            offsets = dict(zip([d for d in dims_sorted], [int(k) for k in key]))
-            row = build_row(offsets, pdf)
-            return pd.DataFrame([row], columns=[f.name for f in schema.fields])
-
-        off_cols = [off_col(d) for d in dims_sorted]
-        grouped = out.groupBy(*off_cols).applyInPandas(assemble, schema)
-
-        # Grid completeness: groupBy materializes only cells that HAVE
-        # rows, so a sparse table would leave holes in the chunk grid —
-        # collect() would silently truncate an axis and rechunk would
-        # miss sub-chunks.  Emit a fill_value chunk for every absent
-        # cell: the full cell grid is enumerated distributed
-        # (spark.range → key_for_index, metadata-sized) and anti-joined
-        # against the present offsets; a dense table adds zero rows.
-        n_cells = 1
-        for d in dims_sorted:
-            n_cells *= -(-sizes[d] // cchunks[d])
-
-        def cell_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                cells = [
-                    core.key_for_index(int(i), sizes, cchunks) for i in pdf["id"]
-                ]
-                if cells:
-                    yield pd.DataFrame(
-                        {c: [o[d] for o in cells] for c, d in zip(off_cols, dims_sorted)}
-                    )
-
-        cell_schema = ", ".join(f"`{c}` long" for c in off_cols)
-        # size the enumeration to the cell count: spark.range defaults to
-        # defaultParallelism partitions, which for a handful of cells is
-        # dozens of EMPTY tasks each paying a Python-worker round trip
-        # (~64k cells per task keeps the metadata enumeration wide enough
-        # at any real grid size)
-        n_parts = max(1, min(spark.sparkContext.defaultParallelism, -(-n_cells // 65536)))
-        all_cells = spark.range(0, n_cells, numPartitions=n_parts).mapInPandas(
-            cell_rows, cell_schema
-        )
-        # present offsets come from the PRE-assembly table (column-pruned
-        # distinct), not from `grouped` — referencing `grouped` twice in
-        # one plan would run the whole chunk assembly twice
-        missing = all_cells.join(
-            out.select(*off_cols).distinct(), on=off_cols, how="left_anti"
-        )
-
-        def fill_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = [
-                    build_row({d: int(r[off_col(d)]) for d in dims_sorted}, None)
-                    for r in pdf.to_dict("records")
-                ]
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-        grouped = grouped.unionByName(missing.mapInPandas(fill_rows, schema))
-        return Dataset(spark, grouped, tmpl, cchunks, False)
+        src = _Source(rows, assemble, tuple(off_cols), fresh=True)
+        return Dataset(spark, src, tmpl, cchunks, False)
 
     @staticmethod
     def from_dataframe(
@@ -2020,9 +1992,8 @@ class Dataset:
 
         def assemble(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
             main = sliver = None
-            payloads = tbl.column("payload")
-            for i, is_halo in enumerate(tbl.column("__halo").to_pylist()):
-                ds = decode_chunk(memoryview(payloads[i].as_buffer()))
+            halos = tbl.column("__halo").to_pylist()
+            for is_halo, ds in zip(halos, _decode_payloads(tbl.column("payload"))):
                 if is_halo:
                     sliver = ds
                 else:
@@ -2047,7 +2018,7 @@ class Dataset:
                     keep[axis] = slice(pad, None)
                     res = res[tuple(keep)]
                 out_vars[v] = Variable(var.dims, res)
-            offs = {d: int(k.as_py()) for d, k in zip(dims, key[1:])}
+            offs = _key_offsets(dims, key[1:])
             yield (offs, key[0].as_py()), NDDataset(out_vars, dict(main.coords), dict(main.attrs))
 
         with_halo = self._run(emit, halo_schema)
@@ -2118,13 +2089,9 @@ class Dataset:
 
         def combine(batch: "pa.RecordBatch") -> Iterator[ChunkPair]:
             offs = [batch.column(c).to_numpy() for c in offc]
-            pa_, pb_ = batch.column("__pa"), batch.column("__pb")
-            for i in range(batch.num_rows):
-                res = func(
-                    decode_chunk(memoryview(pa_[i].as_buffer())),
-                    decode_chunk(memoryview(pb_[i].as_buffer())),
-                )
-                yield ({d: int(o[i]) for d, o in zip(dims, offs)}, None), res
+            sides = zip(_decode_payloads(batch.column("__pa")), _decode_payloads(batch.column("__pb")))
+            for i, (a, b) in enumerate(sides):
+                yield ({d: int(o[i]) for d, o in zip(dims, offs)}, None), func(a, b)
 
         return Dataset(self.spark, _Source(joined, combine), template, self.chunks, False)
 
@@ -2151,13 +2118,8 @@ class Dataset:
         dims = self.dims
 
         def merge(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
-            payloads = tbl.column("payload")
-            parts = [
-                decode_chunk(memoryview(payloads[i].as_buffer()))
-                for i in range(tbl.num_rows)
-            ]
-            offs = {d: int(k.as_py()) for d, k in zip(dims, key)}
-            yield (offs, None), NDDataset.merge(parts)
+            parts = list(_decode_payloads(tbl.column("payload")))
+            yield (_key_offsets(dims, key), None), NDDataset.merge(parts)
 
         group_by = tuple(off_col(d) for d in dims)
         src = _Source(self.df, merge, group_by)
@@ -2217,12 +2179,12 @@ class Dataset:
         + applyInArrow block assembly. This is the engine's one wide op.
 
         Arrow-native on purpose: chunk rows are few but payloads are tens
-        of MB, and ``applyInPandas`` would copy every payload twice more
-        (Arrow → pandas object cells, pandas → Arrow on return). Here the
-        payloads are decoded zero-copy straight from the Arrow value
-        buffers (``BinaryScalar.as_buffer`` → ``np.frombuffer``). The
-        assemble is the source of a new fused chain: later steps and the
-        sink (a Zarr write, say) run in the same grouped pass."""
+        of MB, and a pandas grouped map would copy every payload twice
+        more (Arrow → pandas object cells, pandas → Arrow on return). Here
+        the payloads are decoded zero-copy straight from the Arrow value
+        buffers (:func:`_decode_payloads`). The assemble is the source of
+        a new fused chain: later steps and the sink (a Zarr write, say)
+        run in the same grouped pass."""
         sizes = self.sizes
         tgt = core.normalize_chunks(target_chunks, sizes)
         dims = self.dims
@@ -2240,12 +2202,10 @@ class Dataset:
             # key = (vars, tgt offsets...) — group also by vars so
             # var-split datasets consolidate per variable.
             kvars = key[0].as_py()
-            koffs = dict(zip(dims, [int(k.as_py()) for k in key[1:]]))
+            koffs = _key_offsets(dims, key[1:])
             off_arrs = {d: tbl.column(off_col(d)).to_numpy() for d in dims}
-            payloads = tbl.column("payload")
             parts: dict[tuple[int, ...], NDDataset] = {}
-            for i in range(tbl.num_rows):
-                ds = decode_chunk(memoryview(payloads[i].as_buffer()))
+            for i, ds in enumerate(_decode_payloads(tbl.column("payload"))):
                 ds_sizes = ds.sizes
                 # index by raw relative offset; the dense remap below
                 # handles any (even irregular) sub-grid
@@ -3105,11 +3065,13 @@ class Dataset:
         and merges each group with :func:`_merge_partial`, so no task
         gathers more than fanin payloads — at 10⁵ chunks per climatology
         cell, the difference between a working plan and one Python task
-        deserializing 10⁵ accumulators. A final ``groupBy`` on the kept
-        offsets merges once more and runs ``combiner.extract`` for each
-        output variable of ``out_vars`` (name → the dims of the input it
-        reduces, output dtype). ``new_coord`` (group and bin reductions)
-        is the single-chunk output dim that replaces ``red_dims``."""
+        deserializing 10⁵ accumulators. The returned Dataset's grouped
+        source (``groupBy`` on the kept offsets) merges once more and runs
+        ``combiner.extract`` for each output variable of ``out_vars`` (name
+        → the dims of the input it reduces, output dtype), so whatever
+        follows runs in that same pass. ``new_coord`` (group and bin
+        reductions) is the single-chunk output dim that replaces
+        ``red_dims``."""
         tmpl = self.template
         keep_dims = [d for d in self.dims if d not in red_dims]
         out_sizes = {d: s for d, s in tmpl.sizes.items() if d not in red_dims}
@@ -3124,9 +3086,9 @@ class Dataset:
             for v, (dims_v, dt) in out_vars.items()
         }
         out_tmpl = Template(sizes=out_sizes, var_meta=out_vm, coords=out_coords, attrs=tmpl.attrs)
-        schema = chunk_row_schema(keep_dims + new_dims)
-        schema_mk = T.StructType(list(schema.fields) + [T.StructField("mkey", T.LongType())])
-        cols, cols_mk = schema.fieldNames(), schema_mk.fieldNames()
+        schema_mk = T.StructType(
+            chunk_row_schema(keep_dims + new_dims).fields + [T.StructField("mkey", T.LongType())]
+        )
         offc = [off_col(d) for d in keep_dims]
         # linearized reduced-chunk index → the tree-merge re-key base
         chunks_in = dict(self.chunks)
@@ -3135,14 +3097,6 @@ class Dataset:
         for d in red_dims:
             strides[d] = fan_in
             fan_in *= -(-self.sizes[d] // chunks_in[d])
-
-        def pack(key: tuple, acc: NDDataset, with_mkey: bool) -> pd.DataFrame:
-            # key = (vars, *offc) or (vars, *offc, mkey)
-            row = dict(zip(offc, map(int, key[1:])), vars=key[0], payload=encode_chunk(acc))
-            row.update({off_col(d): 0 for d in new_dims})
-            if with_mkey:
-                row["mkey"] = int(key[-1])
-            return pd.DataFrame([row], columns=cols_mk if with_mkey else cols)
 
         zero_new = {d: 0 for d in new_dims}
         sink_mk = _encode_sink(sorted(keep_dims + new_dims), extra=("mkey", lambda key: key[2]))
@@ -3155,12 +3109,17 @@ class Dataset:
                 accs.append((({**offs, **zero_new}, kvars, mkey), add(ds, red)))
             return sink_mk(accs)
 
-        def merge_round(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = _merge_partial([decode_chunk(p) for p in pdf["payload"]], combiner.fields)
-            return pack(key, acc, True)
+        def merged(key: tuple, tbl: "pa.Table") -> tuple[dict[str, int], NDDataset]:
+            # key = (vars, *offc) or (vars, *offc, mkey)
+            acc = _merge_partial(list(_decode_payloads(tbl.column("payload"))), combiner.fields)
+            return {**_key_offsets(keep_dims, key[1:]), **zero_new}, acc
 
-        def merge_extract(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = _merge_partial([decode_chunk(p) for p in pdf["payload"]], combiner.fields)
+        def merge_round(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
+            offs, acc = merged(key, tbl)
+            yield (offs, key[0].as_py(), key[-1].as_py()), acc
+
+        def merge_extract(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
+            offs, acc = merged(key, tbl)
             fields: dict[str, dict[str, np.ndarray]] = {}
             for name, var in acc.data_vars.items():
                 owner, f = name.rsplit("__", 1)
@@ -3170,17 +3129,18 @@ class Dataset:
                 dims_v, dt = out_vm[v]
                 res = combiner.extract(fields[v], params._replace(var=v, dtype=dt))
                 out[v] = Variable(dims_v, np.asarray(res))
-            return pack(key, NDDataset(out, acc.coords, acc.attrs), False)
+            yield (offs, key[0].as_py()), NDDataset(out, acc.coords, acc.attrs)
 
         fanin = DEFAULT_MERGE_FANIN
         df = self._run(pre, schema_mk)
         expected = fan_in
         while expected > fanin:
             df = df.withColumn("mkey", F.floor(F.col("mkey") / fanin).cast("long"))
-            df = df.groupBy("vars", *offc, "mkey").applyInPandas(merge_round, schema_mk)
+            src = _Source(df, merge_round, ("vars", *offc, "mkey"))
+            df = Dataset(self.spark, src, out_tmpl, out_chunks)._run(sink_mk, schema_mk)
             expected = -(-expected // fanin)
-        df = df.groupBy("vars", *offc).applyInPandas(merge_extract, schema)
-        return Dataset(self.spark, df, out_tmpl, out_chunks, False)
+        src = _Source(df, merge_extract, ("vars", *offc))
+        return Dataset(self.spark, src, out_tmpl, out_chunks)
 
 
 def concat(datasets: Sequence[Dataset], dim: str) -> Dataset:
@@ -3712,7 +3672,12 @@ def _dummy_chunk(template: Template, chunks: Mapping[str, int]) -> NDDataset:
         v: Variable(dims, np.zeros([sizes[d] for d in dims], dtype=np.dtype(dt)))
         for v, (dims, dt) in template.var_meta.items()
     }
-    coords = template.coords_for_chunk({d: 0 for d in sizes}, sizes)
+    # copies: an inferred func may mutate its input, and the slices are
+    # views of the template's coordinates
+    coords = {
+        k: Variable(c.dims, c.values.copy())
+        for k, c in template.coords_for_chunk({d: 0 for d in sizes}, sizes).items()
+    }
     return NDDataset(dv, coords, template.attrs)
 
 
@@ -3978,8 +3943,8 @@ def in_memory_rechunk(
 
     Pure driver/executor-agnostic helper — the same consolidate+split
     semantics the distributed ``Dataset.rechunk`` stages execute, usable
-    on plain pairs without a SparkSession (e.g. inside a custom
-    ``applyInPandas`` stage whose group already holds the needed chunks).
+    on plain pairs without a SparkSession (e.g. inside a custom grouped
+    ``applyInArrow`` stage whose group already holds the needed chunks).
     The inputs must tile their bounding box exactly (the distributed path
     enforces the same completeness rule)."""
     if not inputs:
