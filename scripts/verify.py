@@ -84,6 +84,10 @@ def main() -> int:
         print("PASS" if ok else "FAIL", name, got.shape)
         fails += (not ok)
     print("TOTAL FAILS:", fails)
+    from xarray_beam_spark.session import snapshot
+
+    snap = snapshot(spark)
+    print(f"session store: {len(snap['entries'])} entries, {snap['cached_bytes']} cached bytes")
     return 1 if fails else 0
 
 

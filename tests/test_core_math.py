@@ -911,10 +911,10 @@ class TestMaterializedCache:
         monkeypatch.setattr(_tf, "mkdtemp", spy)
 
         class _SC:
-            applicationId = "test-app-exdev"
+            pass
 
         class _Spark:
-            sparkContext = _SC()
+            sparkContext = _SC()  # a fresh fake context: an empty store
 
         def build(p):
             import pathlib
@@ -927,7 +927,6 @@ class TestMaterializedCache:
         assert seen.get("dir") == str(tmp_path / "cache")
         assert path.startswith(str(tmp_path / "cache"))
         assert os.path.exists(os.path.join(path, "marker"))
-        gq._CACHE.pop(("test-app-exdev", str(tmp_path), "exdev_probe"), None)
 
     def test_params_participate_in_digest(self, tmp_path, monkeypatch):
         """Changing the build lambda's layout params must invalidate the
@@ -937,10 +936,11 @@ class TestMaterializedCache:
         monkeypatch.setenv("XBS_CACHE_DIR", str(tmp_path / "cache"))
 
         class _SC:
-            applicationId = "test-app-params"
+            pass
 
         class _Spark:
-            sparkContext = _SC()
+            def __init__(self):
+                self.sparkContext = _SC()  # a fresh fake context: an empty store
 
         paths = []
         for i, params in enumerate(["chunks=a", "chunks=b"]):
@@ -949,7 +949,6 @@ class TestMaterializedCache:
 
                 pathlib.Path(p, "layout").write_text(str(i))
 
-            gq._CACHE.pop(("test-app-params", str(tmp_path), "pdig"), None)
             paths.append(
                 gq._materialized(
                     _Spark(), str(tmp_path), "pdig", build,
@@ -958,4 +957,3 @@ class TestMaterializedCache:
             )
         assert paths[0] != paths[1]
         assert open(os.path.join(paths[1], "layout")).read() == "1"
-        gq._CACHE.pop(("test-app-params", str(tmp_path), "pdig"), None)

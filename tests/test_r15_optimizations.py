@@ -209,17 +209,25 @@ class TestContinuation2FanOutAndSingleEval:
     MapInArrow bail-out alias, clean_corpus's single langid evaluation,
     and decontaminate's filterless corpus side."""
 
-    def test_lsh_shingle_frame_fans_out_on_narrow_scan(self, spark, sf_dir):
+    def test_lsh_shingle_frame_fans_out_on_narrow_scan(self, spark, sf_dir, monkeypatch):
         # the persisted shingle fingerprint table must inherit cluster
         # width, not the single-split gate scan, or the signature
         # aggregation's map side serializes on one core
+        from xarray_beam_spark import session
         from xarray_beam_spark.operators import dedup
         from xarray_beam_spark.tables import load
 
+        scoped = []
+
+        def spy(df):
+            scoped.append(df)
+            return session.persist_scoped(df)
+
+        monkeypatch.setattr(dedup, "persist_scoped", spy)
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         try:
             pairs = dedup.minhash_lsh_pairs(docs)
-            shingles = dedup._EPHEMERAL_PERSISTS[-2]  # [shingles, sig]
+            shingles = scoped[-2]  # [shingles, sig]
             target = spark.sparkContext.defaultParallelism
             assert shingles.rdd.getNumPartitions() >= min(
                 target, docs.rdd.getNumPartitions() + 1
@@ -240,6 +248,19 @@ class TestContinuation2FanOutAndSingleEval:
         base = spark.range(0, 10, 1, 1)
         mapped = base.mapInArrow(ident, "id long")
         assert fan_out_narrow_scan(mapped) is mapped
+
+    def test_fan_out_bails_on_grouped_arrow_frame(self, spark, tmp_path):
+        # a grouped applyInArrow over a file scan (every grouped chunk
+        # source plans as FlatMapGroupsInArrow): an exchange sits above
+        # the scan, so the helper must not probe or repartition it
+        from xarray_beam_spark.tables import fan_out_narrow_scan
+
+        path = str(tmp_path / "kv.parquet")
+        spark.range(0, 10, 1, 1).selectExpr("id % 2 AS k", "id AS v").write.parquet(path)
+        grouped = spark.read.parquet(path).groupBy("k").applyInArrow(
+            lambda t: t, "k long, v long"
+        )
+        assert fan_out_narrow_scan(grouped) is grouped
 
     def test_clean_corpus_plan_evaluates_langid_once(self, spark, sf_dir):
         # detected != 'und' must read the aggregated struct field, not

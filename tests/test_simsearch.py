@@ -214,6 +214,25 @@ def test_minhash_hot_document_bounded_by_cap(spark):
     assert twins >= 18
 
 
+@pytest.mark.parametrize("name", ["sh x.y", "`sh x.y`"])
+def test_minhash_aggs_quote_the_column(spark, name):
+    """minhash_table's aggregates over a column whose name needs quoting
+    (a space, a dot, embedded backticks) equal those over ``sh``."""
+    from xarray_beam_spark.operators.dedup import _minhash_aggs
+
+    rows = spark.createDataFrame(
+        [(1, "a b c"), (1, "b c d"), (2, "x y z")], "doc_id long, sh string"
+    )
+    want = rows.groupBy("doc_id").agg(*_minhash_aggs(8)).collect()
+    got = (
+        rows.withColumnRenamed("sh", name)
+        .groupBy("doc_id")
+        .agg(*_minhash_aggs(8, col=name))
+        .collect()
+    )
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_neardup_blocked_matches_bruteforce_and_plan(spark, sf_dir):
     """The blocked-GEMM all-pairs scan must (a) equal the naive all-pairs
     result exactly and (b) compile WITHOUT BroadcastNestedLoopJoin or
@@ -594,12 +613,16 @@ class TestRound12Regressions:
 
     def test_reset_unpersists_shingle_tables(self, spark):
         from xarray_beam_spark.operators import dedup
+        from xarray_beam_spark.session import snapshot
 
         docs = spark.createDataFrame(
             [(i, f"doc number {i} with words") for i in range(6)],
             "doc_id long, text string",
         )
+        def ephemeral(snap):
+            return [e for e in snap["entries"] if e["ephemeral"]]
+
         dedup.minhash_lsh_pairs(docs).count()
-        assert dedup._EPHEMERAL_PERSISTS
+        assert ephemeral(snapshot(spark))
         dedup.reset_ephemeral_caches()
-        assert not dedup._EPHEMERAL_PERSISTS
+        assert not ephemeral(snapshot(spark))

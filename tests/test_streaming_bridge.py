@@ -87,8 +87,11 @@ class TestStreamZarrAppend:
         out = str(tmp_path / "grid.zarr")
         es.stream_append_to_zarr(spark, sf, out)
         os.remove(out + "_highwater")  # simulate a feed replaying old days
+        persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
         with pytest.raises(Exception, match="out-of-order ingest"):
             es.stream_append_to_zarr(spark, sf, out)
+        # the rejected batch's persisted cells frame is released
+        assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
 
 
 def test_append_commit_crash_replay_not_wedged(spark, sf_dir, tmp_path):

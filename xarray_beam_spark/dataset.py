@@ -56,6 +56,7 @@ from xarray_beam_spark import core
 from xarray_beam_spark.codec import decode_chunk, encode_chunk
 from xarray_beam_spark.ndarray_ds import NDDataset, Variable
 from xarray_beam_spark.plans import rechunk_plan
+from xarray_beam_spark.session import memo
 
 OFF_PREFIX = "off_"
 
@@ -134,12 +135,9 @@ def chunk_row_schema(dims: Sequence[str]) -> T.StructType:
     return T.StructType(fields)
 
 
-_COORD_LIT_CACHE: dict[tuple, object] = {}
-
-
-def _coord_literal_array(vals: np.ndarray, spark_t):
+def _coord_literal_array(spark: SparkSession, vals: np.ndarray, spark_t):
     """The literal coordinate array for from_table's inline index mapping,
-    memoized per coordinate-content fingerprint.
+    memoized in the session store per coordinate content.
 
     Building ``F.array(F.lit(v).cast(t), ...)`` element by element costs
     ~4 py4j round trips per element — ~0.35 s of pure driver latency for a
@@ -147,26 +145,21 @@ def _coord_literal_array(vals: np.ndarray, spark_t):
     from_table call (once per fixture chunk-spec per bench run, once per
     streaming micro-batch). A Column is an immutable unresolved-expression
     handle (no data, no session state), so reusing it across plans is
-    exactly as safe as writing the same literal twice; the cache key is
-    the dtype + raw bytes of the coordinate values (guide §1.2: cut
+    exactly as safe as writing the same literal twice; the key is the
+    dtype + raw bytes of the coordinate values (guide §1.2: cut
     driver↔JVM hops on the construct path)."""
     if vals.dtype.kind == "M":
         # ns-precision datetime64.item() yields an int, which F.lit would
         # misread as epoch SECONDS; µs (Spark's timestamp precision)
         # .item()s to datetime.datetime
         vals = vals.astype("datetime64[us]")
-    key = (vals.dtype.str, vals.tobytes())
-    arr = _COORD_LIT_CACHE.get(key)
-    if arr is None:
-        arr = F.array(
+    return memo(
+        spark,
+        ("coord_literal", vals.dtype.str, vals.tobytes()),
+        lambda: F.array(
             *[F.lit(v.item() if hasattr(v, "item") else v).cast(spark_t) for v in vals]
-        )
-        _COORD_LIT_CACHE[key] = arr
-    return arr
-
-
-def _vars_token(vars: Iterable[str] | None) -> str | None:
-    return None if vars is None else ",".join(sorted(vars))
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -525,7 +518,7 @@ class Dataset:
             vals = np.asarray(coords[d])
             if _inline_ok(vals):
                 spark_t = _np_to_spark_type(vals.dtype)
-                arr = _coord_literal_array(vals, spark_t)
+                arr = _coord_literal_array(spark, vals, spark_t)
                 # array_position: 1-based; 0 = absent, NULL = NULL value —
                 # both must drop, exactly like the inner join they replace
                 idx = (F.array_position(arr, F.col(d).cast(spark_t)) - 1).cast("long")

@@ -12,23 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xarray_beam_spark.session import persist_scoped
 from xarray_beam_spark.tables import fan_out_narrow_scan as _fan_out_narrow_scan
 from xarray_beam_spark.tables import load
-
-# persists created inside lazy builders (the span-excision window table);
-# unpersisted by reset_ephemeral_caches — the dedup module's reset hook
-# (which the bench already calls between runs) chains into it
-_EPHEMERAL_PERSISTS: list = []
-
-
-def reset_ephemeral_caches() -> None:
-    """Unpersist the window tables ``_excise_duplicate_window_spans``
-    registered (lazy results mean the builder cannot unpersist them)."""
-    while _EPHEMERAL_PERSISTS:
-        try:
-            _EPHEMERAL_PERSISTS.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
 
 REGISTRY: dict = {}
 
@@ -514,11 +500,10 @@ def _excise_duplicate_window_spans(
     # subtree evaluates twice (verified in the formatted plan: 2 xxhash64
     # trees, 6 scans). The persisted rows are (id, pos, hash) — the
     # suffix-array analog, ~24 bytes per unit position — the natural
-    # checkpoint of this pipeline at any scale. Registered for the
-    # bench's per-run ephemeral reset (the returned plan is lazy; the
-    # builder cannot unpersist it itself).
-    wins = wins.persist()
-    _EPHEMERAL_PERSISTS.append(wins)
+    # checkpoint of this pipeline at any scale. Session-scoped: the
+    # returned plan is lazy, so the builder cannot unpersist it itself;
+    # the next reset() does.
+    wins = persist_scoped(wins)
     if keep_first_occurrence:
         # The globally first copy rides the SAME multiplicity aggregation
         # (min over the lexicographic (doc_id, pos) struct), so keep-first

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xarray_beam_spark.dataset import Dataset
+from xarray_beam_spark.session import memo, reset
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
@@ -57,16 +58,14 @@ FROM events GROUP BY 1, 2, 3
 
 # Grid inputs are shared by ~20 gate queries in one session: the events
 # aggregation, the two coordinate collects, and each chunking's assembled
-# chunk-row DataFrame are built once per (session, sf_dir) and persisted.
+# chunk-row DataFrame are built once per (session, sf_dir) and persisted,
+# as fixtures of the session store (released by unpersist on eviction).
 # At 100 TB the same pattern holds — the dense cells frame is the reduced
 # (day, hour, event_type) grid, orders of magnitude smaller than events.
-_CACHE: dict = {}
 
 
 def _cells(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CACHE.get(key)
-    if hit is None:
+    def build():
         e = load(spark, sf_dir, "events")
         cells = e.groupBy(
             F.date_trunc("day", F.col("ts")).alias("day"),
@@ -83,8 +82,9 @@ def _cells(spark: SparkSession, sf_dir: str):
         ).first()
         days = np.array(sorted(row["d"]), dtype="datetime64[us]")
         etypes = np.array(sorted(row["e"]))
-        _CACHE[key] = hit = (cells, days, etypes)
-    return hit
+        return cells, days, etypes
+
+    return memo(spark, ("cells", sf_dir), build, release=lambda hit: hit[0].unpersist())
 
 
 def _events_grid(
@@ -93,15 +93,9 @@ def _events_grid(
     """events → dense (day, hour, event_type) grid of event counts,
     memoized per (session, sf_dir, chunking, variables)."""
     chunks = chunks or {"day": 7}
-    cells, days, etypes = _cells(spark, sf_dir)
-    gkey = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        tuple(sorted(chunks.items())),
-        tuple(var_cols),
-    )
-    ds = _CACHE.get(gkey)
-    if ds is None:
+
+    def build() -> Dataset:
+        cells, days, etypes = _cells(spark, sf_dir)
         ds = Dataset.from_table(
             cells,
             dims=["day", "hour", "event_type"],
@@ -114,8 +108,10 @@ def _events_grid(
             chunks=chunks,
         )
         ds.df.persist()
-        _CACHE[gkey] = ds
-    return ds
+        return ds
+
+    key = ("grid", sf_dir, tuple(sorted(chunks.items())), tuple(var_cols))
+    return memo(spark, key, build, release=lambda ds: ds.df.unpersist())
 
 
 # bump when a persistent gate store's layout changes (chunking, codec,
@@ -138,10 +134,15 @@ def _materialized(
     written path is memoized so repeat invocations (driver sweep retries,
     bench warm runs) skip the write job entirely.
 
+    A non-persistent store's WRITE is the work under test: it is an
+    ephemeral entry, deleted by ``reset()`` (bench.py, between runs) so
+    run 2 does not measure only the read-back.
+
     ``persistent=True`` additionally reuses the store ACROSS processes
     (build-once per machine under a layout-versioned path, atomic-rename
     publish) — only for stores that are pure INPUTS to the gate under
     test, never for a store whose store WRITE is itself being certified.
+    It is a fixture with no release: never deleted.
 
     ``params``: a string describing the build lambda's layout-affecting
     arguments (chunking, encoding, format); it participates in the
@@ -153,11 +154,7 @@ def _materialized(
     import shutil
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    path = _CACHE.get(key)
-    if path is not None:
-        return path
-    if persistent:
+    def build_persistent() -> str:
         # Digest includes a CONTENT fingerprint of the input directory
         # (parquet sizes + mtimes), not just its path — regenerated test
         # data at the same path must never silently reuse a stale store.
@@ -199,36 +196,48 @@ def _materialized(
                 final = tmp if not os.path.isdir(final) else final
                 if final != tmp:
                     shutil.rmtree(tmp, ignore_errors=True)
-        path = final
-    else:
+        return final
+
+    def build_ephemeral() -> str:
         path = tempfile.mkdtemp(prefix=f"xbs_{tag}_gate_")
         write(path)
-        _EPHEMERAL_KEYS.add(key)
-    _CACHE[key] = path
-    return path
+        return path
+
+    key = ("store", sf_dir, tag)
+    if persistent:
+        return memo(spark, key, build_persistent)
+    return memo(spark, key, build_ephemeral, release=shutil.rmtree, ephemeral=True)
 
 
-# keys of _CACHE entries whose build is itself the work under test
-# (non-persistent _materialized stores) — see reset_ephemeral_caches
-_EPHEMERAL_KEYS: set = set()
+# the name bench.py and perfbench/run.py call between runs
+reset_ephemeral_caches = reset
 
 
-def reset_ephemeral_caches() -> None:
-    """Forget memoized write-under-test store paths so the next gate
-    invocation redoes the certified write work. bench.py calls this
-    between best-of-N runs: pure-INPUT caches (persistent stores, the
-    persisted cells/grid DataFrames) stay warm — they are fixtures — but
-    a gate whose store WRITE is the thing being measured must rebuild
-    per run, or run 2 would silently measure only the read-back.
-    The forgotten temp stores are deleted so N runs don't leave N copies
-    of every store in /tmp."""
-    import shutil
+def _zarr_roundtrip(spark: SparkSession, sf_dir: str, tag: str, **kw) -> DataFrame:
+    """The day-8 grid written to the write-under-test store ``tag`` by
+    ``to_zarr(**kw)``, read back and exploded to cell rows."""
+    from xarray_beam_spark.sources import zarr_io
 
-    for key in list(_EPHEMERAL_KEYS):
-        path = _CACHE.pop(key, None)
-        if isinstance(path, str):
-            shutil.rmtree(path, ignore_errors=True)
-    _EPHEMERAL_KEYS.clear()
+    d = _events_grid(spark, sf_dir, chunks={"day": 8})
+    path = _materialized(spark, sf_dir, tag, lambda p: zarr_io.to_zarr(d, p, **kw))
+    return zarr_io.from_zarr(spark, path, chunks={"day": 8}).to_table(dropna=True)
+
+
+def _dsv2_store(spark: SparkSession, sf_dir: str) -> str:
+    """The day:8 × hour:6 Zarr store the ``xbs_zarr`` gates read: a pure
+    INPUT (the SQL read or stream is under test), so built once per
+    machine, not per process."""
+    from xarray_beam_spark.sources import zarr_io
+
+    return _materialized(
+        spark, sf_dir, "dsv2",
+        lambda p: zarr_io.to_zarr(
+            _events_grid(spark, sf_dir, chunks={"day": 8}), p,
+            zarr_chunks={"day": 8, "hour": 6},
+        ),
+        persistent=True,
+        params="zarr_chunks=day:8,hour:6",
+    )
 
 
 @_register("xb_grid_roundtrip", _CELLS_SQL)
@@ -246,15 +255,7 @@ def xb_zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zarr v2 store (reference ``zarr_test.py`` round-trips +
     ``integration_test.py:68-120``): executors region-write aligned chunks,
     then a second job re-reads them lazily."""
-    from xarray_beam_spark.sources import zarr_io
-
-    d = _events_grid(spark, sf_dir, chunks={"day": 8})
-    path = _materialized(
-        spark, sf_dir, "zarr",
-        lambda p: zarr_io.to_zarr(d, p, zarr_chunks={"day": 4, "hour": 24}),
-    )
-    back = zarr_io.from_zarr(spark, path, chunks={"day": 8})
-    return back.to_table(dropna=True)
+    return _zarr_roundtrip(spark, sf_dir, "zarr", zarr_chunks={"day": 4, "hour": 24})
 
 
 @_register("xb_zarr_append_roundtrip", _CELLS_SQL)
@@ -305,17 +306,10 @@ def stream_zarr_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     jitter, not a regression — family-isolated at loadavg 2.2 this gate
     measures 2.23 s best-of-2 (r7's full run started at loadavg 11.9);
     no code on this path changed in rounds 6-7."""
-    from xarray_beam_spark.sources import spark_datasource, zarr_io
+    from xarray_beam_spark.sources import spark_datasource
     from xarray_beam_spark.streaming.events_stream import _run_to_memory
 
-    d = _events_grid(spark, sf_dir, chunks={"day": 8})
-    # pure INPUT store (same layout/cache as the SQL-on-zarr gates)
-    path = _materialized(
-        spark, sf_dir, "dsv2",
-        lambda p: zarr_io.to_zarr(d, p, zarr_chunks={"day": 8, "hour": 6}),
-        persistent=True,
-        params="zarr_chunks=day:8,hour:6",
-    )
+    path = _dsv2_store(spark, sf_dir)
     spark_datasource.register(spark)
     cells = (
         spark.readStream.format("xbs_zarr")
@@ -337,22 +331,11 @@ def xb_zarr_cf_packed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counts are integers, so scale=1 packing is LOSSLESS and the dense
     grid hash-matches the oracle bit-for-bit — certifying the encode →
     store → decode cycle, including NaN ↔ _FillValue."""
-    from xarray_beam_spark.sources import zarr_io
-
-    d = _events_grid(spark, sf_dir, chunks={"day": 8})
-    path = _materialized(
+    return _zarr_roundtrip(
         spark, sf_dir, "zarrcf",
-        lambda p: zarr_io.to_zarr(
-            d,
-            p,
-            zarr_chunks={"day": 8, "hour": 24},
-            encoding={
-                "cnt": {"dtype": "<i4", "scale_factor": 1.0, "add_offset": 0.0}
-            },
-        ),
+        zarr_chunks={"day": 8, "hour": 24},
+        encoding={"cnt": {"dtype": "<i4", "scale_factor": 1.0, "add_offset": 0.0}},
     )
-    back = zarr_io.from_zarr(spark, path, chunks={"day": 8})
-    return back.to_table(dropna=True)
 
 
 @_register("xb_zarr_delta_filter_roundtrip", _CELLS_SQL)
@@ -365,27 +348,18 @@ def xb_zarr_delta_filter_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     oracle bit-for-bit, certifying the filter encode → store → decode
     cycle (filters run array→bytes before the compressor; read applies
     them reversed)."""
-    from xarray_beam_spark.sources import zarr_io
-
-    d = _events_grid(spark, sf_dir, chunks={"day": 8})
-    path = _materialized(
+    return _zarr_roundtrip(
         spark, sf_dir, "zarrdelta",
-        lambda p: zarr_io.to_zarr(
-            d,
-            p,
-            zarr_chunks={"day": 8, "hour": 24},
-            encoding={
-                "cnt": {
-                    "dtype": "<i4",
-                    "scale_factor": 1.0,
-                    "add_offset": 0.0,
-                    "filters": [{"id": "delta", "dtype": "<i4"}],
-                }
-            },
-        ),
+        zarr_chunks={"day": 8, "hour": 24},
+        encoding={
+            "cnt": {
+                "dtype": "<i4",
+                "scale_factor": 1.0,
+                "add_offset": 0.0,
+                "filters": [{"id": "delta", "dtype": "<i4"}],
+            }
+        },
     )
-    back = zarr_io.from_zarr(spark, path, chunks={"day": 8})
-    return back.to_table(dropna=True)
 
 
 @_register("xb_zarr_blosc_roundtrip", _CELLS_SQL)
@@ -398,21 +372,12 @@ def xb_zarr_blosc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference ``ChunksToZarr(encoding=...)``, ``zarr.py:636-821``)
     selects lz4-inside-blosc for the data variable while the store-wide
     default stays zlib-inside-blosc."""
-    from xarray_beam_spark.sources import zarr_io
-
-    d = _events_grid(spark, sf_dir, chunks={"day": 8})
-    path = _materialized(
+    return _zarr_roundtrip(
         spark, sf_dir, "zarrblosc",
-        lambda p: zarr_io.to_zarr(
-            d,
-            p,
-            zarr_chunks={"day": 8, "hour": 24},
-            compressor="blosc",
-            encoding={"cnt": {"compressor": {"id": "blosc", "cname": "lz4", "shuffle": 1}}},
-        ),
+        zarr_chunks={"day": 8, "hour": 24},
+        compressor="blosc",
+        encoding={"cnt": {"compressor": {"id": "blosc", "cname": "lz4", "shuffle": 1}}},
     )
-    back = zarr_io.from_zarr(spark, path, chunks={"day": 8})
-    return back.to_table(dropna=True)
 
 
 @_register("xb_zarr_v3_sharded_roundtrip", _CELLS_SQL)
@@ -421,21 +386,12 @@ def xb_zarr_v3_sharded_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharding_indexed codec (reference shard surface ``dataset.py:705-866``):
     executors write whole shards (4-day shards of 2-day chunks), the
     re-read addresses inner chunks through the shard index."""
-    from xarray_beam_spark.sources import zarr_io
-
-    d = _events_grid(spark, sf_dir, chunks={"day": 8})
-    path = _materialized(
+    return _zarr_roundtrip(
         spark, sf_dir, "zarr3",
-        lambda p: zarr_io.to_zarr(
-            d,
-            p,
-            zarr_chunks={"day": 2, "hour": 24},
-            zarr_format=3,
-            zarr_chunks_per_shard={"day": 2},
-        ),
+        zarr_chunks={"day": 2, "hour": 24},
+        zarr_format=3,
+        zarr_chunks_per_shard={"day": 2},
     )
-    back = zarr_io.from_zarr(spark, path, chunks={"day": 8})
-    return back.to_table(dropna=True)
 
 
 @_register("xb_chunkfiles_roundtrip", _CELLS_SQL)
@@ -472,17 +428,9 @@ def xb_sql_on_zarr(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid lands in Zarr, then a declarative filter+aggregate runs against
     ``spark.read.format("xbs_zarr")`` — the hour predicate prunes store
     chunks via ``pushFilters`` before any byte is read."""
-    from xarray_beam_spark.sources import spark_datasource, zarr_io
+    from xarray_beam_spark.sources import spark_datasource
 
-    d = _events_grid(spark, sf_dir, chunks={"day": 8})
-    # the store is a pure INPUT here (the SQL read with pushFilters is
-    # what's under test) → safe to build once per machine, not per process
-    path = _materialized(
-        spark, sf_dir, "dsv2",
-        lambda p: zarr_io.to_zarr(d, p, zarr_chunks={"day": 8, "hour": 6}),
-        persistent=True,
-        params="zarr_chunks=day:8,hour:6",
-    )
+    path = _dsv2_store(spark, sf_dir)
     spark_datasource.register(spark)
     cells = spark.read.format("xbs_zarr").option("path", path).load()
     return (
@@ -517,12 +465,7 @@ def xb_sql_zarr_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _events_grid(spark, sf_dir, chunks={"day": 8})
     # source store is shared, persistent input; the DESTINATION build below
     # (the write path actually being certified) always runs fresh per process
-    src = _materialized(
-        spark, sf_dir, "dsv2",
-        lambda p: zarr_io.to_zarr(d, p, zarr_chunks={"day": 8, "hour": 6}),
-        persistent=True,
-        params="zarr_chunks=day:8,hour:6",
-    )
+    src = _dsv2_store(spark, sf_dir)
     spark_datasource.register(spark)
 
     def _build_dst(p: str) -> None:
@@ -1002,7 +945,7 @@ def xb_grid_zip_ratio_coread(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one _materialized store per co-read side — the shared memoization/
     # cleanup path every other store-building gate uses (an earlier
     # inline mkdtemp version leaked a pair of /tmp dirs per process and
-    # was invisible to reset_ephemeral_caches)
+    # was invisible to the session store's reset)
     def _build(var: str):
         def build(p: str) -> None:
             both = _events_grid(

@@ -34,6 +34,7 @@ from xarray_beam_spark.functions.text import (
     quality_features,
     sql_detect_language,
 )
+from xarray_beam_spark.session import persist_scoped
 from xarray_beam_spark.tables import fan_out_narrow_scan, load
 
 REGISTRY: dict = {}
@@ -1399,8 +1400,6 @@ def ingest_dedup_pack(
     from xarray_beam_spark.operators.dedup import minhash_lsh_pairs
     from xarray_beam_spark.sources import warc
 
-    from xarray_beam_spark.operators.dedup import _EPHEMERAL_PERSISTS
-
     ext = warc.read_warc_responses(spark, warc_path).select(
         F.regexp_extract("url", "/page/([0-9]+)$", 1).cast("long").alias("doc_id"),
         html_to_text(F.col("body")).alias("text"),
@@ -1411,10 +1410,9 @@ def ingest_dedup_pack(
     # consumer — the §8 "decide on small rows, move big rows once"
     # shape needs the ingest leg evaluated once, and at any scale the
     # parsed text is no larger than the shingle table the dedup stage
-    # already persists. Registered for reset_ephemeral_caches like the
-    # shingle persists (lazy result — the builder cannot unpersist).
-    ext = ext.persist()
-    _EPHEMERAL_PERSISTS.append(ext)
+    # already persists. Session-scoped like the shingle persists (lazy
+    # result — the builder cannot unpersist; the next reset() does).
+    ext = persist_scoped(ext)
     # twin filter pushed into LSH candidate generation: row-identical
     # (the `removed` filter below keeps only twin pairs anyway), and the
     # Jaccard-verification joins never see non-twin candidates

@@ -16,10 +16,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xarray_beam_spark.functions.text import TOKEN_SEP
+from xarray_beam_spark.session import memo, persist_scoped, reset
 from xarray_beam_spark.tables import fan_out_narrow_scan, load
 
 REGISTRY: dict = {}
@@ -94,7 +95,8 @@ def _minhash_aggs(n_hashes: int, col: str = "sh") -> list[Column]:
     was ~0.4 s of driver latency per query construction (measured r16;
     guide §1.2 — the fix is fewer driver↔JVM hops, the parsed expressions
     are identical)."""
-    return [F.expr(f"min(xxhash64({col}, {i})) AS mh{i}") for i in range(n_hashes)]
+    quoted = "`" + col.replace("`", "``") + "`"
+    return [F.expr(f"min(xxhash64({quoted}, {i})) AS mh{i}") for i in range(n_hashes)]
 
 
 def band_hash_cols(n_bands: int, rows_per_band: int) -> list[Column]:
@@ -271,10 +273,9 @@ def minhash_lsh_pairs(
     # of the verification join); persist it so the split/distinct work runs
     # once instead of three times through the lineage. At cluster scale
     # this is the natural checkpoint of the dedup pipeline. The persist is
-    # registered for reset_ephemeral_caches(): the returned plan is lazy,
-    # so this function cannot know when to unpersist — without the hook,
-    # repeated invocations (bench best-of-N) pile persisted shingle
-    # tables into the CacheManager, which never reference-GCs them.
+    # session-scoped: the returned plan is lazy, so this function cannot
+    # know when to unpersist — without the next reset(), repeated runs
+    # pile shingle tables into the CacheManager, which never GCs them.
     #
     # Stored as int64 xxhash64 fingerprints, not strings: every consumer
     # (the 64 min-hash aggregates AND the exact-Jaccard verify join) is
@@ -290,13 +291,12 @@ def minhash_lsh_pairs(
     # core because the gate corpus is a single parquet split. No-op on a
     # many-file corpus, and the helper bails on composed inputs (e.g. the
     # e2e funnel's parsed-WARC frame) — see fan_out_narrow_scan.
-    shingles = fan_out_narrow_scan(docs).select(
+    shingles = persist_scoped(fan_out_narrow_scan(docs).select(
         F.col(id_col),
         F.transform(
             word_shingles(F.col(text_col), shingle_n), lambda x: F.xxhash64(x)
         ).alias("shingles"),
-    ).persist()
-    _EPHEMERAL_PERSISTS.append(shingles)
+    ))
     exploded = shingles.select(F.col(id_col), F.explode("shingles").alias("sh"))
     aggs = _minhash_aggs(n_hashes)
     # the signature table feeds BOTH sides of the band self-join, and
@@ -304,8 +304,7 @@ def minhash_lsh_pairs(
     # branches — persist it (64 longs per doc, far smaller than the
     # already-persisted shingle table) so the explode + 64-min-hash agg
     # runs once, not twice
-    sig = exploded.groupBy(id_col).agg(*aggs).persist()
-    _EPHEMERAL_PERSISTS.append(sig)
+    sig = persist_scoped(exploded.groupBy(id_col).agg(*aggs))
     banded = sig.select(
         id_col, F.explode(F.array(*band_hash_cols(n_bands, rows_per_band))).alias("band_hash")
     )
@@ -1027,8 +1026,8 @@ SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node
 # and localCheckpoint-ing the (tiny) cluster table halves the pair of
 # queries' cost — the duplicate_clusters iteration already truncates
 # lineage, so the cached frame is a handful of in-memory label rows.
-_CLUSTER_CACHE: dict = {}
-_EPHEMERAL_PERSISTS: list = []  # persisted frames lazy results depend on
+# The clustering IS the certified work of the clusters gates, so it is an
+# ephemeral entry of the session store: each bench run recomputes it.
 
 
 def _variant_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1047,55 +1046,39 @@ def _variant_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _variant_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLUSTER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    corpus = _variant_corpus(spark, sf_dir)
-    # the 3-leg union of single-split scans materializes 3 partitions —
-    # fan out so the shingling and the jaccard self-join don't serialize
-    # on 3 cores (no-op on a many-file corpus; measured 1.63 -> 1.24 s)
-    sh = fan_out_narrow_scan(corpus).select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("s")
-    ).persist()
-    a, b = sh.alias("a"), sh.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("b.doc_id") % 10**9 == F.col("a.doc_id") % 10**9)
-            & (F.col("b.doc_id") > F.col("a.doc_id")),
+    def build() -> DataFrame:
+        corpus = _variant_corpus(spark, sf_dir)
+        # the 3-leg union of single-split scans materializes 3 partitions —
+        # fan out so the shingling and the jaccard self-join don't serialize
+        # on 3 cores (no-op on a many-file corpus; measured 1.63 -> 1.24 s)
+        sh = fan_out_narrow_scan(corpus).select(
+            "doc_id", word_shingles(F.col("text"), 3).alias("s")
+        ).persist()
+        a, b = sh.alias("a"), sh.alias("b")
+        edges = (
+            a.join(
+                b,
+                (F.col("b.doc_id") % 10**9 == F.col("a.doc_id") % 10**9)
+                & (F.col("b.doc_id") > F.col("a.doc_id")),
+            )
+            .where(exact_jaccard(F.col("a.s"), F.col("b.s")) >= 0.55)
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         )
-        .where(exact_jaccard(F.col("a.s"), F.col("b.s")) >= 0.55)
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    clusters = duplicate_clusters(edges).localCheckpoint(eager=True)
-    # clusters is checkpointed (lineage-free): the shingle frame backing
-    # edge generation can be freed now — leaving it persisted piles up
-    # executor storage on every rebuild (bench best-of-N resets)
-    sh.unpersist()
-    _CLUSTER_CACHE[key] = clusters
-    return clusters
+        clusters = duplicate_clusters(edges).localCheckpoint(eager=True)
+        # clusters is checkpointed (lineage-free): the shingle frame backing
+        # edge generation can be freed now — leaving it persisted piles up
+        # executor storage on every rebuild (bench best-of-N resets)
+        sh.unpersist()
+        return clusters
+
+    # no release: the checkpoint has no lineage behind it, so an unpersist
+    # would lose it; dropping the reference lets the ContextCleaner reclaim
+    # its blocks
+    return memo(spark, ("clusters", sf_dir), build, ephemeral=True)
 
 
-def reset_ephemeral_caches() -> None:
-    """Forget the session-memoized clustering (bench best-of-N: the
-    iterative clustering IS the certified work of the clusters gates, so
-    each bench run must recompute it; dropping the references lets the
-    ContextCleaner reclaim the old checkpoint blocks) and unpersist the
-    shingle tables minhash_lsh_pairs registered (lazy results mean the
-    builder cannot unpersist them itself)."""
-    _CLUSTER_CACHE.clear()
-    while _EPHEMERAL_PERSISTS:
-        try:
-            _EPHEMERAL_PERSISTS.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-    # the span-excision engine registers its window-table persists in its
-    # own module; chain its reset here so the bench's existing per-run
-    # reset covers it without a harness change
-    from xarray_beam_spark.functions import text as _text
-
-    _text.reset_ephemeral_caches()
+# the name bench.py and perfbench/run.py call between runs
+reset_ephemeral_caches = reset
 
 
 @_register("dedup_duplicate_clusters", _CLUSTERS_ORACLE)

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xarray_beam_spark.session import memo
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
@@ -1439,14 +1440,6 @@ def ann_ivf_trained_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, sf_dir) -> table prefix of a COMPLETED index build. Memoizing
-# the build half per process makes repeat calls measure the operator's
-# steady-state: query-many against an existing index (bench's best-of-2
-# second run is exactly that). Keyed by applicationId so a fresh driver
-# always rebuilds; the build itself is idempotent (mode=overwrite).
-_IVF_GATE_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
 @_register("ann_ivf_persisted_topk", _IVF_GATE_ORACLE)
 def ann_ivf_persisted_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once/query-many IVF under driver evidence: build the
@@ -1477,27 +1470,29 @@ def ann_ivf_persisted_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose tables this catalog does not know) would otherwise fail
     # saveAsTable with LOCATION_ALREADY_EXISTS.
     db = "xbs_ivf_gate"
+    loc = None
     if spark.catalog.databaseExists(db):
         # A persistent metastore can hand back a database whose mkdtemp
         # LOCATION belonged to an earlier process and may have been
         # purged — build_ivf_index would then write into a dangling
         # path. Recreate unless the recorded location still exists.
-        loc = spark.sql(f"DESCRIBE DATABASE {db}").where(
+        loc = re.sub(r"^file:", "", spark.sql(f"DESCRIBE DATABASE {db}").where(
             F.col("info_name") == "Location"
-        ).collect()[0]["info_value"]
-        if not os.path.isdir(re.sub(r"^file:", "", loc)):
+        ).collect()[0]["info_value"])
+        if not os.path.isdir(loc):
             spark.sql(f"DROP DATABASE {db} CASCADE")
-            _IVF_GATE_INDEX_CACHE.clear()
-    if not spark.catalog.databaseExists(db):  # mkdtemp only on first use
-        spark.sql(
-            f"CREATE DATABASE {db} LOCATION "
-            f"'{tempfile.mkdtemp(prefix='xbs_ivf_gate_db_')}'"
-        )
+            loc = None
+    if loc is None:  # mkdtemp only on first use
+        loc = tempfile.mkdtemp(prefix="xbs_ivf_gate_db_")
+        spark.sql(f"CREATE DATABASE {db} LOCATION '{loc}'")
     prefix = f"{db}.ivf_{tag}"
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    if _IVF_GATE_INDEX_CACHE.get(ckey) != prefix:
-        build_ivf_index(emb, prefix, n_centroids=32, data_centroids=True)
-        _IVF_GATE_INDEX_CACHE[ckey] = prefix
+    # build once per context and database location, so repeat calls
+    # measure query-many against an existing index (bench's second run);
+    # the build itself is idempotent (mode=overwrite)
+    memo(
+        spark, ("ivf_index", sf_dir, loc),
+        lambda: build_ivf_index(emb, prefix, n_centroids=32, data_centroids=True),
+    )
     queries = emb.where(F.col("vec_id") < 8)
     return ivf_topk_persisted(spark, prefix, queries, k=10, n_probe=6)
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xarray_beam_spark.session import persist_scoped
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
@@ -337,12 +338,9 @@ def corpus_bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — and without a persist each one re-runs the scan + tokenize +
     # explode from scratch (no exchange to reuse: both legs are narrow).
     # (doc_id, gram) rows are the natural checkpoint of this pipeline;
-    # registered for the bench's per-run ephemeral reset like the dedup
-    # shingle tables (r16, guide §2.4/§5: reuse beats recompute here)
-    from xarray_beam_spark.operators.dedup import _EPHEMERAL_PERSISTS
-
-    grams = grams.persist()
-    _EPHEMERAL_PERSISTS.append(grams)
+    # session-scoped like the dedup shingle tables, unpersisted by the
+    # next reset() (r16, guide §2.4/§5: reuse beats recompute here)
+    grams = persist_scoped(grams)
     # no gram-level distinct: bloom_build's bit-level distinct yields the
     # identical bit set (duplicated grams set the same bits), and the
     # map-side partial distinct bounds each partition's exchange at

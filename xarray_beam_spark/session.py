@@ -5,13 +5,22 @@ logical plans scale to a multi-executor cluster: AQE on (runtime partition
 coalescing + skew-join splitting), Arrow enabled for the pandas UDF surface,
 and shuffle partition counts sized for the test scale factor while AQE
 re-plans for larger inputs.
+
+The same module holds the session store (``memo``, ``persist_scoped``,
+``reset``, ``snapshot``): the one cache and persist lifecycle of the
+driver, scoped to the SparkContext.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import weakref
+from collections import OrderedDict
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "xarray-beam-spark", cpus: int | None = None) -> SparkSession:
@@ -37,3 +46,116 @@ def get_spark(app_name: str = "xarray-beam-spark", cpus: int | None = None) -> S
     for key, value in runtime_sql_conf(cpus):
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+# ---------------------------------------------------------------------------
+# The session store: every driver-side cache and lazily released persist
+# ---------------------------------------------------------------------------
+#
+# Kept on the SparkContext (as observability.get_counters keeps counters),
+# so a restarted context starts empty and a stopped one is not pinned. A
+# fixture stays until evicted or process exit; an ephemeral entry is work
+# under test, released by reset(). Past MAX_ENTRIES the least recently
+# used entry is evicted, which runs its release.
+
+MAX_ENTRIES = 512
+_ATTR = "_xbs_store"
+_CONTEXTS: "weakref.WeakSet[SparkContext]" = weakref.WeakSet()
+
+
+def _entries(sc) -> OrderedDict:
+    entries = getattr(sc, _ATTR, None)
+    if entries is None:
+        entries = OrderedDict()  # key -> (value, release, ephemeral), LRU first
+        setattr(sc, _ATTR, entries)
+        _CONTEXTS.add(sc)
+        # registered last, so it runs before the exit hook of the Java
+        # gateway launched for this context (an unpersist needs the JVM)
+        atexit.unregister(_release_all)
+        atexit.register(_release_all)
+    return entries
+
+
+def _release(entries: OrderedDict, keys) -> None:
+    for key in list(keys):
+        value, release, _ = entries.pop(key)
+        if release is not None:
+            try:
+                release(value)
+            except Exception:  # noqa: BLE001 — e.g. the context is stopped
+                pass
+
+
+def _release_all() -> None:
+    """The store's single exit hook: release every entry still held."""
+    for sc in list(_CONTEXTS):
+        _release(getattr(sc, _ATTR), list(getattr(sc, _ATTR)))
+
+
+def memo(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], Any],
+    release: Callable[[Any], None] | None = None,
+    ephemeral: bool = False,
+) -> Any:
+    """``build()``, memoized under ``key`` in the store of ``spark``'s
+    context; ``release(value)`` runs on eviction, at exit, and for an
+    ``ephemeral`` entry on ``reset()``."""
+    entries = _entries(spark.sparkContext)
+    hit = entries.get(key)
+    if hit is not None:
+        entries.move_to_end(key)
+        return hit[0]
+    value = build()
+    entries[key] = (value, release, ephemeral)
+    _release(entries, list(entries)[: max(0, len(entries) - MAX_ENTRIES)])
+    return value
+
+
+def persist_scoped(df: DataFrame) -> DataFrame:
+    """``df.persist()``, unpersisted by the next ``reset()``: for a frame
+    that a lazily returned result reads, so its builder cannot unpersist it."""
+    return memo(
+        df.sparkSession, ("persist", id(df)), df.persist,
+        release=DataFrame.unpersist, ephemeral=True,
+    )
+
+
+def reset() -> None:
+    """Release every ephemeral entry of the active context; fixtures stay.
+    No-op without an active context."""
+    entries = getattr(SparkContext._active_spark_context, _ATTR, None)
+    if entries:
+        _release(entries, [k for k, (_, _, eph) in entries.items() if eph])
+
+
+def snapshot(spark: SparkSession) -> dict:
+    """The store's entries (key, ephemeral, ``cached_bytes`` of the frames
+    each one persists, from the RDD storage info) and the byte totals."""
+    from xarray_beam_spark.dataset import Dataset
+
+    sc = spark.sparkContext
+    sizes = {i.id(): i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo()}
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached_bytes(value) -> int:
+        if isinstance(value, tuple):
+            return sum(map(cached_bytes, value))
+        df = value.df if isinstance(value, Dataset) else value
+        hit = cache.lookupCachedData(df._jdf) if isinstance(df, DataFrame) else None
+        if hit is None or not hit.isDefined():
+            return 0
+        builder = hit.get().cachedRepresentation().cacheBuilder()
+        loaded = builder.isCachedColumnBuffersLoaded()
+        return sizes.get(builder.cachedColumnBuffers().id(), 0) if loaded else 0
+
+    entries = [
+        {"key": repr(key)[:160], "ephemeral": eph, "cached_bytes": cached_bytes(value)}
+        for key, (value, _, eph) in _entries(sc).items()
+    ]
+    return {
+        "entries": entries,
+        "cached_bytes": sum(e["cached_bytes"] for e in entries),
+        "ephemeral_bytes": sum(e["cached_bytes"] for e in entries if e["ephemeral"]),
+    }

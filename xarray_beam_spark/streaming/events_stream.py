@@ -18,8 +18,10 @@ bounds state size at scale.
 
 from __future__ import annotations
 
-import atexit
 import os
+import shutil
+import tempfile
+import time
 import uuid
 
 import pandas as pd
@@ -27,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xarray_beam_spark.session import memo
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
@@ -40,9 +43,6 @@ def _register(name: str, oracle: str | None):
     return deco
 
 
-_RAW_SCHEMA_CACHE: dict = {}
-
-
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file stream — ``tables.normalize_ts`` gives it
     the SAME ns→µs / NTZ→LTZ timestamp view the batch reader has (one
@@ -51,26 +51,24 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xarray_beam_spark.tables import normalize_ts
 
     load(spark, sf_dir, "events")  # sets session tz (+ nanosAsLong conf)
-    skey = (spark.sparkContext.applicationId, sf_dir)
-    raw_schema = _RAW_SCHEMA_CACHE.get(skey)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _RAW_SCHEMA_CACHE[skey] = raw_schema
+    raw_schema = memo(
+        spark, ("raw_schema", sf_dir),
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").schema,
+    )
     stream = spark.readStream.schema(raw_schema).parquet(
         f"{sf_dir}", pathGlobFilter="events.parquet"
     )
     return normalize_ts(stream)
 
 
-_SCRATCH_DIRS: list[str] = []
-
-
-@atexit.register
-def _cleanup_scratch_dirs() -> None:
-    import shutil
-
-    while _SCRATCH_DIRS:
-        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
+def _result_dir(spark: SparkSession, prefix: str) -> str:
+    """A temp dir that a lazily returned DataFrame reads, so it cannot be
+    deleted on return: the session store removes it at exit (or on
+    eviction) instead of leaking one dir per streaming-gate run."""
+    return memo(
+        spark, ("result_dir", uuid.uuid4().hex),
+        lambda: tempfile.mkdtemp(prefix=prefix), release=shutil.rmtree,
+    )
 
 
 def _run_to_memory(result: DataFrame, mode: str = "complete") -> DataFrame:
@@ -83,15 +81,8 @@ def _run_to_memory(result: DataFrame, mode: str = "complete") -> DataFrame:
     full result; append for update mode), never collected to the driver —
     the same ``foreachBatch`` bridge pattern as ``stream_to_zarr_hourly``,
     so gate-scale and 100 TB runs share the code path."""
-    import shutil
-    import tempfile
-
     spark = result.sparkSession
-    outdir = tempfile.mkdtemp(prefix=f"xbs_stream_{uuid.uuid4().hex[:8]}_")
-    # the returned DataFrame reads outdir lazily, so it cannot be deleted
-    # here — register it for interpreter-exit cleanup instead of leaking
-    # one result dir per streaming-gate run into /tmp forever
-    _SCRATCH_DIRS.append(outdir)
+    outdir = _result_dir(spark, f"xbs_stream_{uuid.uuid4().hex[:8]}_")
     data_dir, ckpt_dir = f"{outdir}/data", f"{outdir}/ckpt"
     # The checkpoint of a run-to-completion (AvailableNow) query is pure
     # scratch — it never outlives this function — so put its WAL/state
@@ -569,7 +560,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream time-range join gate (see stream_interval_join)."""
     return stream_interval_join(spark, sf_dir)
-_APPEND_STAGE_CACHE: dict = {}
 
 
 def _staged_day_files(spark: SparkSession, sf_dir: str, n_parts: int = 3) -> str:
@@ -577,42 +567,38 @@ def _staged_day_files(spark: SparkSession, sf_dir: str, n_parts: int = 3) -> str
     strictly increasing modification times — a deterministic stand-in for
     a live feed that delivers whole days in arrival order (FileStreamSource
     orders pending files by mtime, so maxFilesPerTrigger=1 replays them
-    oldest-first, one micro-batch per file)."""
-    import shutil
-    import tempfile
-    import time as _time
+    oldest-first, one micro-batch per file). The staged dir is a fixture
+    of the session store, removed at exit."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_parts)
-    hit = _APPEND_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    ev = load(spark, sf_dir, "events")
-    days = [
-        r[0]
-        for r in ev.select(F.date_trunc("day", "ts").alias("day")).distinct().orderBy("day").collect()
-    ]
-    cuts = [days[(len(days) * i) // n_parts] for i in range(1, n_parts)]
-    stage = tempfile.mkdtemp(prefix="xbs_append_feed_")
-    lo = None
-    bounds = cuts + [None]
-    base = _time.time() - 1000
-    for i, hi in enumerate(bounds):
-        part = ev
-        d = F.date_trunc("day", F.col("ts"))
-        if lo is not None:
-            part = part.where(d >= F.lit(lo))
-        if hi is not None:
-            part = part.where(d < F.lit(hi))
-        tmp = tempfile.mkdtemp(prefix="xbs_append_part_")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(stage, f"{i:03d}.parquet")
-        shutil.move(os.path.join(tmp, src), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (base + i, base + i))
-        lo = hi
-    _APPEND_STAGE_CACHE[key] = stage
-    return stage
+    def stage_files() -> str:
+        ev = load(spark, sf_dir, "events")
+        days = [
+            r[0]
+            for r in ev.select(F.date_trunc("day", "ts").alias("day")).distinct().orderBy("day").collect()
+        ]
+        cuts = [days[(len(days) * i) // n_parts] for i in range(1, n_parts)]
+        stage = tempfile.mkdtemp(prefix="xbs_append_feed_")
+        lo = None
+        bounds = cuts + [None]
+        base = time.time() - 1000
+        for i, hi in enumerate(bounds):
+            part = ev
+            d = F.date_trunc("day", F.col("ts"))
+            if lo is not None:
+                part = part.where(d >= F.lit(lo))
+            if hi is not None:
+                part = part.where(d < F.lit(hi))
+            tmp = tempfile.mkdtemp(prefix="xbs_append_part_")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+            dst = os.path.join(stage, f"{i:03d}.parquet")
+            shutil.move(os.path.join(tmp, src), dst)
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.utime(dst, (base + i, base + i))
+            lo = hi
+        return stage
+
+    return memo(spark, ("staged_feed", sf_dir, n_parts), stage_files, release=shutil.rmtree)
 
 
 class BatchHighWater:
@@ -655,14 +641,9 @@ def stream_append_to_zarr(spark: SparkSession, sf_dir: str, out_path: str) -> di
 
     # the event taxonomy is schema-level knowledge; the DAY axis is not —
     # memoized like the staged feed (pure-input metadata)
-    ekey = ("etypes", spark.sparkContext.applicationId, sf_dir)
-    etypes = _APPEND_STAGE_CACHE.get(ekey)
-    if etypes is None:
-        static = load(spark, sf_dir, "events")
-        etypes = np.array(
-            sorted(r[0] for r in static.select("event_type").distinct().collect())
-        )
-        _APPEND_STAGE_CACHE[ekey] = etypes
+    etypes = memo(spark, ("etypes", sf_dir), lambda: np.array(sorted(
+        r[0] for r in load(spark, sf_dir, "events").select("event_type").distinct().collect()
+    )))
     stage = _staged_day_files(spark, sf_dir)
     # Exactly-once marker goes through the store seam so streaming append
     # is idempotent on http://, mem:// and file outputs alike (the marker
@@ -683,56 +664,60 @@ def stream_append_to_zarr(spark: SparkSession, sf_dir: str, out_path: str) -> di
             .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
             .persist()
         )
-        batch_days = np.array(
-            [r[0] for r in cells.select("day").distinct().orderBy("day").collect()],
-            dtype="datetime64[us]",
-        )
-        if len(batch_days):
-            grid = Dataset.from_table(
-                cells,
-                dims=["day", "hour", "event_type"],
-                coords={
-                    "day": batch_days,
-                    "hour": np.arange(24, dtype=np.int64),
-                    "event_type": etypes,
-                },
-                var_cols=["cnt"],
-                chunks={"day": 1},
+        try:
+            batch_days = np.array(
+                [r[0] for r in cells.select("day").distinct().orderBy("day").collect()],
+                dtype="datetime64[us]",
             )
-            meta_store, meta_key = stores.resolve(stores.join(out_path, ".zmetadata"))
-            if meta_store.exists(meta_key):
-                # ingestion contract: whole days, in order — a batch whose
-                # first day is not past the store's extent means duplicate
-                # or out-of-order delivery, which append cannot represent
-                tmpl, _ = zarr_io.open_zarr_template(out_path)
-                days_all = np.asarray(tmpl.coords["day"].values).astype(
-                    "datetime64[us]"
+            if len(batch_days):
+                grid = Dataset.from_table(
+                    cells,
+                    dims=["day", "hour", "event_type"],
+                    coords={
+                        "day": batch_days,
+                        "hour": np.arange(24, dtype=np.int64),
+                        "event_type": etypes,
+                    },
+                    var_cols=["cnt"],
+                    chunks={"day": 1},
                 )
-                last = days_all[-1]
-                if batch_days[0] <= last:
-                    if len(days_all) >= len(batch_days) and np.array_equal(
-                        days_all[-len(batch_days) :], batch_days
-                    ):
-                        # commit-crash replay: the append itself landed but
-                        # the process died before the high-water commit —
-                        # the store's tail IS this batch. Fall through to
-                        # the commit instead of wedging every restart on
-                        # the out-of-order check.
-                        pass
+                meta_store, meta_key = stores.resolve(
+                    stores.join(out_path, ".zmetadata")
+                )
+                if meta_store.exists(meta_key):
+                    # ingestion contract: whole days, in order — a batch whose
+                    # first day is not past the store's extent means duplicate
+                    # or out-of-order delivery, which append cannot represent
+                    tmpl, _ = zarr_io.open_zarr_template(out_path)
+                    days_all = np.asarray(tmpl.coords["day"].values).astype(
+                        "datetime64[us]"
+                    )
+                    last = days_all[-1]
+                    if batch_days[0] <= last:
+                        if len(days_all) >= len(batch_days) and np.array_equal(
+                            days_all[-len(batch_days) :], batch_days
+                        ):
+                            # commit-crash replay: the append itself landed but
+                            # the process died before the high-water commit —
+                            # the store's tail IS this batch. Fall through to
+                            # the commit instead of wedging every restart on
+                            # the out-of-order check.
+                            pass
+                        else:
+                            raise ValueError(
+                                f"out-of-order ingest: batch starts at "
+                                f"{batch_days[0]} but the store already "
+                                f"extends to {last}"
+                            )
                     else:
-                        raise ValueError(
-                            f"out-of-order ingest: batch starts at "
-                            f"{batch_days[0]} but the store already "
-                            f"extends to {last}"
-                        )
+                        zarr_io.to_zarr(grid, out_path, append_dim="day")
                 else:
-                    zarr_io.to_zarr(grid, out_path, append_dim="day")
-            else:
-                zarr_io.to_zarr(
-                    grid, out_path,
-                    zarr_chunks={"day": 1, "hour": 24, "event_type": len(etypes)},
-                )
-        cells.unpersist()
+                    zarr_io.to_zarr(
+                        grid, out_path,
+                        zarr_chunks={"day": 1, "hour": 24, "event_type": len(etypes)},
+                    )
+        finally:
+            cells.unpersist()  # a rejected batch must not leave it cached
         highwater.commit(batch_id)
 
     raw_schema = load(spark, sf_dir, "events").schema
@@ -742,8 +727,6 @@ def stream_append_to_zarr(spark: SparkSession, sf_dir: str, out_path: str) -> di
         .parquet(stage)
     )
     scratch = os.environ.get("XBS_STREAM_SCRATCH", "/dev/shm")
-    import tempfile
-
     ckpt_base = scratch if os.path.isdir(scratch) and os.access(scratch, os.W_OK) else None
     ckpt = tempfile.mkdtemp(prefix="xbs_append_ckpt_", dir=ckpt_base)
     q = (
@@ -752,10 +735,10 @@ def stream_append_to_zarr(spark: SparkSession, sf_dir: str, out_path: str) -> di
         .option("checkpointLocation", ckpt)
         .start()
     )
-    q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return {"batches": 3}
 
 
@@ -776,11 +759,9 @@ def stream_zarr_append_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     creates it), then the read-back of the final store must equal the
     whole-table day×hour×type grid — proving resize + coordinate
     extension + region writes compose losslessly under micro-batching."""
-    import tempfile
-
     from xarray_beam_spark.sources import zarr_io
 
-    out = tempfile.mkdtemp(prefix="xbs_append_store_") + "/grid.zarr"
+    out = _result_dir(spark, "xbs_append_store_") + "/grid.zarr"
     stream_append_to_zarr(spark, sf_dir, out)
     back = zarr_io.from_zarr(spark, out, chunks={"day": 8})
     return back.to_table(dropna=True)

@@ -63,10 +63,6 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def fan_out_narrow_scan(df: DataFrame) -> DataFrame:
     """Rebalance ``df`` across the cluster when its scan parallelism is
     below ``defaultParallelism``.
@@ -106,7 +102,8 @@ def fan_out_narrow_scan(df: DataFrame) -> DataFrame:
     if nodes & {
         "Join", "Aggregate", "Window", "Distinct", "Deduplicate",
         "Repartition", "RepartitionByExpression", "Sort", "GlobalLimit",
-        "FlatMapGroupsInPandas", "MapInPandas", "PythonMapInArrow",
+        "FlatMapGroupsInPandas", "FlatMapGroupsInArrow", "MapInPandas",
+        "PythonMapInArrow",
         # analyzed-plan spelling in Spark 4 (PythonMapInArrow is the
         # execution-side name; the logical node prints as MapInArrow)
         "MapInArrow",
