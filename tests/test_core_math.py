@@ -957,3 +957,13 @@ class TestMaterializedCache:
             )
         assert paths[0] != paths[1]
         assert open(os.path.join(paths[1], "layout")).read() == "1"
+
+        # one context: the second params must not get the first store back
+        shared = _Spark()
+        shared_paths = [
+            gq._materialized(
+                shared, str(tmp_path), "pdig", build, persistent=True, params=params
+            )
+            for params in ["chunks=a", "chunks=b"]
+        ]
+        assert shared_paths == paths

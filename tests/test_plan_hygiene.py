@@ -209,6 +209,20 @@ def test_no_xb_gate_stacks_python_chunk_maps(spark, sf_dir):
     assert not bad, f"unfused Python chunk maps: {bad}"
 
 
+# pandas map, grouped-map and cogrouped-map nodes: every operator UDF runs
+# on Arrow batches (mapInArrow / applyInArrow) instead.
+PANDAS_UDF_NODES = {"MapInPandas", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"}
+
+
+def test_no_gate_plan_runs_a_pandas_udf(spark, sf_dir):
+    plans = _collect_lazy_plans(spark, sf_dir)
+    bad = sorted(
+        name for name, plan in plans.items()
+        if PANDAS_UDF_NODES & {node for _, node in _plan_nodes(plan)}
+    )
+    assert not bad, f"gates running a pandas UDF: {bad}"
+
+
 def _assert_one_python_pass_per_stage(spark) -> None:
     """The last SQL execution's final (adaptive) plan runs exactly one
     FlatMapGroupsInArrow above an Exchange above one MapInArrow. A cached

@@ -313,6 +313,22 @@ def test_edit_distance_pairs_finds_mutated_twins(spark):
         assert r.dist == lev(texts[r.doc_a], texts[r.doc_b])
 
 
+@pytest.mark.parametrize("bad", [None, [0.5, 0.25]], ids=["null", "ragged"])
+@pytest.mark.parametrize("op", ["brute_force_topk_numpy", "semantic_dedup"])
+def test_bad_vectors_raise_naming_the_column(spark, op, bad):
+    """A null vector or a vector of another length fails with a
+    ValueError that names the vector column."""
+    rng = np.random.default_rng(2)
+    rows = [(i, [float(x) for x in rng.normal(size=4)]) for i in range(8)] + [(8, bad)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    if op == "semantic_dedup":
+        out = ss.semantic_dedup(emb, n_centroids=2)
+    else:
+        out = ss.brute_force_topk_numpy(emb, {0: np.asarray(rows[0][1])}, k=3)
+    with pytest.raises(Exception, match=r"ValueError: column 'embedding' holds"):
+        out.collect()
+
+
 class TestSemanticDedup:
     def _emb(self, spark, vecs):
         rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]

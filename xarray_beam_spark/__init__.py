@@ -36,7 +36,7 @@ from typing import Any
 # (Key, Dataset, normalize_chunks, offsets_to_slices, setup_zarr,
 # replace_template_dims, in_memory_rechunk, and the per-chunk free
 # functions split_chunks / split_variables / consolidate_chunks /
-# consolidate_variables / consolidate_fully for custom mapInPandas
+# consolidate_variables / consolidate_fully for custom mapInArrow
 # pipelines) or as a pipeable Beam-style shim from compat.py
 # (`ds | Rechunk(...) | Mean('time')` — see that module's docstring for
 # the two names deliberately NOT shimmed: MeanCombineFn and the

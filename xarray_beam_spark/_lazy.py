@@ -66,7 +66,7 @@ class LazyModule:
         return getattr(self._load(), attr)
 
     def __reduce__(self):
-        # Closures defined inside functions (mapInPandas bodies etc.) are
+        # Closures defined inside functions (mapInArrow bodies etc.) are
         # pickled BY VALUE by cloudpickle, including the module globals
         # they reference — so a captured proxy must serialize as "import
         # the real module on the other side", never as a proxy carrying a

@@ -21,7 +21,7 @@ explicit): ``MeanCombineFn`` (a Beam CombineFn — Spark's combiner
 lifting is internal to ``Dataset.mean``) and the per-element
 ``validate_chunk`` DoFn (its checks run inside ``Dataset.validate``).
 ``validate_zarr_chunk``/``write_chunk_to_zarr`` ARE provided below as
-per-chunk free functions for custom ``mapInPandas`` pipelines.
+per-chunk free functions for custom ``mapInArrow`` pipelines.
 """
 
 from __future__ import annotations
@@ -354,7 +354,7 @@ def validate_zarr_chunk(offsets: Mapping[str, int], chunk: NDDataset, store: str
     makes retried/speculative task writes race-free. Raises ``ValueError``
     with the exact violation; returns None when safe. For the built-in
     write path this runs inside ``to_zarr``; call it from custom
-    ``mapInPandas`` writers before :func:`write_chunk_to_zarr`."""
+    ``mapInArrow`` writers before :func:`write_chunk_to_zarr`."""
     from xarray_beam_spark.sources import zarrlite
 
     def check(arrays: dict) -> None:

@@ -203,7 +203,7 @@ def _materialized(
         write(path)
         return path
 
-    key = ("store", sf_dir, tag)
+    key = ("store", sf_dir, tag, params)
     if persistent:
         return memo(spark, key, build_persistent)
     return memo(spark, key, build_ephemeral, release=shutil.rmtree, ephemeral=True)

@@ -35,6 +35,7 @@ additionally pins the trainer to a from-scratch pure-Python reference.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -348,9 +349,9 @@ def _bpe_encode_arrow(
 
     def encode(batches):
         cache: dict[str, list[str]] = {}
-        for pdf in batches:
+        for batch in batches:
             toks = []
-            for text in pdf[text_col]:
+            for text in batch.column(text_col).to_pylist():
                 ws = word_re.findall((text or "").lower())
                 doc: list[str] = []
                 for w in ws:
@@ -359,12 +360,12 @@ def _bpe_encode_arrow(
                         t = cache[w] = _encode_word(w, ranks)
                     doc.extend(t)
                 toks.append(doc)
-            pdf = pdf.copy()
-            pdf[out_col] = toks
-            pdf["n_bpe_tokens"] = [len(t) for t in toks]
-            yield pdf
+            batch = batch.append_column(out_col, pa.array(toks, pa.list_(pa.string())))
+            yield batch.append_column(
+                "n_bpe_tokens", pa.array([len(t) for t in toks], pa.int64())
+            )
 
-    return docs.mapInPandas(encode, schema)
+    return docs.mapInArrow(encode, schema)
 
 
 def _bpe_oracle_stage(k: int) -> str:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -493,26 +493,28 @@ def pack_sequences(
         + [doc_tokens.schema[c] for c in carry]
     )
 
-    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+
+    def pack(key: tuple, docs: pa.Table) -> pa.Table:
         import bisect
 
-        if pdf["n_tokens"].isna().any():
-            # Arrow hands a nullable int64 to pandas as float64+NaN;
-            # int(NaN) would die with an opaque executor traceback —
-            # name the actual problem instead
+        if docs.column("n_tokens").null_count:
+            # a null count has no place in the packing order; name the
+            # actual problem instead of an opaque executor traceback
             raise ValueError(
                 "pack_sequences: NULL token counts (e.g. "
                 "size(split(NULL text))) — filter them before packing"
             )
-        bucket = int(key[0])
-        pdf = pdf.sort_values(
-            ["n_tokens", "doc_id"], ascending=[False, True]
-        ).reset_index(drop=True)
-        assignment = np.empty(len(pdf), dtype=np.int64)
+        bucket = key[0].as_py()
+        docs = docs.sort_by([("n_tokens", "descending"), ("doc_id", "ascending")])
+        tokens = docs.column("n_tokens").to_numpy()
+        assignment = np.empty(len(tokens), dtype=np.int64)
         if strategy == "next_fit":
             fill = None
             n_packs = 0
-            for i, tok in enumerate(pdf["n_tokens"].to_numpy()):
+            for i, tok in enumerate(tokens):
                 tok = int(tok)
                 if fill is None or fill + tok > budget:
                     assignment[i] = n_packs
@@ -525,7 +527,7 @@ def pack_sequences(
             # best-fit-decreasing over a sorted list of (remaining, pack_idx)
             remaining: list = []  # sorted by remaining capacity
             n_packs = 0
-            for i, tok in enumerate(pdf["n_tokens"].to_numpy()):
+            for i, tok in enumerate(tokens):
                 j = bisect.bisect_left(remaining, (tok,))
                 if j < len(remaining):
                     cap, idx = remaining.pop(j)
@@ -542,15 +544,14 @@ def pack_sequences(
                         bisect.insort(remaining, (cap, n_packs))
                     n_packs += 1
         out = {
-            "doc_id": pdf["doc_id"],
-            "n_tokens": pdf["n_tokens"],
+            "doc_id": docs.column("doc_id"),
+            "n_tokens": docs.column("n_tokens"),
             "pack_id": (bucket << 32) + assignment,
         }
-        for c in carry:
-            out[c] = pdf[c]
-        return pd.DataFrame(out)
+        out.update((c, docs.column(c)) for c in carry)
+        return pa.Table.from_pydict(out, schema=pa_schema)
 
-    return df.groupBy("__bucket").applyInPandas(pack, schema)
+    return df.groupBy("__bucket").applyInArrow(pack, schema)
 
 
 # The pack oracle replays next-fit-decreasing as a recursive CTE: `walk`

@@ -2,11 +2,11 @@
 
 Design: media assets ride in the DataFrame as opaque ``binary`` columns
 next to a **typed metadata struct** (mime, width, height, n_frames,
-sample_rate, n_bytes); all heavy per-asset compute is Arrow-batched
-``mapInPandas`` so decode/resize/feature-extraction scale horizontally and
-stay off the Spark driver. At 100 TB the asset table partitions by size
-(``spark.sql.files.maxPartitionBytes``) and the UDF stages are narrow —
-no shuffles anywhere in this module.
+sample_rate, n_bytes); all heavy per-asset compute is one ``mapInArrow``
+stage over Arrow batches, so decode/resize/feature-extraction scale
+horizontally and stay off the Spark driver. At 100 TB the asset table
+partitions by size (``spark.sql.files.maxPartitionBytes``) and the UDF
+stages are narrow — no shuffles anywhere in this module.
 
 The container has no media libraries (no PIL/ffmpeg), so every decode
 that happens is FROM-SPEC: PNG/JPEG(baseline+progressive)/BMP images,
@@ -21,10 +21,10 @@ EXTRACTION still works, only the frame decode refuses.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -196,6 +196,24 @@ def sample_frames(blob: bytes, frame_bytes: int, every: int) -> list[bytes]:
 # ---------------------------------------------------------------------------
 
 
+def _map_rows(
+    df: DataFrame, schema: T.StructType, fn: Callable[[dict], Iterable[dict]]
+) -> DataFrame:
+    """``df.mapInArrow`` calling ``fn`` on each input row as a dict; every
+    dict ``fn`` yields is one output row of ``schema``, with the fields
+    it leaves out null."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [out for row in batch.to_pylist() for out in fn(row)]
+            yield pa.RecordBatch.from_pylist(rows, schema=pa_schema)
+
+    return df.mapInArrow(run, schema)
+
+
 def documents_as_assets(docs: DataFrame) -> DataFrame:
     """Demo asset table: utf-8 bytes of each document as the binary blob
     with fully-populated typed metadata (JVM-side expressions only)."""
@@ -235,6 +253,19 @@ def _quarantine(decoder: Callable, blob) -> tuple:
         return None, f"{type(exc).__name__}: {exc}"[:512]
 
 
+def _decode_pixels(decoder: Callable, blob) -> tuple:
+    """:func:`_quarantine` for an image decoder: a result that is not a
+    non-empty 2-D pixel array quarantines its asset too."""
+    img, err = _quarantine(decoder, blob)
+    if err is None and not (isinstance(img, np.ndarray) and img.ndim == 2 and img.size):
+        return None, (
+            "ShapeError: decoded to "
+            f"{getattr(img, 'shape', type(img).__name__)}, "
+            "expected non-empty 2-D pixel array"
+        )
+    return img, err
+
+
 def extract_features(
     assets: DataFrame,
     decoder: Callable[[bytes], np.ndarray] = fake_decode,
@@ -242,7 +273,7 @@ def extract_features(
 ) -> DataFrame:
     """Decode + feature-extract per asset (mean/std pixel + byte histogram).
 
-    Arrow-batched mapInPandas; the whole batch's histograms are computed
+    One ``mapInArrow`` stage; the whole batch's histograms are computed
     with one ``np.add.at`` over a (batch, bins) matrix — no per-pixel
     Python. The decoder is pluggable: swap ``fake_decode`` for a real
     codec wrapper with the same contract when codecs are available.
@@ -251,11 +282,13 @@ def extract_features(
     string column) instead of failing the task — downstream filters on
     ``error IS NULL`` / routes ``error IS NOT NULL`` to a review sink.
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["asset_id"].to_numpy()
-            n = len(ids)
+    pa_schema = to_arrow_schema(FEATURE_SCHEMA)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            n = batch.num_rows
             errors: list = [None] * n
             mean: list = [None] * n
             std: list = [None] * n
@@ -265,16 +298,8 @@ def extract_features(
             # up np.stack for the whole batch; and legitimately mixed image
             # sizes in one batch must still vectorize — so group by shape.
             by_shape: dict[tuple, list] = {}
-            for i, b in enumerate(pdf["blob"]):
-                img, err = _quarantine(decoder, b)
-                if err is None and not (
-                    isinstance(img, np.ndarray) and img.ndim == 2 and img.size
-                ):
-                    err = (
-                        "ShapeError: decoded to "
-                        f"{getattr(img, 'shape', type(img).__name__)}, "
-                        "expected non-empty 2-D pixel array"
-                    )
+            for i, b in enumerate(batch.column("blob").to_pylist()):
+                img, err = _decode_pixels(decoder, b)
                 if err is not None:
                     errors[i] = err
                 else:
@@ -291,17 +316,18 @@ def extract_features(
                 np.add.at(hist, (rows, bins.ravel()), 1)
                 for j, i in enumerate(idx):
                     mean[i], std[i], hists[i] = float(m[j]), float(s[j]), hist[j]
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "asset_id": ids,
+                    "asset_id": batch.column("asset_id"),
                     "mean_px": mean,
                     "std_px": std,
                     "histogram": hists,
                     "error": errors,
-                }
+                },
+                schema=pa_schema,
             )
 
-    return assets.select("asset_id", "blob").mapInPandas(run, FEATURE_SCHEMA)
+    return assets.select("asset_id", "blob").mapInArrow(run, FEATURE_SCHEMA)
 
 
 def resize_assets(
@@ -322,35 +348,52 @@ def resize_assets(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for r in pdf.to_dict("records"):  # row-dict iteration: ~10x iterrows at chunk granularity
-                img, err = _quarantine(decoder, r["blob"])
-                if err is None and not (
-                    isinstance(img, np.ndarray) and img.ndim == 2 and img.size
-                ):
-                    err = (
-                        "ShapeError: decoded to "
-                        f"{getattr(img, 'shape', type(img).__name__)}, "
-                        "expected non-empty 2-D pixel array"
-                    )
-                if err is not None:
-                    # meta=None too: the input meta describes bytes this row
-                    # no longer carries (blob is null), so keeping it would
-                    # mislead downstream consumers of quarantined rows.
-                    out_rows.append(
-                        {"asset_id": r["asset_id"], "blob": None, "meta": None, "error": err}
-                    )
-                    continue
-                img = resize_nearest(img, out_h, out_w)
-                raw = img.astype(np.uint8).tobytes()
-                meta = dict(r["meta"]) if r["meta"] is not None else {}
-                meta.update(width=out_w, height=out_h, n_bytes=len(raw))
-                out_rows.append({"asset_id": r["asset_id"], "blob": raw, "meta": meta, "error": None})
-            yield pd.DataFrame(out_rows)
+    def resize(r: dict) -> Iterator[dict]:
+        img, err = _decode_pixels(decoder, r["blob"])
+        if err is not None:
+            # meta stays null too: the input meta describes bytes this row
+            # no longer carries (blob is null), so keeping it would
+            # mislead downstream consumers of quarantined rows.
+            yield {"asset_id": r["asset_id"], "error": err}
+            return
+        raw = resize_nearest(img, out_h, out_w).astype(np.uint8).tobytes()
+        meta = {**(r["meta"] or {}), "width": out_w, "height": out_h, "n_bytes": len(raw)}
+        yield {"asset_id": r["asset_id"], "blob": raw, "meta": meta}
 
-    return assets.mapInPandas(run, schema)
+    return _map_rows(assets, schema, resize)
+
+
+def _tiled(raw: bytes, n: int) -> np.ndarray:
+    """The first ``n`` of the bytes ``raw``, tiled if shorter (one zero
+    byte stands in for empty ``raw``)."""
+    b = np.frombuffer(raw, dtype=np.uint8) if raw else np.zeros(1, np.uint8)
+    return np.tile(b, -(-n // len(b)))[:n]
+
+
+def _block_image(vals: np.ndarray) -> np.ndarray:
+    """16x16 grayscale image of four constant 8x8 blocks, valued
+    ``vals[0..3]`` in row-major block order."""
+    img = np.empty((16, 16), np.uint8)
+    img[:8, :8], img[:8, 8:] = vals[0], vals[1]
+    img[8:, :8], img[8:, 8:] = vals[2], vals[3]
+    return img
+
+
+def _encoded_assets(
+    docs: DataFrame, encode: Callable[[int, bytes], tuple[bytes, int]], **meta
+) -> DataFrame:
+    """Demo asset table built per document: ``encode(doc_id, utf-8
+    bytes)`` returns the blob and its frame count; ``meta`` holds the
+    metadata fields every asset shares (mime, width, height,
+    sample_rate). The same narrow stage a real ingest (bytes already
+    encoded) would skip."""
+
+    def asset(r: dict) -> Iterator[dict]:
+        blob, n_frames = encode(r["doc_id"], r["text"].encode("utf-8"))
+        meta_row = {**meta, "n_frames": n_frames, "n_bytes": len(blob)}
+        yield {"asset_id": r["doc_id"], "blob": blob, "meta": meta_row}
+
+    return _map_rows(docs.select("doc_id", "text"), ASSET_SCHEMA, asset)
 
 
 _AUDIO_TILE = 256  # frames per synthesized demo clip
@@ -360,42 +403,32 @@ _AUDIO_RATE = 16000
 def documents_as_audio_assets(docs: DataFrame) -> DataFrame:
     """Demo audio-asset table: each document's utf-8 bytes tiled into
     ``_AUDIO_TILE`` int16 PCM samples (``(byte - 128) * 256``) and encoded
-    through the REAL WAV codec. Narrow Arrow-batched stage; the same
-    mapInPandas shape a real ingest (bytes already WAV) would skip."""
+    through the REAL WAV codec."""
     from xarray_beam_spark.sources.wav import encode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if len(raw) == 0:
-                    raw = np.zeros(1, np.uint8)
-                reps = -(-_AUDIO_TILE // len(raw))
-                s = (
-                    np.tile(raw, reps)[:_AUDIO_TILE].astype(np.int16) - 128
-                ) * 256
-                blob = encode_wav(s, _AUDIO_RATE)
-                rows.append(
-                    {
-                        "asset_id": doc_id,
-                        "blob": blob,
-                        "meta": {
-                            "mime": "audio/wav",
-                            "width": 0,
-                            "height": 0,
-                            "n_frames": _AUDIO_TILE,
-                            "sample_rate": _AUDIO_RATE,
-                            "n_bytes": len(blob),
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def clip(_doc_id: int, raw: bytes) -> tuple[bytes, int]:
+        s = (_tiled(raw, _AUDIO_TILE).astype(np.int16) - 128) * 256
+        return encode_wav(s, _AUDIO_RATE), _AUDIO_TILE
 
-    return docs.select("doc_id", "text").mapInPandas(run, ASSET_SCHEMA)
+    return _encoded_assets(
+        docs, clip, mime="audio/wav", width=0, height=0, sample_rate=_AUDIO_RATE
+    )
 
 
 _JPEG_BLOCKS = 4  # 16x16 gray image = 4 constant 8x8 blocks
+
+
+def _block_jpeg_assets(docs: DataFrame, encoder: Callable) -> DataFrame:
+    """One constant-block 16x16 JPEG per document (see
+    :func:`documents_as_jpeg_assets`), serialized by ``encoder``."""
+
+    def jpeg(_doc_id: int, raw: bytes) -> tuple[bytes, int]:
+        img = _block_image(_tiled(raw, _JPEG_BLOCKS))
+        return encoder(img, quality=100, subsample=False), 1
+
+    return _encoded_assets(
+        docs, jpeg, mime="image/jpeg", width=16, height=16, sample_rate=0
+    )
 
 
 def documents_as_jpeg_assets(docs: DataFrame) -> DataFrame:
@@ -410,39 +443,9 @@ def documents_as_jpeg_assets(docs: DataFrame) -> DataFrame:
     DC quantizer is 1, so dequant+IDCT reproduces the value bit-exactly)
     — which is what lets the feature gate be value-hash-certified against
     a SQL oracle despite JPEG being a lossy codec."""
+    from xarray_beam_spark.sources.jpeg import encode_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xarray_beam_spark.sources.jpeg import encode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if len(raw) == 0:
-                    raw = np.zeros(1, np.uint8)
-                reps = -(-_JPEG_BLOCKS // len(raw))
-                vals = np.tile(raw, reps)[:_JPEG_BLOCKS]
-                img = np.empty((16, 16), np.uint8)
-                img[:8, :8], img[:8, 8:] = vals[0], vals[1]
-                img[8:, :8], img[8:, 8:] = vals[2], vals[3]
-                blob = encode_jpeg(img, quality=100, subsample=False)
-                rows.append(
-                    {
-                        "asset_id": doc_id,
-                        "blob": blob,
-                        "meta": {
-                            "mime": "image/jpeg",
-                            "width": 16,
-                            "height": 16,
-                            "n_frames": 1,
-                            "sample_rate": 0,
-                            "n_bytes": len(blob),
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return docs.select("doc_id", "text").mapInPandas(run, ASSET_SCHEMA)
+    return _block_jpeg_assets(docs, encode_jpeg)
 
 
 def documents_as_bmp_assets(docs: DataFrame) -> DataFrame:
@@ -451,36 +454,14 @@ def documents_as_bmp_assets(docs: DataFrame) -> DataFrame:
     shorter), through the from-spec encoder (``sources/bmp.py``). BMP is
     lossless, so unlike the constant-block JPEG family no special image
     structure is needed for the feature gate to value-hash-certify."""
+    from xarray_beam_spark.sources.bmp import encode_bmp
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xarray_beam_spark.sources.bmp import encode_bmp
+    def bmp(_doc_id: int, raw: bytes) -> tuple[bytes, int]:
+        return encode_bmp(_tiled(raw, 256).reshape(16, 16)), 1
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if len(raw) == 0:
-                    raw = np.zeros(1, np.uint8)
-                reps = -(-256 // len(raw))
-                img = np.tile(raw, reps)[:256].reshape(16, 16)
-                blob = encode_bmp(img)
-                rows.append(
-                    {
-                        "asset_id": doc_id,
-                        "blob": blob,
-                        "meta": {
-                            "mime": "image/bmp",
-                            "width": 16,
-                            "height": 16,
-                            "n_frames": 1,
-                            "sample_rate": 0,
-                            "n_bytes": len(blob),
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return docs.select("doc_id", "text").mapInPandas(run, ASSET_SCHEMA)
+    return _encoded_assets(
+        docs, bmp, mime="image/bmp", width=16, height=16, sample_rate=0
+    )
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -502,49 +483,32 @@ def audio_features(
 ) -> DataFrame:
     """Decode + per-clip audio features (duration, RMS, peak amplitude,
     zero-crossing count) — the triage scan an audio-training pipeline runs
-    before expensive resampling/transcription. Arrow-batched mapInPandas,
+    before expensive resampling/transcription. One ``mapInArrow`` stage,
     REAL WAV decode by default; multi-channel clips are analyzed on the
     channel-mean mixdown. No shuffle anywhere. Corrupt clips are
     quarantined per asset (null features + ``error`` column), never
     failing the task."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, blob in zip(pdf["asset_id"], pdf["blob"]):
-                out, err = _quarantine(decoder, blob)
-                if err is not None:
-                    rows.append(
-                        {
-                            "asset_id": asset_id,
-                            "n_frames": None,
-                            "duration_s": None,
-                            "rms": None,
-                            "peak": None,
-                            "zero_crossings": None,
-                            "error": err,
-                        }
-                    )
-                    continue
-                samples, rate = out
-                s = samples.astype(np.float64)
-                mono = s[:, 0] if s.shape[1] == 1 else s.mean(axis=1)
-                n = len(mono)
-                neg = mono < 0
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "n_frames": n,
-                        "duration_s": n / rate if rate else None,
-                        "rms": float(np.sqrt((mono * mono).sum() / n)) if n else None,
-                        "peak": int(np.abs(mono).max()) if n else 0,
-                        "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
-                        "error": None,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def features(r: dict) -> Iterator[dict]:
+        out, err = _quarantine(decoder, r["blob"])
+        if err is not None:
+            yield {"asset_id": r["asset_id"], "error": err}
+            return
+        samples, rate = out
+        s = samples.astype(np.float64)
+        mono = s[:, 0] if s.shape[1] == 1 else s.mean(axis=1)
+        n = len(mono)
+        neg = mono < 0
+        yield {
+            "asset_id": r["asset_id"],
+            "n_frames": n,
+            "duration_s": n / rate if rate else None,
+            "rms": float(np.sqrt((mono * mono).sum() / n)) if n else None,
+            "peak": int(np.abs(mono).max()) if n else 0,
+            "zero_crossings": int((neg[1:] != neg[:-1]).sum()),
+        }
 
-    return assets.select("asset_id", "blob").mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return _map_rows(assets.select("asset_id", "blob"), AUDIO_FEATURE_SCHEMA, features)
 
 
 VIDEO_FEATURE_SCHEMA = T.StructType(
@@ -567,46 +531,29 @@ def video_frame_features(
     """Decode + per-clip frame statistics (count, dimensions, mean luma,
     mean absolute inter-frame delta) — the triage pass a video-training
     pipeline runs to drop static/black clips before expensive sampling.
-    Arrow-batched mapInPandas, REAL GIF decode by default. No shuffle."""
+    One ``mapInArrow`` stage, REAL GIF decode by default. No shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, blob in zip(pdf["asset_id"], pdf["blob"]):
-                out, err = _quarantine(lambda b: decoder(bytes(b)), blob)
-                if err is not None:
-                    rows.append(
-                        {
-                            "asset_id": asset_id,
-                            "n_frames": None,
-                            "height": None,
-                            "width": None,
-                            "mean_luma": None,
-                            "frame_deltas": None,
-                            "error": err,
-                        }
-                    )
-                    continue
-                frames = out.astype(np.float64)
-                deltas = (
-                    np.abs(np.diff(frames, axis=0)).mean(axis=(1, 2, 3))
-                    if frames.shape[0] > 1
-                    else np.zeros(0)
-                )
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "n_frames": frames.shape[0],
-                        "height": frames.shape[1],
-                        "width": frames.shape[2],
-                        "mean_luma": float(frames.mean()),
-                        "frame_deltas": list(deltas),
-                        "error": None,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def features(r: dict) -> Iterator[dict]:
+        out, err = _quarantine(decoder, r["blob"])
+        if err is not None:
+            yield {"asset_id": r["asset_id"], "error": err}
+            return
+        frames = out.astype(np.float64)
+        deltas = (
+            np.abs(np.diff(frames, axis=0)).mean(axis=(1, 2, 3))
+            if frames.shape[0] > 1
+            else np.zeros(0)
+        )
+        yield {
+            "asset_id": r["asset_id"],
+            "n_frames": frames.shape[0],
+            "height": frames.shape[1],
+            "width": frames.shape[2],
+            "mean_luma": float(frames.mean()),
+            "frame_deltas": deltas,
+        }
 
-    return assets.select("asset_id", "blob").mapInPandas(run, VIDEO_FEATURE_SCHEMA)
+    return _map_rows(assets.select("asset_id", "blob"), VIDEO_FEATURE_SCHEMA, features)
 
 
 # ---------------------------------------------------------------------------
@@ -823,37 +770,7 @@ def multimodal_jpeg_progressive_features_q(spark: SparkSession, sf_dir: str) -> 
 
     docs = load(spark, sf_dir, "documents").where(F.col("doc_id") % 4 == 0)
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if len(raw) == 0:
-                    raw = np.zeros(1, np.uint8)
-                reps = -(-_JPEG_BLOCKS // len(raw))
-                vals = np.tile(raw, reps)[:_JPEG_BLOCKS]
-                img = np.empty((16, 16), np.uint8)
-                img[:8, :8], img[:8, 8:] = vals[0], vals[1]
-                img[8:, :8], img[8:, 8:] = vals[2], vals[3]
-                blob = encode_jpeg_progressive(img, quality=100, subsample=False)
-                rows.append(
-                    {
-                        "asset_id": doc_id,
-                        "blob": blob,
-                        "meta": {
-                            "mime": "image/jpeg",
-                            "width": 16,
-                            "height": 16,
-                            "n_frames": 1,
-                            "sample_rate": 0,
-                            "n_bytes": len(blob),
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    assets = docs.select("doc_id", "text").mapInPandas(run, ASSET_SCHEMA)
+    assets = _block_jpeg_assets(docs, encode_jpeg_progressive)
     feats = extract_features(assets, decoder=decode_image)
     return feats.select(
         "asset_id",
@@ -940,44 +857,18 @@ def documents_as_mp4_assets(docs: DataFrame) -> DataFrame:
     value-hash-certified despite JPEG being lossy. ASCII-only non-empty
     docs (bytes == chars) so the SQL oracle's character indexing agrees
     with the builder's byte indexing."""
+    from xarray_beam_spark.sources.jpeg import encode_jpeg
+    from xarray_beam_spark.sources.mp4 import mux_mjpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xarray_beam_spark.sources.jpeg import encode_jpeg
-        from xarray_beam_spark.sources.mp4 import mux_mjpeg
+    def mp4(doc_id: int, raw: bytes) -> tuple[bytes, int]:
+        n_frames = 2 + doc_id % 3
+        vals = _tiled(raw, _JPEG_BLOCKS * n_frames).reshape(n_frames, _JPEG_BLOCKS)
+        frames = [encode_jpeg(_block_image(v), quality=100, subsample=False) for v in vals]
+        return mux_mjpeg(frames, 16, 16, fps=25), n_frames
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                n_frames = 2 + int(doc_id) % 3
-                need = 4 * n_frames
-                reps = -(-need // len(raw))
-                vals = np.tile(raw, reps)[:need]
-                frames = []
-                for k in range(n_frames):
-                    b = vals[4 * k : 4 * k + 4]
-                    img = np.empty((16, 16), np.uint8)
-                    img[:8, :8], img[:8, 8:] = b[0], b[1]
-                    img[8:, :8], img[8:, 8:] = b[2], b[3]
-                    frames.append(encode_jpeg(img, quality=100, subsample=False))
-                blob = mux_mjpeg(frames, 16, 16, fps=25)
-                rows.append(
-                    {
-                        "asset_id": doc_id,
-                        "blob": blob,
-                        "meta": {
-                            "mime": "video/mp4",
-                            "width": 16,
-                            "height": 16,
-                            "n_frames": n_frames,
-                            "sample_rate": 0,
-                            "n_bytes": len(blob),
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return docs.select("doc_id", "text").mapInPandas(run, ASSET_SCHEMA)
+    return _encoded_assets(
+        docs, mp4, mime="video/mp4", width=16, height=16, sample_rate=0
+    )
 
 
 _MP4_FRAME_SCHEMA = T.StructType(
@@ -996,37 +887,27 @@ def mp4_frame_features(
     """Frame-sample a binary MP4 column: demux (codec-agnostic table
     arithmetic), decode each kept frame (real for MJPEG), and emit one
     row per frame with its presentation time and mean luma. The video
-    analog of :func:`extract_features` — Arrow-batched ``mapInPandas``,
+    analog of :func:`extract_features` — one ``mapInArrow`` stage,
     row-local, no shuffle; ``every_k``/``max_frames`` are the standard
     frame-sampling knobs a training pipeline exposes."""
+    from xarray_beam_spark.sources import mp4
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xarray_beam_spark.sources import mp4
+    def frames(r: dict) -> Iterator[dict]:
+        blob = r["blob"]
+        info = mp4.demux_video(blob)
+        scale = info["timescale"]
+        for i, (dts, sample) in enumerate(
+            mp4.extract_frames(blob, every_k=every_k, max_frames=max_frames, info=info)
+        ):
+            img = mp4.decode_frame(info["codec"], sample)
+            yield {
+                "asset_id": r["asset_id"],
+                "frame_idx": i * every_k,
+                "pts_ms": dts * 1000 // scale,
+                "mean_px": float(img.astype(np.float64).mean()),
+            }
 
-        for pdf in batches:
-            rows = []
-            for asset_id, blob in zip(pdf["asset_id"], pdf["blob"]):
-                blob = bytes(blob)
-                info = mp4.demux_video(blob)
-                scale = info["timescale"]
-                for i, (dts, sample) in enumerate(
-                    mp4.extract_frames(
-                        blob, every_k=every_k, max_frames=max_frames, info=info
-                    )
-                ):
-                    img = mp4.decode_frame(info["codec"], sample)
-                    rows.append(
-                        {
-                            "asset_id": int(asset_id),
-                            "frame_idx": i * every_k,
-                            "pts_ms": dts * 1000 // scale,
-                            "mean_px": float(img.astype(np.float64).mean()),
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in _MP4_FRAME_SCHEMA])
-
-    return assets.mapInPandas(run, _MP4_FRAME_SCHEMA)
+    return _map_rows(assets.select("asset_id", "blob"), _MP4_FRAME_SCHEMA, frames)
 
 
 # Same exactness argument as the JPEG gate: constant 8x8 blocks round-trip

@@ -4,8 +4,8 @@ Three strategies, scale-ordered:
 
 1. ``brute_force_topk`` — exact cosine top-k as a crossJoin + JVM
    expression dot product. O(Q·N); the baseline and the oracle surface.
-2. ``brute_force_topk_numpy`` — same semantics with a vectorized Pandas
-   UDF (one BLAS matmul per Arrow batch); the single-node throughput path.
+2. ``brute_force_topk_numpy`` — same semantics in one ``mapInArrow``
+   stage (one BLAS matmul per Arrow batch); the single-node throughput path.
 3. ``lsh_topk`` — random-hyperplane LSH bucketing: candidates only from
    matching buckets, then exact re-rank. The 100 TB path: the crossJoin
    disappears, the shuffle is on band hashes.
@@ -22,7 +22,7 @@ import os
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,6 +63,86 @@ def _qnorms(qv: np.ndarray, what: str = "vector") -> np.ndarray:
             "zero embeddings before similarity search"
         )
     return qn
+
+
+def _vectors(batch: "pa.RecordBatch | pa.Table", col: str) -> np.ndarray:
+    """The ``(n, dim)`` matrix of the list column ``col``, reshaped from
+    its flat values with no Python object per row. A null vector or
+    element, or vectors of different lengths, raise ``ValueError``."""
+    arr = batch.column(col)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    flat = arr.flatten()
+    if arr.null_count or flat.null_count:
+        raise ValueError(f"column {col!r} holds a null vector or vector element")
+    lengths = arr.value_lengths().to_numpy()
+    if len(lengths) and (lengths != lengths[0]).any():
+        raise ValueError(
+            f"column {col!r} holds vectors of different lengths "
+            f"({lengths.min()} to {lengths.max()})"
+        )
+    return flat.to_numpy().reshape(len(arr), -1 if len(arr) else 0)
+
+
+def _quantized(M: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``floor(M * QUANT)`` as int64 rows, and their norms."""
+    qv = np.floor(M.astype(np.float64) * QUANT).astype(np.int64)
+    return qv, _qnorms(qv)
+
+
+def _rank_cells(
+    qv: np.ndarray, qn: np.ndarray, Cq: np.ndarray, Cn: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact quantized-cosine ranking of the quantized centroids ``Cq``
+    (norms ``Cn``) for each quantized vector: ``(order, sims)``, where
+    row ``order[i]`` lists centroid indices by descending similarity.
+
+    Integer dots are < 2^53 so the float64 GEMM is exact; norms and the
+    division are IEEE-correctly-rounded from exact ints, so the stable
+    order (ties → lowest centroid index) is bit-identical to the SQL
+    ``ROW_NUMBER() OVER (ORDER BY sim DESC, cid)`` the oracles run."""
+    sims = (qv.astype(np.float64) @ Cq.astype(np.float64).T) / (qn[:, None] * Cn[None, :])
+    return np.argsort(-sims, axis=1, kind="stable"), sims
+
+
+def _list_column(m: np.ndarray) -> pa.ListArray:
+    """A list column holding one row of the 2-D ``m`` per entry."""
+    n, d = m.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * np.int32(d)
+    return pa.ListArray.from_arrays(offsets, m.ravel())
+
+
+def _fan_out(per_row: dict, per_probe: dict) -> dict:
+    """Columns with one row per (probe, input row), probe-major:
+    ``per_row`` arrays repeat for every probe (a 2-D array becomes a list
+    column); ``per_probe`` arrays are ``(n, probes)``, column j for
+    probe j."""
+    p = next(iter(per_probe.values())).shape[1]
+    cols = {
+        name: _list_column(np.tile(v, (p, 1))) if v.ndim == 2 else np.tile(v, p)
+        for name, v in per_row.items()
+    }
+    cols.update((name, v.T.ravel()) for name, v in per_probe.items())
+    return cols
+
+
+def _map_vectors(
+    df: DataFrame, id_col: str, vec_col: str, schema: T.StructType, fn
+) -> DataFrame:
+    """One ``mapInArrow`` stage over ``df``'s ids and vectors:
+    ``fn(ids, M)`` maps a non-empty batch's id array and ``(n, dim)``
+    vector matrix (:func:`_vectors`) to the columns of ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                cols = fn(batch.column(id_col).to_numpy(), _vectors(batch, vec_col))
+                yield pa.RecordBatch.from_pydict(cols, schema=pa_schema)
+
+    return df.select(id_col, vec_col).mapInArrow(run, schema)
 
 
 def int_dot(a: Column, b: Column) -> Column:
@@ -142,28 +222,23 @@ def brute_force_topk_numpy(
         ]
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(ids: np.ndarray, M: np.ndarray) -> dict:
         qids_l, Qn_l = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
-            M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
-            sims = Qn_l @ M.T  # (Q, batch)
-            # k+1, not k: when the query itself lives in this batch its
-            # own sim=1.0 row occupies a partial-top-k slot before the
-            # self-filter below, silently dropping the true k-th neighbor
-            kk = min(k + 1, sims.shape[1])
-            part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            rows = []
-            for qi, qid in enumerate(qids_l):
-                for j in part[qi]:
-                    if ids[j] != qid:
-                        rows.append((qid, int(ids[j]), float(sims[qi, j])))
-            yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
+        M = M.astype(np.float32)
+        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
+        sims = Qn_l @ M.T  # (Q, batch)
+        # k+1, not k: when the query itself lives in this batch its
+        # own sim=1.0 row occupies a partial-top-k slot before the
+        # self-filter below, silently dropping the true k-th neighbor
+        kk = min(k + 1, sims.shape[1])
+        part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
+        query = np.repeat(np.asarray(qids_l, dtype=np.int64), kk)
+        neighbor = ids[part].ravel()
+        keep = neighbor != query
+        sim = np.take_along_axis(sims, part, axis=1).ravel()
+        return {"query_id": query[keep], "neighbor_id": neighbor[keep], "sim": sim[keep]}
 
-    scored = emb.select(id_col, vec_col).mapInPandas(score, schema)
+    scored = _map_vectors(emb, id_col, vec_col, schema, score)
     return _topk_window(scored, k)
 
 
@@ -191,7 +266,7 @@ def _with_lsh_codes(
     planes: np.ndarray | None = None,
 ) -> DataFrame:
     """Add quantized vector, norm and per-table LSH codes via one GEMM per
-    Arrow batch (vectorized Pandas UDF — the hot path stays BLAS).
+    Arrow batch (one ``mapInArrow`` stage — the hot path stays BLAS).
 
     Hyperplanes are derived executor-side from ``(seed, dim)`` — every
     worker seeds the same RNG, so no driver-side ``head()`` to learn the
@@ -209,42 +284,29 @@ def _with_lsh_codes(
         ]
     )
 
-    def compute(batches) -> "Iterator[pd.DataFrame]":
-        P = planes
-        weights = None if P is None else (1 << np.arange(P.shape[1], dtype=np.int64))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if P is not None and M.shape[1] != P.shape[2]:
-                raise ValueError(
-                    f"LSH planes were built for dim {P.shape[2]} but "
-                    f"{vec_col!r} has dim {M.shape[1]}; rebuild the planes "
-                    "(rademacher_planes) for this embedding table"
-                )
-            if P is None:
-                rng = np.random.default_rng(seed)
-                P = rng.normal(size=(n_tables, n_planes, M.shape[1]))
-                weights = 1 << np.arange(P.shape[1], dtype=np.int64)
-            qv = np.floor(M * QUANT).astype(np.int64)
-            qn = _qnorms(qv)
-            rows = {out_id: [], "qvec": [], "qnorm": [], "table": [], "code": []}
-            if planes is not None:
-                # exact: sign of integer plane·qvec dots (|dot| << 2^63)
-                codes = np.einsum("tpd,nd->tnp", planes, qv) > 0
-            else:
-                codes = np.einsum("tpd,nd->tnp", P, M) > 0  # (tables, n, planes)
-            code_vals = (codes * weights).sum(axis=2)  # (tables, n)
-            for t in range(P.shape[0]):
-                rows[out_id].extend(ids.tolist())
-                rows["qvec"].extend(list(qv))
-                rows["qnorm"].extend(qn.tolist())
-                rows["table"].extend([t] * len(ids))
-                rows["code"].extend(code_vals[t].tolist())
-            yield pd.DataFrame(rows)
+    def compute(ids: np.ndarray, M: np.ndarray) -> dict:
+        M = M.astype(np.float64)
+        if planes is not None and M.shape[1] != planes.shape[2]:
+            raise ValueError(
+                f"LSH planes were built for dim {planes.shape[2]} but "
+                f"{vec_col!r} has dim {M.shape[1]}; rebuild the planes "
+                "(rademacher_planes) for this embedding table"
+            )
+        qv, qn = _quantized(M)
+        if planes is None:
+            P = np.random.default_rng(seed).normal(size=(n_tables, n_planes, M.shape[1]))
+            codes = np.einsum("tpd,nd->tnp", P, M) > 0  # (tables, n, planes)
+        else:
+            # exact: sign of integer plane·qvec dots (|dot| << 2^63)
+            codes = np.einsum("tpd,nd->tnp", planes, qv) > 0
+        n_t, _, n_p = codes.shape
+        code_vals = (codes * (1 << np.arange(n_p, dtype=np.int64))).sum(axis=2)  # (tables, n)
+        tables = np.broadcast_to(np.arange(n_t, dtype=np.int32), (len(ids), n_t))
+        return _fan_out(
+            {out_id: ids, "qvec": qv, "qnorm": qn}, {"table": tables, "code": code_vals.T}
+        )
 
-    return df.select(id_col, vec_col).mapInPandas(compute, schema)
+    return _map_vectors(df, id_col, vec_col, schema, compute)
 
 
 def lsh_topk(
@@ -338,11 +400,7 @@ def _kmeans_quantized(
     xn = _qnorms(X)
     C = X[: min(n_centroids, len(X))].copy()
     for _ in range(iters):
-        Cn = _qnorms(C, what="centroid")
-        sims = (X.astype(np.float64) @ C.astype(np.float64).T) / (
-            xn[:, None] * Cn[None, :]
-        )
-        assign = np.argsort(-sims, axis=1, kind="stable")[:, 0]
+        assign = _rank_cells(X, xn, C, _qnorms(C, what="centroid"))[0][:, 0]
         for c in range(len(C)):
             members = X[assign == c]
             if len(members):
@@ -353,12 +411,10 @@ def _kmeans_quantized(
     return C, _qnorms(C, what="centroid")
 
 
-def _with_ivf_cells(df: DataFrame, C: np.ndarray, vec_col: str, id_col: str, out_id: str, n_probe: int) -> DataFrame:
-    """Assign each vector its ``n_probe`` nearest coarse cells (one GEMM
-    per Arrow batch) + quantized vector/norm for exact re-ranking."""
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(C)
-    schema = T.StructType(
+def _cells_schema(out_id: str) -> T.StructType:
+    """One row per (vector, probed cell), carrying the quantized vector
+    and norm for the exact re-rank."""
+    return T.StructType(
         [
             T.StructField(out_id, T.LongType()),
             T.StructField("qvec", T.ArrayType(T.LongType())),
@@ -367,28 +423,23 @@ def _with_ivf_cells(df: DataFrame, C: np.ndarray, vec_col: str, id_col: str, out
         ]
     )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cl = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            qv = np.floor(M * QUANT).astype(np.int64)
-            qn = _qnorms(qv)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
-            sims = Mn @ Cl.T  # (n, centroids)
-            p = min(n_probe, sims.shape[1])
-            cells = np.argpartition(-sims, p - 1, axis=1)[:, :p]  # (n, p)
-            rows = {out_id: [], "qvec": [], "qnorm": [], "cell": []}
-            for j in range(p):
-                rows[out_id].extend(ids.tolist())
-                rows["qvec"].extend(list(qv))
-                rows["qnorm"].extend(qn.tolist())
-                rows["cell"].extend(cells[:, j].tolist())
-            yield pd.DataFrame(rows)
 
-    return df.select(id_col, vec_col).mapInPandas(assign, schema)
+def _with_ivf_cells(df: DataFrame, C: np.ndarray, vec_col: str, id_col: str, out_id: str, n_probe: int) -> DataFrame:
+    """Assign each vector its ``n_probe`` nearest coarse cells (one GEMM
+    per Arrow batch) + quantized vector/norm for exact re-ranking."""
+    spark = df.sparkSession
+    bc = spark.sparkContext.broadcast(C)
+
+    def assign(ids: np.ndarray, M: np.ndarray) -> dict:
+        M = M.astype(np.float64)
+        qv, qn = _quantized(M)
+        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
+        sims = Mn @ bc.value.T  # (n, centroids)
+        p = min(n_probe, sims.shape[1])
+        cells = np.argpartition(-sims, p - 1, axis=1)[:, :p]  # (n, p)
+        return _fan_out({out_id: ids, "qvec": qv, "qnorm": qn}, {"cell": cells})
+
+    return _map_vectors(df, id_col, vec_col, _cells_schema(out_id), assign)
 
 
 def _collect_qcentroids(
@@ -420,45 +471,17 @@ def _with_cells_exact(
     out_id: str,
     n_probe: int,
 ) -> DataFrame:
-    """Exact-arithmetic cell assignment against quantized centroids.
-
-    Integer dots are < 2^53 so the float64 GEMM is exact; norms and the
-    division are IEEE-correctly-rounded from exact ints, so the argmax
-    (stable sort, ties → lowest centroid index) is bit-identical to the
-    SQL ``ROW_NUMBER() OVER (ORDER BY sim DESC, cid)`` the oracle runs."""
+    """Exact-arithmetic cell assignment against quantized centroids: each
+    vector's ``n_probe`` first cells in :func:`_rank_cells` order."""
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((Cq, Cn))
-    schema = T.StructType(
-        [
-            T.StructField(out_id, T.LongType()),
-            T.StructField("qvec", T.ArrayType(T.LongType())),
-            T.StructField("qnorm", T.DoubleType()),
-            T.StructField("cell", T.IntegerType()),
-        ]
-    )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cq_l, Cn_l = bc.value
-        Cf = Cq_l.astype(np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            qv = np.floor(M * QUANT).astype(np.int64)
-            qn = _qnorms(qv)
-            sims = (qv.astype(np.float64) @ Cf.T) / (qn[:, None] * Cn_l[None, :])
-            p = min(n_probe, sims.shape[1])
-            cells = np.argsort(-sims, axis=1, kind="stable")[:, :p]  # ties → low idx
-            rows = {out_id: [], "qvec": [], "qnorm": [], "cell": []}
-            for j in range(p):
-                rows[out_id].extend(ids.tolist())
-                rows["qvec"].extend(list(qv))
-                rows["qnorm"].extend(qn.tolist())
-                rows["cell"].extend(cells[:, j].astype("int32").tolist())
-            yield pd.DataFrame(rows)
+    def assign(ids: np.ndarray, M: np.ndarray) -> dict:
+        qv, qn = _quantized(M)
+        order, _ = _rank_cells(qv, qn, *bc.value)
+        return _fan_out({out_id: ids, "qvec": qv, "qnorm": qn}, {"cell": order[:, :n_probe]})
 
-    return df.select(id_col, vec_col).mapInPandas(assign, schema)
+    return _map_vectors(df, id_col, vec_col, _cells_schema(out_id), assign)
 
 
 def ivf_topk(
@@ -815,49 +838,27 @@ def ivfpq_topk(
         )  # (M, K, d) int64
         bc = spark.sparkContext.broadcast((Cq, Cn, books_q))
 
-        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def encode(ids: np.ndarray, M: np.ndarray) -> dict:
             Cq_l, Cn_l, Bk = bc.value
-            Cf = Cq_l.astype(np.float64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf[id_col].to_numpy()
-                M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                qv = np.floor(M * QUANT).astype(np.int64)
-                qn = _qnorms(qv)
-                sims = (qv.astype(np.float64) @ Cf.T) / (qn[:, None] * Cn_l[None, :])
-                cells = np.argsort(-sims, axis=1, kind="stable")[:, 0].astype(np.int32)
-                codes = np.empty((len(ids), m_sub), dtype=np.int32)
-                for m in range(m_sub):
-                    sub = qv[:, m * d_sub : (m + 1) * d_sub]  # int64
-                    d2 = ((sub[:, None, :] - Bk[m][None, :, :]) ** 2).sum(axis=2)
-                    codes[:, m] = np.argmin(d2, axis=1)  # exact ints, ties → low j
-                yield pd.DataFrame({"neighbor_id": ids, "cell": cells, "code": list(codes)})
+            qv, qn = _quantized(M)
+            codes = np.empty((len(ids), m_sub), dtype=np.int32)
+            for m in range(m_sub):
+                sub = qv[:, m * d_sub : (m + 1) * d_sub]  # int64
+                d2 = ((sub[:, None, :] - Bk[m][None, :, :]) ** 2).sum(axis=2)
+                codes[:, m] = np.argmin(d2, axis=1)  # exact ints, ties → low j
+            cells = _rank_cells(qv, qn, Cq_l, Cn_l)[0][:, 0]
+            return {"neighbor_id": ids, "cell": cells, "code": _list_column(codes)}
 
-        def qside(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def qside(ids: np.ndarray, M: np.ndarray) -> dict:
             Cq_l, Cn_l, Bk = bc.value
-            Cf = Cq_l.astype(np.float64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf[id_col].to_numpy()
-                M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                qv = np.floor(M * QUANT).astype(np.int64)
-                qn = _qnorms(qv)
-                sims = (qv.astype(np.float64) @ Cf.T) / (qn[:, None] * Cn_l[None, :])
-                p = min(n_probe, sims.shape[1])
-                cells = np.argsort(-sims, axis=1, kind="stable")[:, :p]
-                # integer ADC tables: lut[m*k_sub + j] = q_sub_m · book[m][j]
-                lut = np.concatenate(
-                    [qv[:, m * d_sub : (m + 1) * d_sub] @ Bk[m].T for m in range(m_sub)],
-                    axis=1,
-                )  # (n, m_sub*k_sub) int64
-                rows = {"query_id": [], "cell": [], "lut": []}
-                for j in range(p):
-                    rows["query_id"].extend(ids.tolist())
-                    rows["cell"].extend(cells[:, j].astype("int32").tolist())
-                    rows["lut"].extend(list(lut))
-                yield pd.DataFrame(rows)
+            qv, qn = _quantized(M)
+            cells = _rank_cells(qv, qn, Cq_l, Cn_l)[0][:, :n_probe]
+            # integer ADC tables: lut[m*k_sub + j] = q_sub_m · book[m][j]
+            lut = np.concatenate(
+                [qv[:, m * d_sub : (m + 1) * d_sub] @ Bk[m].T for m in range(m_sub)],
+                axis=1,
+            )  # (n, m_sub*k_sub) int64
+            return _fan_out({"query_id": ids, "lut": lut}, {"cell": cells})
 
         adc_init = "CAST(0 AS BIGINT)"
     else:
@@ -879,52 +880,37 @@ def ivfpq_topk(
         bc = spark.sparkContext.broadcast((C, books))
         d_sub = books.shape[2]
 
-        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def encode(ids: np.ndarray, M: np.ndarray) -> dict:
             Cl, Bk = bc.value
-            # argmin ||x-c||² == argmax (x·c - ||c||²/2), one GEMM per subspace
-            half = [(Bk[m] ** 2).sum(axis=1) / 2.0 for m in range(m_sub)]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf[id_col].to_numpy()
-                M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
-                cells = np.argmax(Mn @ Cl.T, axis=1).astype(np.int32)
-                codes = np.empty((len(ids), m_sub), dtype=np.int32)
-                for m in range(m_sub):
-                    sub = M[:, m * d_sub : (m + 1) * d_sub]
-                    codes[:, m] = np.argmax(sub @ Bk[m].T - half[m][None, :], axis=1)
-                yield pd.DataFrame(
-                    {"neighbor_id": ids, "cell": cells, "code": list(codes)}
-                )
+            M = M.astype(np.float64)
+            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
+            cells = np.argmax(Mn @ Cl.T, axis=1)
+            codes = np.empty((len(ids), m_sub), dtype=np.int32)
+            for m in range(m_sub):
+                # argmin ||x-c||² == argmax (x·c - ||c||²/2), one GEMM per subspace
+                sub = M[:, m * d_sub : (m + 1) * d_sub]
+                half = (Bk[m] ** 2).sum(axis=1) / 2.0
+                codes[:, m] = np.argmax(sub @ Bk[m].T - half[None, :], axis=1)
+            return {"neighbor_id": ids, "cell": cells, "code": _list_column(codes)}
 
-        def qside(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def qside(ids: np.ndarray, M: np.ndarray) -> dict:
             Cl, Bk = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf[id_col].to_numpy()
-                M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
-                sims = Mn @ Cl.T
-                p = min(n_probe, sims.shape[1])
-                cells = np.argpartition(-sims, p - 1, axis=1)[:, :p]
-                # ADC tables: lut[m*k_sub + j] = q_sub_m · book[m][j]
-                lut = np.concatenate(
-                    [M[:, m * d_sub : (m + 1) * d_sub] @ Bk[m].T for m in range(m_sub)],
-                    axis=1,
-                )  # (n, m_sub*k_sub)
-                rows = {"query_id": [], "cell": [], "lut": []}
-                for j in range(p):
-                    rows["query_id"].extend(ids.tolist())
-                    rows["cell"].extend(cells[:, j].astype("int32").tolist())
-                    rows["lut"].extend(list(lut))
-                yield pd.DataFrame(rows)
+            M = M.astype(np.float64)
+            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-30)
+            sims = Mn @ Cl.T
+            p = min(n_probe, sims.shape[1])
+            cells = np.argpartition(-sims, p - 1, axis=1)[:, :p]
+            # ADC tables: lut[m*k_sub + j] = q_sub_m · book[m][j]
+            lut = np.concatenate(
+                [M[:, m * d_sub : (m + 1) * d_sub] @ Bk[m].T for m in range(m_sub)],
+                axis=1,
+            )  # (n, m_sub*k_sub)
+            return _fan_out({"query_id": ids, "lut": lut}, {"cell": cells})
 
         adc_init = "0D"
 
-    base = emb.select(id_col, vec_col).mapInPandas(encode, enc_schema)
-    qs = queries.select(id_col, vec_col).mapInPandas(qside, q_schema)
+    base = _map_vectors(emb, id_col, vec_col, enc_schema, encode)
+    qs = _map_vectors(queries, id_col, vec_col, q_schema, qside)
     adc = (
         base.join(qs, on="cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
@@ -1033,15 +1019,20 @@ def neardup_pairs_blocked(
         ]
     )
 
-    def gemm_block_pair(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(lpdf) or not len(rpdf):
-            return pd.DataFrame(columns=["vec_a", "vec_b", "sim"])
-        ids_a = lpdf["id"].to_numpy()
-        ids_b = rpdf["id"].to_numpy()
-        A = np.stack(lpdf["qvec"].to_numpy()).astype(np.float64)
-        B = np.stack(rpdf["qvec"].to_numpy()).astype(np.float64)
-        sims = (A @ B.T) / np.outer(lpdf["qnorm"].to_numpy(), rpdf["qnorm"].to_numpy())
-        if key[0] == key[1]:
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(out_schema)
+
+    def gemm_block_pair(key: tuple, left: pa.Table, right: pa.Table) -> pa.Table:
+        if not left.num_rows or not right.num_rows:
+            return pa_schema.empty_table()
+        ids_a = left.column("id").to_numpy()
+        ids_b = right.column("id").to_numpy()
+        A = _vectors(left, "qvec").astype(np.float64)
+        B = _vectors(right, "qvec").astype(np.float64)
+        norms = np.outer(left.column("qnorm").to_numpy(), right.column("qnorm").to_numpy())
+        sims = (A @ B.T) / norms
+        if key[0].as_py() == key[1].as_py():
             # diagonal block holds both orders of every pair — keep one
             ia, ib = np.nonzero((sims >= threshold) & (ids_a[:, None] < ids_b[None, :]))
             lo, hi = ids_a[ia], ids_b[ib]
@@ -1051,12 +1042,14 @@ def neardup_pairs_blocked(
             ia, ib = np.nonzero(sims >= threshold)
             lo = np.minimum(ids_a[ia], ids_b[ib])
             hi = np.maximum(ids_a[ia], ids_b[ib])
-        return pd.DataFrame({"vec_a": lo, "vec_b": hi, "sim": sims[ia, ib]})
+        return pa.Table.from_pydict(
+            {"vec_a": lo, "vec_b": hi, "sim": sims[ia, ib]}, schema=pa_schema
+        )
 
     return (
         left.groupBy("bi", "bj")
         .cogroup(right.groupBy("bi", "bj"))
-        .applyInPandas(gemm_block_pair, out_schema)
+        .applyInArrow(gemm_block_pair, out_schema)
     )
 
 
@@ -1153,29 +1146,19 @@ def semantic_dedup(
         ]
     )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Cq_l, Cn_l = bc.value
-        Cf = Cq_l.astype(np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            qv = np.floor(M * QUANT).astype(np.int64)
-            qn = _qnorms(qv)
-            sims = (qv.astype(np.float64) @ Cf.T) / (qn[:, None] * Cn_l[None, :])
-            best = np.argsort(-sims, axis=1, kind="stable")[:, 0]  # ties → low cid
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "qvec": list(qv),
-                    "qnorm": qn,
-                    "cell": best.astype(np.int32),
-                    "centroid_sim": sims[np.arange(len(ids)), best],
-                }
-            )
+    def assign(ids: np.ndarray, M: np.ndarray) -> dict:
+        qv, qn = _quantized(M)
+        order, sims = _rank_cells(qv, qn, *bc.value)
+        best = order[:, 0]
+        return {
+            "vec_id": ids,
+            "qvec": _list_column(qv),
+            "qnorm": qn,
+            "cell": best,
+            "centroid_sim": sims[np.arange(len(ids)), best],
+        }
 
-    assigned = emb.select(id_col, vec_col).mapInPandas(assign, assign_schema)
+    assigned = _map_vectors(emb, id_col, vec_col, assign_schema, assign)
 
     out_schema = T.StructType(
         [
@@ -1185,16 +1168,14 @@ def semantic_dedup(
         ]
     )
 
-    def keep_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
+    def keep_cluster(members: pa.Table) -> pa.Table:
         # paper order: ascending centroid similarity, ties by id
-        order = np.lexsort((pdf["vec_id"].to_numpy(), pdf["centroid_sim"].to_numpy()))
-        pdf = pdf.iloc[order]
-        Q = np.stack(pdf["qvec"].to_numpy()).astype(np.float64)
-        n = pdf["qnorm"].to_numpy()
-        dropped = _triangular_drops(Q, n, eps, block_rows)
-        return pdf.loc[~dropped, ["vec_id", "cell", "centroid_sim"]]
+        members = members.sort_by([("centroid_sim", "ascending"), ("vec_id", "ascending")])
+        Q = _vectors(members, "qvec").astype(np.float64)
+        dropped = _triangular_drops(Q, members.column("qnorm").to_numpy(), eps, block_rows)
+        return members.filter(pa.array(~dropped)).select(["vec_id", "cell", "centroid_sim"])
 
-    return assigned.groupBy("cell").applyInPandas(keep_cluster, out_schema)
+    return assigned.groupBy("cell").applyInArrow(keep_cluster, out_schema)
 # The gate variants pin every random input to a deterministic, engine-
 # portable construction (±1 planes inlined into the SQL; centroids /
 # codebooks = quantized sub-slices of the 32 lowest-id vectors), so the

@@ -2,7 +2,7 @@
 
 Local testing runs ``local[N]``; the configuration is chosen so the same
 logical plans scale to a multi-executor cluster: AQE on (runtime partition
-coalescing + skew-join splitting), Arrow enabled for the pandas UDF surface,
+coalescing + skew-join splitting), Arrow enabled for the Python UDF surface,
 and shuffle partition counts sized for the test scale factor while AQE
 re-plans for larger inputs.
 

@@ -4,7 +4,7 @@ AQE's skew-join handling (on by default in ``session.get_spark``) splits
 oversized shuffle partitions for *sort-merge joins*, which covers most
 cases. Salting remains necessary where AQE can't reach: broadcast-
 ineligible aggregations over power-law keys, and joins through operators
-AQE won't rewrite (e.g. ``applyInPandas`` groupings). These helpers make
+AQE won't rewrite (e.g. grouped ``applyInArrow``). These helpers make
 the pattern explicit and testable.
 
 At 100 TB the rule: salt only the keys that need it. ``salted_join``
@@ -65,7 +65,7 @@ def salted_join(
 def salted_count(df: DataFrame, keys: Sequence[str], salt: int = 16) -> DataFrame:
     """Two-phase count for power-law keys: partial count per (key, salt)
     — bounded partition size — then the tiny per-key rollup. Equivalent to
-    ``df.groupBy(keys).count()``; use when a custom (e.g. applyInPandas)
+    ``df.groupBy(keys).count()``; use when a custom (e.g. applyInArrow)
     aggregation can't rely on Spark's built-in partial aggregation."""
     partial = add_salt(df, salt).groupBy(*keys, SALT_COL).agg(F.count(F.lit(1)).alias("__c"))
     return partial.groupBy(*keys).agg(F.sum("__c").alias("count"))

@@ -23,7 +23,7 @@ and export legs need, byte-identical for identical inputs (idempotent
 task retries, driver hash gates).
 
 Scale shape: both directions are row-local (one asset = one cell in a
-binary column, processed inside Arrow-batched ``mapInPandas``) — no
+binary column, processed inside a ``mapInArrow`` stage) — no
 shuffles, no driver participation; the 100 TB story is the asset
 table's partitioning, not this codec.
 """

@@ -21,7 +21,6 @@ Spark-first re-expression of the reference's Zarr pipeline stages
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
 from typing import Iterator, Mapping, Sequence
 

@@ -38,7 +38,6 @@ from __future__ import annotations
 import gzip as _gzip
 import json
 import math
-import os
 import zlib
 from dataclasses import dataclass, replace as _dc_replace
 from typing import Any, Iterator, Mapping, Sequence
@@ -1080,10 +1079,6 @@ def write_shard(meta: ZArray, shard_idx: tuple[int, ...], values: np.ndarray) ->
     payload = b"".join(blobs) + index_bytes
     _put(_join(meta.path, _chunk_fname(meta, shard_idx)), payload)
     return len(payload)
-
-
-def _read_shard_file(meta: ZArray, shard_idx: tuple[int, ...]) -> bytes | None:
-    return _get(_join(meta.path, _chunk_fname(meta, shard_idx)))
 
 
 def _read_shard_index(
