@@ -1,52 +1,36 @@
-"""Dump .explain("formatted") for named registry queries to plans/<tag>/.
+"""Write tests/plan_shapes.json, the plan-shape table that
+tests/test_plan_hygiene.py checks every batch gate's plan against.
 
 Usage:
-  python scripts/explain_dump.py <tag> <suffix> q1,q2,...   # e.g. r15 before
+  python scripts/explain_dump.py
 
-Writes plans/<tag>/<query>_<suffix>.txt for each query. Query construction
-may run eager fixture builds (memoized stores, bounded metadata collects) —
-that is part of the declared query contract and is fine here; the dump
-itself never executes the returned plan.
+Builds each batch gate's physical plan as the test does (the test session,
+the test data, ``_collect_lazy_plans``) and counts its nodes with the
+test's ``plan_shape``. Query construction may run eager fixture builds;
+the plans themselves are never executed. Review the diff of the table: it
+is the record of which gates gained or lost an exchange, a Python node or
+a cached input.
 """
 
 from __future__ import annotations
 
-import os
+import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tests"))
 
-from xarray_beam_spark import registry
-from xarray_beam_spark.session import get_spark
-
-
-def explain_str(df) -> str:
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
+import conftest  # noqa: E402
+import test_plan_hygiene as hygiene  # noqa: E402
 
 
 def main() -> None:
-    tag, suffix = sys.argv[1], sys.argv[2]
-    names = [n for n in sys.argv[3].split(",") if n]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
-    )
-    os.makedirs(outdir, exist_ok=True)
-    spark = get_spark("xbs-explain")
+    spark = conftest.build_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    qs = registry.queries()
-    for name in names:
-        spark.sparkContext.setJobDescription(f"explain:{name}")
-        df = qs[name](spark, sf_dir)
-        if not hasattr(df, "_jdf"):
-            print(f"# {name}: not a DataFrame, skipped", file=sys.stderr)
-            continue
-        path = os.path.join(outdir, f"{name}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(explain_str(df))
-        print(f"wrote {path}", file=sys.stderr)
+    _, shapes = hygiene._collect_lazy_plans(spark, conftest.SF_DIR)
+    rows = ",\n".join(f"  {json.dumps(name)}: {json.dumps(shape)}" for name, shape in shapes.items())
+    hygiene.PLAN_SHAPES.write_text("{\n" + rows + "\n}\n")
+    print(f"wrote {len(shapes)} gates to {hygiene.PLAN_SHAPES}", file=sys.stderr)
 
 
 if __name__ == "__main__":

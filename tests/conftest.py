@@ -12,10 +12,13 @@ from xarray_beam_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def build_spark():
+    return get_spark("xbs-tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("xbs-tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
-    yield s
+    yield build_spark()
 
 
 @pytest.fixture(scope="session")

@@ -254,6 +254,22 @@ def test_table_bridge_roundtrip(spark):
     )
 
 
+@pytest.mark.parametrize("dtype", [np.uint8, np.uint16, np.uint32])
+def test_table_bridge_keeps_unsigned_maxima(spark, dtype):
+    vals = np.array([0, 1, np.iinfo(dtype).max - 1, np.iinfo(dtype).max], dtype=dtype)
+    src = NDDataset({"v": (("x",), vals)}, {"x": vals.copy()})
+    table = Dataset.from_numpy(spark, src, chunks={"x": 2}).to_table()
+    assert sorted((r.x, r.v) for r in table.collect()) == [(int(v), int(v)) for v in vals]
+    back = Dataset.from_table(table, dims=["x"], coords={"x": vals}, var_cols=["v"], chunks={"x": 3})
+    np.testing.assert_array_equal(back.collect().data_vars["v"].values, vals)
+
+
+def test_to_table_refuses_uint64_when_building_the_schema(spark):
+    src = NDDataset({"v": (("x",), np.arange(4, dtype=np.uint64))}, {"x": np.arange(4)})
+    with pytest.raises(TypeError, match="uint64"):
+        Dataset.from_numpy(spark, src).to_table()
+
+
 def test_tail(spark, era5):
     d = Dataset.from_numpy(spark, era5, chunks={"time": 10})
     got = d.tail(time=7).collect()

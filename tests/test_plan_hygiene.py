@@ -6,16 +6,22 @@ except where a 1-row scalar broadcast is the intended plan (those are
 whitelisted explicitly). This is the regression net for the scale rule
 "joins never go quadratic": a future edit that knocks a join off its
 equi-join keys fails here, not at 100 TB.
+
+The same plans are counted into the committed plan-shape table
+(tests/plan_shapes.json): a gate that gains or loses an exchange, a
+Python node or a cached input fails until the table is rewritten.
 """
 
 from __future__ import annotations
 
+import json
 import re
+from pathlib import Path
 
 import numpy as np
 import pytest
 
-from xarray_beam_spark import registry
+from xarray_beam_spark import registry, session
 
 # Queries whose plan INTENTIONALLY contains a broadcast nested-loop join
 # against a 1-row (scalar aggregate) build side — constant-size, benign.
@@ -41,23 +47,28 @@ _PLAN_CACHE: dict = {}
 
 
 def _collect_lazy_plans(spark, sf_dir):
+    """Per batch gate, its printed physical plan and its ``plan_shape``."""
     # building + physically planning all 90+ registered queries is the
-    # dominant cost of this module; both tests use the identical map
+    # dominant cost of this module; every test uses the identical map.
+    # Ephemeral persists of earlier runs are released first: a gate that
+    # persists a frame equal to one still cached would read that cache,
+    # already computed, and plan around its known partitioning.
     key = (id(spark), sf_dir)
     if key in _PLAN_CACHE:
         return _PLAN_CACHE[key]
-    out = {}
+    session.reset()
+    plans, shapes = {}, {}
     for name, fn in sorted(registry.queries().items()):
         if name.startswith(SKIP_PREFIXES):
             continue
-        df = fn(spark, sf_dir)
-        out[name] = df._jdf.queryExecution().executedPlan().toString()
-    _PLAN_CACHE[key] = out
-    return out
+        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        plans[name], shapes[name] = plan.toString(), plan_shape(plan)
+    _PLAN_CACHE[key] = plans, shapes
+    return plans, shapes
 
 
 def test_no_unintended_cartesian_products(spark, sf_dir):
-    plans = _collect_lazy_plans(spark, sf_dir)
+    plans, _ = _collect_lazy_plans(spark, sf_dir)
     assert len(plans) > 90
     bad = []
     for name, plan in plans.items():
@@ -153,7 +164,7 @@ def _plan_nodes(tree: str) -> list[tuple[int, str]]:
     """(depth column, node name) per line of a printed plan tree."""
     nodes = []
     for line in tree.splitlines():
-        m = re.match(r"([ :+\-|]*)(?:\* )?(\w+)", line)
+        m = re.match(r"([ :+\-|]*)(?:\*(?:\(\d+\))? )?(\w+)", line)
         if m:
             nodes.append((len(m.group(1)), m.group(2)))
     return nodes
@@ -202,7 +213,7 @@ def test_stacked_map_detector():
 
 
 def test_no_xb_gate_stacks_python_chunk_maps(spark, sf_dir):
-    plans = _collect_lazy_plans(spark, sf_dir)
+    plans, _ = _collect_lazy_plans(spark, sf_dir)
     gates = {name: plan for name, plan in plans.items() if name.startswith("xb_")}
     assert len(gates) > 50
     bad = {name: pairs for name, plan in gates.items() if (pairs := _stacked_python_maps(plan))}
@@ -215,12 +226,71 @@ PANDAS_UDF_NODES = {"MapInPandas", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPa
 
 
 def test_no_gate_plan_runs_a_pandas_udf(spark, sf_dir):
-    plans = _collect_lazy_plans(spark, sf_dir)
+    plans, _ = _collect_lazy_plans(spark, sf_dir)
     bad = sorted(
         name for name, plan in plans.items()
         if PANDAS_UDF_NODES & {node for _, node in _plan_nodes(plan)}
     )
     assert not bad, f"gates running a pandas UDF: {bad}"
+
+
+# The committed plan-shape table: per batch gate, its plan_shape. Only
+# scripts/explain_dump.py writes it.
+PLAN_SHAPES = Path(__file__).with_name("plan_shapes.json")
+
+
+def plan_shape(plan) -> dict[str, int]:
+    """Shuffle Exchange, BroadcastExchange, Python (map, grouped map,
+    cogrouped map and EvalPython) and InMemoryTableScan node counts of a
+    physical plan (a JVM SparkPlan) and its subqueries. A cached input
+    counts as one InMemoryTableScan; the plan that filled it is not
+    counted, whether or not it has run."""
+    shape = dict.fromkeys(("Exchange", "BroadcastExchange", "Python", "InMemoryTableScan"), 0)
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        name = node.nodeName()
+        if name in PYTHON_NODES or name.startswith("FlatMapCoGroupsIn") or name.endswith("EvalPython"):
+            shape["Python"] += 1
+        elif name in shape:
+            shape[name] += 1
+        if name != "InMemoryTableScan":  # its inner child is the cached plan
+            for nodes in (node.children(), node.innerChildren()):  # inner: subqueries
+                stack.extend(nodes.apply(i) for i in range(nodes.size()))
+    return shape
+
+
+def test_plan_shape_counts_the_plan_above_its_caches(spark):
+    from pyspark.sql import functions as F
+
+    cached = spark.range(100).repartition(3).persist()
+    cached.count()  # a computed cache; its exchange is not counted
+    df = (
+        cached.mapInArrow(lambda batches: batches, "id long")
+        .join(F.broadcast(spark.range(5)), "id")
+        .repartition(2)
+    )
+    shape = plan_shape(df._jdf.queryExecution().executedPlan())
+    cached.unpersist()
+    assert shape == {"Exchange": 1, "BroadcastExchange": 1, "Python": 1, "InMemoryTableScan": 1}
+    scalar = spark.sql("SELECT id FROM range(10) WHERE id > (SELECT max(id) FROM range(3))")
+    assert plan_shape(scalar._jdf.queryExecution().executedPlan())["Exchange"] == 1  # the subquery's
+
+
+def test_gate_plan_shapes_match_the_committed_table(spark, sf_dir):
+    _, got = _collect_lazy_plans(spark, sf_dir)
+    want = json.loads(PLAN_SHAPES.read_text())
+    diff = [
+        f"{name}: table {want.get(name)} != plan {got.get(name)}"
+        for name in sorted(got.keys() | want.keys())
+        if got.get(name) != want.get(name)
+    ]
+    assert not diff, (
+        "gate plan shapes differ from tests/plan_shapes.json; if the change is "
+        "intended, rewrite it with `python scripts/explain_dump.py`:\n" + "\n".join(diff)
+    )
 
 
 def _assert_one_python_pass_per_stage(spark) -> None:
@@ -280,7 +350,7 @@ def test_reduction_to_table_runs_one_python_pass_per_stage(spark, sf_dir):
 def test_scalar_broadcast_whitelist_is_tight(spark, sf_dir):
     """Every whitelisted query must actually need its scalar broadcast —
     prune the whitelist when a plan improves."""
-    plans = _collect_lazy_plans(spark, sf_dir)
+    plans, _ = _collect_lazy_plans(spark, sf_dir)
     stale = [
         name
         for name in SCALAR_BROADCAST_OK

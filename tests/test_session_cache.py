@@ -87,6 +87,7 @@ _RESTART = """
 import gc, json, sys, weakref
 from xarray_beam_spark import grid_queries as gq
 from xarray_beam_spark.session import get_spark
+from xarray_beam_spark.streaming.events_stream import _result_dir
 
 sf = sys.argv[1]
 
@@ -97,6 +98,7 @@ def rows(spark):
 spark = get_spark("xbs-restart-a", cpus=2)
 spark.sparkContext.setLogLevel("ERROR")
 before = rows(spark)
+result_dir = _result_dir(spark, "xbs_restart_probe_")
 old = weakref.ref(spark.sparkContext)
 spark.stop()
 spark = get_spark("xbs-restart-b", cpus=2)
@@ -105,7 +107,7 @@ gc.collect()
 alive = old() is not None
 after = rows(spark)
 spark.stop()
-print(json.dumps({"alive": alive, "equal": before == after, "rows": len(before)}))
+print(json.dumps({"alive": alive, "equal": before == after, "rows": len(before), "dir": result_dir}))
 """
 
 
@@ -120,6 +122,8 @@ def test_restarted_context_starts_empty_and_frees_the_old_one(sf_dir):
     assert out["rows"] > 0
     assert out["equal"]
     assert not out["alive"]
+    # made before the restart, released with the collected context
+    assert os.path.isabs(out["dir"]) and not os.path.exists(out["dir"])
 
 
 def test_snapshot_reports_cached_bytes(spark, sf_dir):

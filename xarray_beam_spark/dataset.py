@@ -507,6 +507,8 @@ class Dataset:
         # of driver time each. Float axes keep the join path (NaN/-0.0
         # equality must follow join semantics), as do axes too large for
         # a comfortable literal array.
+        from xarray_beam_spark.sources.spark_datasource import _np_to_spark
+
         _INLINE_COORD_MAX = 4096
         out = table
 
@@ -517,7 +519,7 @@ class Dataset:
         for d in dims:
             vals = np.asarray(coords[d])
             if _inline_ok(vals):
-                spark_t = _np_to_spark_type(vals.dtype)
+                spark_t = _np_to_spark(vals.dtype)
                 arr = _coord_literal_array(spark, vals, spark_t)
                 # array_position: 1-based; 0 = absent, NULL = NULL value —
                 # both must drop, exactly like the inner join they replace
@@ -3558,9 +3560,10 @@ def _default_parallelism(spark: SparkSession) -> int:
 
 
 def _spark_to_arrow_type(dt: T.DataType):
-    """Arrow type for a Spark SQL type (the subset _np_to_spark_type
-    emits) — pinned explicitly so mapInArrow batches match the declared
-    schema bit-for-bit regardless of the source numpy dtype."""
+    """Arrow type for a Spark SQL type (the subset
+    ``spark_datasource._np_to_spark`` emits) — pinned explicitly so mapInArrow
+    batches match the declared schema bit-for-bit regardless of the source
+    numpy dtype."""
     import pyarrow as pa
 
     mapping = {
@@ -3569,6 +3572,7 @@ def _spark_to_arrow_type(dt: T.DataType):
         T.LongType: pa.int64(),
         T.IntegerType: pa.int32(),
         T.ShortType: pa.int16(),
+        T.ByteType: pa.int8(),
         T.BooleanType: pa.bool_(),
         T.StringType: pa.string(),
         T.TimestampNTZType: pa.timestamp("us"),
@@ -3579,24 +3583,11 @@ def _spark_to_arrow_type(dt: T.DataType):
         raise TypeError(f"no arrow mapping for Spark type {dt}") from None
 
 
-def _np_to_spark_type(dt: np.dtype) -> T.DataType:
-    kind = dt.kind
-    if kind == "f":
-        return T.DoubleType() if dt.itemsize == 8 else T.FloatType()
-    if kind in "iu":
-        return T.LongType() if dt.itemsize >= 8 else T.IntegerType() if dt.itemsize >= 4 else T.ShortType()
-    if kind == "b":
-        return T.BooleanType()
-    if kind == "M":
-        return T.TimestampNTZType()
-    if kind in "US":
-        return T.StringType()
-    raise TypeError(f"unsupported dtype {dt}")
-
-
 def table_schema(tmpl: Template, dims: Sequence[str]) -> T.StructType:
     """Long-format schema for :meth:`Dataset.to_table`: one column per
     dim coordinate plus one nullable column per variable."""
+    from xarray_beam_spark.sources.spark_datasource import _np_to_spark
+
     fields: list[T.StructField] = []
     for d in dims:
         cv = tmpl.coords.get(d)
@@ -3604,11 +3595,11 @@ def table_schema(tmpl: Template, dims: Sequence[str]) -> T.StructType:
             fields.append(T.StructField(d, T.LongType(), False))
         else:
             fields.append(
-                T.StructField(d, _np_to_spark_type(cv.values.dtype), False)
+                T.StructField(d, _np_to_spark(cv.values.dtype), False)
             )
     for v in tmpl.var_names:
         fields.append(
-            T.StructField(v, _np_to_spark_type(np.dtype(tmpl.var_meta[v][1])), True)
+            T.StructField(v, _np_to_spark(np.dtype(tmpl.var_meta[v][1])), True)
         )
     return T.StructType(fields)
 

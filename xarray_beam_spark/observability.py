@@ -2,15 +2,23 @@
 
 Spark accumulators play the role of Beam's ``Metrics.counter``: executors
 increment inside Arrow UDFs, values surface on the driver after each
-action. One registry per SparkContext; counters are created lazily and
-are cheap no-ops when never read.
+action. One registry per SparkContext; ``get_counters`` creates every
+``KNOWN`` counter on first use.
+
+The counts are at least once. Every counter (``read.*``, ``write.*``,
+``map_blocks.*``, ``split.pieces``, ``consolidate.groups``) is
+incremented inside a transformation, and Spark may apply a task's update
+there more than once: when the task or its stage runs again (a stage
+recomputed after lost shuffle output, speculation) and when a second
+action re-evaluates an input that is not persisted. A count is exact
+only for a run in which each task ran once.
 
 Usage::
 
     from xarray_beam_spark import observability as obs
     counters = obs.get_counters(spark)
     ds.to_zarr(...)           # engine stages increment as they run
-    print(counters.snapshot())  # {'zarr.chunks_written': 42, ...}
+    print(counters.snapshot())  # {'write.chunks': 42, 'write.bytes': ..., ...}
 """
 
 from __future__ import annotations

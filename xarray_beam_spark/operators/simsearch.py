@@ -531,19 +531,7 @@ def ivf_topk(
             .withColumnRenamed("qnorm", "q_qnorm")
         )
     else:
-        # deterministic sample: LIMIT without ORDER BY is engine/
-        # partitioning-dependent, which would make the "seeded" k-means
-        # train on a different sample per plan — order by id first (the
-        # quantized path already does)
-        sample = np.stack(
-            [
-                r[1]
-                for r in emb.select(id_col, vec_col)
-                .orderBy(id_col)
-                .limit(train_limit)
-                .collect()
-            ]
-        ).astype(np.float64)
+        sample = _train_sample(emb, id_col, vec_col, train_limit)
         C = _kmeans(sample, n_centroids, seed=seed)
         base = _with_ivf_cells(emb, C, vec_col, id_col, "neighbor_id", n_probe=1)
         qs = (
@@ -552,6 +540,17 @@ def ivf_topk(
             .withColumnRenamed("qnorm", "q_qnorm")
         )
     return _rank_cell_candidates(base, qs, k)
+
+
+def _train_sample(emb: DataFrame, id_col: str, vec_col: str, train_limit: int) -> np.ndarray:
+    """The first ``train_limit`` vectors by id, as float64: the k-means
+    training sample."""
+    # deterministic sample: LIMIT without ORDER BY is engine/
+    # partitioning-dependent, which would make the "seeded" k-means
+    # train on a different sample per plan — order by id first (the
+    # quantized path already does)
+    rows = emb.select(id_col, vec_col).orderBy(id_col).limit(train_limit).collect()
+    return np.stack([r[1] for r in rows]).astype(np.float64)
 
 
 def _rank_cell_candidates(base: DataFrame, qs: DataFrame, k: int) -> DataFrame:
@@ -617,19 +616,7 @@ def build_ivf_index(
             "neighbor_id", n_probe=1,
         )
     else:
-        # deterministic sample: LIMIT without ORDER BY is engine/
-        # partitioning-dependent, which would make the "seeded" k-means
-        # train on a different sample per plan — order by id first (the
-        # quantized path already does)
-        sample = np.stack(
-            [
-                r[1]
-                for r in emb.select(id_col, vec_col)
-                .orderBy(id_col)
-                .limit(train_limit)
-                .collect()
-            ]
-        ).astype(np.float64)
+        sample = _train_sample(emb, id_col, vec_col, train_limit)
         C = _kmeans(sample, n_centroids, seed=seed)
         cent = spark.createDataFrame(
             [(i, [float(x) for x in C[i]]) for i in range(len(C))],
@@ -862,19 +849,7 @@ def ivfpq_topk(
 
         adc_init = "CAST(0 AS BIGINT)"
     else:
-        # deterministic sample: LIMIT without ORDER BY is engine/
-        # partitioning-dependent, which would make the "seeded" k-means
-        # train on a different sample per plan — order by id first (the
-        # quantized path already does)
-        sample = np.stack(
-            [
-                r[1]
-                for r in emb.select(id_col, vec_col)
-                .orderBy(id_col)
-                .limit(train_limit)
-                .collect()
-            ]
-        ).astype(np.float64)
+        sample = _train_sample(emb, id_col, vec_col, train_limit)
         C = _kmeans(sample, n_centroids, seed=seed)
         books = _pq_train(sample, m_sub, k_sub, seed=seed + 101)  # (M, K, d)
         bc = spark.sparkContext.broadcast((C, books))

@@ -5,401 +5,41 @@
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Latest round each query earned a green driver-hash CORRECTNESS row
-# (zero failures ever). The driver certifies ~50 queries per round in
-# registry order, so ordering is stalest-evidence-first: never-certified
-# queries lead, then rows by ascending last-green round. Queries absent
-# from this map sort first.
-#
-# Rotation arithmetic: with ~164 registered queries and ~50 slots per
-# round, a full re-certification cycle takes ceil(164/50) = 4 rounds —
-# the stalest-first order GUARANTEES no key's evidence is ever older
-# than that bound (and most sit at ≤3), with new gates capped at ~3 per
-# round so the bound holds. That is the designed trade: more certified
-# surface per round versus a shorter staleness bound; pytest covers
-# every query every round regardless.
-_LAST_CERTIFIED_ROUND: dict[str, int] = {
-    # round 1 (stalest)
-    **dict.fromkeys([
-        "xb_grid_climatology_dow", "xb_grid_coarsen", "xb_grid_getitem",
-        "xb_grid_head", "xb_grid_max_day", "xb_grid_mean_hour",
-        "xb_grid_median_hour", "xb_grid_resample_week", "xb_grid_roundtrip",
-        "xb_grid_split_consolidate", "xb_grid_splitvars_roundtrip",
-        "xb_grid_std_day", "xb_grid_sum_hour", "xb_grid_tail",
-        "xb_grid_transpose", "xb_grid_where", "xb_grid_zip_ratio",
-        "xb_map_blocks_affine", "xb_zarr_roundtrip",
-        "xb_zarr_v3_sharded_roundtrip",
-    ], 1),
-    # round 2
-    **dict.fromkeys([
-        "churned_customers_except", "dedup_duplicate_clusters", "dedup_exact",
-        "dedup_levenshtein_twins", "dedup_minhash_lsh", "dedup_simhash",
-        "doc_fingerprint", "doc_rolling_hash", "doc_vocab_topk",
-        "events_cube_counts", "events_daily_rollup", "events_json_props",
-        "events_lag_rank", "events_median_value_by_type",
-        "events_percent_rank", "events_pivot_types",
-        "events_range_window_hour", "events_rollup_totals",
-        "events_running_totals", "events_sessionize_batch",
-        "ngram_jaccard_adjacent", "q10_returned_items", "q11_important_stock",
-        "q12_priority_lines", "q13_customer_distribution", "q14_promo_effect",
-        "q15_top_supplier", "q16_supplier_diversity", "q17_small_quantity",
-        "q18_large_volume", "q19_discounted_revenue", "q20_excess_suppliers",
-        "q21_sole_returned_supplier", "q22_sales_opportunity",
-        "q2_min_cost_supplier", "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "q6_revenue_change", "q7_volume_shipping",
-        "q8_market_share", "q9_nation_profit", "text_lang_rollup",
-        "text_langid", "text_normalize_scrub", "text_quality_stats",
-        "text_repetition_signals", "text_token_counts",
-        "topk_parts_by_revenue",
-    ], 2),
-    # round 3 (freshest)
-    **dict.fromkeys([
-        "ann_brute_force_topk", "corpus_clean_pipeline", "corpus_decontaminate",
-        "corpus_hash_split", "corpus_stratified_cap", "dedup_canonical_docs",
-        "dedup_passjoin_exact", "doc_token_windows", "embedding_neardup_pairs",
-        "events_asof_last_purchase", "events_interval_post_signup",
-        "multimodal_audio_features", "multimodal_features",
-        "multimodal_meta_rollup", "q1_pricing_summary", "stream_dedup_events",
-        "stream_enriched_counts", "stream_hourly_counts",
-        "stream_interval_join", "stream_stateful_user_stats",
-        "stream_user_sessions", "text_scrub_pii", "xb_chunkfiles_roundtrip",
-        "xb_grid_anomaly_dow", "xb_grid_argmin_hour",
-        "xb_grid_climatology_month_dow", "xb_grid_climatology_std_dow",
-        "xb_grid_concat_halves", "xb_grid_corr_day", "xb_grid_cumsum_day",
-        "xb_grid_diff_day", "xb_grid_ffill_day", "xb_grid_fillna_dense",
-        "xb_grid_groupby_median_dow", "xb_grid_histogram_day",
-        "xb_grid_interp_day", "xb_grid_rank_day", "xb_grid_regrid",
-        "xb_grid_rolling7_mean", "xb_grid_stack_roundtrip",
-        "xb_grid_trend_day", "xb_grid_weighted_mean_hour",
-        "xb_grid_zip_ratio_coread", "xb_netcdf_roundtrip", "xb_sql_on_zarr",
-        "xb_sql_zarr_insert",
-    ], 3),
-    # round 4 (freshest; overrides earlier tiers — later ** wins)
-    **dict.fromkeys([
-        "ann_ivf_topk", "ann_ivfpq_topk", "ann_lsh_topk",
-        "churned_customers_except", "corpus_pack_sequences",
-        "events_daily_rollup", "events_json_props", "events_lag_rank",
-        "events_rollup_totals", "events_running_totals",
-        "q10_returned_items", "q11_important_stock", "q12_priority_lines",
-        "q13_customer_distribution", "q14_promo_effect", "q15_top_supplier",
-        "q16_supplier_diversity", "q17_small_quantity", "q18_large_volume",
-        "q19_discounted_revenue", "q22_sales_opportunity",
-        "q2_min_cost_supplier", "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "q6_revenue_change", "q7_volume_shipping",
-        "q8_market_share", "q9_nation_profit", "topk_parts_by_revenue",
-        "xb_grid_climatology_dow", "xb_grid_coarsen", "xb_grid_getitem",
-        "xb_grid_head", "xb_grid_max_day", "xb_grid_mean_hour",
-        "xb_grid_median_hour", "xb_grid_resample_week", "xb_grid_roundtrip",
-        "xb_grid_split_consolidate", "xb_grid_splitvars_roundtrip",
-        "xb_grid_std_day", "xb_grid_sum_hour", "xb_grid_tail",
-        "xb_grid_transpose", "xb_grid_where", "xb_grid_zip_ratio",
-        "xb_map_blocks_affine", "xb_zarr_roundtrip",
-        "xb_zarr_v3_sharded_roundtrip",
-    ], 4),
-    # round 5 (freshest; from CORRECTNESS_r05.json — overrides earlier tiers)
-    **dict.fromkeys([
-        "ann_brute_force_topk", "corpus_clean_pipeline", "corpus_decontaminate",
-        "corpus_hash_split", "corpus_importance_sample",
-        "corpus_mixture_weights", "corpus_stratified_cap",
-        "dedup_canonical_docs", "dedup_duplicate_clusters", "dedup_exact",
-        "dedup_levenshtein_twins", "dedup_minhash_lsh", "dedup_passjoin_exact",
-        "dedup_simhash", "doc_fingerprint", "doc_rolling_hash",
-        "doc_token_windows", "doc_vocab_topk", "embedding_neardup_pairs",
-        "events_asof_last_purchase", "events_cube_counts",
-        "events_interval_post_signup", "events_median_value_by_type",
-        "events_percent_rank", "events_pivot_types",
-        "events_range_window_hour", "events_sessionize_batch",
-        "multimodal_audio_features", "multimodal_features",
-        "multimodal_meta_rollup", "ngram_jaccard_adjacent",
-        "q1_pricing_summary", "q20_excess_suppliers",
-        "q21_sole_returned_supplier", "stream_dedup_events",
-        "stream_enriched_counts", "stream_hourly_counts",
-        "stream_stateful_user_stats", "stream_user_sessions",
-        "stream_zarr_tail", "text_lang_rollup", "text_langid",
-        "text_normalize_scrub", "text_quality_stats",
-        "text_repetition_signals", "text_scrub_pii", "text_substring_dup",
-        "text_token_counts", "xb_zarr_blosc_roundtrip",
-        "xb_zarr_cf_packed_roundtrip",
-    ], 5),
-    # round 6 (freshest; from CORRECTNESS_r06.json — overrides earlier tiers)
-    **dict.fromkeys([
-        "corpus_bloom_decontaminate", "corpus_epoch_shuffle",
-        "corpus_quality_classifier", "dedup_incremental_new_docs",
-        "dedup_semantic", "events_cms_heavy_hitters", "events_daily_rollup",
-        "events_hll_user_cardinality", "events_running_totals",
-        "multimodal_jpeg_features", "q10_returned_items",
-        "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "q6_revenue_change",
-        "stream_interval_join", "stream_zarr_append", "text_gopher_filter",
-        "topk_parts_by_revenue", "xb_chunkfiles_roundtrip",
-        "xb_grid_anomaly_dow", "xb_grid_argmin_hour",
-        "xb_grid_climatology_month_dow", "xb_grid_climatology_std_dow",
-        "xb_grid_concat_halves", "xb_grid_corr_day", "xb_grid_cumsum_day",
-        "xb_grid_diff_day", "xb_grid_differentiate_hour", "xb_grid_ffill_day",
-        "xb_grid_fillna_dense", "xb_grid_groupby_median_dow",
-        "xb_grid_histogram_day", "xb_grid_integrate_hour",
-        "xb_grid_interp_day", "xb_grid_merge_vars", "xb_grid_rank_day",
-        "xb_grid_regrid", "xb_grid_rolling7_mean", "xb_grid_stack_roundtrip",
-        "xb_grid_thin_take", "xb_grid_trend_day",
-        "xb_grid_weighted_mean_hour", "xb_grid_zip_ratio_coread",
-        "xb_netcdf_roundtrip", "xb_sql_on_zarr", "xb_sql_zarr_insert",
-        "xb_zarr_append_roundtrip",
-    ], 6),
-    # round 7 (freshest; from CORRECTNESS_r07.json — overrides earlier tiers)
-    **dict.fromkeys([
-        "ann_ivf_topk", "ann_ivfpq_topk", "ann_lsh_topk",
-        "churned_customers_except", "corpus_pack_sequences",
-        "events_cube_counts", "events_json_props", "events_lag_rank",
-        "events_median_value_by_type", "events_pivot_types",
-        "events_range_window_hour", "events_rollup_totals",
-        "events_sessionize_batch", "q11_important_stock",
-        "q12_priority_lines", "q13_customer_distribution", "q14_promo_effect",
-        "q15_top_supplier", "q16_supplier_diversity", "q17_small_quantity",
-        "q18_large_volume", "q19_discounted_revenue", "q1_pricing_summary",
-        "q20_excess_suppliers", "q21_sole_returned_supplier",
-        "q22_sales_opportunity", "q2_min_cost_supplier", "q7_volume_shipping",
-        "q8_market_share", "q9_nation_profit", "xb_grid_climatology_dow",
-        "xb_grid_coarsen", "xb_grid_getitem", "xb_grid_head",
-        "xb_grid_max_day", "xb_grid_mean_hour", "xb_grid_median_hour",
-        "xb_grid_resample_week", "xb_grid_roundtrip",
-        "xb_grid_split_consolidate", "xb_grid_splitvars_roundtrip",
-        "xb_grid_std_day", "xb_grid_sum_hour", "xb_grid_tail",
-        "xb_grid_transpose", "xb_grid_where", "xb_grid_zip_ratio",
-        "xb_map_blocks_affine", "xb_zarr_roundtrip",
-        "xb_zarr_v3_sharded_roundtrip",
-    ], 7),
-    # round 8 (freshest; from CORRECTNESS_r08.json — overrides earlier tiers)
-    **dict.fromkeys([
-        "ann_brute_force_topk", "corpus_clean_pipeline",
-        "corpus_decontaminate", "corpus_familiarity_score",
-        "corpus_hash_split", "corpus_importance_sample",
-        "corpus_mixture_weights", "corpus_stratified_cap",
-        "dedup_canonical_docs", "dedup_duplicate_clusters",
-        "dedup_exact", "dedup_levenshtein_twins", "dedup_minhash_lsh",
-        "dedup_passjoin_exact", "dedup_simhash", "doc_fingerprint",
-        "doc_rolling_hash", "doc_token_windows", "doc_vocab_topk",
-        "embedding_neardup_pairs", "events_asof_last_purchase",
-        "events_interval_post_signup", "events_percent_rank",
-        "multimodal_audio_features", "multimodal_features",
-        "multimodal_jpeg_progressive_features",
-        "multimodal_meta_rollup", "ngram_jaccard_adjacent",
-        "stream_dedup_events", "stream_enriched_counts",
-        "stream_hourly_counts", "stream_stateful_user_stats",
-        "stream_user_sessions", "stream_zarr_tail", "text_lang_rollup",
-        "text_langid", "text_normalize_scrub", "text_quality_stats",
-        "text_repetition_signals", "text_scrub_pii",
-        "text_substring_dup", "text_token_counts", "xb_grid_bfill_day",
-        "xb_grid_roll3_day", "xb_grid_rolling7_max",
-        "xb_grid_shift2_day", "xb_grid_shift_neg2_day",
-        "xb_grid_sortby_cumsum_desc", "xb_grid_take_day",
-        "xb_zarr_cf_packed_roundtrip",
-    ], 8),
-    # round 9 (freshest; from CORRECTNESS_r09.json — overrides earlier tiers)
-    **dict.fromkeys([
-        "corpus_bloom_decontaminate", "corpus_epoch_shuffle",
-        "corpus_quality_classifier", "dedup_incremental_new_docs",
-        "dedup_semantic", "events_cms_heavy_hitters",
-        "events_daily_rollup", "events_hll_user_cardinality",
-        "events_running_totals", "multimodal_jpeg_features",
-        "q10_returned_items", "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "q6_revenue_change",
-        "stream_interval_join", "stream_zarr_append",
-        "text_gopher_filter", "text_remove_dup_spans",
-        "topk_parts_by_revenue", "xb_chunkfiles_roundtrip",
-        "xb_grid_anomaly_dow", "xb_grid_argmin_hour",
-        "xb_grid_climatology_month_dow", "xb_grid_climatology_std_dow",
-        "xb_grid_concat_halves", "xb_grid_corr_day", "xb_grid_cumsum_day",
-        "xb_grid_diff_day", "xb_grid_differentiate_hour",
-        "xb_grid_ffill_day", "xb_grid_groupby_median_dow",
-        "xb_grid_histogram_day", "xb_grid_integrate_hour",
-        "xb_grid_interp_day", "xb_grid_merge_vars", "xb_grid_rank_day",
-        "xb_grid_regrid", "xb_grid_rolling7_mean",
-        "xb_grid_stack_roundtrip", "xb_grid_thin_take",
-        "xb_grid_trend_day", "xb_grid_weighted_mean_hour",
-        "xb_grid_zip_ratio_coread", "xb_netcdf_roundtrip",
-        "xb_sql_on_zarr", "xb_sql_zarr_insert",
-        "xb_zarr_append_roundtrip", "xb_zarr_blosc_roundtrip",
-        "xb_zarr_delta_filter_roundtrip",
-    ], 9),
-    # round 10 (freshest; from CORRECTNESS_r10.json — overrides earlier tiers)
-    **dict.fromkeys([
-        "ann_ivf_persisted_topk", "ann_ivf_topk", "ann_ivfpq_topk",
-        "ann_lsh_topk", "churned_customers_except", "corpus_pack_sequences",
-        "events_cube_counts", "events_json_props", "events_lag_rank",
-        "events_median_value_by_type", "events_pivot_types",
-        "events_range_window_hour", "events_rollup_totals",
-        "events_sessionize_batch", "multimodal_bmp_features",
-        "q11_important_stock", "q12_priority_lines",
-        "q13_customer_distribution", "q14_promo_effect", "q15_top_supplier",
-        "q16_supplier_diversity", "q17_small_quantity", "q18_large_volume",
-        "q19_discounted_revenue", "q1_pricing_summary",
-        "q20_excess_suppliers", "q21_sole_returned_supplier",
-        "q22_sales_opportunity", "q2_min_cost_supplier", "q7_volume_shipping",
-        "q8_market_share", "q9_nation_profit", "text_c4_sentence_dedup",
-        "text_line_dedup", "text_remove_dup_spans_keepfirst",
-        "text_tfidf_topterms", "xb_grid_climatology_dow",
-        "xb_grid_fillna_dense", "xb_grid_head", "xb_grid_max_day",
-        "xb_grid_mean_hour", "xb_grid_median_hour", "xb_grid_roundtrip",
-        "xb_grid_split_consolidate", "xb_grid_splitvars_roundtrip",
-        "xb_grid_std_day", "xb_grid_sum_hour", "xb_grid_tail",
-        "xb_zarr_roundtrip", "xb_zarr_v3_sharded_roundtrip",
-    ], 10),
-    # round 11 (freshest; from CORRECTNESS_r11.json — overrides earlier
-    # tiers). The r11 98-valued demotions (ann_ivf_trained_topk,
-    # corpus_tfrecord_roundtrip, multimodal_wds_roundtrip) were dropped at
-    # r12 start per the staged plan, so those three certify FIRST in r12
-    # (never-certified → round 0 → head of the sweep).
-    **dict.fromkeys([
-        "ann_brute_force_topk", "corpus_bpe_merges", "corpus_clean_pipeline",
-        "corpus_decontaminate", "corpus_familiarity_score",
-        "corpus_hash_split", "corpus_importance_sample",
-        "corpus_mixture_weights", "corpus_stratified_cap", "corpus_url_dedup",
-        "dedup_canonical_docs", "dedup_duplicate_clusters", "dedup_exact",
-        "dedup_levenshtein_twins", "dedup_minhash_lsh", "dedup_passjoin_exact",
-        "dedup_simhash", "doc_fingerprint", "doc_rolling_hash",
-        "doc_token_windows", "doc_vocab_topk", "embedding_neardup_pairs",
-        "events_asof_last_purchase", "events_interval_post_signup",
-        "events_percent_rank", "multimodal_audio_features",
-        "multimodal_features", "multimodal_jpeg_progressive_features",
-        "multimodal_meta_rollup", "ngram_jaccard_adjacent",
-        "stream_dedup_events", "stream_hourly_counts",
-        "stream_stateful_user_stats", "stream_user_sessions",
-        "text_lang_rollup", "text_langid", "text_normalize_scrub",
-        "text_quality_stats", "text_remove_dup_spans_chars",
-        "text_repetition_signals", "text_scrub_pii", "text_substring_dup",
-        "text_token_counts", "xb_grid_coarsen", "xb_grid_getitem",
-        "xb_grid_resample_week", "xb_grid_transpose", "xb_grid_where",
-        "xb_grid_zip_ratio", "xb_map_blocks_affine",
-    ], 11),
-    # round 12 (freshest; from CORRECTNESS_r12.json — overrides earlier
-    # tiers). The r12 99-valued demotions (text_html_extract,
-    # corpus_wet_ingest) were dropped at r13 start per the staged plan, so
-    # those two certify FIRST in r13 (never-certified → round 0 → head of
-    # the sweep), followed by the 14 r9-stale xb_grid_* keys.
-    **dict.fromkeys([
-        "ann_ivf_trained_topk", "corpus_bloom_decontaminate",
-        "corpus_epoch_shuffle", "corpus_quality_classifier",
-        "corpus_tfrecord_roundtrip", "corpus_warc_responses",
-        "dedup_incremental_new_docs", "dedup_semantic",
-        "events_cms_heavy_hitters", "events_daily_rollup",
-        "events_hll_user_cardinality", "events_running_totals",
-        "multimodal_jpeg_features", "multimodal_wds_roundtrip",
-        "q10_returned_items", "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "q6_revenue_change",
-        "stream_enriched_counts", "stream_interval_join",
-        "stream_zarr_append", "stream_zarr_tail", "text_gopher_filter",
-        "text_remove_dup_spans", "topk_parts_by_revenue",
-        "xb_chunkfiles_roundtrip", "xb_grid_bfill_day",
-        "xb_grid_climatology_month_dow", "xb_grid_climatology_std_dow",
-        "xb_grid_corr_day", "xb_grid_groupby_median_dow",
-        "xb_grid_histogram_day", "xb_grid_regrid", "xb_grid_roll3_day",
-        "xb_grid_rolling7_max", "xb_grid_shift2_day",
-        "xb_grid_shift_neg2_day", "xb_grid_sortby_cumsum_desc",
-        "xb_grid_stack_roundtrip", "xb_grid_take_day", "xb_grid_trend_day",
-        "xb_grid_zip_ratio_coread", "xb_netcdf_roundtrip", "xb_sql_on_zarr",
-        "xb_sql_zarr_insert", "xb_zarr_append_roundtrip",
-        "xb_zarr_blosc_roundtrip", "xb_zarr_cf_packed_roundtrip",
-        "xb_zarr_delta_filter_roundtrip",
-    ], 12),
-    # round 13 (freshest; from CORRECTNESS_r13.json — overrides earlier
-    # tiers). No staged demotions this time (new-gate budget was 1 of 3:
-    # multimodal_mp4_frames), so the head of the r14 sweep is the 17
-    # r10-stale keys followed by the r11 tier.
-    **dict.fromkeys([
-        'ann_ivf_topk', 'ann_lsh_topk', 'churned_customers_except',
-        'corpus_pack_sequences', 'corpus_wet_ingest',
-        'events_cube_counts', 'events_json_props', 'events_lag_rank',
-        'events_median_value_by_type', 'events_pivot_types',
-        'events_range_window_hour', 'events_rollup_totals',
-        'events_sessionize_batch', 'multimodal_mp4_frames',
-        'q11_important_stock', 'q12_priority_lines',
-        'q13_customer_distribution', 'q14_promo_effect',
-        'q15_top_supplier', 'q16_supplier_diversity',
-        'q17_small_quantity', 'q18_large_volume',
-        'q19_discounted_revenue', 'q1_pricing_summary',
-        'q20_excess_suppliers', 'q21_sole_returned_supplier',
-        'q22_sales_opportunity', 'q2_min_cost_supplier',
-        'q7_volume_shipping', 'q8_market_share', 'q9_nation_profit',
-        'text_c4_sentence_dedup', 'text_html_extract',
-        'text_line_dedup', 'text_remove_dup_spans_keepfirst',
-        'text_tfidf_topterms', 'xb_grid_anomaly_dow',
-        'xb_grid_argmin_hour', 'xb_grid_concat_halves',
-        'xb_grid_cumsum_day', 'xb_grid_diff_day',
-        'xb_grid_differentiate_hour', 'xb_grid_ffill_day',
-        'xb_grid_integrate_hour', 'xb_grid_interp_day',
-        'xb_grid_merge_vars', 'xb_grid_rank_day',
-        'xb_grid_rolling7_mean', 'xb_grid_thin_take',
-        'xb_grid_weighted_mean_hour',
-    ], 13),
-    # round 14 (freshest; from CORRECTNESS_r14.json — overrides earlier
-    # tiers). No staged demotions (new-gate budget was 1 of 3:
-    # corpus_e2e_train_pipeline), so the head of the r15 sweep is the 18
-    # r11-stale keys followed by the r12 tier.
-    **dict.fromkeys([
-        "ann_ivf_persisted_topk", "ann_ivfpq_topk",
-        "corpus_clean_pipeline", "corpus_decontaminate",
-        "corpus_e2e_train_pipeline", "corpus_familiarity_score",
-        "corpus_hash_split", "corpus_importance_sample",
-        "corpus_mixture_weights", "corpus_stratified_cap",
-        "corpus_url_dedup", "dedup_canonical_docs",
-        "dedup_duplicate_clusters", "dedup_exact",
-        "dedup_levenshtein_twins", "dedup_minhash_lsh",
-        "dedup_passjoin_exact", "dedup_simhash", "doc_fingerprint",
-        "doc_rolling_hash", "doc_token_windows", "doc_vocab_topk",
-        "events_asof_last_purchase", "events_interval_post_signup",
-        "events_percent_rank", "multimodal_bmp_features",
-        "ngram_jaccard_adjacent", "text_lang_rollup", "text_langid",
-        "text_normalize_scrub", "text_quality_stats",
-        "text_remove_dup_spans_chars", "text_repetition_signals",
-        "text_scrub_pii", "text_substring_dup", "text_token_counts",
-        "xb_grid_climatology_dow", "xb_grid_fillna_dense", "xb_grid_head",
-        "xb_grid_max_day", "xb_grid_mean_hour", "xb_grid_median_hour",
-        "xb_grid_roundtrip", "xb_grid_split_consolidate",
-        "xb_grid_splitvars_roundtrip", "xb_grid_std_day",
-        "xb_grid_sum_hour", "xb_grid_tail", "xb_zarr_roundtrip",
-        "xb_zarr_v3_sharded_roundtrip",
-    ], 14),
-    # round 15 (freshest; from CORRECTNESS_r15.json — all 50 green,
-    # overrides earlier tiers). The r16 sweep therefore leads with the
-    # remaining r11-stale keys followed by the r12 tier.
-    **dict.fromkeys([
-        "ann_brute_force_topk", "ann_ivf_trained_topk",
-        "corpus_bloom_decontaminate", "corpus_bpe_merges",
-        "corpus_epoch_shuffle", "corpus_quality_classifier",
-        "corpus_tfrecord_roundtrip", "corpus_warc_responses",
-        "dedup_incremental_new_docs", "dedup_semantic",
-        "embedding_neardup_pairs", "events_cms_heavy_hitters",
-        "events_daily_rollup", "events_hll_user_cardinality",
-        "events_running_totals", "multimodal_audio_features",
-        "multimodal_features", "multimodal_jpeg_features",
-        "multimodal_jpeg_progressive_features", "multimodal_meta_rollup",
-        "multimodal_wds_roundtrip", "q10_returned_items",
-        "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "q6_revenue_change",
-        "stream_dedup_events", "stream_enriched_counts",
-        "stream_hourly_counts", "stream_interval_join",
-        "stream_stateful_user_stats", "stream_user_sessions",
-        "stream_zarr_append", "stream_zarr_tail", "text_gopher_filter",
-        "text_remove_dup_spans", "topk_parts_by_revenue",
-        "xb_chunkfiles_roundtrip", "xb_grid_coarsen", "xb_grid_getitem",
-        "xb_grid_resample_week", "xb_grid_transpose", "xb_grid_where",
-        "xb_grid_zip_ratio", "xb_map_blocks_affine", "xb_sql_on_zarr",
-        "xb_zarr_append_roundtrip", "xb_zarr_blosc_roundtrip",
-        "xb_zarr_cf_packed_roundtrip", "xb_zarr_delta_filter_roundtrip",
-    ], 15),
-}
+# The driver certifies ~50 queries per round, in registry order, and
+# writes each round's rows to CORRECTNESS_rNN.json next to the package.
+# Registry order is stalest evidence first: a query's round is the
+# highest N whose row in CORRECTNESS_rNN.json matched rows, schema and
+# hash with no error, and a query with no such row has round 0 and leads.
+# A failed row never counts, but a later green row does. Each round's
+# committed file refreshes the order, so the oldest evidence is always
+# the next to be re-certified.
+
+
+def _certified_rounds(root: Path = Path(__file__).resolve().parents[1]) -> dict[str, int]:
+    rounds: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            green = all(row.get(k) is True for k in ("rows_match", "schema_match", "hash_match"))
+            if green and row.get("err") is None:
+                rounds[name] = max(rounds.get(name, 0), int(m.group(1)))
+    return rounds
 
 
 def _collect() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
     merged: dict[str, tuple[Callable, str | None]] = {}
     import xarray_beam_spark.tabular as tabular
 
-    # Module order plus the _DRIVER_CERTIFIED partition below determines the
-    # driver's evaluation order (its sweep cuts off after ~50 queries).
+    # module order breaks ties between queries of one certified round
     modules = [tabular]
     for modname in (
         "xarray_beam_spark.functions.text",
@@ -429,13 +69,8 @@ def _collect() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str 
             if name in merged:
                 raise ValueError(f"duplicate query name {name!r}")
             merged[name] = entry
-    # Stalest evidence first: never-certified queries (round 0), then by
-    # ascending last-green round; stable within module order inside each
-    # tier, so the driver's ~50-query sweep always refreshes the oldest
-    # banked rows.
-    names = sorted(
-        merged, key=lambda n: _LAST_CERTIFIED_ROUND.get(n, 0)
-    )  # sorted() is stable → module order preserved within a tier
+    rounds = _certified_rounds()
+    names = sorted(merged, key=lambda n: rounds.get(n, 0))  # stable
     return {n: merged[n] for n in names}
 
 

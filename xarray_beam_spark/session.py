@@ -108,9 +108,28 @@ def memo(
         entries.move_to_end(key)
         return hit[0]
     value = build()
+    if release is not None and isinstance(value, str):
+        release = _also_on_collect(spark.sparkContext, release, value)
     entries[key] = (value, release, ephemeral)
     _release(entries, list(entries)[: max(0, len(entries) - MAX_ENTRIES)])
     return value
+
+
+def _also_on_collect(sc, release: Callable[[str], None], path: str) -> Callable[[str], None]:
+    """``release`` of an entry whose value is a path. The dir outlives its
+    context, so it is also released when the context is collected first,
+    which the exit hook (live contexts only) would miss. The finalizer
+    holds the path and not the context, and the entry's release detaches
+    it. A persisted frame gets no finalizer: its cache goes with the
+    context, and holding the frame would keep the context alive."""
+    fin = weakref.finalize(sc, release, path)
+    fin.atexit = False  # at exit, the exit hook releases live contexts
+
+    def release_once(value: str) -> None:
+        if fin.detach() is not None:
+            release(value)
+
+    return release_once
 
 
 def persist_scoped(df: DataFrame) -> DataFrame:
