@@ -18,7 +18,11 @@ def build_spark():
 
 @pytest.fixture(scope="session")
 def spark():
-    yield build_spark()
+    spark = build_spark()
+    # get_spark runs the JVM <-> Python traffic over Unix domain sockets
+    assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    assert os.path.isabs(spark.sparkContext._accumulatorServer.server_address)
+    yield spark
 
 
 @pytest.fixture(scope="session")

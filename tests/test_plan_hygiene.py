@@ -17,6 +17,7 @@ from __future__ import annotations
 import json
 import re
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pytest
@@ -47,7 +48,8 @@ _PLAN_CACHE: dict = {}
 
 
 def _collect_lazy_plans(spark, sf_dir):
-    """Per batch gate, its printed physical plan and its ``plan_shape``."""
+    """Per batch gate, its physical plan as a ``Node`` tree and its
+    ``plan_shape``."""
     # building + physically planning all 90+ registered queries is the
     # dominant cost of this module; every test uses the identical map.
     # Ephemeral persists of earlier runs are released first: a gate that
@@ -61,10 +63,55 @@ def _collect_lazy_plans(spark, sf_dir):
     for name, fn in sorted(registry.queries().items()):
         if name.startswith(SKIP_PREFIXES):
             continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
-        plans[name], shapes[name] = plan.toString(), plan_shape(plan)
+        tree = plan_tree(fn(spark, sf_dir)._jdf.queryExecution().executedPlan())
+        plans[name], shapes[name] = tree, plan_shape(tree)
     _PLAN_CACHE[key] = plans, shapes
     return plans, shapes
+
+
+class Node(NamedTuple):
+    """One node of a physical plan. ``children`` feed it directly;
+    ``inner`` are the plans it holds apart: a cached input's plan (under
+    its InMemoryTableScan) and subqueries."""
+
+    name: str
+    children: list
+    inner: list
+
+
+def _read_through(jnode):
+    """The node a printed plan shows for ``jnode``: an adaptive plan at its
+    current plan, a query stage at the plan it ran."""
+    while True:
+        name = jnode.nodeName()
+        if name == "AdaptiveSparkPlan":
+            jnode = jnode.executedPlan()
+        elif name.endswith("QueryStage"):
+            jnode = jnode.plan()
+        else:
+            return jnode
+
+
+def plan_tree(jnode) -> Node:
+    """A physical plan (a JVM SparkPlan) as a ``Node`` tree, parent and
+    child taken from the JVM tree itself, not from a printed indent."""
+
+    def nodes(seq):
+        return [plan_tree(seq.apply(i)) for i in range(seq.size())]
+
+    jnode = _read_through(jnode)
+    return Node(jnode.nodeName(), nodes(jnode.children()), nodes(jnode.innerChildren()))
+
+
+def _walk(tree: Node, into_caches: bool = True):
+    """Every node of ``tree``, root first; with ``into_caches`` False, not
+    the plan behind a cached input."""
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        yield node
+        inner = node.inner if into_caches or node.name != "InMemoryTableScan" else []
+        stack.extend(reversed(node.children + inner))
 
 
 def test_no_unintended_cartesian_products(spark, sf_dir):
@@ -72,10 +119,13 @@ def test_no_unintended_cartesian_products(spark, sf_dir):
     assert len(plans) > 90
     bad = []
     for name, plan in plans.items():
-        has_nested = "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan
-        if has_nested and name not in SCALAR_BROADCAST_OK:
+        if _has_nested_loop(plan) and name not in SCALAR_BROADCAST_OK:
             bad.append(name)
     assert not bad, f"unexpected nested-loop/cartesian joins in: {bad}"
+
+
+def _has_nested_loop(tree: Node) -> bool:
+    return any(n.name in ("BroadcastNestedLoopJoin", "CartesianProduct") for n in _walk(tree))
 
 
 class TestShardReadParallelism:
@@ -160,33 +210,37 @@ CHUNK_MAPS = ("MapInArrow", "MapInPandas")
 PYTHON_NODES = CHUNK_MAPS + ("FlatMapGroupsInArrow", "FlatMapGroupsInPandas")
 
 
-def _plan_nodes(tree: str) -> list[tuple[int, str]]:
-    """(depth column, node name) per line of a printed plan tree."""
-    nodes = []
-    for line in tree.splitlines():
-        m = re.match(r"([ :+\-|]*)(?:\*(?:\(\d+\))? )?(\w+)", line)
-        if m:
-            nodes.append((len(m.group(1)), m.group(2)))
-    return nodes
-
-
-def _stacked_python_maps(tree: str) -> list[tuple[str, str]]:
+def _stacked_python_maps(tree: Node) -> list[tuple[str, str]]:
     """(parent, child) for each Python node that is the direct child of
-    another Python node in the tree, where either of the two is a chunk
-    map: a map over another Python pass's output, or a map's output fed
-    to another Python pass."""
-    nodes = _plan_nodes(tree)
-    bad = []
-    for i, (col, name) in enumerate(nodes):
-        if name not in PYTHON_NODES:
-            continue
-        for ccol, child in nodes[i + 1 :]:
-            if ccol <= col:
-                break
-            stacked = ccol == col + 3 and child in PYTHON_NODES
-            if stacked and (name in CHUNK_MAPS or child in CHUNK_MAPS):
-                bad.append((name, child))
-    return bad
+    another Python node, where either of the two is a chunk map: a map over
+    another Python pass's output, or a map's output fed to another Python
+    pass. Cached plans are searched too; a cache between two nodes is not
+    a direct link."""
+    return [
+        (node.name, child.name)
+        for node in _walk(tree)
+        if node.name in PYTHON_NODES
+        for child in node.children
+        if child.name in PYTHON_NODES
+        and (node.name in CHUNK_MAPS or child.name in CHUNK_MAPS)
+    ]
+
+
+def _printed_tree(text: str) -> Node:
+    """A hand-written plan fixture as a ``Node`` tree, read from its
+    indent (three columns per level)."""
+    root, open_nodes = None, []  # (column, node), outermost first
+    for line in text.splitlines():
+        m = re.match(r"([ :+\-|]*)(\w+)", line)
+        col, node = len(m.group(1)), Node(m.group(2), [], [])
+        while open_nodes and open_nodes[-1][0] >= col:
+            open_nodes.pop()
+        if open_nodes:
+            open_nodes[-1][1].children.append(node)
+        else:
+            root = node
+        open_nodes.append((col, node))
+    return root
 
 
 def test_stacked_map_detector():
@@ -197,7 +251,7 @@ def test_stacked_map_detector():
       :  +- MapInArrow split(a)
       +- MapInArrow other(id)
          +- Range (0, 4)"""
-    assert _stacked_python_maps(tree) == [
+    assert _stacked_python_maps(_printed_tree(tree)) == [
         ("MapInPandas", "FlatMapGroupsInArrow"),
         ("MapInPandas", "MapInArrow"),
         ("FlatMapGroupsInArrow", "MapInArrow"),
@@ -209,7 +263,25 @@ def test_stacked_map_detector():
       +- Exchange hashpartitioning(a, 4)
          +- MapInArrow pre(a)
             +- InMemoryTableScan [a]"""
-    assert _stacked_python_maps(tree) == [("MapInArrow", "FlatMapGroupsInPandas")]
+    assert _stacked_python_maps(_printed_tree(tree)) == [("MapInArrow", "FlatMapGroupsInPandas")]
+
+
+def test_stacked_map_detector_walks_the_jvm_plan(spark):
+    """On a real plan over a computed cache, whose adaptive plan prints its
+    "== Final Plan ==" at columns unrelated to the tree: the pair inside
+    the cached plan is found once, and the cache between the two halves
+    is not a link."""
+    def ident(batches):
+        return batches
+
+    def two_maps(df):
+        return df.mapInArrow(ident, "id long").mapInArrow(ident, "id long")
+
+    cached = two_maps(spark.range(16).repartition(2)).persist()
+    cached.count()
+    tree = plan_tree(two_maps(cached)._jdf.queryExecution().executedPlan())
+    cached.unpersist()
+    assert _stacked_python_maps(tree) == [("MapInArrow", "MapInArrow")] * 2
 
 
 def test_no_xb_gate_stacks_python_chunk_maps(spark, sf_dir):
@@ -229,7 +301,7 @@ def test_no_gate_plan_runs_a_pandas_udf(spark, sf_dir):
     plans, _ = _collect_lazy_plans(spark, sf_dir)
     bad = sorted(
         name for name, plan in plans.items()
-        if PANDAS_UDF_NODES & {node for _, node in _plan_nodes(plan)}
+        if PANDAS_UDF_NODES & {node.name for node in _walk(plan)}
     )
     assert not bad, f"gates running a pandas UDF: {bad}"
 
@@ -239,26 +311,19 @@ def test_no_gate_plan_runs_a_pandas_udf(spark, sf_dir):
 PLAN_SHAPES = Path(__file__).with_name("plan_shapes.json")
 
 
-def plan_shape(plan) -> dict[str, int]:
+def plan_shape(tree: Node) -> dict[str, int]:
     """Shuffle Exchange, BroadcastExchange, Python (map, grouped map,
     cogrouped map and EvalPython) and InMemoryTableScan node counts of a
-    physical plan (a JVM SparkPlan) and its subqueries. A cached input
-    counts as one InMemoryTableScan; the plan that filled it is not
-    counted, whether or not it has run."""
+    physical plan and its subqueries. A cached input counts as one
+    InMemoryTableScan; the plan that filled it is not counted, whether or
+    not it has run."""
     shape = dict.fromkeys(("Exchange", "BroadcastExchange", "Python", "InMemoryTableScan"), 0)
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() == "AdaptiveSparkPlan":
-            node = node.executedPlan()
-        name = node.nodeName()
+    for node in _walk(tree, into_caches=False):
+        name = node.name
         if name in PYTHON_NODES or name.startswith("FlatMapCoGroupsIn") or name.endswith("EvalPython"):
             shape["Python"] += 1
         elif name in shape:
             shape[name] += 1
-        if name != "InMemoryTableScan":  # its inner child is the cached plan
-            for nodes in (node.children(), node.innerChildren()):  # inner: subqueries
-                stack.extend(nodes.apply(i) for i in range(nodes.size()))
     return shape
 
 
@@ -272,11 +337,12 @@ def test_plan_shape_counts_the_plan_above_its_caches(spark):
         .join(F.broadcast(spark.range(5)), "id")
         .repartition(2)
     )
-    shape = plan_shape(df._jdf.queryExecution().executedPlan())
+    shape = plan_shape(plan_tree(df._jdf.queryExecution().executedPlan()))
     cached.unpersist()
     assert shape == {"Exchange": 1, "BroadcastExchange": 1, "Python": 1, "InMemoryTableScan": 1}
     scalar = spark.sql("SELECT id FROM range(10) WHERE id > (SELECT max(id) FROM range(3))")
-    assert plan_shape(scalar._jdf.queryExecution().executedPlan())["Exchange"] == 1  # the subquery's
+    scalar_plan = plan_tree(scalar._jdf.queryExecution().executedPlan())
+    assert plan_shape(scalar_plan)["Exchange"] == 1  # the subquery's
 
 
 def test_gate_plan_shapes_match_the_committed_table(spark, sf_dir):
@@ -303,7 +369,7 @@ def _assert_one_python_pass_per_stage(spark) -> None:
     desc = execs.apply(execs.size() - 1).physicalPlanDescription()
     # the tree of the final plan, root first
     final = desc.split("\n\n")[0].split("== Initial Plan ==")[0]
-    nodes = [name for _, name in _plan_nodes(final)]
+    nodes = re.findall(r"^[ :+\-|]*(?:\*\(\d+\) )?(\w+)", final, re.M)
     if "InMemoryTableScan" in nodes:
         nodes = nodes[: nodes.index("InMemoryTableScan")]
     python = [n for n in nodes if n in PYTHON_NODES or n.endswith("EvalPython")]
@@ -344,7 +410,7 @@ def test_reduction_to_table_runs_one_python_pass_per_stage(spark, sf_dir):
     _assert_one_python_pass_per_stage(spark)
 
     weighted = grid.weighted_mean("hour", np.linspace(0.5, 1.5, 24))
-    assert _stacked_python_maps(weighted.df._jdf.queryExecution().executedPlan().toString()) == []
+    assert _stacked_python_maps(plan_tree(weighted.df._jdf.queryExecution().executedPlan())) == []
 
 
 def test_scalar_broadcast_whitelist_is_tight(spark, sf_dir):
@@ -354,9 +420,7 @@ def test_scalar_broadcast_whitelist_is_tight(spark, sf_dir):
     stale = [
         name
         for name in SCALAR_BROADCAST_OK
-        if name in plans
-        and "BroadcastNestedLoopJoin" not in plans[name]
-        and "CartesianProduct" not in plans[name]
+        if name in plans and not _has_nested_loop(plans[name])
     ]
     assert not stale, f"whitelist entries no longer needed: {stale}"
 

@@ -1,7 +1,8 @@
 """The worker-startup zipimport guard (repo-root ``sitecustomize.py``).
 
 Covers, in subprocesses (the patch is an interpreter-startup mechanism):
-- activation: applied under the Spark worker env markers, NOT otherwise;
+- activation: applied under each Spark worker env marker, NOT otherwise,
+  and applied inside a UDF of the engine's session;
 - semantics: an UNCHANGED archive's directory is not re-read, a REPLACED
   archive (new mtime/size) IS re-read — same observable behavior as the
   stock eager implementation, minus the redundant re-parses.
@@ -13,15 +14,26 @@ import sys
 import textwrap
 import zipfile
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run(code: str, marker: bool) -> str:
-    env = dict(os.environ)
+# The environment markers Spark sets for worker and daemon processes: the
+# auth secret of a TCP worker factory, and the socket path or directory of
+# a Unix-domain-socket one (which sets no secret).
+MARKERS = (
+    "PYTHON_WORKER_FACTORY_SECRET",
+    "PYTHON_WORKER_FACTORY_SOCK_PATH",
+    "PYTHON_WORKER_FACTORY_SOCK_DIR",
+)
+
+
+def _run(code: str, marker: str | None) -> str:
+    env = {k: v for k, v in os.environ.items() if k not in MARKERS}
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
-    env.pop("PYTHON_WORKER_FACTORY_SECRET", None)
     if marker:
-        env["PYTHON_WORKER_FACTORY_SECRET"] = "x"
+        env[marker] = "x"
     out = subprocess.run(
         [sys.executable, "-c", textwrap.dedent(code)],
         capture_output=True,
@@ -32,13 +44,38 @@ def _run(code: str, marker: bool) -> str:
     return out.stdout.strip()
 
 
-def test_patch_applies_only_under_worker_marker():
+@pytest.mark.parametrize("marker", MARKERS)
+def test_patch_applies_only_under_worker_marker(marker):
     code = """
     import zipimport
     print(getattr(zipimport.zipimporter.invalidate_caches, "_xbs_guarded", False))
     """
-    assert _run(code, marker=True) == "True"
-    assert _run(code, marker=False) == "False"
+    assert _run(code, marker=marker) == "True"
+    assert _run(code, marker=None) == "False"
+
+
+def test_udf_worker_of_the_session_is_patched(spark):
+    """The engine's session runs its workers over Unix domain sockets, so
+    they carry the socket-directory marker and no secret; the guard must
+    still be applied inside a UDF."""
+    from xarray_beam_spark.shipping import ensure_shipped
+
+    ensure_shipped(spark)
+
+    def probe(batches):
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            seen = [m for m in MARKERS if m in os.environ]
+            guarded = getattr(zipimport.zipimporter.invalidate_caches, "_xbs_guarded", False)
+            yield pa.RecordBatch.from_pylist([{"markers": ",".join(seen), "guarded": guarded}])
+
+    schema = "markers string, guarded boolean"
+    [row] = spark.range(1).coalesce(1).mapInArrow(probe, schema).collect()
+    assert row.markers == "PYTHON_WORKER_FACTORY_SOCK_DIR"
+    assert row.guarded
 
 
 def test_unchanged_archive_not_reread_but_replaced_archive_is(tmp_path):
@@ -64,7 +101,7 @@ def test_unchanged_archive_not_reread_but_replaced_archive_is(tmp_path):
     n_replaced = len(reads)
     print(n_unchanged, n_replaced, "only_b" in str(sorted(zi._files)))
     """
-    assert _run(code, marker=True) == "0 1 True"
+    assert _run(code, marker=MARKERS[0]) == "0 1 True"
 
 
 def test_shipped_zip_contains_package_and_sitecustomize(tmp_path):

@@ -453,13 +453,15 @@ def xb_sql_zarr_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense grid. Oracle is the same cells aggregation, proving the
     write→read cycle is lossless.
 
-    Perf note (profiled, ``scripts/profile_insert.py``): the ~1.6 s warm
-    floor at sf0.1 is five Python-worker round-trips + two job
-    executions — all CONSTANT in data size (the store is 3600 cells, so
-    decode/write time is ~0). ``setup_zarr`` measured 0.00 s (the r6
-    fixture hypothesis is ruled out); explicit ``.schema()`` only moves
-    the inference hop into the first job. The overhead amortizes to zero
-    at real scale and is inherent to the SQL surface under test."""
+    Perf note: the gate's time is CONSTANT in data size (the store is
+    3600 cells, so decode/write time is ~0): Python-worker round trips
+    and job executions. Most of the ~1.6 s once profiled here
+    (``scripts/profile_insert.py``, a vanilla session) was not inherent:
+    each Python task waited ~40 ms on loopback TCP before it read its
+    input. Over ``session.get_spark``'s Unix domain sockets, ``bench.py``
+    at sf0.1 on ``local[4]`` measures 0.14-0.16 s, against 0.60-0.62 s
+    over TCP. ``setup_zarr`` measured 0.00 s; explicit ``.schema()`` only
+    moves the inference hop into the first job."""
     from xarray_beam_spark.sources import spark_datasource, zarr_io
 
     d = _events_grid(spark, sf_dir, chunks={"day": 8})

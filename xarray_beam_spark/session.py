@@ -4,7 +4,10 @@ Local testing runs ``local[N]``; the configuration is chosen so the same
 logical plans scale to a multi-executor cluster: AQE on (runtime partition
 coalescing + skew-join splitting), Arrow enabled for the Python UDF surface,
 and shuffle partition counts sized for the test scale factor while AQE
-re-plans for larger inputs.
+re-plans for larger inputs. The JVM talks to Python (UDF workers, the
+worker daemon, the accumulator server, ``createDataFrame`` from local data)
+over Unix domain sockets: on loopback TCP, Nagle's algorithm meeting a
+delayed ACK held every Python task ~40 ms before it could read its input.
 
 The same module holds the session store (``memo``, ``persist_scoped``,
 ``reset``, ``snapshot``): the one cache and persist lifecycle of the
@@ -14,7 +17,11 @@ driver, scoped to the SparkContext.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import os
+import socket
+import sys
+import tempfile
 import weakref
 from collections import OrderedDict
 from typing import Any, Callable
@@ -41,11 +48,54 @@ def get_spark(app_name: str = "xarray-beam-spark", cpus: int | None = None) -> S
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
     )
+    sock_dir = _socket_dir()
+    if sock_dir is not None:
+        builder = (
+            builder.config("spark.python.unix.domain.socket.enabled", "true")
+            .config("spark.python.unix.domain.socket.dir", sock_dir)
+        )
     # shared runtime-SQL table (see shipping.runtime_sql_conf): applied at
     # build time here, and by tune_session on vanilla/driver sessions
     for key, value in runtime_sql_conf(cpus):
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    sc = spark.sparkContext
+    path = sc._accumulatorServer.server_address
+    if isinstance(path, str) and not hasattr(sc, "_xbs_socket_reaper"):
+        # stop() removes the accumulator server's socket; a process that
+        # exits without stopping its context would leave it behind
+        sc._xbs_socket_reaper = weakref.finalize(sc, _remove_quietly, path)
+    return spark
+
+
+def _remove_quietly(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
+
+
+# Spark names each socket ``<dir>/.<uuid4>.sock``: the dir plus 43 bytes,
+# which must fit ``sun_path`` with its terminating NUL (108 bytes on Linux,
+# 104 on the BSDs and macOS).
+_SOCK_NAME_BYTES = len(f"/.{'0' * 36}.sock")
+_SUN_PATH_BYTES = 108 if sys.platform.startswith("linux") else 104
+
+
+def _socket_dir() -> str | None:
+    """The first of ``tempfile.gettempdir()`` (which honours ``TMPDIR``) and
+    ``/tmp`` that is a writable directory in which Spark's socket names fit;
+    None, and so Spark's loopback TCP, only without ``AF_UNIX`` or when
+    neither fits (a longer path fails the SparkContext in its accumulator
+    server: ``OSError: AF_UNIX path too long``)."""
+    if not hasattr(socket, "AF_UNIX"):
+        return None
+    for d in (tempfile.gettempdir(), "/tmp"):
+        if (
+            len(os.fsencode(d)) + _SOCK_NAME_BYTES < _SUN_PATH_BYTES
+            and os.path.isdir(d)
+            and os.access(d, os.W_OK | os.X_OK)
+        ):
+            return d
+    return None
 
 
 # ---------------------------------------------------------------------------

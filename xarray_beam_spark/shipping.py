@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 _FLAG = "_xbs_package_shipped"
 _TUNE_FLAG = "_xbs_session_tuned"
 
-# The six runtime-mutable settings the engine assumes; session.get_spark
+# The seven runtime-mutable settings the engine assumes; session.get_spark
 # applies the same table at build time (single source of truth — the two
 # tuning sites had already drifted once).
 def runtime_sql_conf(parallelism: int) -> tuple[tuple[str, str], ...]:
@@ -52,6 +52,12 @@ def tune_session(spark: SparkSession) -> None:
     still pay per-task Python-worker round-trips). Only runtime-mutable
     ``spark.sql.*`` settings are touched — cluster-level sizing (executor
     memory, core counts) stays whatever the deployment chose.
+
+    The JVM <-> Python transport is static, so a running session keeps
+    loopback TCP, where every Python task waits ~40 ms (Nagle's algorithm
+    against a delayed ACK) before it reads its input. ``session.get_spark``
+    runs it over Unix domain sockets; for a vanilla session, pass
+    ``--conf spark.python.unix.domain.socket.enabled=true`` at launch.
     """
     sc = spark.sparkContext
     # the flag must live on the SESSION: spark.conf is per-session SQLConf,
