@@ -932,16 +932,17 @@ def test_diff_halo_wider_than_chunk_falls_back(spark, era5):
 
 def test_shift_matches_numpy(spark, era5):
     d = Dataset.from_numpy(spark, era5, chunks={"time": 7})
-    got = d.shift("time", n=3).collect()
-    for v, var in era5.data_vars.items():
-        ax = var.dims.index("time")
-        want = np.full(var.values.shape, np.nan)
-        src = [slice(None)] * var.values.ndim
-        src[ax] = slice(3, None)
-        prev = [slice(None)] * var.values.ndim
-        prev[ax] = slice(None, var.values.shape[ax] - 3)
-        want[tuple(src)] = var.values[tuple(prev)]
-        np.testing.assert_array_equal(got.data_vars[v].values, want)
+    for n in (3, 30):  # 30 > the 24 steps: all NaN
+        got = d.shift("time", n=n).collect()
+        for v, var in era5.data_vars.items():
+            ax = var.dims.index("time")
+            want = np.full(var.values.shape, np.nan)
+            src = [slice(None)] * var.values.ndim
+            src[ax] = slice(n, None)
+            prev = [slice(None)] * var.values.ndim
+            prev[ax] = slice(None, max(0, var.values.shape[ax] - n))
+            want[tuple(src)] = var.values[tuple(prev)]
+            np.testing.assert_array_equal(got.data_vars[v].values, want)
 
 
 def test_rolling_reduce_matches_pandas(spark, era5):
@@ -1467,6 +1468,140 @@ def test_fill_ops_multichunk_other_dims(spark):
                     assert w[k] == expect, (i, j, k)
                 else:
                     assert np.isnan(w[k])
+
+
+def _np_ffill(vals: np.ndarray) -> np.ndarray:
+    out = vals.copy()
+    for i in range(1, len(out)):
+        out[i] = np.where(np.isnan(out[i]), out[i - 1], out[i])
+    return out
+
+
+def _np_interpolate_na(vals: np.ndarray) -> np.ndarray:
+    out = vals.copy()
+    steps = np.arange(len(vals))
+    for j in range(vals.shape[1]):
+        ok = ~np.isnan(vals[:, j])
+        inside = (steps > steps[ok].min()) & (steps < steps[ok].max()) & ~ok
+        out[inside, j] = np.interp(steps[inside], steps[ok], vals[ok, j])
+    return out
+
+
+def _np_rank_min(vals: np.ndarray) -> np.ndarray:
+    out = np.full(vals.shape, np.nan)
+    for j in range(vals.shape[1]):
+        ok = ~np.isnan(vals[:, j])
+        out[ok, j] = np.searchsorted(np.sort(vals[ok, j]), vals[ok, j]) + 1
+    return out
+
+
+_T = np.array([0.0, 1.0, 3.0, 4.0, 7.0, 8.0, 9.0, 12.0, 13.0, 15.0, 16.0, 20.0])
+_T_NEW = np.array([0.5, 2.0, 7.0, 19.0])
+
+
+def _np_shift_back2(a: np.ndarray) -> np.ndarray:
+    out = np.full(a.shape, np.nan)
+    out[:-2] = a[2:]
+    return out
+
+
+def _np_interp(a: np.ndarray) -> np.ndarray:
+    return np.stack([np.interp(_T_NEW, _T, a[:, j]) for j in range(a.shape[1])], axis=1)
+
+
+# op name -> (the op on a Dataset, the same op on the (t, x) array of `a`)
+_WHOLE_DIM_OPS = {
+    "cumulative": (lambda d: d.cumulative("t"),
+                   lambda a: np.where(np.isnan(a), np.nan, np.nancumsum(a, axis=0))),
+    "differentiate": (lambda d: d.differentiate("t"),
+                      lambda a: np.gradient(a, _T, axis=0, edge_order=1)),
+    "integrate": (lambda d: d.integrate("t"),
+                  lambda a: (getattr(np, "trapezoid", None) or np.trapz)(a, _T, axis=0)),
+    "ffill": (lambda d: d.ffill("t"), _np_ffill),
+    "bfill": (lambda d: d.bfill("t"), lambda a: _np_ffill(a[::-1])[::-1]),
+    "interpolate_na": (lambda d: d.interpolate_na("t"), _np_interpolate_na),
+    "interp": (lambda d: d.interp("t", _T_NEW), _np_interp),
+    "rank": (lambda d: d.rank("t", method="min"), _np_rank_min),
+    "take": (lambda d: d.take("t", [5, 0, 11, 5]), lambda a: a[[5, 0, 11, 5]]),
+    "thin": (lambda d: d.thin(t=5), lambda a: a[::5]),
+    "isel": (lambda d: d.isel(t=[3, 1, 2]), lambda a: a[[3, 1, 2]]),
+    "sel": (lambda d: d.sel(t=[9.0, 0.0]), lambda a: a[[6, 0]]),
+    "roll": (lambda d: d.roll("t", 5), lambda a: np.roll(a, 5, axis=0)),
+    "sortby": (lambda d: d.sortby("t", ascending=False), lambda a: a[::-1]),
+    "shift": (lambda d: d.shift("t", -2), _np_shift_back2),
+    "median": (lambda d: d.median("t"), lambda a: np.nanmedian(a, axis=0)),
+    "quantile": (lambda d: d.quantile(0.25, "t"), lambda a: np.nanquantile(a, 0.25, axis=0)),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_WHOLE_DIM_OPS))
+def test_whole_dim_ops_pass_dimless_variables_through(spark, op):
+    """A variable without the op's dim (``b(x)`` next to ``a(t, x)``)
+    comes back unchanged in values and dtype, under every whole-dim op;
+    ``a`` matches NumPy."""
+    rng = np.random.default_rng(12)
+    a = rng.normal(size=(12, 5))
+    a[rng.random(a.shape) < 0.25] = np.nan
+    a[0, :] = rng.normal(size=5)  # every series has a first and a last value
+    a[-1, :] = rng.normal(size=5)
+    b = np.arange(5, dtype=np.int32) * 7
+    nd = NDDataset(
+        {"a": (("t", "x"), a), "b": (("x",), b)},
+        {"t": _T, "x": np.arange(5)},
+    )
+    d = Dataset.from_numpy(spark, nd, chunks={"t": 4, "x": 2})
+    run, oracle = _WHOLE_DIM_OPS[op]
+    out = run(d)
+    assert out.template.var_meta["b"] == (("x",), b.dtype.str)
+    got = out.collect()
+    assert got.data_vars["b"].values.dtype == np.int32
+    np.testing.assert_array_equal(got.data_vars["b"].values, b)
+    want = oracle(a)
+    if op in ("interpolate_na", "interp", "differentiate", "integrate"):
+        # NumPy's own formula, not the op's expression tree: a few ulps
+        np.testing.assert_allclose(got.data_vars["a"].values, want, rtol=1e-12, atol=1e-12)
+    else:
+        np.testing.assert_array_equal(got.data_vars["a"].values, want)
+
+
+def test_median_gathers_under_the_memory_guard(spark):
+    """median/quantile gather the dim through ``_gather_dim``: a gathered
+    slab over ``max_mem`` splits the other dims (metadata only, no job)."""
+    from xarray_beam_spark.dataset import chunk_row_schema
+    from xarray_beam_spark.plans import rechunk_plan
+
+    sizes = {"time": 4096, "x": 65536}
+    tmpl = Template(sizes=sizes, var_meta={"v": (("time", "x"), "<f8")})
+    chunks = {"time": 64, "x": 65536}
+    # 4096 * 65536 * 8 bytes = 2 GiB per gathered slab
+    want = rechunk_plan.gather_dim_chunks(sizes, chunks, "time", 8)
+    assert want["x"] < sizes["x"]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    rows = spark.createDataFrame([], chunk_row_schema(sorted(sizes)))
+    d = Dataset(spark, rows, tmpl, chunks)
+    assert d.median("time").chunks == {"x": want["x"]}
+    assert d.quantile(0.9, "time").chunks == {"x": want["x"]}
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+@pytest.mark.parametrize("op", ["roll", "take", "sortby", "shift", "interp"])
+def test_whole_dim_ops_keep_split_variables(spark, era5, op):
+    """Each kernel runs per variable, so split-variable input needs no
+    consolidate: the result stays split and collects to the same dataset
+    as the op on unsplit input."""
+    run = {
+        "roll": lambda d: d.roll("time", 5),
+        "take": lambda d: d.take("time", [3, 0, 17, 3]),
+        "sortby": lambda d: d.sortby("time", ascending=False),
+        "shift": lambda d: d.shift("time", -2),
+        "interp": lambda d: d.interp("time", np.array([0.5, 3.0, 22.25])),
+    }[op]
+    chunks = {"time": 6, "latitude": 3}
+    split = run(Dataset.from_numpy(spark, era5, chunks=chunks, split_vars=True))
+    whole = run(Dataset.from_numpy(spark, era5, chunks=chunks))
+    assert split.split_vars
+    assert split.collect().identical(whole.collect())
 
 
 def test_beam_compat_pipe_chain(spark, era5):

@@ -285,8 +285,8 @@ class TestIoThreading:
         )
         arrays, _ = zarrlite.open_group(path)
 
-        def timed(width: str) -> float:
-            monkeypatch.setenv("XBS_IO_THREADS", width)
+        def timed(latency_bound: bool) -> float:
+            slow.latency_bound = latency_bound  # io_width: 16 if True else 1
             t0 = time.perf_counter()
             np.testing.assert_array_equal(zarrlite.read_full(arrays["v"]), data)
             return time.perf_counter() - t0
@@ -300,8 +300,8 @@ class TestIoThreading:
         # under concurrent load.)
         pairs = []
         for _ in range(4):
-            serial = timed("1")
-            threaded = timed("16")
+            serial = timed(False)
+            threaded = timed(True)
             pairs.append((serial, threaded))
             if serial / threaded > 2.0:
                 break

@@ -1662,69 +1662,31 @@ class Dataset:
         coordinates roll with the data; with ``False`` data moves under
         fixed coordinates (the phase-shift use case).
 
-        Same rechunk-contiguous shape as :meth:`ffill`/:meth:`rank` — one
+        A :meth:`take` of the positions ``(arange(size) - n) % size``: one
         shuffle (elided when the dim is already whole), then a narrow
-        ``np.roll`` per chunk; other dims stay chunked, so per-task memory
-        is one series-slab, the same envelope as median/quantile. The
-        result leaves ``dim`` single-chunk; rechunk after if a finer grid
-        is needed."""
+        gather per chunk; other dims stay chunked, so per-task memory is
+        one series-slab, the same envelope as median/quantile. The result
+        leaves ``dim`` single-chunk; rechunk after if a finer grid is
+        needed."""
         size = self.sizes[dim]
         if size == 0:
             return self
         k = int(n) % size
         if k == 0:
             return self
-        base = self.consolidate_variables() if self.split_vars else self
-        r = base._gather_dim(dim)
-        tmpl = r.template
-
-        def _roll_coord(c: Variable) -> Variable:
-            ax = c.dims.index(dim)
-            return Variable(c.dims, np.roll(c.values, k, axis=ax))
-
-        out_coords = {
-            name: (_roll_coord(c) if roll_coords and dim in c.dims else c)
-            for name, c in tmpl.coords.items()
-        }
-        out_tmpl = Template(
-            sizes=dict(tmpl.sizes),
-            var_meta=dict(tmpl.var_meta),
-            coords=out_coords,
-            attrs=tmpl.attrs,
-        )
-
-        def roll_block(ds: NDDataset) -> NDDataset:
-            out_vars = {
-                v: (
-                    Variable(var.dims, np.roll(var.values, k, axis=var.dims.index(dim)))
-                    if dim in var.dims
-                    else var
-                )
-                for v, var in ds.data_vars.items()
-            }
-            coords = {
-                name: (
-                    Variable(c.dims, np.roll(c.values, k, axis=c.dims.index(dim)))
-                    if roll_coords and dim in c.dims
-                    else c
-                )
-                for name, c in ds.coords.items()
-            }
-            return NDDataset(out_vars, coords, dict(ds.attrs))
-
-        return r.map_blocks(roll_block, template=out_tmpl, chunks=dict(r.chunks))
+        return self._take(dim, (np.arange(size) - k) % size, roll_coords)
 
     def take(self, dim: str, indices) -> "Dataset":
         """Fancy positional selection along one dim (xarray ``isel`` with
         an integer array — outer indexing): arbitrary order, repeats
         allowed, result length = ``len(indices)``.
 
-        Plan: the same rechunk-contiguous shape as :meth:`sortby` — one
-        shuffle makes ``dim`` whole per chunk, then the gather is a
-        narrow ``np.take`` per block and the result is re-chunked to the
-        selection length. Driver holds only the (metadata-sized) index
-        array. For a contiguous ascending selection use :meth:`isel`,
-        which prunes chunks instead of shuffling."""
+        Plan: the whole-dim plan of :meth:`_map_whole_dim` — one shuffle
+        makes ``dim`` whole per chunk, then the gather is a narrow
+        ``np.take`` per variable and the result is one chunk of the
+        selection length along ``dim``. Driver holds only the
+        (metadata-sized) index array. For a contiguous ascending selection
+        use :meth:`isel`, which prunes chunks instead of shuffling."""
         positions = np.asarray(indices, dtype=np.int64)
         if positions.ndim != 1 or positions.size == 0:
             raise ValueError(
@@ -1738,38 +1700,19 @@ class Dataset:
                 f"take indices for {dim!r} out of range [0, {size}): "
                 f"[{positions.min()}, {positions.max()}]"
             )
-        base = self.consolidate_variables() if self.split_vars else self
-        r = base._gather_dim(dim)
-        tmpl = r.template
-        n_new = int(positions.size)
+        return self._take(dim, positions)
 
-        def _take_arr(c: Variable) -> Variable:
-            ax = c.dims.index(dim)
-            return Variable(c.dims, np.take(c.values, positions, axis=ax))
-
-        out_tmpl = Template(
-            sizes={**dict(tmpl.sizes), dim: n_new},
-            var_meta=dict(tmpl.var_meta),
-            coords={
-                name: (_take_arr(c) if dim in c.dims else c)
-                for name, c in tmpl.coords.items()
-            },
-            attrs=tmpl.attrs,
+    def _take(self, dim: str, positions: np.ndarray, move_coords: bool = True) -> "Dataset":
+        """``np.take(positions)`` along ``dim`` for every variable on it.
+        Coordinates on ``dim`` move with the data; with ``move_coords``
+        off (``roll(roll_coords=False)``) they stay where they are."""
+        return self._map_whole_dim(
+            dim,
+            lambda a, axis: np.take(a, positions, axis=axis),
+            length=len(positions),
+            as_float=False,
+            positional=move_coords,
         )
-        new_chunks = {**dict(r.chunks), dim: n_new}
-
-        def take_block(ds: NDDataset) -> NDDataset:
-            out_vars = {
-                v: (_take_arr(var) if dim in var.dims else var)
-                for v, var in ds.data_vars.items()
-            }
-            coords = {
-                name: (_take_arr(c) if dim in c.dims else c)
-                for name, c in ds.coords.items()
-            }
-            return NDDataset(out_vars, coords, dict(ds.attrs))
-
-        return r.map_blocks(take_block, template=out_tmpl, chunks=new_chunks)
 
     def thin(self, indexers: Mapping[str, int] | None = None, **kw: int) -> "Dataset":
         """Every ``step``-th element along each given dim (xarray
@@ -1793,10 +1736,8 @@ class Dataset:
         ``ds.sortby``) — the fix-up after a :func:`concat` of
         out-of-order parts or an unordered ingest. The permutation is a
         stable argsort of the (driver-side, metadata-sized) coordinate,
-        broadcast into a narrow ``np.take`` per chunk after the same
-        rechunk-contiguous shuffle as :meth:`roll`/:meth:`rank` — one
-        Exchange, elided when the dim is already whole and a no-op when
-        the coordinate is already sorted."""
+        applied as a :meth:`take` — one Exchange, elided when the dim is
+        already whole and a no-op when the coordinate is already sorted."""
         coord = self.template.coords.get(dim)
         if coord is None:
             raise ValueError(f"sortby needs a coordinate on {dim!r}")
@@ -1808,99 +1749,31 @@ class Dataset:
             perm = perm[::-1].copy()
         if (perm == np.arange(len(perm))).all():
             return self
-        base = self.consolidate_variables() if self.split_vars else self
-        r = base._gather_dim(dim)
-        tmpl = r.template
-
-        def _take(c: Variable) -> Variable:
-            ax = c.dims.index(dim)
-            return Variable(c.dims, np.take(c.values, perm, axis=ax))
-
-        out_coords = {
-            name: (_take(c) if dim in c.dims else c)
-            for name, c in tmpl.coords.items()
-        }
-        out_tmpl = Template(
-            sizes=dict(tmpl.sizes),
-            var_meta=dict(tmpl.var_meta),
-            coords=out_coords,
-            attrs=tmpl.attrs,
-        )
-
-        def sort_block(ds: NDDataset) -> NDDataset:
-            out_vars = {
-                v: (
-                    Variable(var.dims, np.take(var.values, perm, axis=var.dims.index(dim)))
-                    if dim in var.dims
-                    else var
-                )
-                for v, var in ds.data_vars.items()
-            }
-            coords = {
-                name: (
-                    Variable(c.dims, np.take(c.values, perm, axis=c.dims.index(dim)))
-                    if dim in c.dims
-                    else c
-                )
-                for name, c in ds.coords.items()
-            }
-            return NDDataset(out_vars, coords, dict(ds.attrs))
-
-        return r.map_blocks(sort_block, template=out_tmpl, chunks=dict(r.chunks))
+        return self._take(dim, perm)
 
     def shift(self, dim: str, n: int = 1) -> "Dataset":
         """Shift values along ``dim`` by ``n`` (``out[i] = x[i-n]`` —
         xarray ``Dataset.shift`` semantics: NaN head for positive ``n``,
         NaN tail for negative). Positive shifts ride the same cheap
         left-halo exchange as :meth:`diff`; negative shifts fall back to
-        the rechunk-contiguous shape (:meth:`roll`'s one-shuffle
-        envelope), since the halo machinery is leading-edge only."""
+        the whole-dim plan (:meth:`roll`'s one-shuffle envelope), since
+        the halo machinery is leading-edge only. Both run one kernel."""
         if n == 0:
             return self
-        if n < 0:
-            k = -n
-            base = self.consolidate_variables() if self.split_vars else self
-            r = base._gather_dim(dim)
 
-            def lead_block(ds: NDDataset) -> NDDataset:
-                out_vars = {}
-                for v, var in ds.data_vars.items():
-                    if dim not in var.dims:
-                        out_vars[v] = var
-                        continue
-                    ax = var.dims.index(dim)
-                    out = np.full(var.values.shape, np.nan)
-                    m = var.values.shape[ax]
-                    if k < m:
-                        head = [slice(None)] * out.ndim
-                        head[ax] = slice(None, m - k)
-                        tail = [slice(None)] * out.ndim
-                        tail[ax] = slice(k, None)
-                        out[tuple(head)] = var.values[tuple(tail)]
-                    out_vars[v] = Variable(var.dims, out)
-                return NDDataset(out_vars, dict(ds.coords), dict(ds.attrs))
-
-            float_meta = {
-                v: (dims, "<f8" if dim in dims else dt)
-                for v, (dims, dt) in r.template.var_meta.items()
-            }
-            out_tmpl = Template(
-                sizes=dict(r.template.sizes),
-                var_meta=float_meta,
-                coords=dict(r.template.coords),
-                attrs=r.template.attrs,
-            )
-            return r.map_blocks(lead_block, template=out_tmpl, chunks=dict(r.chunks))
-
-        def kernel(ext: np.ndarray, axis: int) -> np.ndarray:
-            out = np.full(ext.shape, np.nan)
-            head = [slice(None)] * ext.ndim
-            head[axis] = slice(n, None)
-            tail = [slice(None)] * ext.ndim
-            tail[axis] = slice(None, ext.shape[axis] - n)
-            out[tuple(head)] = ext[tuple(tail)]
+        def kernel(a: np.ndarray, axis: int) -> np.ndarray:
+            out = np.full(a.shape, np.nan)
+            m = a.shape[axis]
+            if abs(n) < m:
+                dst = [slice(None)] * a.ndim
+                src = [slice(None)] * a.ndim
+                dst[axis] = slice(n, None) if n > 0 else slice(None, m + n)
+                src[axis] = slice(None, m - n) if n > 0 else slice(-n, None)
+                out[tuple(dst)] = a[tuple(src)]
             return out
 
+        if n < 0:
+            return self._map_whole_dim(dim, kernel)
         return self._left_halo_map(dim, n, kernel, "shift")
 
     def rolling_reduce(self, dim: str, window: int, op: str = "mean") -> "Dataset":
@@ -2298,9 +2171,9 @@ class Dataset:
         self, dim: str, max_mem: int = rechunk_plan.DEFAULT_MAX_MEM
     ) -> "Dataset":
         """Rechunk so ``dim`` spans ONE whole chunk while every other dim
-        keeps its current chunking — the shared shuffle shape of the
-        order-dependent per-series ops (cumulative / ffill / rank / roll /
-        sortby / take / shift / interp / integrate / differentiate).
+        keeps its current chunking — the shuffle of :meth:`_map_whole_dim`,
+        the one plan of every whole-dim op, and of :meth:`_left_halo_map`
+        when a halo is wider than a chunk.
 
         Memory guard: the gathered chunk is ``sizes[dim] * prod(other
         chunk extents) * itemsize`` bytes; when that exceeds ``max_mem``
@@ -2321,6 +2194,96 @@ class Dataset:
             max_mem,
         )
         return self.rechunk(tgt, max_mem=max_mem)
+
+    def _map_whole_dim(
+        self,
+        dim: str,
+        kernel: Callable[[np.ndarray, int], np.ndarray],
+        *,
+        length: int | None = None,
+        reduce: bool = False,
+        as_float: bool = True,
+        positional: bool = False,
+        index: np.ndarray | None = None,
+    ) -> "Dataset":
+        """The one plan of every order-dependent or non-decomposable op
+        along ``dim`` — the reference's documented pattern (rechunk the dim
+        contiguous, then map each chunk; ``docs/aggregation.ipynb``):
+        :meth:`_gather_dim`, then one :meth:`map_blocks` with an explicit
+        template.
+
+        In each chunk, ``kernel(values, axis)`` runs on every variable that
+        has ``dim``: on float64 values for a float64 result when
+        ``as_float``, else on the stored values with their dtype kept.
+        Every other variable passes through unchanged. The kernel runs per
+        variable, so split-variable rows need no consolidate.
+
+        ``dim`` ends with ``length`` elements (default: unchanged), or is
+        removed when ``reduce``. Coordinates on ``dim`` move with the data
+        when ``positional`` (the kernel picks positions, like ``np.take``),
+        are kept when the op keeps the dim's positions, and are dropped
+        otherwise; ``index`` becomes the new coordinate of ``dim``."""
+        r = self._gather_dim(dim)
+        tmpl = r.template
+        n = tmpl.sizes[dim] if length is None else length
+        keep = not reduce and index is None and n == tmpl.sizes[dim]
+
+        def out_dims(dims: tuple[str, ...]) -> tuple[str, ...]:
+            return tuple(d for d in dims if d != dim) if reduce else dims
+
+        def out_coords(coords: Mapping[str, Variable]) -> dict[str, Variable]:
+            out = {}
+            for name, c in coords.items():
+                if dim not in c.dims:
+                    out[name] = c
+                elif positional:
+                    out[name] = Variable(c.dims, kernel(c.values, c.dims.index(dim)))
+                elif keep:
+                    out[name] = c
+            if index is not None:
+                out[dim] = Variable((dim,), index)
+            return out
+
+        def block(ds: NDDataset) -> NDDataset:
+            out: dict[str, Variable] = {}
+            for v, var in ds.data_vars.items():
+                if dim in var.dims:
+                    vals = np.asarray(var.values, dtype=np.float64) if as_float else var.values
+                    var = Variable(out_dims(var.dims), kernel(vals, var.dims.index(dim)))
+                out[v] = var
+            return NDDataset(out, out_coords(ds.coords), dict(ds.attrs))
+
+        def resized(extents: Mapping[str, int]) -> dict[str, int]:
+            return {d: (n if d == dim else e) for d, e in extents.items() if not (reduce and d == dim)}
+
+        out_tmpl = Template(
+            sizes=resized(tmpl.sizes),
+            var_meta={
+                v: (out_dims(dims), "<f8" if as_float else dt) if dim in dims else (dims, dt)
+                for v, (dims, dt) in tmpl.var_meta.items()
+            },
+            coords=out_coords(tmpl.coords),
+            attrs=tmpl.attrs,
+        )
+        return r.map_blocks(block, template=out_tmpl, chunks=resized(r.chunks))
+
+    def _coord_numbers(self, dim: str, datetime_unit: str | None, op: str) -> np.ndarray:
+        """``dim``'s coordinate as float64 for ``op``: a datetime
+        coordinate counts ``datetime_unit`` steps since the epoch."""
+        if dim not in self.template.coords:
+            raise ValueError(f"{op} needs a coordinate on {dim!r}")
+        cvals = np.asarray(self.template.coords[dim].values)
+        if cvals.dtype.kind != "M":
+            return cvals.astype(np.float64)
+        if datetime_unit is None:
+            raise ValueError(
+                f"{dim!r} is a datetime coordinate; pass datetime_unit "
+                f"(e.g. 's') like xarray's {op}"
+            )
+        return (
+            cvals.astype("datetime64[ns]").astype(np.int64).astype(np.float64)
+            / np.timedelta64(1, datetime_unit).astype("timedelta64[ns]").astype(np.int64)
+        )
 
     # -- aggregations ------------------------------------------------------
 
@@ -2346,20 +2309,13 @@ class Dataset:
         if op not in fns:
             raise ValueError(f"cumulative op must be one of {sorted(fns)}")
         scan_fn = fns[op]
-        r = self._gather_dim(dim)
 
-        def scan(ds: NDDataset) -> NDDataset:
-            out: dict[str, Variable] = {}
-            for v, var in ds.data_vars.items():
-                ax = var.dims.index(dim)
-                vals = np.asarray(var.values, dtype=np.float64)
-                mask = np.isnan(vals)
-                run = scan_fn(vals, axis=ax)
-                run[mask] = np.nan
-                out[v] = Variable(var.dims, run)
-            return NDDataset(out, dict(ds.coords), dict(ds.attrs))
+        def scan(a: np.ndarray, axis: int) -> np.ndarray:
+            run = scan_fn(a, axis=axis)
+            run[np.isnan(a)] = np.nan
+            return run
 
-        return r.map_blocks(scan)
+        return self._map_whole_dim(dim, scan)
 
     def differentiate(self, dim: str, datetime_unit: str | None = None) -> "Dataset":
         """Derivative along ``dim``'s coordinate with second-order central
@@ -2372,35 +2328,10 @@ class Dataset:
         the dim contiguous (one shuffle, elided when already whole), then
         one vectorized ``np.gradient`` per series-slab; other dims stay
         chunked, so per-task memory is one slab at any grid size."""
-        if dim not in self.template.coords:
-            raise ValueError(f"differentiate needs a coordinate on {dim!r}")
-        cvals = np.asarray(self.template.coords[dim].values)
-        if cvals.dtype.kind == "M":
-            if datetime_unit is None:
-                raise ValueError(
-                    f"{dim!r} is a datetime coordinate; pass datetime_unit "
-                    "(e.g. 's') like xarray's differentiate"
-                )
-            cnum = (
-                cvals.astype("datetime64[ns]").astype(np.int64).astype(np.float64)
-                / np.timedelta64(1, datetime_unit).astype("timedelta64[ns]").astype(np.int64)
-            )
-        else:
-            cnum = cvals.astype(np.float64)
-        r = self._gather_dim(dim)
-
-        def grad(ds: NDDataset) -> NDDataset:
-            out: dict[str, Variable] = {}
-            for v, var in ds.data_vars.items():
-                if dim not in var.dims:
-                    out[v] = var
-                    continue
-                ax = var.dims.index(dim)
-                vals = np.asarray(var.values, dtype=np.float64)
-                out[v] = Variable(var.dims, np.gradient(vals, cnum, axis=ax, edge_order=1))
-            return NDDataset(out, dict(ds.coords), dict(ds.attrs))
-
-        return r.map_blocks(grad)
+        cnum = self._coord_numbers(dim, datetime_unit, "differentiate")
+        return self._map_whole_dim(
+            dim, lambda a, axis: np.gradient(a, cnum, axis=axis, edge_order=1)
+        )
 
     def integrate(self, dim: str, datetime_unit: str | None = None) -> "Dataset":
         """Trapezoidal-rule integral along ``dim``'s coordinate (xarray
@@ -2412,53 +2343,11 @@ class Dataset:
         adjacent sub-intervals add exactly, so a halo formulation could
         split ultra-long axes — not needed while one series-slab fits a
         task, the same envelope as median/quantile)."""
-        if dim not in self.template.coords:
-            raise ValueError(f"integrate needs a coordinate on {dim!r}")
-        cvals = np.asarray(self.template.coords[dim].values)
-        if cvals.dtype.kind == "M":
-            if datetime_unit is None:
-                raise ValueError(
-                    f"{dim!r} is a datetime coordinate; pass datetime_unit "
-                    "(e.g. 's') like xarray's integrate"
-                )
-            cnum = (
-                cvals.astype("datetime64[ns]").astype(np.int64).astype(np.float64)
-                / np.timedelta64(1, datetime_unit).astype("timedelta64[ns]").astype(np.int64)
-            )
-        else:
-            cnum = cvals.astype(np.float64)
-        r = self._gather_dim(dim)
+        cnum = self._coord_numbers(dim, datetime_unit, "integrate")
         trapz = getattr(np, "trapezoid", None) or np.trapz
-
-        def integ(ds: NDDataset) -> NDDataset:
-            out: dict[str, Variable] = {}
-            for v, var in ds.data_vars.items():
-                if dim not in var.dims:
-                    out[v] = var
-                    continue
-                ax = var.dims.index(dim)
-                vals = np.asarray(var.values, dtype=np.float64)
-                dims = tuple(d for d in var.dims if d != dim)
-                out[v] = Variable(dims, trapz(vals, cnum, axis=ax))
-            coords = {k: c for k, c in ds.coords.items() if dim not in c.dims}
-            return NDDataset(out, coords, dict(ds.attrs))
-
-        # explicit output meta: inference can't describe a result whose
-        # last dim integrates away (0-d chunks)
-        out_sizes = {d: s for d, s in r.sizes.items() if d != dim}
-        out_meta = {
-            v: (tuple(dd for dd in dims if dd != dim), "<f8" if dim in dims else dt)
-            for v, (dims, dt) in r.template.var_meta.items()
-        }
-        out_coords = {
-            k: c for k, c in r.template.coords.items() if dim not in c.dims
-        }
-        out_tmpl = Template(
-            sizes=out_sizes, var_meta=out_meta, coords=out_coords,
-            attrs=r.template.attrs,
+        return self._map_whole_dim(
+            dim, lambda a, axis: trapz(a, cnum, axis=axis), reduce=True
         )
-        out_chunks = {d: c for d, c in r.chunks.items() if d != dim}
-        return r.map_blocks(integ, template=out_tmpl, chunks=out_chunks)
 
     def ffill(self, dim: str, limit: int | None = None) -> "Dataset":
         """Forward-fill NaN along ``dim`` (xarray ``ds.ffill``): each NaN
@@ -2476,36 +2365,30 @@ class Dataset:
     def _fill(self, dim: str, limit: int | None, reverse: bool) -> "Dataset":
         if limit is not None and limit < 0:
             raise ValueError(f"limit must be >= 0, got {limit}")
-        r = self._gather_dim(dim)
 
-        def fill(ds: NDDataset) -> NDDataset:
-            out: dict[str, Variable] = {}
-            for v, var in ds.data_vars.items():
-                ax = var.dims.index(dim)
-                vals = np.asarray(var.values, dtype=np.float64)
-                moved = np.moveaxis(vals, ax, 0)
-                if reverse:
-                    moved = moved[::-1]
-                shp = moved.shape
-                flatv = moved.reshape(shp[0], -1)
-                valid = ~np.isnan(flatv)
-                # index of the most recent valid step, propagated forward
-                idx = np.where(valid, np.arange(shp[0])[:, None], 0)
-                np.maximum.accumulate(idx, axis=0, out=idx)
-                filled = np.take_along_axis(flatv, idx, axis=0)
-                # positions before the first valid step stay NaN
-                seen = np.logical_or.accumulate(valid, axis=0)
-                filled[~seen] = np.nan
-                if limit is not None:
-                    dist = np.arange(shp[0])[:, None] - idx
-                    filled[(dist > limit) & ~valid] = np.nan
-                filled = filled.reshape(shp)
-                if reverse:
-                    filled = filled[::-1]
-                out[v] = Variable(var.dims, np.moveaxis(filled, 0, ax))
-            return NDDataset(out, dict(ds.coords), dict(ds.attrs))
+        def fill(a: np.ndarray, axis: int) -> np.ndarray:
+            moved = np.moveaxis(a, axis, 0)
+            if reverse:
+                moved = moved[::-1]
+            shp = moved.shape
+            flatv = moved.reshape(shp[0], -1)
+            valid = ~np.isnan(flatv)
+            # index of the most recent valid step, propagated forward
+            idx = np.where(valid, np.arange(shp[0])[:, None], 0)
+            np.maximum.accumulate(idx, axis=0, out=idx)
+            filled = np.take_along_axis(flatv, idx, axis=0)
+            # positions before the first valid step stay NaN
+            seen = np.logical_or.accumulate(valid, axis=0)
+            filled[~seen] = np.nan
+            if limit is not None:
+                dist = np.arange(shp[0])[:, None] - idx
+                filled[(dist > limit) & ~valid] = np.nan
+            filled = filled.reshape(shp)
+            if reverse:
+                filled = filled[::-1]
+            return np.moveaxis(filled, 0, axis)
 
-        return r.map_blocks(fill)
+        return self._map_whole_dim(dim, fill)
 
     def interpolate_na(self, dim: str) -> "Dataset":
         """Linear interpolation of interior NaN runs along ``dim``
@@ -2516,38 +2399,32 @@ class Dataset:
         ``prev + (next - prev) * ((i - pi) / (ni - pi))`` evaluated in
         float64 with exactly that expression tree, so results are
         bit-identical to any engine computing the same formula."""
-        r = self._gather_dim(dim)
 
-        def interp(ds: NDDataset) -> NDDataset:
-            out: dict[str, Variable] = {}
-            for v, var in ds.data_vars.items():
-                ax = var.dims.index(dim)
-                vals = np.asarray(var.values, dtype=np.float64)
-                moved = np.moveaxis(vals, ax, 0)
-                shp = moved.shape
-                flatv = moved.reshape(shp[0], -1).copy()
-                n = shp[0]
-                valid = ~np.isnan(flatv)
-                steps = np.arange(n, dtype=np.int64)[:, None]
-                pidx = np.where(valid, steps, -1)
-                np.maximum.accumulate(pidx, axis=0, out=pidx)
-                rrev = np.where(valid[::-1], steps, -1)
-                np.maximum.accumulate(rrev, axis=0, out=rrev)
-                nidx = (n - 1) - rrev[::-1]
-                has_next = rrev[::-1] >= 0
-                interior = (~valid) & (pidx >= 0) & has_next
-                pv = np.take_along_axis(flatv, np.clip(pidx, 0, n - 1), axis=0)
-                nv = np.take_along_axis(flatv, np.clip(nidx, 0, n - 1), axis=0)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    frac = (steps - pidx).astype(np.float64) / (
-                        nidx - pidx
-                    ).astype(np.float64)
-                    fill_vals = pv + (nv - pv) * frac
-                flatv[interior] = fill_vals[interior]
-                out[v] = Variable(var.dims, np.moveaxis(flatv.reshape(shp), 0, ax))
-            return NDDataset(out, dict(ds.coords), dict(ds.attrs))
+        def interp(a: np.ndarray, axis: int) -> np.ndarray:
+            moved = np.moveaxis(a, axis, 0)
+            shp = moved.shape
+            flatv = moved.reshape(shp[0], -1).copy()
+            n = shp[0]
+            valid = ~np.isnan(flatv)
+            steps = np.arange(n, dtype=np.int64)[:, None]
+            pidx = np.where(valid, steps, -1)
+            np.maximum.accumulate(pidx, axis=0, out=pidx)
+            rrev = np.where(valid[::-1], steps, -1)
+            np.maximum.accumulate(rrev, axis=0, out=rrev)
+            nidx = (n - 1) - rrev[::-1]
+            has_next = rrev[::-1] >= 0
+            interior = (~valid) & (pidx >= 0) & has_next
+            pv = np.take_along_axis(flatv, np.clip(pidx, 0, n - 1), axis=0)
+            nv = np.take_along_axis(flatv, np.clip(nidx, 0, n - 1), axis=0)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                frac = (steps - pidx).astype(np.float64) / (
+                    nidx - pidx
+                ).astype(np.float64)
+                fill_vals = pv + (nv - pv) * frac
+            flatv[interior] = fill_vals[interior]
+            return np.moveaxis(flatv.reshape(shp), 0, axis)
 
-        return r.map_blocks(interp)
+        return self._map_whole_dim(dim, interp)
 
     def interp(self, dim: str, new_coords: np.ndarray) -> "Dataset":
         """Linear interpolation onto NEW coordinate values along ``dim``
@@ -2599,57 +2476,20 @@ class Dataset:
         num = x_new - x_old[lo]
         with np.errstate(invalid="ignore", divide="ignore"):
             w = np.where(den == 0, 0.0, num.astype(np.float64) / den.astype(np.float64))
+        bc = self.spark.sparkContext.broadcast((lo.astype(np.int64), hi.astype(np.int64), w, oob))
 
-        base = self.consolidate_variables() if self.split_vars else self
-        r = base._gather_dim(dim)
-        bc = self.spark.sparkContext.broadcast(
-            (lo.astype(np.int64), hi.astype(np.int64), w, oob, new_vals)
-        )
-        n_new = len(new_vals)
+        def regrid(a: np.ndarray, axis: int) -> np.ndarray:
+            blo, bhi, bw, boob = bc.value
+            a_lo = np.take(a, blo, axis=axis)
+            a_hi = np.take(a, bhi, axis=axis)
+            shape = [1] * a.ndim
+            shape[axis] = len(bw)
+            res = a_lo + (a_hi - a_lo) * bw.reshape(shape)
+            if boob.any():
+                res = np.where(boob.reshape(shape), np.nan, res)
+            return res
 
-        out_vm = {
-            v: (dims_v, np.dtype("float64").str)
-            for v, (dims_v, _) in tmpl.var_meta.items()
-            if dim in dims_v
-        }
-        for v, (dims_v, dt) in tmpl.var_meta.items():
-            if dim not in dims_v:
-                out_vm[v] = (dims_v, dt)
-        out_tmpl = Template(
-            sizes={**{d: s for d, s in tmpl.sizes.items() if d != dim}, dim: n_new},
-            var_meta=out_vm,
-            coords={
-                **{k: c for k, c in tmpl.coords.items() if dim not in c.dims},
-                dim: Variable((dim,), new_vals),
-            },
-            attrs=tmpl.attrs,
-        )
-
-        def regrid(ds: NDDataset) -> NDDataset:
-            blo, bhi, bw, boob, bnew = bc.value
-            out: dict[str, Variable] = {}
-            for v, var in ds.data_vars.items():
-                if dim not in var.dims:
-                    out[v] = var
-                    continue
-                ax = var.dims.index(dim)
-                vals = np.asarray(var.values, dtype=np.float64)
-                a_lo = np.take(vals, blo, axis=ax)
-                a_hi = np.take(vals, bhi, axis=ax)
-                shape = [1] * vals.ndim
-                shape[ax] = len(bw)
-                wv = bw.reshape(shape)
-                res = a_lo + (a_hi - a_lo) * wv
-                if boob.any():
-                    mask = boob.reshape(shape)
-                    res = np.where(mask, np.nan, res)
-                out[v] = Variable(var.dims, res)
-            coords = {k: c for k, c in ds.coords.items() if dim not in c.dims}
-            coords[dim] = Variable((dim,), bnew)
-            return NDDataset(out, coords, dict(ds.attrs))
-
-        out = r.map_blocks(regrid, template=out_tmpl, chunks={**{d: r.chunks[d] for d in r.dims if d != dim}, dim: n_new})
-        return out
+        return self._map_whole_dim(dim, regrid, length=len(new_vals), index=new_vals)
 
     def rank(self, dim: str, method: str = "average") -> "Dataset":
         """Rank values along ``dim`` per series (xarray ``ds.rank``).
@@ -2662,42 +2502,36 @@ class Dataset:
         loop over elements — only over series within a chunk."""
         if method not in ("average", "min", "max", "dense"):
             raise ValueError(f"unknown rank method {method!r}")
-        r = self._gather_dim(dim)
 
-        def rank_block(ds: NDDataset) -> NDDataset:
-            out: dict[str, Variable] = {}
-            for v, var in ds.data_vars.items():
-                ax = var.dims.index(dim)
-                vals = np.asarray(var.values, dtype=np.float64)
-                moved = np.moveaxis(vals, ax, 0)
-                shp = moved.shape
-                flat = moved.reshape(shp[0], -1)
-                res = np.full_like(flat, np.nan)
-                for j in range(flat.shape[1]):
-                    col = flat[:, j]
-                    ok = ~np.isnan(col)
-                    if not ok.any():
-                        continue
-                    present = col[ok]
-                    sv = np.sort(present)
-                    lo = np.searchsorted(sv, present, side="left")
-                    if method == "min":
-                        rk = lo + 1.0
-                    elif method == "max":
-                        rk = np.searchsorted(sv, present, side="right").astype(
-                            np.float64
-                        )
-                    elif method == "average":
-                        hi = np.searchsorted(sv, present, side="right")
-                        rk = (lo + 1.0 + hi) / 2.0
-                    else:  # dense
-                        uniq = np.unique(present)
-                        rk = np.searchsorted(uniq, present, side="left") + 1.0
-                    res[ok, j] = rk
-                out[v] = Variable(var.dims, np.moveaxis(res.reshape(shp), 0, ax))
-            return NDDataset(out, dict(ds.coords), dict(ds.attrs))
+        def rank_series(a: np.ndarray, axis: int) -> np.ndarray:
+            moved = np.moveaxis(a, axis, 0)
+            shp = moved.shape
+            flat = moved.reshape(shp[0], -1)
+            res = np.full_like(flat, np.nan)
+            for j in range(flat.shape[1]):
+                col = flat[:, j]
+                ok = ~np.isnan(col)
+                if not ok.any():
+                    continue
+                present = col[ok]
+                sv = np.sort(present)
+                lo = np.searchsorted(sv, present, side="left")
+                if method == "min":
+                    rk = lo + 1.0
+                elif method == "max":
+                    rk = np.searchsorted(sv, present, side="right").astype(
+                        np.float64
+                    )
+                elif method == "average":
+                    hi = np.searchsorted(sv, present, side="right")
+                    rk = (lo + 1.0 + hi) / 2.0
+                else:  # dense
+                    uniq = np.unique(present)
+                    rk = np.searchsorted(uniq, present, side="left") + 1.0
+                res[ok, j] = rk
+            return np.moveaxis(res.reshape(shp), 0, axis)
 
-        return r.map_blocks(rank_block)
+        return self._map_whole_dim(dim, rank_series)
 
     def argmin(self, dim: str) -> "Dataset":
         """Global element index of the minimum along ``dim`` (xarray
@@ -2737,46 +2571,23 @@ class Dataset:
         non-decomposable aggregations (``docs/aggregation.ipynb`` "custom
         aggregations"): rechunk the dim contiguous, then reduce per chunk.
         One shuffle iff the dim is currently chunked."""
-        return self.reduce_contiguous(
-            dim,
-            lambda ds, d: ds.map(lambda a: a.astype(np.float64, copy=False)).median(
-                d, skipna=skipna
-            ),
-        )
+        fn = np.nanmedian if skipna else np.median
+        return self.reduce_contiguous(dim, lambda a, axis: fn(a, axis=axis))
 
     def quantile(self, q: float, dim: str, skipna: bool = True) -> "Dataset":
         """Linearly-interpolated quantile over a dim (rechunk-contiguous
         pattern, see :meth:`median`)."""
-        return self.reduce_contiguous(
-            dim,
-            lambda ds, d: ds.map(lambda a: a.astype(np.float64, copy=False)).quantile(
-                q, d, skipna=skipna
-            ),
-        )
+        fn = np.nanquantile if skipna else np.quantile
+        return self.reduce_contiguous(dim, lambda a, axis: fn(a, q, axis=axis))
 
     def reduce_contiguous(
-        self, dim: str, reducer: Callable[[NDDataset, str], NDDataset]
+        self, dim: str, kernel: Callable[[np.ndarray, int], np.ndarray]
     ) -> "Dataset":
         """Apply a whole-dim (non-decomposable) reduction: make ``dim``
-        contiguous within every chunk, then reduce it away per chunk."""
-        self._reduced_dims(dim)
-        work = self if self.chunks[dim] == self.sizes[dim] else self.rechunk(
-            {**self.chunks, dim: -1}
-        )
-        tmpl = work.template
-        out_tmpl = Template(
-            sizes={d: s for d, s in tmpl.sizes.items() if d != dim},
-            var_meta={
-                v: (tuple(x for x in dims if x != dim), np.dtype("float64").str)
-                for v, (dims, _) in tmpl.var_meta.items()
-            },
-            coords={k: c for k, c in tmpl.coords.items() if dim not in c.dims},
-            attrs=tmpl.attrs,
-        )
-        out_chunks = {d: c for d, c in work.chunks.items() if d != dim}
-        return work.map_blocks(
-            lambda ds: reducer(ds, dim), template=out_tmpl, chunks=out_chunks
-        )
+        contiguous within every chunk (under :meth:`_gather_dim`'s memory
+        guard), then ``kernel(float64 values, axis)`` reduces ``axis``
+        away in every variable on ``dim``; other variables pass through."""
+        return self._map_whole_dim(dim, kernel, reduce=True)
 
     def std(self, dim: str | Sequence[str], skipna: bool = True, ddof: int = 0) -> "Dataset":
         return self._agg("std", dim, skipna, ddof=ddof)

@@ -34,18 +34,12 @@ from xarray_beam_spark.functions.text import (
     quality_features,
     sql_detect_language,
 )
+from xarray_beam_spark.registry import registrar
 from xarray_beam_spark.session import persist_scoped
 from xarray_beam_spark.tables import fan_out_narrow_scan, load
 
 REGISTRY: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        REGISTRY[name] = (fn, oracle)
-        return fn
-
-    return deco
+_register = registrar(REGISTRY)
 
 
 def clean_corpus(

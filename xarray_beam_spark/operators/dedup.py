@@ -20,18 +20,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xarray_beam_spark.functions.text import TOKEN_SEP
+from xarray_beam_spark.registry import registrar
 from xarray_beam_spark.session import memo, persist_scoped, reset
 from xarray_beam_spark.tables import fan_out_narrow_scan, load
 
 REGISTRY: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        REGISTRY[name] = (fn, oracle)
-        return fn
-
-    return deco
+_register = registrar(REGISTRY)
 
 
 # ---------------------------------------------------------------------------

@@ -29,17 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xarray_beam_spark.registry import registrar
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        REGISTRY[name] = (fn, oracle)
-        return fn
-
-    return deco
+_register = registrar(REGISTRY)
 
 
 # ---------------------------------------------------------------------------

@@ -31,18 +31,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xarray_beam_spark.registry import registrar
 from xarray_beam_spark.session import persist_scoped
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        REGISTRY[name] = (fn, oracle)
-        return fn
-
-    return deco
+_register = registrar(REGISTRY)
 
 
 def portable_hash(key: Column, i: int, modulus: int, salt: str) -> Column:

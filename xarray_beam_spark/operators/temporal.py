@@ -41,17 +41,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from xarray_beam_spark.registry import registrar
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        REGISTRY[name] = (fn, oracle)
-        return fn
-
-    return deco
+_register = registrar(REGISTRY)
 
 
 _SIDE = "__xbs_side"

@@ -22,6 +22,20 @@ from pyspark.sql import DataFrame, SparkSession
 # the next to be re-certified.
 
 
+def registrar(table: dict) -> Callable:
+    """The ``@register(name, oracle)`` decorator of one module: it files
+    the query function under ``name`` in that module's ``table``."""
+
+    def register(name: str, oracle: str | None):
+        def deco(fn):
+            table[name] = (fn, oracle)
+            return fn
+
+        return deco
+
+    return register
+
+
 def _certified_rounds(root: Path = Path(__file__).resolve().parents[1]) -> dict[str, int]:
     rounds: dict[str, int] = {}
     for path in root.glob("CORRECTNESS_r*.json"):

@@ -9,8 +9,8 @@ share:
 - ``io_width(path)`` — how many IO threads a store warrants: 1 for the
   local filesystem (the OS page cache makes threading pure overhead and
   the GIL makes it a loss), ``16`` for backends marked
-  ``latency_bound`` (HTTP/S3-style per-request latency). ``XBS_IO_THREADS``
-  overrides either way.
+  ``latency_bound`` (HTTP/S3-style per-request latency). The store
+  decides; there is no override.
 - ``thread_map(fn, items, width)`` — map with a bounded thread pool.
   Worker threads are flagged so NESTED thread_map calls (per-variable →
   per-chunk) run serial instead of multiplying 16×16 threads.
@@ -21,7 +21,6 @@ segment: socket reads, file IO, zlib (de)compression, and numpy copies.
 
 from __future__ import annotations
 
-import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterable, Sequence, TypeVar
@@ -36,9 +35,6 @@ _local = threading.local()
 
 def io_width(path: str) -> int:
     """IO-thread width appropriate for ``path``'s storage backend."""
-    env = os.environ.get("XBS_IO_THREADS")
-    if env:
-        return max(1, int(env))
     from xarray_beam_spark.sources import stores
 
     store, _ = stores.resolve(path)

@@ -24,18 +24,12 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from xarray_beam_spark.registry import registrar
 from xarray_beam_spark.tables import load
 
 # name -> (spark_fn(spark, sf_dir) -> DataFrame, oracle_sql | None)
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
-
-
-def register(name: str, oracle: str | None):
-    def deco(fn):
-        REGISTRY[name] = (fn, oracle)
-        return fn
-
-    return deco
+register = registrar(REGISTRY)
 
 
 # The synthetic data's numeric columns are exact low-scale decimals
