@@ -893,7 +893,7 @@ def _np_lag_diff(vals, n, axis):
     src = [slice(None)] * vals.ndim
     src[axis] = slice(n, None)
     prev = [slice(None)] * vals.ndim
-    prev[axis] = slice(None, vals.shape[axis] - n)
+    prev[axis] = slice(None, max(0, vals.shape[axis] - n))
     out[tuple(src)] = vals[tuple(src)].astype(np.float64) - vals[tuple(prev)]
     return out
 
@@ -928,6 +928,17 @@ def test_diff_halo_wider_than_chunk_falls_back(spark, era5):
             got.data_vars[v].values,
             _np_lag_diff(var.values, 5, var.dims.index("time")),
         )
+
+
+def test_diff_lag_at_least_the_dim_is_all_nan(spark, era5):
+    """n >= the dim's 24 steps leaves no position with its lag: all NaN,
+    on one whole chunk and on a multi-chunk grid gathered first."""
+    for chunk, n in ((24, 24), (24, 30), (7, 30)):
+        got = Dataset.from_numpy(spark, era5, chunks={"time": chunk}).diff("time", n=n).collect()
+        for v, var in era5.data_vars.items():
+            want = _np_lag_diff(var.values, n, var.dims.index("time"))
+            assert np.isnan(want).all()
+            np.testing.assert_array_equal(got.data_vars[v].values, want)
 
 
 def test_shift_matches_numpy(spark, era5):

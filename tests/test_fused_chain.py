@@ -13,6 +13,7 @@ import pytest
 from pyspark import cloudpickle
 
 from xarray_beam_spark import observability as obs
+from xarray_beam_spark import session
 from xarray_beam_spark.dataset import Dataset
 from xarray_beam_spark.ndarray_ds import NDDataset, Variable
 from xarray_beam_spark.sources import zarr_io
@@ -258,6 +259,30 @@ def test_df_is_memoized_and_a_persisted_chain_is_reused(spark, store):
             np.testing.assert_array_equal(got.data_vars[v].values, (var.values + 1) * 3)
     finally:
         fused.df.unpersist()
+
+
+def test_consolidate_key_is_the_target_cell_offset(spark, store):
+    """consolidate's ``__tgt_<dim>`` is ``off - off % tgt``: emitted by
+    the split pass that makes the rows, and projected over the rows of a
+    held frame. A dim with one target chunk gets no column."""
+    pieces = zarr_io.from_zarr(spark, store).split_chunks({"time": 5, "lat": 2})
+    held = pieces.df.localCheckpoint(eager=True)
+    target = {"time": 5, "lat": 2, "lon": LON}
+    want = {v: var.values for v, var in _source().data_vars.items()}
+    try:
+        for ds in (pieces, Dataset(spark, held, pieces.template, pieces.chunks)):
+            out = ds.consolidate_chunks(target)
+            keyed = out._source.frame
+            assert "__tgt_lon" not in keyed.columns
+            rows = keyed.select("off_time", "off_lat", "__tgt_time", "__tgt_lat").collect()
+            # 12 time chunks, [4, 6) and [14, 16) cut at 5 and 15; lat in halves
+            assert len(rows) == (T // STORE_T + 2) * 2
+            for r in rows:
+                assert r["__tgt_time"] == r["off_time"] - r["off_time"] % 5
+                assert r["__tgt_lat"] == r["off_lat"] - r["off_lat"] % 2
+            _assert_matches(out.collect(), want)
+    finally:
+        session.unpersist_checkpoint(held)
 
 
 def test_counters_of_read_map_rechunk_write(spark, tmp_path):

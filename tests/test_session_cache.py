@@ -30,6 +30,13 @@ def _is_cached(df) -> bool:
     return level.useMemory or level.useDisk
 
 
+def _checkpoint_held(spark, df) -> bool:
+    """A localCheckpoint'ed frame has no storage level of its own: its
+    blocks are those of the RDD its LogicalRDD wraps."""
+    rdd = session._checkpoint_rdd(df)
+    return rdd is not None and rdd.id() in spark.sparkContext._jsc.getPersistentRDDs()
+
+
 def test_reset_keeps_fixtures_and_releases_ephemerals(spark, sf_dir):
     grid = gq._events_grid(spark, sf_dir, chunks={"day": 7})
     grid.df.count()
@@ -45,9 +52,9 @@ def test_reset_keeps_fixtures_and_releases_ephemerals(spark, sf_dir):
     assert _persisted(spark) == before
     assert not _is_cached(frame)
     assert not os.path.exists(store)
-    # fixtures stay: the same grid object, its persist and the cells'
+    # fixtures stay: the same grid object, its checkpoint and the cells'
     assert gq._events_grid(spark, sf_dir, chunks={"day": 7}) is grid
-    assert _is_cached(grid.df)
+    assert _checkpoint_held(spark, grid.df)
     assert _is_cached(gq._cells(spark, sf_dir)[0])
 
 
@@ -130,11 +137,18 @@ def test_snapshot_reports_cached_bytes(spark, sf_dir):
     grid = gq._events_grid(spark, sf_dir, chunks={"day": 7})
     grid.df.count()
     session.persist_scoped(spark.range(1000).selectExpr("id", "id * 3 AS z")).count()
+    held = session.memo(
+        spark, ("checkpoint_probe",),
+        lambda: spark.range(1000).selectExpr("id * 5 AS w").localCheckpoint(eager=True),
+        release=session.unpersist_checkpoint, ephemeral=True,
+    )
     snap = session.snapshot(spark)
     grids = [e for e in snap["entries"] if e["key"].startswith("('grid'")]
     assert grids and all(e["cached_bytes"] > 0 for e in grids)
     assert not any(e["ephemeral"] for e in grids)
-    assert snap["ephemeral_bytes"] > 0
+    (probe,) = [e for e in snap["entries"] if e["key"] == "('checkpoint_probe',)"]
+    assert probe["ephemeral"] and probe["cached_bytes"] > 0
+    assert snap["ephemeral_bytes"] > probe["cached_bytes"]
     assert snap["cached_bytes"] >= snap["ephemeral_bytes"] + grids[0]["cached_bytes"]
 
     session.reset()
@@ -143,3 +157,4 @@ def test_snapshot_reports_cached_bytes(spark, sf_dir):
     assert after["ephemeral_bytes"] < snap["ephemeral_bytes"]
     assert after["ephemeral_bytes"] == 0
     assert not any(e["ephemeral"] for e in after["entries"])
+    assert not _checkpoint_held(spark, held)

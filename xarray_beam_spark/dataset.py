@@ -128,10 +128,13 @@ def off_col(dim: str) -> str:
     return OFF_PREFIX + dim
 
 
-def chunk_row_schema(dims: Sequence[str]) -> T.StructType:
+def chunk_row_schema(dims: Sequence[str], extra: Sequence[str] = ()) -> T.StructType:
+    """The chunk-row schema, plus one int64 column per name of ``extra``
+    (the columns an :func:`_encode_sink` with those names appends)."""
     fields = [T.StructField(off_col(d), T.LongType(), False) for d in sorted(dims)]
     fields.append(T.StructField("vars", T.StringType(), True))
     fields.append(T.StructField("payload", T.BinaryType(), False))
+    fields.extend(T.StructField(name, T.LongType(), False) for name in extra)
     return T.StructType(fields)
 
 
@@ -230,29 +233,40 @@ def _through(steps: Sequence[Step], key, ds: NDDataset) -> Iterator[ChunkPair]:
         yield from _through(steps[1:], k, d)
 
 
-def _encode_sink(dims: Sequence[str], extra=None):
+def _encode_sink(dims: Sequence[str], extra: Mapping[str, Callable[[tuple], int]] | None = None):
     """The default consumer: one chunk-row RecordBatch per call, each
-    payload encoded once. ``extra = (name, fn(key))`` appends one int64
-    column."""
+    payload encoded once. ``extra`` maps column names to ``fn(key)``; each
+    appends one int64 column, computed in the pass that makes the rows
+    (a shuffle key, a halo flag) instead of by a later projection."""
     dims = list(dims)
-    names = [off_col(d) for d in dims] + ["vars", "payload"]
-    if extra is not None:
-        names.append(extra[0])
+    extra = dict(extra or {})
+    fns = list(extra.values())
+    names = [off_col(d) for d in dims] + ["vars", "payload", *extra]
+    types = [pa.int64()] * len(dims) + [pa.string(), pa.binary()] + [pa.int64()] * len(fns)
 
     def sink(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
         cols: list[list] = [[] for _ in names]
         for key, ds in pairs:
             row = [key[0][d] for d in dims] + [key[1], encode_chunk(ds)]
-            if extra is not None:
-                row.append(extra[1](key))
+            row.extend(fn(key) for fn in fns)
             for col, value in zip(cols, row):
                 col.append(value)
         if cols[-1]:
-            types = [pa.int64()] * len(dims) + [pa.string(), pa.binary(), pa.int64()]
             arrays = [pa.array(c, t) for c, t in zip(cols, types)]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return sink
+
+
+def _tgt_offset(dim: str, tgt: int) -> Callable[[tuple], int]:
+    """``fn(key)``: the offset along ``dim`` of the target cell, of size
+    ``tgt``, that holds the chunk keyed ``key``."""
+
+    def offset(key: tuple) -> int:
+        off = key[0][dim]
+        return off - off % tgt
+
+    return offset
 
 
 def _own_arrays(ds: NDDataset, trust_writeable: bool) -> NDDataset:
@@ -564,7 +578,7 @@ class Dataset:
         rows = out.select(*off_cols, *idx_cols, *var_cols).unionByName(
             cells, allowMissingColumns=True
         )
-        bc_coords = spark.sparkContext.broadcast({d: np.asarray(coords[d]) for d in dims})
+        cvals = {d: np.asarray(coords[d]) for d in dims}
 
         def assemble(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
             offsets = _key_offsets(dims_sorted, key)
@@ -574,7 +588,6 @@ class Dataset:
             idx = tuple(tbl.column(c).to_numpy() - offsets[d] for c, d in zip(idx_cols, dims))
             for v in var_cols:
                 arrs[v][idx] = np.asarray(tbl.column(v).to_numpy(), dtype=np.float64)
-            cvals = bc_coords.value
             chunk_coords = {
                 d: Variable((d,), cvals[d][offsets[d] : offsets[d] + shape[i]])
                 for i, d in enumerate(dims)
@@ -1474,13 +1487,10 @@ class Dataset:
         }
         out_dims = sorted(out_tmpl.sizes)
         tail_shape = tuple(int(sizes[d]) for d in new_names[1:])
-        bc_coords = self.spark.sparkContext.broadcast(
-            {d: np.asarray(vals) for d, vals in (coords or {}).items()}
-        )
+        cvals = {d: np.asarray(vals) for d, vals in (coords or {}).items()}
 
         def step(key, ds: NDDataset) -> Iterator[ChunkPair]:
             offs, kvars = key
-            cvals = bc_coords.value
             out_vars: dict[str, Variable] = {}
             k_rows = ds.sizes[dim] // tail
             for v, var in ds.data_vars.items():
@@ -1646,11 +1656,13 @@ class Dataset:
 
         def lag(ext: np.ndarray, axis: int) -> np.ndarray:
             out = np.full(ext.shape, np.nan)
-            head = [slice(None)] * ext.ndim
-            head[axis] = slice(n, None)
-            tail = [slice(None)] * ext.ndim
-            tail[axis] = slice(None, ext.shape[axis] - n)
-            out[tuple(head)] = ext[tuple(head)] - ext[tuple(tail)]
+            m = ext.shape[axis]
+            if n < m:  # else every position lacks its lag: all NaN
+                head = [slice(None)] * ext.ndim
+                head[axis] = slice(n, None)
+                tail = [slice(None)] * ext.ndim
+                tail[axis] = slice(None, m - n)
+                out[tuple(head)] = ext[tuple(head)] - ext[tuple(tail)]
             return out
 
         return self._left_halo_map(dim, n, lag, "diff")
@@ -1839,12 +1851,9 @@ class Dataset:
             )
         dims = self.dims
         chunk_d = self.chunks[dim]
-        schema = chunk_row_schema(dims)
-        halo_schema = T.StructType(
-            list(schema.fields) + [T.StructField("__halo", T.LongType(), False)]
-        )
+        halo_schema = chunk_row_schema(dims, ["__halo"])
         size_d = sizes[dim]
-        halo_sink = _encode_sink(dims, extra=("__halo", lambda key: key[2]))
+        halo_sink = _encode_sink(dims, extra={"__halo": lambda key: key[2]})
 
         def emit(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
             # each chunk, plus its trailing sliver keyed as the halo of
@@ -2060,17 +2069,27 @@ class Dataset:
 
         acc_groups = get_counters(self.spark).acc("consolidate.groups")
 
-        rounded = self.df
-        for d in dims:
-            rounded = rounded.withColumn(
-                f"__tgt_{d}", F.col(off_col(d)) - (F.col(off_col(d)) % F.lit(tgt[d]))
-            )
+        # the target cell's offset per dim with more than one target chunk
+        # (every row of a single-chunk dim lands at 0): emitted by the pass
+        # that makes the rows, or one projection over the rows of a held
+        # frame — not one re-analyzed withColumn per dim
+        keyed = [d for d in dims if tgt[d] < sizes[d]]
+        tgt_cols = {f"__tgt_{d}": d for d in keyed}
+        src, steps = self._pipeline()
+        if src.rows and not steps:
+            rounded = src.frame.selectExpr("*", *[
+                f"`{off_col(d)}` - `{off_col(d)}` % {tgt[d]} AS `{c}`" for c, d in tgt_cols.items()
+            ])
+        else:
+            cell = {c: _tgt_offset(d, tgt[d]) for c, d in tgt_cols.items()}
+            rounded = self._run(_encode_sink(dims, cell), chunk_row_schema(dims, list(cell)))
 
         def assemble(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
-            # key = (vars, tgt offsets...) — group also by vars so
-            # var-split datasets consolidate per variable.
+            # key = (vars, tgt offsets of the keyed dims...) — group also
+            # by vars so var-split datasets consolidate per variable.
             kvars = key[0].as_py()
-            koffs = _key_offsets(dims, key[1:])
+            koffs = {d: 0 for d in dims}
+            koffs.update(_key_offsets(keyed, key[1:]))
             off_arrs = {d: tbl.column(off_col(d)).to_numpy() for d in dims}
             parts: dict[tuple[int, ...], NDDataset] = {}
             for i, ds in enumerate(_decode_payloads(tbl.column("payload"))):
@@ -2111,8 +2130,7 @@ class Dataset:
             acc_groups.add(1)
             yield (koffs, kvars), merged
 
-        group_by = ("vars", *[f"__tgt_{d}" for d in dims])
-        src = _Source(rounded, assemble, group_by, fresh=True)
+        src = _Source(rounded, assemble, ("vars", *tgt_cols), fresh=True)
         return Dataset(self.spark, src, self.template, tgt, self.split_vars)
 
     def rechunk(
@@ -2438,8 +2456,8 @@ class Dataset:
 
         Plan: bracketing indices and weights are computed driver-side from
         the template coordinate (bounded metadata, like the anomaly gate's
-        climatology side-input) and broadcast; the dim is rechunked
-        contiguous (one shuffle, elided when already whole), then a narrow
+        climatology side-input) and shipped in the task closure; the dim is
+        rechunked contiguous (one shuffle, elided when already whole), then a narrow
         gather evaluates ``lo + (hi - lo) * w`` in float64 with exactly
         that expression tree — oracle-matchable like
         :meth:`interpolate_na`. Datetime/integer coordinate distances are
@@ -2476,10 +2494,9 @@ class Dataset:
         num = x_new - x_old[lo]
         with np.errstate(invalid="ignore", divide="ignore"):
             w = np.where(den == 0, 0.0, num.astype(np.float64) / den.astype(np.float64))
-        bc = self.spark.sparkContext.broadcast((lo.astype(np.int64), hi.astype(np.int64), w, oob))
+        blo, bhi, bw, boob = lo.astype(np.int64), hi.astype(np.int64), w, oob
 
         def regrid(a: np.ndarray, axis: int) -> np.ndarray:
-            blo, bhi, bw, boob = bc.value
             a_lo = np.take(a, blo, axis=axis)
             a_hi = np.take(a, bhi, axis=axis)
             shape = [1] * a.ndim
@@ -2737,12 +2754,12 @@ class Dataset:
             if dim not in dims_v:
                 raise ValueError(f"variable {v!r} lacks dim {dim!r}")
         n_groups = len(uniq)
-        bc_labels = self.spark.sparkContext.broadcast(inverse.astype(np.int64))
+        all_labels = inverse.astype(np.int64)
         new_coord = Variable((new_dim,), uniq)
         var_names = self.template.var_names
 
         def add(ds: NDDataset, offs: dict[str, int]) -> NDDataset:
-            labels = bc_labels.value[offs[dim] : offs[dim] + ds.sizes[dim]]
+            labels = all_labels[offs[dim] : offs[dim] + ds.sizes[dim]]
             acc: dict[str, Variable] = {}
             for v in var_names:
                 var = ds.data_vars[v]
@@ -2892,9 +2909,7 @@ class Dataset:
             for v, (dims_v, dt) in out_vars.items()
         }
         out_tmpl = Template(sizes=out_sizes, var_meta=out_vm, coords=out_coords, attrs=tmpl.attrs)
-        schema_mk = T.StructType(
-            chunk_row_schema(keep_dims + new_dims).fields + [T.StructField("mkey", T.LongType())]
-        )
+        schema_mk = chunk_row_schema(keep_dims + new_dims, ["mkey"])
         offc = [off_col(d) for d in keep_dims]
         # linearized reduced-chunk index → the tree-merge re-key base
         chunks_in = dict(self.chunks)
@@ -2905,7 +2920,12 @@ class Dataset:
             fan_in *= -(-self.sizes[d] // chunks_in[d])
 
         zero_new = {d: 0 for d in new_dims}
-        sink_mk = _encode_sink(sorted(keep_dims + new_dims), extra=("mkey", lambda key: key[2]))
+        fanin = DEFAULT_MERGE_FANIN
+        # each pass emits the NEXT round's group key: round r groups by
+        # chunk_index // fanin**r (unused by the final merge)
+        sink_mk = _encode_sink(
+            sorted(keep_dims + new_dims), extra={"mkey": lambda key: key[2] // fanin}
+        )
 
         def pre(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
             accs = []
@@ -2937,11 +2957,9 @@ class Dataset:
                 out[v] = Variable(dims_v, np.asarray(res))
             yield (offs, key[0].as_py()), NDDataset(out, acc.coords, acc.attrs)
 
-        fanin = DEFAULT_MERGE_FANIN
         df = self._run(pre, schema_mk)
         expected = fan_in
         while expected > fanin:
-            df = df.withColumn("mkey", F.floor(F.col("mkey") / fanin).cast("long"))
             src = _Source(df, merge_round, ("vars", *offc, "mkey"))
             df = Dataset(self.spark, src, out_tmpl, out_chunks)._run(sink_mk, schema_mk)
             expected = -(-expected // fanin)

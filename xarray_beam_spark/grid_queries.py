@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from xarray_beam_spark.dataset import Dataset
 from xarray_beam_spark.registry import registrar
-from xarray_beam_spark.session import memo, reset
+from xarray_beam_spark.session import memo, reset, unpersist_checkpoint
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
@@ -50,12 +50,19 @@ FROM events GROUP BY 1, 2, 3
 """
 
 
-# Grid inputs are shared by ~20 gate queries in one session: the events
-# aggregation, the two coordinate collects, and each chunking's assembled
-# chunk-row DataFrame are built once per (session, sf_dir) and persisted,
-# as fixtures of the session store (released by unpersist on eviction).
-# At 100 TB the same pattern holds — the dense cells frame is the reduced
-# (day, hour, event_type) grid, orders of magnitude smaller than events.
+# Grid inputs are shared by many gate queries in one session: the events
+# aggregation and the two coordinate collects are built once per (session,
+# sf_dir) and persisted; each chunking's assembled chunk-row DataFrame is
+# held as a local checkpoint. All are fixtures of the session store,
+# released (unpersist) on eviction. A checkpoint and not a cache, because
+# every query over a cached grid carries the InMemoryRelation of the whole
+# from_table plan, and the driver renders that plan (20-25 KB) at the
+# start of each query and at each adaptive re-plan: on the six grid gates
+# of perfbench, ~23 % of the driver's py4j-thread samples sat in
+# QueryExecution.explainString. The trade: a lost checkpoint block fails
+# the query instead of being recomputed. At 100 TB the same pattern holds
+# — the dense cells frame is the reduced (day, hour, event_type) grid,
+# orders of magnitude smaller than events.
 
 
 def _cells(spark: SparkSession, sf_dir: str):
@@ -101,11 +108,11 @@ def _events_grid(
             var_cols=list(var_cols),
             chunks=chunks,
         )
-        ds.df.persist()
-        return ds
+        held = ds.df.localCheckpoint(eager=True)
+        return Dataset(spark, held, ds.template, ds.chunks, ds.split_vars)
 
     key = ("grid", sf_dir, tuple(sorted(chunks.items())), tuple(var_cols))
-    return memo(spark, key, build, release=lambda ds: ds.df.unpersist())
+    return memo(spark, key, build, release=lambda ds: unpersist_checkpoint(ds.df))
 
 
 # bump when a persistent gate store's layout changes (chunking, codec,

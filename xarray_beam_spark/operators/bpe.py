@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xarray_beam_spark.registry import registrar
+from xarray_beam_spark.session import unpersist_checkpoint
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
@@ -221,19 +222,8 @@ def bpe_train(
             # getPersistentRDDs() before/after diff: a diff races with
             # any other thread persisting an RDD in the same session
             # during the window and would wrongly unpersist it.
-            _unpersist_checkpoint(prev)
+            unpersist_checkpoint(prev)
     return merges
-
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Release the block-manager copy behind a localCheckpoint'ed
-    DataFrame.  ``df.rdd`` would build a NEW python-facing pipeline, not
-    the persisted RDD — the checkpointed RDD is the one the plan's
-    LogicalRDD node wraps, so it is read off the analyzed plan."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # best-effort: ContextCleaner reaps on driver GC anyway
 
 
 # Above this many merges the chained-JVM-fold path is refused: each

@@ -10,8 +10,8 @@ over Unix domain sockets: on loopback TCP, Nagle's algorithm meeting a
 delayed ACK held every Python task ~40 ms before it could read its input.
 
 The same module holds the session store (``memo``, ``persist_scoped``,
-``reset``, ``snapshot``): the one cache and persist lifecycle of the
-driver, scoped to the SparkContext.
+``unpersist_checkpoint``, ``reset``, ``snapshot``): the one cache and
+persist lifecycle of the driver, scoped to the SparkContext.
 """
 
 from __future__ import annotations
@@ -191,6 +191,24 @@ def persist_scoped(df: DataFrame) -> DataFrame:
     )
 
 
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD whose blocks hold a ``localCheckpoint``'ed frame, or
+    None for any other frame. ``df.rdd`` would build a NEW Python-facing
+    pipeline; the checkpointed RDD is the one the analyzed plan's
+    ``LogicalRDD`` node wraps."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+
+
+def unpersist_checkpoint(df: DataFrame) -> None:
+    """Release the block-manager copy behind a ``localCheckpoint``'ed
+    frame: the release of a checkpointed entry. Its blocks are the only
+    copy, so nothing may read the frame afterwards."""
+    rdd = _checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
+
+
 def reset() -> None:
     """Release every ephemeral entry of the active context; fixtures stay.
     No-op without an active context."""
@@ -201,7 +219,8 @@ def reset() -> None:
 
 def snapshot(spark: SparkSession) -> dict:
     """The store's entries (key, ephemeral, ``cached_bytes`` of the frames
-    each one persists, from the RDD storage info) and the byte totals."""
+    each one persists or checkpoints, from the RDD storage info) and the
+    byte totals."""
     from xarray_beam_spark.dataset import Dataset
 
     sc = spark.sparkContext
@@ -212,9 +231,12 @@ def snapshot(spark: SparkSession) -> dict:
         if isinstance(value, tuple):
             return sum(map(cached_bytes, value))
         df = value.df if isinstance(value, Dataset) else value
-        hit = cache.lookupCachedData(df._jdf) if isinstance(df, DataFrame) else None
-        if hit is None or not hit.isDefined():
+        if not isinstance(df, DataFrame):
             return 0
+        hit = cache.lookupCachedData(df._jdf)
+        if not hit.isDefined():
+            rdd = _checkpoint_rdd(df)
+            return sizes.get(rdd.id(), 0) if rdd is not None else 0
         builder = hit.get().cachedRepresentation().cacheBuilder()
         loaded = builder.isCachedColumnBuffersLoaded()
         return sizes.get(builder.cachedColumnBuffers().id(), 0) if loaded else 0
