@@ -262,9 +262,9 @@ def test_df_is_memoized_and_a_persisted_chain_is_reused(spark, store):
 
 
 def test_consolidate_key_is_the_target_cell_offset(spark, store):
-    """consolidate's ``__tgt_<dim>`` is ``off - off % tgt``: emitted by
-    the split pass that makes the rows, and projected over the rows of a
-    held frame. A dim with one target chunk gets no column."""
+    """consolidate's ``__tgt_<dim>`` is ``off - off % tgt``, both after
+    the split pass that makes the rows and over the rows of a held frame.
+    A dim with one target chunk gets no column."""
     pieces = zarr_io.from_zarr(spark, store).split_chunks({"time": 5, "lat": 2})
     held = pieces.df.localCheckpoint(eager=True)
     target = {"time": 5, "lat": 2, "lon": LON}

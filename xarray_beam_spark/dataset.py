@@ -128,13 +128,14 @@ def off_col(dim: str) -> str:
     return OFF_PREFIX + dim
 
 
-def chunk_row_schema(dims: Sequence[str], extra: Sequence[str] = ()) -> T.StructType:
-    """The chunk-row schema, plus one int64 column per name of ``extra``
-    (the columns an :func:`_encode_sink` with those names appends)."""
+def chunk_row_schema(dims: Sequence[str], extra: str | None = None) -> T.StructType:
+    """The chunk-row schema, plus the int64 column ``extra`` (the column
+    an :func:`_encode_sink` with that name appends)."""
     fields = [T.StructField(off_col(d), T.LongType(), False) for d in sorted(dims)]
     fields.append(T.StructField("vars", T.StringType(), True))
     fields.append(T.StructField("payload", T.BinaryType(), False))
-    fields.extend(T.StructField(name, T.LongType(), False) for name in extra)
+    if extra is not None:
+        fields.append(T.StructField(extra, T.LongType(), False))
     return T.StructType(fields)
 
 
@@ -233,40 +234,29 @@ def _through(steps: Sequence[Step], key, ds: NDDataset) -> Iterator[ChunkPair]:
         yield from _through(steps[1:], k, d)
 
 
-def _encode_sink(dims: Sequence[str], extra: Mapping[str, Callable[[tuple], int]] | None = None):
+def _encode_sink(dims: Sequence[str], extra=None):
     """The default consumer: one chunk-row RecordBatch per call, each
-    payload encoded once. ``extra`` maps column names to ``fn(key)``; each
-    appends one int64 column, computed in the pass that makes the rows
-    (a shuffle key, a halo flag) instead of by a later projection."""
+    payload encoded once. ``extra = (name, fn(key))`` appends one int64
+    column."""
     dims = list(dims)
-    extra = dict(extra or {})
-    fns = list(extra.values())
-    names = [off_col(d) for d in dims] + ["vars", "payload", *extra]
-    types = [pa.int64()] * len(dims) + [pa.string(), pa.binary()] + [pa.int64()] * len(fns)
+    names = [off_col(d) for d in dims] + ["vars", "payload"]
+    if extra is not None:
+        names.append(extra[0])
 
     def sink(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
         cols: list[list] = [[] for _ in names]
         for key, ds in pairs:
             row = [key[0][d] for d in dims] + [key[1], encode_chunk(ds)]
-            row.extend(fn(key) for fn in fns)
+            if extra is not None:
+                row.append(extra[1](key))
             for col, value in zip(cols, row):
                 col.append(value)
         if cols[-1]:
+            types = [pa.int64()] * len(dims) + [pa.string(), pa.binary(), pa.int64()]
             arrays = [pa.array(c, t) for c, t in zip(cols, types)]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return sink
-
-
-def _tgt_offset(dim: str, tgt: int) -> Callable[[tuple], int]:
-    """``fn(key)``: the offset along ``dim`` of the target cell, of size
-    ``tgt``, that holds the chunk keyed ``key``."""
-
-    def offset(key: tuple) -> int:
-        off = key[0][dim]
-        return off - off % tgt
-
-    return offset
 
 
 def _own_arrays(ds: NDDataset, trust_writeable: bool) -> NDDataset:
@@ -1851,9 +1841,9 @@ class Dataset:
             )
         dims = self.dims
         chunk_d = self.chunks[dim]
-        halo_schema = chunk_row_schema(dims, ["__halo"])
+        halo_schema = chunk_row_schema(dims, "__halo")
         size_d = sizes[dim]
-        halo_sink = _encode_sink(dims, extra={"__halo": lambda key: key[2]})
+        halo_sink = _encode_sink(dims, extra=("__halo", lambda key: key[2]))
 
         def emit(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:
             # each chunk, plus its trailing sliver keyed as the halo of
@@ -2070,19 +2060,13 @@ class Dataset:
         acc_groups = get_counters(self.spark).acc("consolidate.groups")
 
         # the target cell's offset per dim with more than one target chunk
-        # (every row of a single-chunk dim lands at 0): emitted by the pass
-        # that makes the rows, or one projection over the rows of a held
-        # frame — not one re-analyzed withColumn per dim
+        # (every row of a single-chunk dim lands at 0), in one projection:
+        # a withColumn per dim cost one JVM re-analysis of the plan each
         keyed = [d for d in dims if tgt[d] < sizes[d]]
         tgt_cols = {f"__tgt_{d}": d for d in keyed}
-        src, steps = self._pipeline()
-        if src.rows and not steps:
-            rounded = src.frame.selectExpr("*", *[
-                f"`{off_col(d)}` - `{off_col(d)}` % {tgt[d]} AS `{c}`" for c, d in tgt_cols.items()
-            ])
-        else:
-            cell = {c: _tgt_offset(d, tgt[d]) for c, d in tgt_cols.items()}
-            rounded = self._run(_encode_sink(dims, cell), chunk_row_schema(dims, list(cell)))
+        rounded = self.df.selectExpr("*", *[
+            f"`{off_col(d)}` - `{off_col(d)}` % {tgt[d]} AS `{c}`" for c, d in tgt_cols.items()
+        ])
 
         def assemble(key: tuple, tbl: "pa.Table") -> Iterator[ChunkPair]:
             # key = (vars, tgt offsets of the keyed dims...) — group also
@@ -2909,7 +2893,7 @@ class Dataset:
             for v, (dims_v, dt) in out_vars.items()
         }
         out_tmpl = Template(sizes=out_sizes, var_meta=out_vm, coords=out_coords, attrs=tmpl.attrs)
-        schema_mk = chunk_row_schema(keep_dims + new_dims, ["mkey"])
+        schema_mk = chunk_row_schema(keep_dims + new_dims, "mkey")
         offc = [off_col(d) for d in keep_dims]
         # linearized reduced-chunk index → the tree-merge re-key base
         chunks_in = dict(self.chunks)
@@ -2924,7 +2908,7 @@ class Dataset:
         # each pass emits the NEXT round's group key: round r groups by
         # chunk_index // fanin**r (unused by the final merge)
         sink_mk = _encode_sink(
-            sorted(keep_dims + new_dims), extra={"mkey": lambda key: key[2] // fanin}
+            sorted(keep_dims + new_dims), extra=("mkey", lambda key: key[2] // fanin)
         )
 
         def pre(pairs: Iterable[ChunkPair]) -> Iterator["pa.RecordBatch"]:

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from xarray_beam_spark.dataset import Dataset
 from xarray_beam_spark.registry import registrar
-from xarray_beam_spark.session import memo, reset, unpersist_checkpoint
+from xarray_beam_spark.session import memo, reset
 from xarray_beam_spark.tables import load
 
 REGISTRY: dict = {}
@@ -52,17 +52,22 @@ FROM events GROUP BY 1, 2, 3
 
 # Grid inputs are shared by many gate queries in one session: the events
 # aggregation and the two coordinate collects are built once per (session,
-# sf_dir) and persisted; each chunking's assembled chunk-row DataFrame is
-# held as a local checkpoint. All are fixtures of the session store,
-# released (unpersist) on eviction. A checkpoint and not a cache, because
-# every query over a cached grid carries the InMemoryRelation of the whole
-# from_table plan, and the driver renders that plan (20-25 KB) at the
-# start of each query and at each adaptive re-plan: on the six grid gates
-# of perfbench, ~23 % of the driver's py4j-thread samples sat in
-# QueryExecution.explainString. The trade: a lost checkpoint block fails
-# the query instead of being recomputed. At 100 TB the same pattern holds
-# — the dense cells frame is the reduced (day, hour, event_type) grid,
-# orders of magnitude smaller than events.
+# sf_dir) and persisted (released by unpersist on eviction); each
+# chunking's assembled chunk-row DataFrame is held as a local checkpoint.
+# All are fixtures of the session store. A checkpoint and not a cache,
+# because every query over a cached grid carries the InMemoryRelation of
+# the whole from_table plan, and the driver renders that plan (20-25 KB)
+# at the start of each query and at each adaptive re-plan: on the six grid
+# gates of perfbench, ~23 % of the driver's py4j-thread samples sat in
+# QueryExecution.explainString. The trade: the checkpoint's blocks are the
+# only copy. A checkpointed entry has no release (like dedup's clusters):
+# a frame built over the grid before an eviction still reads it, and the
+# ContextCleaner frees its blocks once no frame refers to them. A block
+# lost with its executor fails every later query over that grid for the
+# rest of the session, because the store keeps handing out the same
+# frame; in a local session the executor is the driver's own JVM. At 100
+# TB the same pattern holds — the dense cells frame is the reduced (day,
+# hour, event_type) grid, orders of magnitude smaller than events.
 
 
 def _cells(spark: SparkSession, sf_dir: str):
@@ -112,7 +117,7 @@ def _events_grid(
         return Dataset(spark, held, ds.template, ds.chunks, ds.split_vars)
 
     key = ("grid", sf_dir, tuple(sorted(chunks.items())), tuple(var_cols))
-    return memo(spark, key, build, release=lambda ds: unpersist_checkpoint(ds.df))
+    return memo(spark, key, build)
 
 
 # bump when a persistent gate store's layout changes (chunking, codec,

@@ -202,8 +202,10 @@ def _checkpoint_rdd(df: DataFrame):
 
 def unpersist_checkpoint(df: DataFrame) -> None:
     """Release the block-manager copy behind a ``localCheckpoint``'ed
-    frame: the release of a checkpointed entry. Its blocks are the only
-    copy, so nothing may read the frame afterwards."""
+    frame that nothing reads any more (a superseded round, say). Its
+    blocks are the only copy, so a frame built over it fails afterwards;
+    for that reason a checkpointed store entry gets no release, and the
+    ContextCleaner frees its blocks once no frame refers to them."""
     rdd = _checkpoint_rdd(df)
     if rdd is not None:
         rdd.unpersist(False)

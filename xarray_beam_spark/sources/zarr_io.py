@@ -27,6 +27,7 @@ from typing import Iterator, Mapping, Sequence
 import numpy as np
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xarray_beam_spark import core
@@ -167,7 +168,7 @@ def open_zarr_meta(
     allow_inconsistent_chunks: bool = False,
 ) -> tuple[Template, dict[str, int], dict[str, zarrlite.ZArray]]:
     """Like :func:`open_zarr_template` but also returns the parsed
-    per-array metadata, so jobs can SHIP it to executors (in the task
+    per-array metadata, so jobs can SHIP it to executors (broadcast /
     closure) instead of every task re-opening the group — one metadata
     fetch per JOB, not per task. On an object store that is the
     difference the reference's ``stage_locally`` (``zarr.py:374-386``)
@@ -288,14 +289,12 @@ def from_zarr(
     n_grid = core.chunk_count(cchunks, sizes)
     var_groups: list[str | None] = sorted(template.var_meta) if split_vars else [None]
     dims_sorted = sorted(sizes)
-    # Ship the coordinate axes AND the parsed array metadata in the task
-    # closure — tasks must not re-open the group (one metadata fetch per
-    # JOB; per-task opens would mean per-task GETs on object stores, the
-    # reference's stage_locally problem, zarr.py:374-386). Both are
-    # metadata-sized, and a closure costs no driver round trips where a
-    # broadcast costs several per query; pyspark itself turns a pickled
-    # command over 1 MB into a broadcast.
-    coords_all = template.coords
+    # Ship small values via broadcast: coordinate axes AND the parsed
+    # array metadata — tasks must not re-open the group (one metadata
+    # fetch per JOB; per-task opens would mean per-task GETs on object
+    # stores, the reference's stage_locally problem, zarr.py:374-386).
+    coords_bc = spark.sparkContext.broadcast(template.coords)
+    arrays_bc = spark.sparkContext.broadcast(arrays_meta)
     var_names = sorted(template.var_meta)
 
     from xarray_beam_spark.observability import get_counters
@@ -306,6 +305,8 @@ def from_zarr(
     def read(batch) -> Iterator:
         from xarray_beam_spark.sources import iothread
 
+        arrays = arrays_bc.value
+        coords_all = coords_bc.value
         io_w = iothread.io_width(path)
         for i in batch.column("id").to_pylist():
             grid_i, var_i = divmod(i, len(var_groups))
@@ -315,7 +316,7 @@ def from_zarr(
             names = [vg] if vg is not None else var_names
 
             def read_var(v):
-                meta = arrays_meta[v]
+                meta = arrays[v]
                 ldims = meta.logical_dims
                 return v, Variable(
                     ldims,
@@ -412,17 +413,18 @@ def zip_from_zarr(
         template, _ = _infer_result_meta(tmpls[0], cchunks, dummies[0], out_dummy)
     dims_sorted = sorted(sizes)
     n_grid = core.chunk_count(cchunks, sizes)
-    # metadata opened once, driver-side, and shipped in the closure (see
-    # from_zarr)
-    coords_all = [t.coords for t in tmpls]
+    coords_bc = spark.sparkContext.broadcast([t.coords for t in tmpls])
+    arrays_bc = spark.sparkContext.broadcast(arrays_per)
     var_names_per = [sorted(t.var_meta) for t in tmpls]
 
     def read(batch) -> Iterator:
+        groups = arrays_bc.value  # metadata opened once, driver-side
+        coords_all = coords_bc.value
         for i in batch.column("id").to_pylist():
             offsets = core.key_for_index(i, sizes, cchunks)
             shape = {d: min(cchunks[d], sizes[d] - offsets[d]) for d in dims_sorted}
             dss = []
-            for arrays, names, coords_t in zip(arrays_per, var_names_per, coords_all):
+            for arrays, names, coords_t in zip(groups, var_names_per, coords_all):
                 dv = {}
                 for v in names:
                     meta = arrays[v]
@@ -964,14 +966,15 @@ def to_zarr(
     _c = get_counters(ds.spark)
     acc_wchunks, acc_wbytes = _c.acc("write.chunks"), _c.acc("write.bytes")
     # destination metadata parsed ONCE driver-side (it was just written /
-    # validated above) and shipped in the task closure, like from_zarr's —
-    # write tasks must not re-fetch it
+    # validated above) and broadcast — write tasks must not re-fetch it
+    arrays_bc = ds.spark.sparkContext.broadcast(arrays)
 
     def write(pairs) -> Iterator:
         import pyarrow as pa
 
         from xarray_beam_spark.sources import iothread
 
+        arrays = arrays_bc.value
         io_w = iothread.io_width(path)
         n_chunks = 0
         n_bytes = 0
@@ -993,14 +996,12 @@ def to_zarr(
             names=_WRITE_STATS.fieldNames(),
         )
 
-    # the write ends the dataset's fused chain: no chunk is encoded. Its
-    # stats rows (one per source chunk) are summed on the driver — an
-    # aggregate would cost one more job, exchange and adaptive re-plan
-    rows = work._run(write, _WRITE_STATS).collect()
-    return {
-        "chunks_written": sum(r[0] for r in rows),
-        "bytes_written": sum(r[1] for r in rows),
-    }
+    # the write ends the dataset's fused chain: no chunk is encoded
+    stats = work._run(write, _WRITE_STATS).agg(
+        F.sum("chunks_written").alias("chunks_written"),
+        F.sum("bytes_written").alias("bytes_written"),
+    ).collect()[0]
+    return {"chunks_written": stats[0] or 0, "bytes_written": stats[1] or 0}
 
 
 # Convenience methods on Dataset (no circular import: this module imports
